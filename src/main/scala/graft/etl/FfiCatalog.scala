@@ -6,10 +6,15 @@ import org.apache.spark.sql.DataFrame
   * DataFrames — the Spark re-expression of the reference's
   * `FFIFile._data_map` dict (`/root/reference/parser/xml.py:43,63-80`).
   *
-  * Immutable: every transform stage returns a new catalog, so the whole
-  * pipeline stays a pure LogicalPlan graph until a sink forces execution.
+  * Immutable: every transform stage returns a new catalog over lazy
+  * plans. The frames those plans re-read (the extracted tables, the EAV
+  * long frames, the enriched SampleEvent) are cached through [[pin]];
+  * every catalog derived from one export shares its pins, so one
+  * [[release]] at the end of the export drops them all.
   */
-final case class FfiCatalog(tables: Map[String, DataFrame]) {
+final case class FfiCatalog(
+    tables: Map[String, DataFrame],
+    pins: FfiCatalog.Pins = new FfiCatalog.Pins) {
   def apply(name: String): DataFrame =
     tables.getOrElse(name, throw new NoSuchElementException(s"$name not in FFI catalog"))
   def get(name: String): Option[DataFrame] = tables.get(name)
@@ -19,6 +24,12 @@ final case class FfiCatalog(tables: Map[String, DataFrame]) {
   def removed(names: String*): FfiCatalog =
     copy(tables = tables -- names)
   def names: Seq[String] = tables.keys.toSeq.sorted
+
+  /** Cache `df` until [[release]]. */
+  def pin(df: DataFrame): DataFrame = pins.add(df.cache())
+
+  /** Drop every cache pinned by this catalog or any catalog derived from it. */
+  def release(): Unit = pins.release()
 
   /** S11: dump every catalog table as headered CSV under `dir/<table>/`
     * (`/root/reference/parser/xml.py:758-765`). Distributed write — each
@@ -32,6 +43,16 @@ final case class FfiCatalog(tables: Map[String, DataFrame]) {
 
 object FfiCatalog {
 
+  /** The cached frames one export's catalogs share. Release drops the
+    * newest first, so no frame is uncached while a cached frame built on
+    * it remains (Spark would re-plan that dependent's cache).
+    */
+  final class Pins {
+    private var frames = List.empty[DataFrame]
+    def add(df: DataFrame): DataFrame = synchronized { frames ::= df; df }
+    def release(): Unit = synchronized { frames.foreach(_.unpersist()); frames = Nil }
+  }
+
   /** FFI system tables parsed but never loaded
     * (`/root/reference/parser/xml.py:44-46,754-756`).
     */
@@ -40,5 +61,5 @@ object FfiCatalog {
     "FuelConstants_Veg", "FuelConstants_CWD", "Schema_Version", "Program",
     "Project", "DataGridViewSettings", "MasterSpecies_LastModified", "Settings")
 
-  val empty: FfiCatalog = FfiCatalog(Map.empty)
+  def empty: FfiCatalog = FfiCatalog(Map.empty)
 }

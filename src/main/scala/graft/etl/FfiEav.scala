@@ -1,30 +1,31 @@
 package graft.etl
 
 import graft.etl.FfiExtract.IngestId
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The EAV long→wide engine: `_attr_to_many` / `_sample_to_many`
   * (`/root/reference/parser/xml.py:197-367`).
   *
-  * Shape: assemble one long frame via left-join chains (J1/J2), cache it,
-  * then fan out one `<Method>_Attribute` / `<Method>_Sample` table per
-  * distinct method via filter → pivot. The method list is collected to the
-  * driver because the output TABLE SET is data-dependent (a legal but
-  * unusual Spark shape — the cache keeps the fan-out from recomputing the
-  * joins N times).
+  * Shape: assemble one long frame per family via left-join chains (J1/J2)
+  * and pin it in the catalog, so every `<Method>_Attribute` /
+  * `<Method>_Sample` table fanned out from it (filter → pivot) reads it
+  * from memory until the export's catalog is released. The output TABLE
+  * SET is data-dependent (a legal but unusual Spark shape), so one collect
+  * per family brings the method names, each method's field names (the
+  * pivot columns) and its unit systems to the driver; the pivots then run
+  * with explicit values and need no job of their own.
   *
   * Pivot semantics: pandas `pivot` RAISES on duplicate (index, column)
   * pairs; Spark's `first()` would silently pick one. `assertUnique = true`
-  * reproduces the assertion with an explicit duplicate guard (one extra
-  * aggregate job per method — fine at FFI-export scale, switch off for
-  * bulk backfills).
+  * reproduces the assertion with an explicit duplicate guard (one
+  * aggregate job per family — switch off for bulk backfills).
   */
 object FfiEav {
 
   /** method name → output table name (`parser/xml.py:262,354`):
-    * strip spaces, '-'/'('/')' → '_', trim outer '_'.
+    * strip spaces, '-'/'('/')'/'/' → '_', trim outer '_'.
     */
   def tableName(method: String): String =
     method
@@ -32,6 +33,7 @@ object FfiEav {
       .replace("-", "_")
       .replace("(", "_")
       .replace(")", "_")
+      .replace("/", "_")
       .replaceAll("^_+|_+$", "")
 
   /** add any of `cols` that are absent as null strings — the reference's
@@ -110,16 +112,47 @@ object FfiEav {
         col(IngestId))
   }
 
-  /** null-safe multi-column equi-join condition (index columns may hold
-    * nulls before the post-pivot EventID dropna).
+  /** pandas-pivot's assertion: raises if any (`keys`, `fieldCol`) pair
+    * occurs more than once in `long`.
     */
-  private def eqAll(l: DataFrame, r: DataFrame, cols: Seq[String]): Column =
-    cols.map(c => l(c) <=> r(c)).reduce(_ && _)
+  private def assertUniquePairs(long: DataFrame, keys: Seq[String], fieldCol: String): Unit = {
+    val dups = long
+      .groupBy((keys :+ fieldCol).map(col): _*)
+      .count()
+      .filter(col("count") > 1)
+      .limit(1)
+      .collect()
+    require(
+      dups.isEmpty,
+      s"duplicate (index, $fieldCol) pair in pivot input: ${dups.mkString}")
+  }
+
+  /** The distinct `values` in pivot order: ascending, null first (pivot
+    * keeps a null field as a column named "null").
+    */
+  private def pivotOrder(values: Iterable[String]): Seq[String] =
+    values.map(Option(_)).toSeq.distinct.sorted.map(_.orNull)
+
+  /** Pivot `long` to one column per value in `fields`, cells from
+    * `valueCol`, as ONE aggregate: the shape Spark's analyzer rewrites
+    * `pivot(...).agg(first(...))` into, plus `min(_ingest_id)` per group so
+    * downstream cumcounts keep file order. Columns: `index`, `fields`,
+    * `_ingest_id`.
+    */
+  private def pivotFirst(
+      long: DataFrame,
+      index: Seq[String],
+      fieldCol: String,
+      valueCol: String,
+      fields: Seq[String]): DataFrame = {
+    val aggs = fields.map { f =>
+      first(when(col(fieldCol) <=> lit(f), col(valueCol)), ignoreNulls = true).as(String.valueOf(f))
+    } :+ min(col(IngestId)).as(IngestId)
+    long.groupBy(index.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
 
   /** pandas-pivot: wide = one column per distinct `fieldCol` value, cells
     * from `valueCol`; raises if any (index, field) pair is duplicated.
-    * `min(_ingest_id)` per group rides along so downstream cumcounts keep
-    * file order.
     */
   def pivotUnique(
       long: DataFrame,
@@ -127,24 +160,31 @@ object FfiEav {
       fieldCol: String,
       valueCol: String,
       assertUnique: Boolean = true): DataFrame = {
-    if (assertUnique) {
-      val dups = long
-        .groupBy((index :+ fieldCol).map(col): _*)
-        .count()
-        .filter(col("count") > 1)
-        .limit(1)
-        .collect()
-      require(
-        dups.isEmpty,
-        s"duplicate (index, $fieldCol) pair in pivot input: ${dups.mkString}")
+    if (assertUnique) assertUniquePairs(long, index, fieldCol)
+    val fields = pivotOrder(long.select(fieldCol).distinct().collect().map(_.getString(0)))
+    pivotFirst(long, index, fieldCol, valueCol, fields)
+  }
+
+  /** One EAV family's fan-out: per method (sorted), its pivoted table and
+    * its sorted unit systems. `long` holds only rows with a method; one
+    * collect over it yields every method's fields and unit systems, and
+    * the optional guard is one aggregate over all methods.
+    */
+  private def pivotFamily(
+      long: DataFrame,
+      index: Seq[String],
+      fieldCol: String,
+      valueCol: String,
+      assertUnique: Boolean): Seq[(String, DataFrame, Seq[String])] = {
+    if (assertUnique) assertUniquePairs(long, "Method_Name" +: index, fieldCol)
+    val meta = long.select("Method_Name", fieldCol, "Method_UnitSystem").distinct().collect()
+    meta.groupBy(_.getString(0)).toSeq.sortBy(_._1).map { case (method, rows) =>
+      val fields = pivotOrder(rows.map(_.getString(1)))
+      val unitSystems = rows.flatMap(r => Option(r.getString(2))).distinct.sorted.toSeq
+      val wide = pivotFirst(
+        long.filter(col("Method_Name") === method), index, fieldCol, valueCol, fields)
+      (method, wide, unitSystems)
     }
-    val wide = long
-      .groupBy(index.map(col): _*)
-      .pivot(fieldCol)
-      .agg(first(col(valueCol), ignoreNulls = true))
-    val order = long.groupBy(index.map(col): _*).agg(min(col(IngestId)).as(IngestId))
-    index
-      .foldLeft(wide.join(order, eqAll(wide, order, index)))((d, c) => d.drop(order(c)))
   }
 
   private val AttrIndex =
@@ -225,55 +265,38 @@ object FfiEav {
 
   /** `_attr_to_many`: one `<Method>_Attribute` table per method. */
   def attrToMany(cat: FfiCatalog, assertUnique: Boolean = true): FfiCatalog = {
-    val long = attrLong(cat).cache()
-    val methods = long
-      .select("Method_Name").na.drop().distinct()
-      .collect().map(_.getString(0)).sorted
-    val out = methods.foldLeft(cat) { (c, method) =>
-      // full-row dedup of the long subset (reference drop_duplicates),
-      // keeping the earliest ingest id per surviving row for order rules
-      val temp = long
-        .filter(col("Method_Name") === method)
+    // full-row dedup of the long frame (reference drop_duplicates),
+    // keeping the earliest ingest id per surviving row for order rules
+    val long = cat.pin(
+      attrLong(cat)
+        .filter(col("Method_Name").isNotNull)
         .groupBy(
-          (AttrIndex ++ Seq("MethodAtt_FieldName", "AttributeData_Value")).map(col): _*)
-        .agg(min(col(IngestId)).as(IngestId))
-      val subset =
-        pivotUnique(temp, AttrIndex, "MethodAtt_FieldName", "AttributeData_Value", assertUnique)
-      val unitSystems = subset
-        .select("Method_UnitSystem").na.drop().distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      val withSpp = withSpecies(subset, c.get("LocalSpecies"))
-      val ruled = applyMethodRules(method, withSpp)
-        .na.drop(Seq("EventID"))
-        .drop(IngestId)
-      unitSplit(ruled, unitSystems, tableName(method), "Attribute", dropUnitColOnSplit = false)
-        .foldLeft(c)((cc, kv) => cc.updated(kv._1, kv._2))
-    }
-    long.unpersist()
-    out
+          ("Method_Name" +: AttrIndex :+ "MethodAtt_FieldName" :+ "AttributeData_Value")
+            .map(col): _*)
+        .agg(min(col(IngestId)).as(IngestId)))
+    pivotFamily(long, AttrIndex, "MethodAtt_FieldName", "AttributeData_Value", assertUnique)
+      .foldLeft(cat) { case (c, (method, subset, unitSystems)) =>
+        val withSpp = withSpecies(subset, c.get("LocalSpecies"))
+        val ruled = applyMethodRules(method, withSpp)
+          .na.drop(Seq("EventID"))
+          .drop(IngestId)
+        unitSplit(ruled, unitSystems, tableName(method), "Attribute", dropUnitColOnSplit = false)
+          .foldLeft(c)((cc, kv) => cc.updated(kv._1, kv._2))
+      }
   }
 
   /** `_sample_to_many`: one `<Method>_Sample` table per method, with a
     * fresh SampleData_Original_GUID per output row.
     */
   def sampleToMany(cat: FfiCatalog, assertUnique: Boolean = true): FfiCatalog = {
-    val long = sampleLong(cat).cache()
-    val methods = long
-      .select("Method_Name").na.drop().distinct()
-      .collect().map(_.getString(0)).sorted
-    val out = methods.foldLeft(cat) { (c, method) =>
-      val temp = long.filter(col("Method_Name") === method)
-      val subset =
-        pivotUnique(temp, SampleIndex, "SampleAtt_FieldName", "SampleData_Value", assertUnique)
+    val long = cat.pin(sampleLong(cat).filter(col("Method_Name").isNotNull))
+    pivotFamily(long, SampleIndex, "SampleAtt_FieldName", "SampleData_Value", assertUnique)
+      .foldLeft(cat) { case (c, (method, subset, unitSystems)) =>
+        val withGuid = subset
           .withColumn("SampleData_Original_GUID", upper(expr("uuid()")))
-      val unitSystems = subset
-        .select("Method_UnitSystem").na.drop().distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      unitSplit(subset.drop(IngestId), unitSystems, tableName(method), "Sample",
-        dropUnitColOnSplit = true)
-        .foldLeft(c)((cc, kv) => cc.updated(kv._1, kv._2))
-    }
-    long.unpersist()
-    out
+          .drop(IngestId)
+        unitSplit(withGuid, unitSystems, tableName(method), "Sample", dropUnitColOnSplit = true)
+          .foldLeft(c)((cc, kv) => cc.updated(kv._1, kv._2))
+      }
   }
 }

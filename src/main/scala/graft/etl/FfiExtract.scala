@@ -143,12 +143,24 @@ object FfiExtract {
       .otherwise(c)
   }
 
-  /** Whole-file extraction: every depth-1 tag becomes a catalog table. */
+  /** Whole-file extraction: every depth-1 tag becomes a catalog table.
+    * Each table is pinned: the first action that reads it parses the XML
+    * once into the cache, and every later action of the transform and the
+    * load reads it from memory; tags nothing reads are never parsed past
+    * their schema. Release the returned catalog when the export is done.
+    */
   def extract(
       spark: SparkSession,
       path: String,
       tags: Option[Seq[String]] = None): FfiCatalog = {
     val ts = tags.getOrElse(tagNames(path))
-    FfiCatalog(ts.map(t => t -> readTable(spark, path, t)).toMap)
+    val cat = FfiCatalog.empty
+    try {
+      cat.copy(tables = ts.map(t => t -> cat.pin(readTable(spark, path, t))).toMap)
+    } catch {
+      case e: Throwable =>
+        cat.release()
+        throw e
+    }
   }
 }

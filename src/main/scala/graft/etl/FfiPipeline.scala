@@ -11,9 +11,12 @@ import scala.jdk.CollectionConverters._
   * extract → idents → transform → rename mapping → FK-ordered MERGE
   * load, and archive the file iff every table loaded cleanly.
   *
-  * One export's plan graph is lazy end-to-end: the only actions are the
-  * driver-side method-name collects (the data-dependent table fan-out,
-  * SURVEY §7.4) and the sinks. Many exports parallelize trivially — at
+  * One export's plan runs each piece once: the extracted tables, the two
+  * EAV long frames and the enriched SampleEvent are pinned, so the actions
+  * (the EAV fan-out's metadata collects and guards, SURVEY §7.4, and the
+  * sinks) read them from memory instead of re-running their lineage.
+  * [[runFile]] owns those caches and releases them when the export is
+  * done, loaded or not. Many exports parallelize trivially — at
   * scale you run one `runFile` per export (or pass a glob to the XML
   * reads) and let the cluster schedule them.
   */
@@ -26,16 +29,14 @@ object FfiPipeline {
     def failedTables: Seq[String] = tables.filter(_.failed).map(_.table)
   }
 
-  /** Transform one export into the catalog of mapped output frames, keyed
-    * by the sink's reflected table names (case-insensitive match between
-    * the mapping's target names and JDBC metadata).
+  /** The mapped output frames of one transformed export, keyed by the
+    * sink's reflected table names (case-insensitive match between the
+    * mapping's target names and JDBC metadata).
     */
   def outputFrames(
-      spark: SparkSession,
-      xmlFile: String,
+      cat: FfiCatalog,
       mapping: Mapping,
       constraints: JdbcConstraints): Map[String, org.apache.spark.sql.DataFrame] = {
-    val cat = FfiTransform(FfiIdents(FfiExtract.extract(spark, xmlFile)))
     val reflected = constraints.primaryKeys.keys.toSeq
     (for {
       (ffiTable, outTable) <- mapping.tableMap.toSeq
@@ -54,10 +55,13 @@ object FfiPipeline {
       url: String,
       dialect: MergeJdbc.Dialect,
       props: Map[String, String] = Map.empty): FileResult = {
-    val frames = outputFrames(spark, xmlFile.toString, mapping, constraints)
-    val results = MergeJdbc.loadAll(frames, constraints, url, dialect, props = props)
-    val failed = results.filter(_.failed).map(_.table)
-    FileResult(xmlFile, results, Archive.archiveIfClean(xmlFile, failed))
+    val extracted = FfiExtract.extract(spark, xmlFile.toString)
+    try {
+      val frames = outputFrames(FfiTransform(FfiIdents(extracted)), mapping, constraints)
+      val results = MergeJdbc.loadAll(frames, constraints, url, dialect, props = props)
+      val failed = results.filter(_.failed).map(_.table)
+      FileResult(xmlFile, results, Archive.archiveIfClean(xmlFile, failed))
+    } finally extracted.release()
   }
 
   /** The polling batch: every `*.xml` directly under `dataDir`, in name

@@ -44,7 +44,11 @@ object FfiTransform {
       case None => cat2
     }
 
-    val cat4 = FfiProjects(FfiEvents(cat3))
+    // loading SampleEvent and ProjectVisit reads the team-enriched
+    // SampleEvent three times (directly and twice through VisitID): pin it
+    // so its seven sample-table joins run once
+    val events = FfiEvents(cat3)
+    val cat4 = FfiProjects(events.updated("SampleEvent", events.pin(events("SampleEvent"))))
 
     // drop EAV staging tables (`parser/xml.py:741-744`)
     cat4.removed("SampleData", "SampleRow", "AttributeRow", "AttributeData")

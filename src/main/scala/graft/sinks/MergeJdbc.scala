@@ -98,6 +98,11 @@ object MergeJdbc {
     } finally st.close()
   }
 
+  private def execute(conn: Connection, sql: String): Unit = {
+    val st = conn.createStatement()
+    try st.execute(sql) finally st.close()
+  }
+
   /** Stage + merge one DataFrame into `table`. The staging table lives and
     * dies inside this call; per-partition inserts run on executors.
     */
@@ -118,9 +123,9 @@ object MergeJdbc {
       val before = scalarLong(conn, s"SELECT COUNT(*) FROM $table")
       try {
         // fresh staging table (drop leftovers from a crashed run)
-        try { conn.createStatement().execute(dialect.dropStagingSql(staging)); conn.commit() }
+        try { execute(conn, dialect.dropStagingSql(staging)); conn.commit() }
         catch { case _: java.sql.SQLException => conn.rollback() }
-        conn.createStatement().execute(dialect.createStagingSql(table, staging))
+        execute(conn, dialect.createStagingSql(table, staging))
         conn.commit()
 
         val insertSql =
@@ -145,8 +150,8 @@ object MergeJdbc {
           }
         }
 
-        conn.createStatement().execute(dialect.mergeSql(table, staging, cols, pks))
-        conn.createStatement().execute(dialect.dropStagingSql(staging))
+        execute(conn, dialect.mergeSql(table, staging, cols, pks))
+        execute(conn, dialect.dropStagingSql(staging))
         conn.commit()
         val after = scalarLong(conn, s"SELECT COUNT(*) FROM $table")
         TableResult(table, before, after, None)

@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   */
 class FfiPipelineSpec extends SparkSpec {
 
+  /** Spark jobs FfiTransform may start on the fixture. */
+  private val JobBudget = 34
 
   private lazy val transformed: FfiCatalog = {
     val dir = Files.createTempDirectory("ffi_fixture")
@@ -26,6 +28,31 @@ class FfiPipelineSpec extends SparkSpec {
     Files.writeString(xml, FfiFixture.Xml)
     val cat = FfiExtract.extract(spark, xml.toString)
     FfiTransform(FfiIdents(cat))
+  }
+
+  test("FfiTransform runs within its Spark job budget") {
+    // every job FfiTransform starts on the fixture, including the reads
+    // that fill the extracted tables' caches
+    import org.apache.spark.sql.graft.SparkInternals
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val xml = Files.createTempDirectory("ffi_jobs").resolve("export.xml")
+    Files.writeString(xml, FfiFixture.Xml)
+    val cat = FfiIdents(FfiExtract.extract(spark, xml.toString))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    SparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      FfiTransform(cat)
+      SparkInternals.drainListenerBus(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      cat.release()
+    }
+    assert(jobs.get() <= JobBudget, s"FfiTransform ran ${jobs.get()} jobs")
   }
 
   test("PlotID derivation + keep-first dedup") {
