@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.SparkInternals
 
 /** Driver-run benchmark: times every SparkEntry query at the given scale
   * factor and prints ONE JSON line (the driver greps it from process
@@ -21,135 +23,31 @@ import org.apache.spark.sql.SparkSession
   * BENCH_DETAIL.json so a storm is attributable to its pass from the
   * official record alone.
   *
-  * Self-diagnosing record: a SparkListener attributes per-query GC time,
-  * shuffle read/write bytes, spill, and peak task execution memory
-  * (queries run sequentially, so task-metric deltas between query
-  * boundaries attribute exactly), written to `BENCH_DETAIL.json` next to
+  * Self-diagnosing record: a [[JobLog]] registered around each query
+  * attributes its GC time, shuffle read/write bytes, spill, and peak task
+  * execution memory (queries run sequentially and the listener bus is
+  * drained at both query boundaries, so the window holds exactly the
+  * query's tasks), written to `BENCH_DETAIL.json` next to
   * the compact line — so a wall-time swing on an untouched query is
   * classifiable from the official record alone (GC/IO pressure vs an
   * actual plan regression) without builder-side re-runs. The compact line
   * carries the suite-wide totals; the per-query rows live in the file
   * (158 queries × 5 metrics cannot fit the driver's ~1900-char window).
+  *
+  * The session start, warm-up and job listener here are the one harness
+  * the dev tools in `graft.tools` call too, so a profile or plan dump sees
+  * the same warmed session the bench times.
   */
 object Bench {
 
-  /** Sums task metrics as tasks end. The listener bus is async, so query
-    * boundaries drain it (reflective `waitUntilEmpty` — private[spark] but
-    * stable across every Spark 3.x/4.x — with a bounded-sleep fallback)
-    * before snapshotting.
-    */
-  private final class MetricsListener extends org.apache.spark.scheduler.SparkListener {
-    @volatile var gcMs = 0L
-    @volatile var shufReadB = 0L
-    @volatile var shufWriteB = 0L
-    @volatile var spillB = 0L
-    @volatile var peakMemB = 0L
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        gcMs += m.jvmGCTime
-        shufReadB += m.shuffleReadMetrics.totalBytesRead
-        shufWriteB += m.shuffleWriteMetrics.bytesWritten
-        spillB += m.memoryBytesSpilled + m.diskBytesSpilled
-        peakMemB = math.max(peakMemB, m.peakExecutionMemory)
-      }
-    }
-    def snapshot: Array[Long] = Array(gcMs, shufReadB, shufWriteB, spillB, peakMemB)
-  }
-
-  private def drainListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
-    } catch { case _: Throwable => Thread.sleep(50) }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark: SparkSession = graft.engine.Session
-      .builder(s"local[$cpus]", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = warmSession(sfDir)
 
-    // Warmup, charged to no query: shuffle + agg machinery (JIT, codegen
-    // cache, block manager), every table's parquet footer, and one
-    // broadcast join.
-    spark.range(1 << 20).selectExpr("sum(id)", "count(distinct id % 100)").collect()
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    tables.foreach { t =>
-      try graft.engine.Session.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
-    try {
-      import org.apache.spark.sql.functions._
-      val n = spark.read.parquet(s"$sfDir/nation.parquet")
-      spark.read.parquet(s"$sfDir/customer.parquet")
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name").count().collect()
-    } catch { case _: Throwable => () }
-    try {
-      // native-kernel classes (tokenizers, winnow, dot/popcount): load +
-      // JIT them on a 10-row frame so query timings measure plans, not
-      // first-call class initialization.
-      import org.apache.spark.sql.functions._
-      import graft.functions.{TextExprs, VectorExprs}
-      spark.range(10)
-        .select(
-          concat_ws(" ", lit("warm"), col("id"), lit("kernel run")).as("txt"),
-          array(col("id"), col("id") + 1).cast("array<long>").as("bm"),
-          array(col("id").cast("float"), lit(1.0f)).as("v"))
-        .select(
-          size(TextExprs.wordTokens(col("txt"))) +
-            size(TextExprs.wordShingles(col("txt"), 2)) +
-            size(TextExprs.winnowFingerprints(col("txt"), 4, 3)) +
-            VectorExprs.bitmapAndCount(col("bm"), col("bm")) +
-            VectorExprs.dotProduct(col("v"), col("v")).cast("int"))
-        .collect()
-    } catch { case _: Throwable => () }
-    try {
-      // one-time bucketed fact layout: q_bucketed_join exists to showcase
-      // the exchange-free READ; the layout write is amortized-by-design
-      // (once per table lifetime at scale) and belongs to warm-up, not to
-      // the probe query's timed body
-      graft.queries.Relational5.ensureBucketedFacts(spark, sfDir)
-    } catch { case _: Throwable => () }
-    try {
-      // one-time lake fixtures: the q_lake_* queries time the row-level
-      // op / feed read; the fixture ingest (at scale, the pre-existing
-      // table) is warm-up, not the operator
-      graft.queries.Relational5.ensureLakeFixtures(spark, sfDir)
-    } catch { case _: Throwable => () }
-    try {
-      // one-time persisted ANN indexes: q_knn_ivf(pq)_persisted time the
-      // probe; the build (at scale, once per index lifetime + delta
-      // maintenance) is warm-up
-      graft.queries.Similarity.ensureAnnIndexes(spark, sfDir)
-    } catch { case _: Throwable => () }
-    try {
-      // one-time persisted inverted index: q_bm25_indexed times the
-      // probe; the build is once-per-index-lifetime + delta maintenance
-      graft.queries.Text.ensureInvertedIndex(spark, sfDir)
-    } catch { case _: Throwable => () }
-
-    // Dev loop: SPARK_GRAFT_ONLY=q_a,q_b times just those queries;
-    // SPARK_GRAFT_EXPLAIN=1 also prints each formatted plan first.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // Dev loop: SPARK_GRAFT_ONLY=q_a,q_b times just those queries.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(queryNames(_).toSet)
     val selected = only.fold(SparkEntry.all)(names => SparkEntry.all.filter(q => names(q.name)))
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-      selected.foreach { q =>
-        println(s"==== ${q.name}")
-        q.fn(spark, sfDir).explain("formatted")
-      }
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    drainListenerBus(spark)
-    var prev = listener.snapshot
+
     // MEDIAN ACROSS N PASSES (default 3, SPARK_GRAFT_ITERS overrides; the
     // dev loop can set 1): every query body is convergent by construction
     // (write queries re-merge value-identical batches behind txn
@@ -167,23 +65,24 @@ object Bench {
     val iters = math.max(1, sys.env.get("SPARK_GRAFT_ITERS")
       .flatMap(_.toIntOption).getOrElse(3))
     val runsByQuery = Array.fill(selected.size)(
-      scala.collection.mutable.ArrayBuffer.empty[(Double, Array[Long])])
+      scala.collection.mutable.ArrayBuffer.empty[(Double, Totals)])
     val passTotals = Array.fill(iters)(0.0)
+    var peakMemB = 0L
     for (pass <- 0 until iters; (q, qi) <- selected.zipWithIndex) {
-      val t0 = System.nanoTime()
-      try { q.fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      drainListenerBus(spark)
-      val now = listener.snapshot
+      val (sec, log) = logged(spark) {
+        val t0 = System.nanoTime()
+        try { q.fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        (System.nanoTime() - t0) / 1e9
+      }
+      val t = log.totals
       // peak memory is a max, not a sum: report the window's own max only
-      // when it grew, else 0 (the query stayed under the running peak)
-      val delta = Array(now(0) - prev(0), now(1) - prev(1), now(2) - prev(2),
-        now(3) - prev(3), if (now(4) > prev(4)) now(4) else 0L)
-      prev = now
+      // when it raised the running peak, else 0
+      val delta = t.copy(peakMemB = if (t.peakMemB > peakMemB) t.peakMemB else 0L)
+      peakMemB = math.max(peakMemB, t.peakMemB)
       runsByQuery(qi) += ((sec, delta))
       passTotals(pass) += sec
     }
-    val detail = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Array[Long])]
+    val detail = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Totals)]
     val results = selected.zipWithIndex.map { case (q, qi) =>
       val runs = runsByQuery(qi)
       val (sec, delta) = runs.sortBy(_._1).apply((runs.size - 1) / 2)
@@ -191,19 +90,19 @@ object Bench {
       q.name -> sec
     }
     val total = results.map(_._2).sum
-    val totGc = detail.map(_._3(0)).sum
-    val totShufR = detail.map(_._3(1)).sum
-    val totShufW = detail.map(_._3(2)).sum
-    val totSpill = detail.map(_._3(3)).sum
+    val totGc = detail.map(_._3.gcMs).sum
+    val totShufR = detail.map(_._3.shuffleReadB).sum
+    val totShufW = detail.map(_._3.shuffleWriteB).sum
+    val totSpill = detail.map(_._3.spillB).sum
 
     // Full per-query diagnostics to a file (no output-window budget):
     // sec + gc_ms + shuffle read/write + spill + peak execution memory.
     def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
     try {
       val rows = detail.map { case (name, sec, d) =>
-        s"""{"name":"$name","sec":${math.round(sec * 1000) / 1000.0},"gc_ms":${d(0)},""" +
-          s""""shuffle_read_mb":${mb(d(1))},"shuffle_write_mb":${mb(d(2))},""" +
-          s""""spill_mb":${mb(d(3))},"peak_mem_mb":${mb(d(4))}}"""
+        s"""{"name":"$name","sec":${math.round(sec * 1000) / 1000.0},"gc_ms":${d.gcMs},""" +
+          s""""shuffle_read_mb":${mb(d.shuffleReadB)},"shuffle_write_mb":${mb(d.shuffleWriteB)},""" +
+          s""""spill_mb":${mb(d.spillB)},"peak_mem_mb":${mb(d.peakMemB)}}"""
       }
       val sfName0 = sfDir.split("/").filter(_.nonEmpty).lastOption.getOrElse(sfDir)
       val passTot = passTotals.map(s => math.round(s * 1000) / 1000.0).mkString("[", ",", "]")
@@ -252,5 +151,164 @@ object Bench {
     spark.stop()
     println(line)
     System.out.flush()
+  }
+
+  /** Query names from a comma-separated list, in list order. */
+  def queryNames(csv: String): Seq[String] =
+    csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** A local session on `SPARK_GRAFT_CPUS` cores (default `defaultCpus`),
+    * logging at WARN.
+    */
+  def session(defaultCpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(defaultCpus)(_.toInt)
+    val spark = graft.engine.Session.builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm-up, charged to no query: shuffle + agg machinery (JIT, codegen
+    * cache, block manager), every table's parquet footer, one broadcast
+    * join, the native kernels, and the one-time fixtures the timed queries
+    * read. A step that throws is skipped; the result names each failed
+    * step with the first line of its error.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Seq[(String, String)] = {
+    import org.apache.spark.sql.functions._
+    def step(name: String)(body: => Any): Option[(String, String)] =
+      try { body; None }
+      catch { case e: Throwable => Some(name -> e.toString.takeWhile(_ != '\n')) }
+    spark.range(1 << 20).selectExpr("sum(id)", "count(distinct id % 100)").collect()
+    val tables = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
+    tables.flatMap(t => step(s"table $t")(graft.engine.Session.table(spark, sfDir, t).count())) ++
+      step("broadcast join") {
+        val n = spark.read.parquet(s"$sfDir/nation.parquet")
+        spark.read.parquet(s"$sfDir/customer.parquet")
+          .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+          .groupBy("n_name").count().collect()
+      } ++
+      step("native kernels") {
+        // native-kernel classes (tokenizers, winnow, dot/popcount): load +
+        // JIT them on a 10-row frame so query timings measure plans, not
+        // first-call class initialization.
+        import graft.functions.{TextExprs, VectorExprs}
+        spark.range(10)
+          .select(
+            concat_ws(" ", lit("warm"), col("id"), lit("kernel run")).as("txt"),
+            array(col("id"), col("id") + 1).cast("array<long>").as("bm"),
+            array(col("id").cast("double"), lit(1.0)).as("v"))
+          .select(
+            size(TextExprs.wordTokens(col("txt"))) +
+              size(TextExprs.wordShingles(col("txt"), 2)) +
+              size(TextExprs.winnowFingerprints(col("txt"), 4, 3)) +
+              VectorExprs.bitmapAndCount(col("bm"), col("bm")) +
+              VectorExprs.dotProduct(col("v"), col("v")).cast("int"))
+          .collect()
+      } ++
+      // one-time bucketed fact layout: q_bucketed_join exists to showcase
+      // the exchange-free READ; the layout write is amortized-by-design
+      // (once per table lifetime at scale) and belongs to warm-up, not to
+      // the probe query's timed body
+      step("ensureBucketedFacts")(graft.queries.Relational5.ensureBucketedFacts(spark, sfDir)) ++
+      // one-time lake fixtures: the q_lake_* queries time the row-level
+      // op / feed read; the fixture ingest (at scale, the pre-existing
+      // table) is warm-up, not the operator
+      step("ensureLakeFixtures")(graft.queries.Relational5.ensureLakeFixtures(spark, sfDir)) ++
+      // one-time persisted ANN indexes: q_knn_ivf(pq)_persisted time the
+      // probe; the build (at scale, once per index lifetime + delta
+      // maintenance) is warm-up
+      step("ensureAnnIndexes")(graft.queries.Similarity.ensureAnnIndexes(spark, sfDir)) ++
+      // one-time persisted inverted index: q_bm25_indexed times the
+      // probe; the build is once-per-index-lifetime + delta maintenance
+      step("ensureInvertedIndex")(graft.queries.Text.ensureInvertedIndex(spark, sfDir))
+  }
+
+  /** The session Bench and the dev tools measure: [[session]] after
+    * [[warmUp]], with each failed warm-up step printed to stderr.
+    */
+  def warmSession(sfDir: String): SparkSession = {
+    val spark = session()
+    warmUp(spark, sfDir).foreach { case (name, err) =>
+      System.err.println(s"[warm-up] $name failed: $err")
+    }
+    spark
+  }
+
+  /** One window's task metrics, summed over its stages; `peakMemB` is the
+    * largest peak execution memory of any task.
+    */
+  final case class Totals(
+      gcMs: Long, shuffleReadB: Long, shuffleWriteB: Long, spillB: Long, peakMemB: Long)
+
+  /** Jobs, with their call sites, and per-stage rollups of task metrics
+    * (wall, task time, GC, shuffle, spill, peak memory): the level that
+    * separates "one slow task" from "driver gap" inside a job. Read it
+    * after draining the listener bus; [[logged]] does both.
+    */
+  final class JobLog extends SparkListener {
+    final class Job(val id: Int, val desc: String, val start: Long) { var end = -1L }
+    final class Stage(val id: Int, val name: String, val start: Long) {
+      var end = -1L
+      var tasks = 0
+      var taskMs, gcMs, shuffleReadB, shuffleWriteB, spillB, peakMemB = 0L
+    }
+    private val jobById = scala.collection.mutable.LinkedHashMap.empty[Int, Job]
+    private val stageById = scala.collection.mutable.LinkedHashMap.empty[Int, Stage]
+
+    /** In start order. */
+    def jobs: Seq[Job] = synchronized(jobById.values.toSeq)
+    def stages: Seq[Stage] = synchronized(stageById.values.toSeq)
+
+    def totals: Totals = {
+      val ss = stages
+      Totals(ss.map(_.gcMs).sum, ss.map(_.shuffleReadB).sum, ss.map(_.shuffleWriteB).sum,
+        ss.map(_.spillB).sum, ss.map(_.peakMemB).maxOption.getOrElse(0L))
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val site = e.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')).getOrElse("")
+      val desc = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+      jobById(e.jobId) = new Job(e.jobId, s"$site | $desc".take(110), e.time)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobById.get(e.jobId).foreach(_.end = e.time)
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+      val si = e.stageInfo
+      stageById.getOrElseUpdate(si.stageId,
+        new Stage(si.stageId, si.name.takeWhile(_ != '\n').take(80), System.currentTimeMillis()))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      val m = e.taskMetrics
+      if (m != null) stageById.get(e.stageId).foreach { s =>
+        s.tasks += 1
+        s.taskMs += m.executorRunTime
+        s.gcMs += m.jvmGCTime
+        s.shuffleReadB += m.shuffleReadMetrics.totalBytesRead
+        s.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
+        s.spillB += m.memoryBytesSpilled + m.diskBytesSpilled
+        s.peakMemB = math.max(s.peakMemB, m.peakExecutionMemory)
+      }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      stageById.get(e.stageInfo.stageId).foreach(_.end = System.currentTimeMillis())
+    }
+  }
+
+  /** Runs `body` with a fresh [[JobLog]] registered. The listener bus is
+    * drained on both sides, so the log holds exactly the body's jobs.
+    */
+  def logged[T](spark: SparkSession)(body: => T): (T, JobLog) = {
+    val sc = spark.sparkContext
+    val log = new JobLog
+    SparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(log)
+    try {
+      val out = body
+      SparkInternals.drainListenerBus(sc)
+      (out, log)
+    } finally sc.removeSparkListener(log)
   }
 }

@@ -6,14 +6,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.engine.Session.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // Dev loop: SPARK_GRAFT_ONLY=q_a,q_b dumps just those queries (the
     // driver never sets it; same contract as Bench).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(Bench.queryNames(_).toSet)
     val selected = only.fold(SparkEntry.queries) { names =>
       SparkEntry.queries.view.filterKeys(names).toMap
     }

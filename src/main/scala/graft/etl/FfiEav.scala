@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   * with explicit values and need no job of their own.
   *
   * Pivot semantics: pandas `pivot` RAISES on duplicate (index, column)
-  * pairs; Spark's `first()` would silently pick one. `assertUnique = true`
-  * reproduces the assertion with an explicit duplicate guard (one
-  * aggregate job per family — switch off for bulk backfills).
+  * pairs; Spark's `first()` would silently pick one, so an explicit
+  * duplicate guard (one aggregate job per family) reproduces the
+  * assertion.
   */
 object FfiEav {
 
@@ -115,7 +115,7 @@ object FfiEav {
   /** pandas-pivot's assertion: raises if any (`keys`, `fieldCol`) pair
     * occurs more than once in `long`.
     */
-  private def assertUniquePairs(long: DataFrame, keys: Seq[String], fieldCol: String): Unit = {
+  private def requireUniquePairs(long: DataFrame, keys: Seq[String], fieldCol: String): Unit = {
     val dups = long
       .groupBy((keys :+ fieldCol).map(col): _*)
       .count()
@@ -151,32 +151,17 @@ object FfiEav {
     long.groupBy(index.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** pandas-pivot: wide = one column per distinct `fieldCol` value, cells
-    * from `valueCol`; raises if any (index, field) pair is duplicated.
-    */
-  def pivotUnique(
-      long: DataFrame,
-      index: Seq[String],
-      fieldCol: String,
-      valueCol: String,
-      assertUnique: Boolean = true): DataFrame = {
-    if (assertUnique) assertUniquePairs(long, index, fieldCol)
-    val fields = pivotOrder(long.select(fieldCol).distinct().collect().map(_.getString(0)))
-    pivotFirst(long, index, fieldCol, valueCol, fields)
-  }
-
   /** One EAV family's fan-out: per method (sorted), its pivoted table and
     * its sorted unit systems. `long` holds only rows with a method; one
     * collect over it yields every method's fields and unit systems, and
-    * the optional guard is one aggregate over all methods.
+    * the guard is one aggregate over all methods.
     */
   private def pivotFamily(
       long: DataFrame,
       index: Seq[String],
       fieldCol: String,
-      valueCol: String,
-      assertUnique: Boolean): Seq[(String, DataFrame, Seq[String])] = {
-    if (assertUnique) assertUniquePairs(long, "Method_Name" +: index, fieldCol)
+      valueCol: String): Seq[(String, DataFrame, Seq[String])] = {
+    requireUniquePairs(long, "Method_Name" +: index, fieldCol)
     val meta = long.select("Method_Name", fieldCol, "Method_UnitSystem").distinct().collect()
     meta.groupBy(_.getString(0)).toSeq.sortBy(_._1).map { case (method, rows) =>
       val fields = pivotOrder(rows.map(_.getString(1)))
@@ -264,7 +249,7 @@ object FfiEav {
     } else Seq(s"${baseName}_$suffix" -> subset.drop("Method_UnitSystem"))
 
   /** `_attr_to_many`: one `<Method>_Attribute` table per method. */
-  def attrToMany(cat: FfiCatalog, assertUnique: Boolean = true): FfiCatalog = {
+  def attrToMany(cat: FfiCatalog): FfiCatalog = {
     // full-row dedup of the long frame (reference drop_duplicates),
     // keeping the earliest ingest id per surviving row for order rules
     val long = cat.pin(
@@ -274,7 +259,7 @@ object FfiEav {
           ("Method_Name" +: AttrIndex :+ "MethodAtt_FieldName" :+ "AttributeData_Value")
             .map(col): _*)
         .agg(min(col(IngestId)).as(IngestId)))
-    pivotFamily(long, AttrIndex, "MethodAtt_FieldName", "AttributeData_Value", assertUnique)
+    pivotFamily(long, AttrIndex, "MethodAtt_FieldName", "AttributeData_Value")
       .foldLeft(cat) { case (c, (method, subset, unitSystems)) =>
         val withSpp = withSpecies(subset, c.get("LocalSpecies"))
         val ruled = applyMethodRules(method, withSpp)
@@ -288,9 +273,9 @@ object FfiEav {
   /** `_sample_to_many`: one `<Method>_Sample` table per method, with a
     * fresh SampleData_Original_GUID per output row.
     */
-  def sampleToMany(cat: FfiCatalog, assertUnique: Boolean = true): FfiCatalog = {
+  def sampleToMany(cat: FfiCatalog): FfiCatalog = {
     val long = cat.pin(sampleLong(cat).filter(col("Method_Name").isNotNull))
-    pivotFamily(long, SampleIndex, "SampleAtt_FieldName", "SampleData_Value", assertUnique)
+    pivotFamily(long, SampleIndex, "SampleAtt_FieldName", "SampleData_Value")
       .foldLeft(cat) { case (c, (method, subset, unitSystems)) =>
         val withGuid = subset
           .withColumn("SampleData_Original_GUID", upper(expr("uuid()")))

@@ -14,9 +14,8 @@ import org.apache.spark.sql.types.StringType
   * extraction. Namespace prefixes are stripped by the source.
   *
   * Scale note: one FFI export is small (MBs), but the 100 TB path is MANY
-  * exports — `path` accepts a glob and each rowTag read parallelizes over
-  * files. Tag discovery streams only the first file (tag sets are
-  * schema-stable across exports); pass `tags` explicitly to skip it.
+  * exports, one [[extract]] per export file. `path` names one file: tag
+  * discovery opens it with a `FileInputStream`, so a glob would throw.
   */
 object FfiExtract {
 
@@ -53,14 +52,18 @@ object FfiExtract {
   }
 
   /** One table: all rows with this rowTag, all columns StringType. */
-  def readTable(spark: SparkSession, path: String, tag: String): DataFrame = {
-    val raw = spark.read
+  def readTable(spark: SparkSession, path: String, tag: String): DataFrame =
+    normalize(spark.read
       .format("xml")
       .option("rowTag", tag)
       .option("inferSchema", "false")
-      .load(path)
-    // inference off still leaves attribute/struct artifacts possible on
-    // messy docs; flatten defensively to plain strings.
+      .load(path))
+
+  /** Every column flattened to a string (inference off still leaves
+    * attribute/struct artifacts possible on messy docs), the
+    * [[applyColumnRules]] normalization, and the ingest-order column.
+    */
+  private def normalize(raw: DataFrame): DataFrame = {
     val cols = raw.schema.fields.map {
       case f if f.dataType == StringType => col(f.name)
       case f                             => col(f.name).cast(StringType).as(f.name)
@@ -101,13 +104,7 @@ object FfiExtract {
     // column alone (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the checkpoint
     // materializes full rows, making any downstream audit query legal.
     val quarantined = flagged.filter(col(corruptCol).isNotNull).localCheckpoint()
-    val cols = clean.schema.fields.map {
-      case f if f.dataType == StringType => col(f.name)
-      case f                             => col(f.name).cast(StringType).as(f.name)
-    }
-    (applyColumnRules(clean.select(cols.toSeq: _*))
-       .withColumn(IngestId, monotonically_increasing_id()),
-     quarantined)
+    (normalize(clean), quarantined)
   }
 
   /** The reference's per-column normalization heuristics
@@ -149,14 +146,10 @@ object FfiExtract {
     * load reads it from memory; tags nothing reads are never parsed past
     * their schema. Release the returned catalog when the export is done.
     */
-  def extract(
-      spark: SparkSession,
-      path: String,
-      tags: Option[Seq[String]] = None): FfiCatalog = {
-    val ts = tags.getOrElse(tagNames(path))
+  def extract(spark: SparkSession, path: String): FfiCatalog = {
     val cat = FfiCatalog.empty
     try {
-      cat.copy(tables = ts.map(t => t -> cat.pin(readTable(spark, path, t))).toMap)
+      cat.copy(tables = tagNames(path).map(t => t -> cat.pin(readTable(spark, path, t))).toMap)
     } catch {
       case e: Throwable =>
         cat.release()

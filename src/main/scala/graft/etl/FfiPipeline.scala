@@ -17,8 +17,8 @@ import scala.jdk.CollectionConverters._
   * sinks) read them from memory instead of re-running their lineage.
   * [[runFile]] owns those caches and releases them when the export is
   * done, loaded or not. Many exports parallelize trivially — at
-  * scale you run one `runFile` per export (or pass a glob to the XML
-  * reads) and let the cluster schedule them.
+  * scale you run one `runFile` per export and let the cluster schedule
+  * them.
   */
 object FfiPipeline {
 
@@ -90,7 +90,7 @@ object FfiPipeline {
   /** The reference's end-to-end entry (`/root/reference/xml_to_rdb.py:22-34`
     * reads config.ini, builds the URL, connects, then loops the data dir):
     * same flow from an INI text — section → [[graft.engine.DbConfig]]
-    * connection → dialect dispatch from the built URL → directory batch.
+    * connection → [[MergeJdbc.Dialect.forUrl]] → directory batch.
     * None when the section is missing or its dialect is unrecognized
     * (the reference's empty-URL case).
     */
@@ -101,14 +101,9 @@ object FfiPipeline {
       dataDir: Path,
       mapping: Mapping): Option[Seq[FileResult]] =
     graft.engine.DbConfig.fromIni(iniText, section).map { c =>
-      // DbConfig only ever builds these two forms; unknown dialects were
-      // already None before this point
-      val dialect =
-        if (c.url.startsWith("jdbc:sqlserver")) MergeJdbc.SqlServer
-        else MergeJdbc.Postgres
       import scala.jdk.CollectionConverters._
       val props = c.props.stringPropertyNames().asScala
         .map(k => k -> c.props.getProperty(k)).toMap
-      runDirectory(spark, dataDir, mapping, c.url, dialect, props)
+      runDirectory(spark, dataDir, mapping, c.url, MergeJdbc.Dialect.forUrl(c.url), props)
     }
 }

@@ -18,10 +18,10 @@ object FfiTransform {
       .head()
       .getString(0)
 
-  def apply(cat0: FfiCatalog, assertUniquePivot: Boolean = true): FfiCatalog = {
+  def apply(cat0: FfiCatalog): FfiCatalog = {
     val admin = adminUnit(cat0)
 
-    val cat1 = FfiEav.sampleToMany(FfiEav.attrToMany(cat0, assertUniquePivot), assertUniquePivot)
+    val cat1 = FfiEav.sampleToMany(FfiEav.attrToMany(cat0))
 
     // ProjectID normalization + AdminUnit data-quality columns
     // (`parser/xml.py:721-731`)

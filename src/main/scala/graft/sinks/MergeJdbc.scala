@@ -48,6 +48,18 @@ object MergeJdbc {
     def dropStagingSql(staging: String): String = s"DROP TABLE $staging"
   }
 
+  object Dialect {
+
+    /** The dialect a JDBC URL speaks: `jdbc:sqlserver:` and
+      * `jdbc:postgresql:` by prefix, anything else (the embedded Derby
+      * target) the ANSI rendering.
+      */
+    def forUrl(url: String): Dialect =
+      if (url.startsWith("jdbc:sqlserver:")) SqlServer
+      else if (url.startsWith("jdbc:postgresql:")) Postgres
+      else Derby
+  }
+
   /** SQL Server (the reference's target, `parser/functions.py:7-25`). */
   case object SqlServer extends Dialect {
     override def createStagingSql(target: String, staging: String): String =
@@ -103,6 +115,9 @@ object MergeJdbc {
     try st.execute(sql) finally st.close()
   }
 
+  /** Staged rows per `executeBatch` round trip. */
+  private final val BatchSize = 500
+
   /** Stage + merge one DataFrame into `table`. The staging table lives and
     * dies inside this call; per-partition inserts run on executors.
     */
@@ -112,7 +127,6 @@ object MergeJdbc {
       pks: Seq[String],
       url: String,
       dialect: Dialect,
-      batchSize: Int = 500,
       props: Map[String, String] = Map.empty): TableResult = {
     require(pks.nonEmpty, s"$table has no primary key — MERGE needs a PK guard")
     val staging = s"STG_$table"
@@ -142,7 +156,7 @@ object MergeJdbc {
                 while (i < cols.length) { ps.setObject(i + 1, r.get(i)); i += 1 }
                 ps.addBatch()
                 n += 1
-                if (n % batchSize == 0) ps.executeBatch()
+                if (n % BatchSize == 0) ps.executeBatch()
               }
               ps.executeBatch()
               c.commit()

@@ -1,11 +1,12 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
+
+import graft.Bench
 
 /** Dev tool: write `explain("formatted")` for named queries to
   * `<outDir>/<query>_<suffix>.txt` (the plan evidence files the round
-  * docs reference). Runs the same fixture warm-up as Bench/ProfileQuery
+  * docs reference), in the session Bench times ([[Bench.warmSession]]),
   * so lake/index-backed queries resolve. For queries whose fn executes
   * DML before returning a readback frame, the dump is the readback plan;
   * the write-path evidence for those lives in the ProfileQuery job logs.
@@ -17,23 +18,10 @@ object ExplainDump {
     val sfDir = args(0)
     val outDir = Paths.get(args(1))
     val suffix = args(2)
-    val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
     Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark: SparkSession =
-      graft.engine.Session.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1 << 20).selectExpr("sum(id)", "count(distinct id % 100)").collect()
-    try graft.queries.Relational5.ensureBucketedFacts(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.Relational5.ensureLakeFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.Similarity.ensureAnnIndexes(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.Text.ensureInvertedIndex(spark, sfDir)
-    catch { case _: Throwable => () }
+    val spark = Bench.warmSession(sfDir)
     val byName = graft.SparkEntry.all.map(q => q.name -> q).toMap
-    names.foreach { n =>
+    Bench.queryNames(args(3)).foreach { n =>
       byName.get(n) match {
         case None => println(s"SKIP unknown query: $n")
         case Some(q) =>

@@ -1,76 +1,22 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.Bench
 
-/** Dev profiler: run named queries once (after the same warm-up Bench
-  * performs) and print every Spark job's wall time and call site, so a
-  * multi-job operator (lake DML, iterative graph/k-means loops) shows
-  * where its seconds go without the UI. Usage:
+/** Dev profiler: run named queries in the session Bench times
+  * ([[Bench.warmSession]]) and print every Spark job's wall time and call
+  * site, then every stage's task-metric rollup, so a multi-job operator
+  * (lake DML, iterative graph/k-means loops) shows where its seconds go
+  * without the UI. Usage:
   *
   *   tools/run_graft.sh graft.tools.ProfileQuery <sfDir> q_a[,q_b...] [reps]
   */
 object ProfileQuery {
 
-  private final class JobLog extends SparkListener {
-    final case class J(id: Int, desc: String, start: Long, var end: Long)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    // per-stage rollup: wall, summed task time, GC, task count — the
-    // level that separates "one slow task" from "driver gap" inside a job
-    final case class S(id: Int, name: String, start: Long,
-        var end: Long, var taskMs: Long, var gcMs: Long, var tasks: Int)
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, S]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val site = e.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')).getOrElse("")
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-      jobs.put(e.jobId, J(e.jobId, s"$site | $desc".take(110), e.time, -1L))
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-      val j = jobs.get(e.jobId); if (j != null) j.end = e.time
-    }
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-      val si = e.stageInfo
-      stages.put(si.stageId, S(si.stageId, si.name.takeWhile(_ != '\n').take(80),
-        System.currentTimeMillis(), -1L, 0L, 0L, 0))
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val s = stages.get(e.stageId)
-      if (s != null && e.taskMetrics != null) {
-        s.taskMs += e.taskMetrics.executorRunTime
-        s.gcMs += e.taskMetrics.jvmGCTime
-        s.tasks += 1
-      }
-    }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val s = stages.get(e.stageInfo.stageId)
-      if (s != null) s.end = System.currentTimeMillis()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val names = Bench.queryNames(args(1)).toSet
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark: SparkSession =
-      graft.engine.Session.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Bench-identical warm-up so first-run costs don't pollute the profile
-    spark.range(1 << 20).selectExpr("sum(id)", "count(distinct id % 100)").collect()
-    Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try graft.engine.Session.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
-    try graft.queries.Relational5.ensureBucketedFacts(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.Relational5.ensureLakeFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.Similarity.ensureAnnIndexes(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.Text.ensureInvertedIndex(spark, sfDir)
-    catch { case _: Throwable => () }
+    val spark = Bench.warmSession(sfDir)
 
     // per-query-execution planning phases (analysis/optimization/planning
     // ms from Spark's own QueryPlanningTracker) — the driver-side time the
@@ -89,20 +35,18 @@ object ProfileQuery {
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(qeListener)
+    def mb(b: Long): Double = b / 1048576.0
     val selected = graft.SparkEntry.all.filter(q => names(q.name))
     selected.foreach { q =>
       for (rep <- 1 to reps) {
         qeLog.clear()
-        val log = new JobLog
-        spark.sparkContext.addSparkListener(log)
-        val t0 = System.nanoTime()
-        try q.fn(spark, sfDir).count()
-        catch { case e: Throwable => println(s"ERR ${q.name}: $e") }
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200)
-        spark.sparkContext.removeSparkListener(log)
-        import scala.jdk.CollectionConverters._
-        val js = log.jobs.values.asScala.toSeq.sortBy(_.start)
+        val (wall, log) = Bench.logged(spark) {
+          val t0 = System.nanoTime()
+          try q.fn(spark, sfDir).count()
+          catch { case e: Throwable => println(s"ERR ${q.name}: $e") }
+          (System.nanoTime() - t0) / 1e9
+        }
+        val js = log.jobs
         val tot = js.map(j => math.max(0L, j.end - j.start)).sum / 1e3
         println(f"==== ${q.name} rep $rep wall=$wall%.2fs jobs=${js.size} jobTime=$tot%.2fs")
         val first = js.headOption.map(_.start).getOrElse(0L)
@@ -110,14 +54,12 @@ object ProfileQuery {
           val d = if (j.end < 0) -1.0 else (j.end - j.start) / 1e3
           println(f"  [${(j.start - first) / 1e3}%7.2f] job ${j.id}%4d $d%6.2fs  ${j.desc}")
         }
-        if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-          val ss = log.stages.values.asScala.toSeq.sortBy(_.start)
-          ss.foreach { s =>
-            val d = if (s.end < 0) -1.0 else (s.end - s.start) / 1e3
-            println(f"    [${(s.start - first) / 1e3}%7.2f] stage ${s.id}%4d " +
-              f"$d%6.2fs taskSum=${s.taskMs / 1e3}%6.2fs gc=${s.gcMs / 1e3}%5.2fs " +
-              f"n=${s.tasks}%3d  ${s.name}")
-          }
+        log.stages.foreach { s =>
+          val d = if (s.end < 0) -1.0 else (s.end - s.start) / 1e3
+          println(f"    [${(s.start - first) / 1e3}%7.2f] stage ${s.id}%4d " +
+            f"$d%6.2fs taskSum=${s.taskMs / 1e3}%6.2fs gc=${s.gcMs / 1e3}%5.2fs " +
+            f"shufR=${mb(s.shuffleReadB)}%.1fMB shufW=${mb(s.shuffleWriteB)}%.1fMB " +
+            f"spill=${mb(s.spillB)}%.1fMB peak=${mb(s.peakMemB)}%.1fMB n=${s.tasks}%3d  ${s.name}")
         }
         import scala.jdk.CollectionConverters._
         qeLog.asScala.foreach(println)

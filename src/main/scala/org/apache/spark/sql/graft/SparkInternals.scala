@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
-/** Test access to Spark state that is private to Spark. */
+/** Access to Spark state that is private to Spark. */
 object SparkInternals {
 
   /** Block until every posted event has reached every listener. */

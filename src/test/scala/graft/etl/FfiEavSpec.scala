@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Unit tests for EAV machinery paths the golden fixture doesn't reach:
-  * multi-unit-system split naming, the pivot uniqueness guard (direct and
-  * per family), and missing-column backfill.
+  * multi-unit-system split naming, the per-family pivot uniqueness guard,
+  * and missing-column backfill.
   */
 class FfiEavSpec extends SparkSpec {
 
@@ -31,23 +31,6 @@ class FfiEavSpec extends SparkSpec {
     val out = FfiEav.unitSplit(df, Seq("English"), "X", "Sample", dropUnitColOnSplit = true).toMap
     assert(out.keySet === Set("X_Sample"))
     assert(!out("X_Sample").columns.contains("Method_UnitSystem"))
-  }
-
-  test("pivotUnique raises on duplicate (index, field) pairs like pandas") {
-    import s.implicits._
-    val dup = Seq(
-      ("e1", "g1", "DBH", "10", 0L),
-      ("e1", "g1", "DBH", "12", 1L)).toDF("EventID", "GUID", "F", "V", FfiExtract.IngestId)
-    val ex = intercept[IllegalArgumentException] {
-      FfiEav.pivotUnique(dup, Seq("EventID", "GUID"), "F", "V")
-    }
-    assert(ex.getMessage.contains("duplicate"))
-    // non-duplicate input pivots fine with the guard on
-    val ok = Seq(
-      ("e1", "g1", "DBH", "10", 0L),
-      ("e1", "g1", "Ht", "7", 1L)).toDF("EventID", "GUID", "F", "V", FfiExtract.IngestId)
-    val wide = FfiEav.pivotUnique(ok, Seq("EventID", "GUID"), "F", "V")
-    assert(wide.select("DBH", "Ht").head().toSeq === Seq("10", "7"))
   }
 
   test("backfill adds only missing columns as null strings") {

@@ -144,6 +144,10 @@ class MergeJdbcSpec extends SparkSpec {
       "Plot", "STG_Plot", Seq("PlotID", "Name"), Seq("PlotID"))
     assert(sql.contains("MERGE INTO Plot t USING STG_Plot s ON (t.PlotID = s.PlotID)"))
     assert(sql.contains("WHEN NOT MATCHED THEN INSERT (PlotID, Name) VALUES (s.PlotID, s.Name)"))
+    // the dialect follows the JDBC URL
+    assert(MergeJdbc.Dialect.forUrl("jdbc:sqlserver://db;databaseName=ffi") === MergeJdbc.SqlServer)
+    assert(MergeJdbc.Dialect.forUrl("jdbc:postgresql://db/ffi") === MergeJdbc.Postgres)
+    assert(MergeJdbc.Dialect.forUrl("jdbc:derby:memory:ffi;create=true") === MergeJdbc.Derby)
   }
 
   test("Postgres dialect stages via ANSI CTAS and shares the standard MERGE") {
