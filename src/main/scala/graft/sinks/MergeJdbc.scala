@@ -2,6 +2,10 @@ package graft.sinks
 
 import java.sql.{Connection, DriverManager}
 
+import scala.util.Try
+import scala.util.control.NonFatal
+
+import graft.sources.VersionedLake
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** S8: the constraint-ordered idempotent JDBC upsert — the reference's
@@ -11,27 +15,30 @@ import org.apache.spark.sql.{DataFrame, Row}
   * The reference renders EVERY ROW into one giant
   * `MERGE INTO t USING (VALUES ...)` SQL string on a single thread —
   * O(rows) string building, quoting-based escaping, one statement per
-  * table. Here the write is two-phase:
+  * table. Here the write is two-phase — stage concurrently, MERGE in FK
+  * order:
   *
   *   1. '''stage''' — executors stream their partitions into a staging
   *      table via batched `PreparedStatement`s (parameter binding, no SQL
-  *      literal rendering, one transaction per partition);
+  *      literal rendering, one transaction per partition). Staging tables
+  *      carry no constraints, so [[loadAll]] stages every table at once;
   *   2. '''merge''' — the driver issues ONE set-based
   *      `MERGE INTO target USING staging ... WHEN NOT MATCHED THEN
-  *      INSERT` (dialect-rendered), commits, drops the staging table.
+  *      INSERT` (dialect-rendered) per table, commits and drops the
+  *      staging table, one table at a time in FK dependency order via
+  *      [[JdbcConstraints.topoOrder]] (explicit Kahn, where the reference
+  *      recursed with an unpopulated visited list).
   *
   * Idempotence comes from the PK guard (insert-only-when-not-matched), so
   * re-loading the same file is a no-op — the reference's core operational
   * contract (`/root/reference/README.md:10`). Per-table failures roll
-  * back and are reported, not thrown, matching the reference's
-  * `insert_failed` tracking; tables load in FK dependency order via
-  * [[JdbcConstraints.topoOrder]] (explicit Kahn, where the reference
-  * recursed with an unpopulated visited list).
+  * back, drop their staging table and are reported, not thrown, matching
+  * the reference's `insert_failed` tracking.
   *
   * At scale: the stage phase is embarrassingly parallel (per-partition
-  * connections, batched inserts); the merge is one server-side set
-  * operation per table, which is exactly what a warehouse wants — never
-  * row-at-a-time MERGE from the driver.
+  * connections, batched inserts, tables side by side); the merge is one
+  * server-side set operation per table, which is exactly what a warehouse
+  * wants — never row-at-a-time MERGE from the driver.
   */
 object MergeJdbc {
 
@@ -115,11 +122,107 @@ object MergeJdbc {
     try st.execute(sql) finally st.close()
   }
 
+  /** Run `f` on a fresh connection without auto-commit. */
+  private def withConnection[T](url: String, props: Map[String, String])(f: Connection => T): T = {
+    val conn = connect(url, props)
+    try {
+      conn.setAutoCommit(false)
+      f(conn)
+    } finally {
+      // Derby refuses close() mid-transaction; a trailing read opens one
+      try conn.commit() catch { case _: java.sql.SQLException => () }
+      conn.close()
+    }
+  }
+
+  /** Drop `staging` if it exists; best effort, a missing table is fine. */
+  private def dropStaging(conn: Connection, dialect: Dialect, staging: String): Unit =
+    try { execute(conn, dialect.dropStagingSql(staging)); conn.commit() }
+    catch { case _: java.sql.SQLException => conn.rollback() }
+
+  private def stagingName(table: String): String = s"STG_$table"
+
   /** Staged rows per `executeBatch` round trip. */
   private final val BatchSize = 500
 
-  /** Stage + merge one DataFrame into `table`. The staging table lives and
-    * dies inside this call; per-partition inserts run on executors.
+  /** Stage step: a fresh staging table for `table` (leftovers of a crashed
+    * run dropped first), filled from `df` by batched inserts, one
+    * connection and one transaction per partition on the executors.
+    * Returns the staged columns. The staging table carries no constraints,
+    * so any number of tables can stage at once, in any order.
+    */
+  private def stage(
+      df: DataFrame,
+      table: String,
+      url: String,
+      dialect: Dialect,
+      props: Map[String, String]): Seq[String] = {
+    val staging = stagingName(table)
+    val cols = df.columns.toSeq
+    withConnection(url, props) { conn =>
+      dropStaging(conn, dialect, staging)
+      execute(conn, dialect.createStagingSql(table, staging))
+      conn.commit()
+    }
+    val insertSql =
+      s"INSERT INTO $staging (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
+    df.foreachPartition { (rows: Iterator[Row]) =>
+      if (rows.nonEmpty) {
+        val c = connect(url, props)
+        try {
+          c.setAutoCommit(false)
+          val ps = c.prepareStatement(insertSql)
+          var n = 0
+          rows.foreach { r =>
+            var i = 0
+            while (i < cols.length) { ps.setObject(i + 1, r.get(i)); i += 1 }
+            ps.addBatch()
+            n += 1
+            if (n % BatchSize == 0) ps.executeBatch()
+          }
+          ps.executeBatch()
+          c.commit()
+        } finally c.close()
+      }
+    }
+    cols
+  }
+
+  /** Merge step, on the driver: count, MERGE the staged rows into `table`,
+    * drop the staging table, count. `staged` is the stage step's outcome.
+    * A failed stage, count or MERGE rolls back, drops the staging table
+    * with whatever rows it holds, and reports `table` failed and
+    * unchanged, so no failure leaves a staging table behind.
+    */
+  private def merge(
+      staged: Try[Seq[String]],
+      table: String,
+      pks: Seq[String],
+      url: String,
+      dialect: Dialect,
+      props: Map[String, String]): TableResult = {
+    val staging = stagingName(table)
+    val count = s"SELECT COUNT(*) FROM $table"
+    withConnection(url, props) { conn =>
+      val before = Try(scalarLong(conn, count))
+      try {
+        val rowsBefore = before.get
+        execute(conn, dialect.mergeSql(table, staging, staged.get, pks))
+        execute(conn, dialect.dropStagingSql(staging))
+        conn.commit()
+        TableResult(table, rowsBefore, scalarLong(conn, count), None)
+      } catch {
+        case NonFatal(e) =>
+          conn.rollback()
+          dropStaging(conn, dialect, staging)
+          val n = before.getOrElse(0L)
+          TableResult(table, n, n, Some(e.getMessage))
+      }
+    }
+  }
+
+  /** Stage + merge one DataFrame into `table`; the staging table lives and
+    * dies inside this call.
     */
   def mergeTable(
       df: DataFrame,
@@ -129,56 +232,7 @@ object MergeJdbc {
       dialect: Dialect,
       props: Map[String, String] = Map.empty): TableResult = {
     require(pks.nonEmpty, s"$table has no primary key — MERGE needs a PK guard")
-    val staging = s"STG_$table"
-    val cols = df.columns.toSeq
-    val conn = connect(url, props)
-    try {
-      conn.setAutoCommit(false)
-      val before = scalarLong(conn, s"SELECT COUNT(*) FROM $table")
-      try {
-        // fresh staging table (drop leftovers from a crashed run)
-        try { execute(conn, dialect.dropStagingSql(staging)); conn.commit() }
-        catch { case _: java.sql.SQLException => conn.rollback() }
-        execute(conn, dialect.createStagingSql(table, staging))
-        conn.commit()
-
-        val insertSql =
-          s"INSERT INTO $staging (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
-        df.foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.nonEmpty) {
-            val c = connect(url, props)
-            try {
-              c.setAutoCommit(false)
-              val ps = c.prepareStatement(insertSql)
-              var n = 0
-              rows.foreach { r =>
-                var i = 0
-                while (i < cols.length) { ps.setObject(i + 1, r.get(i)); i += 1 }
-                ps.addBatch()
-                n += 1
-                if (n % BatchSize == 0) ps.executeBatch()
-              }
-              ps.executeBatch()
-              c.commit()
-            } finally c.close()
-          }
-        }
-
-        execute(conn, dialect.mergeSql(table, staging, cols, pks))
-        execute(conn, dialect.dropStagingSql(staging))
-        conn.commit()
-        val after = scalarLong(conn, s"SELECT COUNT(*) FROM $table")
-        TableResult(table, before, after, None)
-      } catch {
-        case e: Exception =>
-          conn.rollback()
-          TableResult(table, before, before, Some(e.getMessage))
-      }
-    } finally {
-      // Derby refuses close() mid-transaction; the trailing COUNT opened one
-      try conn.commit() catch { case _: java.sql.SQLException => () }
-      conn.close()
-    }
+    merge(Try(stage(df, table, url, dialect, props)), table, pks, url, dialect, props)
   }
 
   /** UpdateLog audit append (S9, `parser/xml.py:675-697`): one row per
@@ -211,10 +265,15 @@ object MergeJdbc {
     } finally ps.close()
   }
 
-  /** Load every table in FK dependency order; per-table failure rolls back
-    * that table only and is reported in the result (reference
-    * `insert_failed` semantics). Tables absent from `constraints`
-    * (no PK reflected) are skipped with an error entry.
+  /** Stage concurrently, MERGE in FK order. Every table with a reflected
+    * primary key stages at once (bounded by [[VersionedLake.inParallel]],
+    * each stage's jobs labelled `loadAll: stage <table>`); then the driver
+    * MERGEs them one at a time in [[JdbcConstraints.topoOrder]], so a
+    * referenced table's rows land before its referrers'. A table that
+    * fails at either step is rolled back, its staging table dropped, and
+    * reported in the result (reference `insert_failed` semantics); the
+    * others still load. Tables absent from `constraints` (no PK reflected)
+    * are skipped with an error entry. Results come back in FK order.
     */
   def loadAll(
       tables: Map[String, DataFrame],
@@ -225,20 +284,22 @@ object MergeJdbc {
       host: String = java.net.InetAddress.getLocalHost.getHostName,
       props: Map[String, String] = Map.empty): Seq[TableResult] = {
     val order = constraints.topoOrder(tables.keys.toSeq)
-    val conn = connect(url, props)
-    try {
-      conn.setAutoCommit(false)
+    val pks = order.flatMap(t => constraints.primaryKeys.get(t).filter(_.nonEmpty).map(t -> _)).toMap
+    val toStage = order.filter(pks.contains)
+    val staged = toStage.zip(
+      if (toStage.isEmpty) Nil
+      else VersionedLake.inParallel(tables(toStage.head).sparkSession, toStage.map { t =>
+        s"loadAll: stage $t" -> (() => Try(stage(tables(t), t, url, dialect, props)))
+      })).toMap
+    withConnection(url, props) { conn =>
       order.map { t =>
-        val res = constraints.primaryKeys.get(t).filter(_.nonEmpty) match {
-          case Some(pks) => mergeTable(tables(t), t, pks, url, dialect, props = props)
+        val res = pks.get(t) match {
+          case Some(ks) => merge(staged(t), t, ks, url, dialect, props)
           case None => TableResult(t, 0, 0, Some(s"no primary key reflected for $t"))
         }
         if (!res.failed) appendUpdateLog(conn, res, user, host)
         res
       }
-    } finally {
-      try conn.commit() catch { case _: java.sql.SQLException => () }
-      conn.close()
     }
   }
 

@@ -36,6 +36,12 @@ class MergeJdbcSpec extends SparkSpec {
       "REGION" -> Seq((100, "eu")).toDF("r_id", "r_name"))
   }
 
+  private def stagingTables(): Seq[String] = withConn { c =>
+    val rs = c.getMetaData.getTables(null, null, "%", Array("TABLE"))
+    Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME"))
+      .filter(_.startsWith("STG_")).toList
+  }
+
   test("FK reflection orders referenced tables first") {
     freshSchema()
     val cons = withConn(JdbcConstraints.reflect(_))
@@ -92,6 +98,30 @@ class MergeJdbcSpec extends SparkSpec {
       val rs = c.createStatement().executeQuery("SELECT COUNT(*) FROM Customer")
       rs.next(); assert(rs.getLong(1) === 0L)
     }
+    assert(stagingTables() === Nil)
+  }
+
+  test("a table that fails while staging is reported, the others land, no staging table remains") {
+    freshSchema()
+    val cons = withConn(JdbcConstraints.reflect(_))
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    // one of CUSTOMER's rows raises while the frame is evaluated, so its
+    // staging job fails, possibly after other partitions committed rows
+    val bad = frames.updated("CUSTOMER", frames("CUSTOMER").repartition(2).withColumn(
+      "c_name", when(col("c_id") === 2, raise_error(lit("bad customer"))).otherwise(col("c_name"))))
+    val res = MergeJdbc.loadAll(bad, cons, url, MergeJdbc.Derby)
+    assert(res.map(_.table) === cons.topoOrder(bad.keys.toSeq))
+    val byTable = res.map(r => r.table -> r).toMap
+    assert(byTable("CUSTOMER").failed)
+    assert(byTable("CUSTOMER").error.exists(_.contains("bad customer")))
+    assert(byTable("CUSTOMER").inserted === 0L)
+    assert(byTable("REGION").inserted === 1L && !byTable("REGION").failed)
+    assert(byTable("NATION").inserted === 2L && !byTable("NATION").failed)
+    withConn { c =>
+      val rs = c.createStatement().executeQuery("SELECT COUNT(*) FROM Customer")
+      rs.next(); assert(rs.getLong(1) === 0L)
+    }
+    assert(stagingTables() === Nil)
   }
 
   test("S10 overwrite sink replaces the table wholesale") {
