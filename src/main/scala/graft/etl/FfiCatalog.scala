@@ -7,10 +7,12 @@ import org.apache.spark.sql.DataFrame
   * `FFIFile._data_map` dict (`/root/reference/parser/xml.py:43,63-80`).
   *
   * Immutable: every transform stage returns a new catalog over lazy
-  * plans. The frames those plans re-read (the extracted tables, the EAV
-  * long frames, the enriched SampleEvent) are cached through [[pin]];
-  * every catalog derived from one export shares its pins, so one
-  * [[release]] at the end of the export drops them all.
+  * plans. The extracted tables are local rows on the driver
+  * ([[FfiExtract]]) and need no cache; the derived frames that several
+  * actions re-read (the two EAV long frames and the enriched SampleEvent)
+  * are cached through [[pin]]. Every catalog derived from one export
+  * shares its pins, so one [[release]] at the end of the export drops
+  * them all.
   */
 final case class FfiCatalog(
     tables: Map[String, DataFrame],

@@ -1,31 +1,25 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** XML extraction: one FFI export document → a catalog of all-string
   * DataFrames, one per distinct root-child tag (= one per FFI table).
   *
-  * Re-expresses `FFIFile._parse_data` (`/root/reference/parser/xml.py:101-124`)
-  * on the Spark 4 built-in XML source: each table is
-  * `spark.read.format("xml").option("rowTag", tag)`, every column
-  * StringType exactly like the reference's element-text extraction.
-  * Namespace prefixes are stripped by the source.
+  * Re-expresses the reference's `FFIFile._parse_data` (`parser/xml.py:101-124`)
+  * in one driver-side StAX pass ([[scan]]): each direct child of the root
+  * is one row of the table its tag names, and each of that row's direct
+  * children is one column holding its trimmed text, every column
+  * StringType like the reference's element-text extraction. Namespace
+  * prefixes are stripped. [[extract]] turns each tag's rows into a local
+  * DataFrame: no Spark job, no second parse, nothing cached.
   *
-  * The schema comes from the driver's StAX [[scan]] of the file, which
-  * records each tag's child-element names: a flat tag (every row a list
-  * of attribute-free text children) reads with those names as an explicit
-  * all-string schema, sorted like inference sorts them, so extraction
-  * starts no Spark job. A tag with any non-flat row (attributes, nested
-  * elements, repeated children, text beside children; see [[Tag]]) keeps
-  * the source's schema inference (inference off, so leaves stay strings):
-  * one job over the file, and the `_attr`, `_VALUE` and struct-as-string
-  * columns that inference produces.
-  *
-  * Scale note: one FFI export is small (MBs), but the 100 TB path is MANY
-  * exports, one [[extract]] per export file. `path` names one file: tag
-  * discovery opens it with a `FileInputStream`, so a glob would throw.
+  * Scale note: one FFI export is small (MBs) and is held on the driver
+  * while its plan runs; the 100 TB path is MANY exports, one [[extract]]
+  * per export file. `path` names one file: the scan opens it with a
+  * `FileInputStream`, so a glob would throw.
   */
 object FfiExtract {
 
@@ -35,23 +29,20 @@ object FfiExtract {
     */
   val IngestId = "_ingest_id"
 
-  /** One depth-1 tag as [[scan]] saw it in the whole file: its name and,
-    * when every one of its rows is flat, its distinct child-element names
-    * sorted by name (the column order schema inference produces).
-    *
-    * A row is flat when neither it nor any of its children carries an
-    * attribute, no child repeats, nothing nests below a child and no text
-    * sits beside the children. Inference turns those shapes into `_attr`,
-    * `_VALUE`, struct and array columns that an all-string schema would
-    * not reproduce, so such a tag has no `fields` and keeps the inference
-    * read. So does a tag that also occurs inside another tag's rows: the
-    * XML source reads every element with the row tag as a row, at any
-    * depth, and the scan counts only the depth-1 ones.
+  /** One depth-1 tag and its rows in file order. A row maps each direct
+    * child's local name to its own trimmed text (`""` when it has none):
+    * attributes, text beside the children and anything nested below a
+    * child are ignored, and a repeated child keeps its last occurrence,
+    * as in the reference's per-row dict keyed by child tag.
     */
-  final case class Tag(name: String, fields: Option[Seq[String]])
+  final case class Tag(name: String, rows: Seq[Map[String, String]]) {
 
-  /** Every depth-1 tag in document order, with the child names of its
-    * rows (driver-side streaming pass; no DOM, no Spark job).
+    /** The distinct child names of every row, sorted: the table's columns. */
+    def columns: Seq[String] = rows.flatMap(_.keys).distinct.sorted
+  }
+
+  /** Every depth-1 tag in document order with its rows (driver-side
+    * streaming pass; no DOM, no Spark job).
     */
   def scan(file: String): Seq[Tag] = {
     import javax.xml.stream.XMLStreamConstants._
@@ -62,74 +53,48 @@ object FfiExtract {
     val in = new java.io.FileInputStream(file)
     try {
       val r = f.createXMLStreamReader(in)
-      val children = mutable.LinkedHashMap[String, mutable.Set[String]]() // per tag
-      val nonFlat = mutable.Set[String]() // tags with a non-flat row
-      val nested = mutable.Set[String]() // names inside another tag's rows
-      val rowChildren = mutable.Set[String]() // the current row's
-      var row = ""
+      val tags = mutable.LinkedHashMap[String, mutable.ArrayBuffer[Map[String, String]]]()
+      var row = Map.empty[String, String]
+      var child = ""
+      val text = new StringBuilder
       var depth = 0
       while (r.hasNext) {
         r.next() match {
           case START_ELEMENT =>
             depth += 1
-            val name = r.getLocalName
-            if (depth == 2) {
-              row = name
-              children.getOrElseUpdate(row, mutable.Set[String]())
-              rowChildren.clear()
-              if (r.getAttributeCount > 0) nonFlat += row
-            } else if (depth > 2) {
-              if (name != row) nested += name
-              if (depth > 3 || r.getAttributeCount > 0 || !rowChildren.add(name)) nonFlat += row
-              else children(row) += name
-            }
-          case CHARACTERS | CDATA if depth == 2 && r.getText.trim.nonEmpty =>
-            nonFlat += row
+            if (depth == 2) row = Map.empty
+            else if (depth == 3) { child = r.getLocalName; text.clear() }
+          case CHARACTERS | CDATA | SPACE if depth == 3 =>
+            text.append(r.getText)
           case END_ELEMENT =>
+            if (depth == 3) row += child -> text.toString.trim
+            else if (depth == 2) tags.getOrElseUpdate(r.getLocalName, mutable.ArrayBuffer()) += row
             depth -= 1
           case _ =>
         }
       }
-      children.toSeq.map { case (t, cs) =>
-        Tag(t, if (nonFlat(t) || nested(t)) None else Some(cs.toSeq.sorted))
-      }
+      tags.toSeq.map { case (t, rows) => Tag(t, rows.toSeq) }
     } finally in.close()
   }
 
-  /** One table: all rows with this rowTag, all columns StringType. With
-    * `fields` (a flat tag, see [[Tag]]) the read takes that schema and
-    * starts no Spark job; without, the XML source infers the schema in a
-    * job over the whole file.
+  /** One tag's table: its [[Tag.columns]] as strings, the
+    * [[applyColumnRules]] normalization, and the file-order ingest id.
     */
-  def readTable(
-      spark: SparkSession,
-      path: String,
-      tag: String,
-      fields: Option[Seq[String]] = None): DataFrame = {
-    val reader = spark.read.format("xml").option("rowTag", tag)
-    normalize(fields match {
-      case Some(fs) => reader.schema(StructType(fs.map(StructField(_, StringType)))).load(path)
-      case None     => reader.option("inferSchema", "false").load(path)
-    })
-  }
-
-  /** Every column flattened to a string (inference off still leaves
-    * attribute/struct artifacts possible on messy docs), the
-    * [[applyColumnRules]] normalization, and the ingest-order column.
-    */
-  private def normalize(raw: DataFrame): DataFrame = {
-    val cols = raw.schema.fields.map {
-      case f if f.dataType == StringType => col(f.name)
-      case f                             => col(f.name).cast(StringType).as(f.name)
+  private def table(spark: SparkSession, tag: Tag): DataFrame = {
+    val cols = tag.columns
+    val schema = StructType(cols.map(StructField(_, StringType)) :+
+      StructField(IngestId, LongType, nullable = false))
+    val rows = tag.rows.zipWithIndex.map { case (r, i) =>
+      Row.fromSeq(cols.map(r.get(_).orNull) :+ i.toLong)
     }
-    applyColumnRules(raw.select(cols.toSeq: _*))
-      .withColumn(IngestId, monotonically_increasing_id())
+    applyColumnRules(spark.createDataFrame(rows.asJava, schema))
   }
 
-  /** Like [[readTable]] but malformed-row tolerant: PERMISSIVE parse with
-    * a corrupt-record column, split into (clean, quarantined). One broken
-    * export in a 100 TB backfill lands in the quarantine frame (the audit
-    * artifact to re-extract from) instead of failing the job — the
+  /** One tag through Spark's XML source, malformed-row tolerant:
+    * PERMISSIVE parse with a corrupt-record column, split into (clean,
+    * quarantined). One broken export in a 100 TB backfill lands in the
+    * quarantine frame (the audit artifact to re-extract from) instead of
+    * failing the job — the
     * reference's whole-DOM `ET.parse` dies on the first bad byte
     * (`/root/reference/parser/xml.py:39`).
     */
@@ -158,7 +123,15 @@ object FfiExtract {
     // column alone (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the checkpoint
     // materializes full rows, making any downstream audit query legal.
     val quarantined = flagged.filter(col(corruptCol).isNotNull).localCheckpoint()
-    (normalize(clean), quarantined)
+    // every column flattened to a string (inference off still leaves
+    // attribute/struct artifacts possible on messy docs)
+    val strings = clean.schema.fields.map {
+      case f if f.dataType == StringType => col(f.name)
+      case f                             => col(f.name).cast(StringType).as(f.name)
+    }
+    val normalized = applyColumnRules(clean.select(strings.toSeq: _*))
+      .withColumn(IngestId, monotonically_increasing_id())
+    (normalized, quarantined)
   }
 
   /** The reference's per-column normalization heuristics
@@ -194,23 +167,11 @@ object FfiExtract {
       .otherwise(c)
   }
 
-  /** Whole-file extraction: every depth-1 tag becomes a catalog table.
-    * Each table is pinned: the first action that reads it parses the XML
-    * once into the cache, and every later action of the transform and the
-    * load reads it from memory; tags nothing reads are never parsed (a
-    * non-flat tag still pays its inference job here). Release the returned
-    * catalog when the export is done.
+  /** Whole-file extraction: every depth-1 tag becomes a catalog table,
+    * built from the rows of one [[scan]]. Starts no Spark job and caches
+    * nothing; the catalog's later pins (EAV long frames, enriched
+    * SampleEvent) are released through it.
     */
-  def extract(spark: SparkSession, path: String): FfiCatalog = {
-    val cat = FfiCatalog.empty
-    try {
-      cat.copy(tables = scan(path).map { t =>
-        t.name -> cat.pin(readTable(spark, path, t.name, t.fields))
-      }.toMap)
-    } catch {
-      case e: Throwable =>
-        cat.release()
-        throw e
-    }
-  }
+  def extract(spark: SparkSession, path: String): FfiCatalog =
+    FfiCatalog(scan(path).map(t => t.name -> table(spark, t)).toMap)
 }

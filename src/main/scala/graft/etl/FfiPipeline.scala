@@ -11,15 +11,15 @@ import scala.jdk.CollectionConverters._
   * extract → idents → transform → rename mapping → FK-ordered MERGE
   * load, and archive the file iff every table loaded cleanly.
   *
-  * One export's plan runs each piece once: extraction takes each tag's
-  * schema from a driver-side scan of the file (no Spark job for a flat
-  * export, [[FfiExtract]]); the extracted tables, the two EAV long frames
-  * and the enriched SampleEvent are pinned, so the actions (the EAV
-  * fan-out's metadata collects and guards, SURVEY §7.4, and the sinks)
-  * read them from memory instead of re-running their lineage; and the
-  * load stages every output table concurrently before MERGEing them one
-  * by one in FK order ([[MergeJdbc.loadAll]]). [[runFile]] owns the
-  * caches and releases them when the export is done, loaded or not. Many
+  * One export's plan runs each piece once: extraction parses the file
+  * once on the driver into local rows, one table per tag (no Spark job,
+  * [[FfiExtract]]); the two EAV long frames and the enriched SampleEvent
+  * are pinned, so the actions (the EAV fan-out's metadata collects and
+  * guards, SURVEY §7.4, and the sinks) read them from memory instead of
+  * re-running their lineage; and the load stages every output table
+  * concurrently before MERGEing them one by one in FK order
+  * ([[MergeJdbc.loadAll]]). [[runFile]] owns the pins and releases them
+  * when the export is done, loaded or not. Many
   * exports parallelize trivially — at scale you run one `runFile` per
   * export and let the cluster schedule them.
   */

@@ -72,6 +72,20 @@ object Graph {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
 
+  /** True when every leaf of `df`'s plan reads a cache and every node
+    * above them is a deterministic projection, filter or union: re-running
+    * it is one narrow pass over cached blocks that yields the same rows,
+    * with no shuffle, join or recomputed nondeterministic value.
+    */
+  private[operators] def readsCacheNarrowly(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, Union}
+    !df.queryExecution.optimizedPlan.exists {
+      case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => false
+      case n @ (_: Project | _: Filter | _: Union) => !n.expressions.forall(_.deterministic)
+      case _ => true
+    }
+  }
+
   def pageRankIter(
       edges: DataFrame,
       iters: Int = 3,
@@ -80,17 +94,15 @@ object Graph {
     // cache the edge list FIRST: nodes, degrees and the adjacency all
     // derive from it, and without the cache each one re-executes the
     // caller's (possibly join-heavy) edge construction pipeline.
-    // EXCEPT when every leaf of the edge plan already reads a cache the
-    // caller installed (q_pagerank persists the directed half and unions
-    // both directions): then e has exactly two consumers (deg, adj) and
-    // re-running a narrow projection over cached blocks twice is cheaper
-    // than writing a second full copy of the edge list through the block
-    // manager — one less O(E) cache materialization and that much less
-    // storage churn per call (guide §5: cache only when recomputing costs
-    // more than the memory pressure the cache creates).
-    val leaves = edges.queryExecution.optimizedPlan.collectLeaves()
-    val inputCached = leaves.nonEmpty && leaves.forall(
-      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
+    // EXCEPT when the edge plan is a narrow, deterministic plan over
+    // caches the caller installed (q_pagerank persists the directed half
+    // and unions both directions): then e has exactly two consumers (deg,
+    // adj) and re-running a narrow projection over cached blocks twice is
+    // cheaper than writing a second full copy of the edge list through the
+    // block manager — one less O(E) cache materialization and that much
+    // less storage churn per call (guide §5: cache only when recomputing
+    // costs more than the memory pressure the cache creates).
+    val inputCached = readsCacheNarrowly(edges)
     val e0 = edges.select(col("src"), col("dst"))
     val e = if (inputCached) e0 else e0.persist(IterStorage)
     // every node appears as a src (the documented contract, trivially true

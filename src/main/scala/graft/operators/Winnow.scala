@@ -23,26 +23,12 @@ object Winnow {
   def normalize(text: Column): Column =
     trim(regexp_replace(lower(text), "\\s+", " "))
 
-  /** array of 60-bit k-gram hashes of the normalized text. */
-  def kgramHashes(norm: Column, k: Int): Column =
-    transform(
-      sequence(lit(1), length(norm) - (k - 1)),
-      i => conv(substring(md5(norm.substr(i, lit(k)).cast("binary")), 1, 15), 16, 10)
-        .cast("long"))
-
-  /** distinct window-minima of the hash sequence. */
-  def fingerprints(hashes: Column, w: Int): Column =
-    array_distinct(
-      transform(
-        sequence(lit(1), size(hashes) - (w - 1)),
-        j => array_min(slice(hashes, j, lit(w)))))
-
   /** docs(idCol, textCol) → (idCol, fp) exploded distinct fingerprints;
     * documents shorter than k + w - 1 normalized chars yield no rows.
     * Uses the native [[graft.functions.WinnowFingerprintsExpr]] kernel —
-    * identical output to `fingerprints(kgramHashes(...))` (asserted in
-    * TextExprsSpec) at a fraction of the cost: the HOF form interprets an
-    * md5+conv expression per k-gram per row.
+    * identical output to the higher-order-function formulation TextExprsSpec
+    * keeps as its reference, at a fraction of the cost: the HOF form
+    * interprets an md5+conv expression per k-gram per row.
     */
   def fingerprintRows(
       docs: DataFrame,

@@ -43,6 +43,24 @@ object Relational5 {
   private val maxKeys =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
+  /** The root paths and table names that the executed plan's scan nodes
+    * read, subqueries and adaptive stages included. A routing check tests
+    * these rather than `executedPlan.toString`, which abbreviates each
+    * file location to `spark.sql.maxMetadataStringLength` characters, so
+    * a search for a long lake path in it misses.
+    */
+  private def scannedSources(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.map(_.toUri.getPath) ++
+          f.tableIdentifier.map(_.unquotedString)
+      case b: BatchScanExec => Seq(b.table.name())
+    }.flatten
+  }
+
   /** Memoized `max(o_orderkey)` — the fixture split points and the query
     * predicates derive from it, and it must not cost the timed body a
     * table scan per invocation.
@@ -2812,9 +2830,8 @@ object Relational5 {
             |  CAST(count(*) AS BIGINT) AS n,
             |  min(value) AS lo, max(value) AS hi
             |FROM graftcat.events_mv GROUP BY event_type""".stripMargin)
-        // executedPlan (planning only — nothing runs) renders the scan's
-        // file index root; the logical Relation node elides its path
-        require(df.queryExecution.executedPlan.toString.contains(viewDir),
+        // executedPlan is planning only — nothing runs
+        require(scannedSources(df).exists(_.startsWith(viewDir)),
           "MV rewrite must route this rollup to the view's state table")
         df
       },
@@ -2844,10 +2861,10 @@ object Relational5 {
             |  CAST(hll_sketch_estimate(hll_sketch_agg(uk)) AS BIGINT) AS d,
             |  count(uk) AS n
             |FROM graftcat.hll_events GROUP BY event_type""".stripMargin)
-        val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains(viewDir),
+        val read = scannedSources(df)
+        require(read.exists(_.startsWith(viewDir)),
           "sketch-estimate distinct must be served from the view's hll state")
-        require(!plan.contains("/hll_events/"),
+        require(!read.exists(_.contains("/hll_events/")),
           "the routed plan must not rescan the corpus")
         df.localCheckpoint()
       },
@@ -2877,10 +2894,10 @@ object Relational5 {
             |  CAST(count(DISTINCT uk) AS BIGINT) AS d,
             |  count(uk) AS n
             |FROM graftcat.dst_events GROUP BY event_type""".stripMargin)
-        val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains(viewDir),
+        val read = scannedSources(df)
+        require(read.exists(_.startsWith(viewDir)),
           "exact count(DISTINCT) must be served from the view's set state")
-        require(!plan.contains("/dst_events/"),
+        require(!read.exists(_.contains("/dst_events/")),
           "the routed plan must not rescan the corpus")
         df.localCheckpoint()
       },
@@ -2905,8 +2922,7 @@ object Relational5 {
           """SELECT event_type, round(sum(value), 2) AS total,
             |  CAST(count(*) AS BIGINT) AS n
             |FROM graftcat.events_mvs GROUP BY event_type""".stripMargin)
-        val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains(viewDir),
+        require(scannedSources(df).exists(_.startsWith(viewDir)),
           "stale MV rewrite must still read the view state")
         val scanned = df.queryExecution.optimizedPlan.collect {
           case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -2942,10 +2958,10 @@ object Relational5 {
           """SELECT event_type, round(sum(value), 2) AS total,
             |  CAST(count(*) AS BIGINT) AS n
             |FROM graftcat.events_mvc GROUP BY event_type""".stripMargin)
-        val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains("events_mvc_rollup"),
+        val read = scannedSources(df)
+        require(read.exists(_.contains("events_mvc_rollup")),
           "the CALL-created MV must serve this rollup")
-        require(!plan.contains("events_mvc/data"),
+        require(!read.exists(_.contains("events_mvc/data")),
           "the corpus data must not be scanned while the MV is fresh")
         df
       },

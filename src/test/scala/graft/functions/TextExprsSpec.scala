@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.operators.MinHash
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The native WordShingles kernel must be indistinguishable from the
@@ -54,13 +55,32 @@ class TextExprsSpec extends SparkSpec {
     assert(hof.exceptAll(native).count() === 0)
   }
 
+  /** Reference winnowing, step 1: the 60-bit md5 k-gram hashes of the
+    * normalized text.
+    */
+  private def kgramHashes(norm: Column, k: Int): Column =
+    transform(
+      sequence(lit(1), length(norm) - (k - 1)),
+      i => conv(substring(md5(norm.substr(i, lit(k)).cast("binary")), 1, 15), 16, 10)
+        .cast("long"))
+
+  /** Step 2: the distinct minima of each window of `w` consecutive hashes.
+    * `hashes` must be a column reference: the lambda reads it once per
+    * window, so an inline hash expression would be recomputed per window.
+    */
+  private def fingerprints(hashes: Column, w: Int): Column =
+    array_distinct(
+      transform(
+        sequence(lit(1), size(hashes) - (w - 1)),
+        j => array_min(slice(hashes, j, lit(w)))))
+
   test("native winnowFingerprints == HOF formulation over real documents") {
     import graft.operators.Winnow
     val norm = docs.select(col("doc_id"), Winnow.normalize(col("text")).as("t"))
       .filter(length(col("t")) >= 11)
-    val hof = norm.select(
-      col("doc_id"),
-      explode(Winnow.fingerprints(Winnow.kgramHashes(col("t"), 8), 4)).as("fp"))
+    val hof = norm
+      .select(col("doc_id"), kgramHashes(col("t"), 8).as("h"))
+      .select(col("doc_id"), explode(fingerprints(col("h"), 4)).as("fp"))
     val native = norm.select(
       col("doc_id"), explode(TextExprs.winnowFingerprints(col("t"), 8, 4)).as("fp"))
     assert(native.exceptAll(hof).count() === 0)

@@ -197,6 +197,24 @@ class GraphSpec extends SparkSpec {
     got.values.foreach(v => assert(math.abs(v - 1.0 / 6) < 1e-11))
   }
 
+  test("pageRank persists its edges unless they are a narrow, deterministic plan over caches") {
+    import org.apache.spark.sql.functions.{col, max, rand}
+    val half = spark.range(0, 20)
+      .select(col("id").as("src"), ((col("id") + 1) % 20).as("dst")).persist()
+    try {
+      // q_pagerank's shape: a cached directed half unioned with its reverse
+      assert(Graph.readsCacheNarrowly(
+        half.union(half.select(col("dst").as("src"), col("src").as("dst")))))
+      // deg and adj would each draw their own rand() values
+      assert(!Graph.readsCacheNarrowly(
+        half.select(col("src"), (col("dst") + (rand() * 3).cast("long")).as("dst"))))
+      assert(!Graph.readsCacheNarrowly(half.join(half.select(col("src").as("dst")), "dst")))
+      assert(!Graph.readsCacheNarrowly(half.groupBy("src").agg(max("dst").as("dst"))))
+      assert(!Graph.readsCacheNarrowly(
+        spark.range(3).select(col("id").as("src"), col("id").as("dst"))))
+    } finally half.unpersist()
+  }
+
   test("pageRank: tol=0 runs the full fixed iteration count (plan-compat default)") {
     val cyc = (0L to 3L).map(i => (i, (i + 1) % 4))
     val df = spark.createDataFrame(
