@@ -24,10 +24,10 @@ import org.apache.spark.sql.graft.SparkInternals
   * official record alone.
   *
   * Self-diagnosing record: a [[JobLog]] registered around each query
-  * attributes its GC time, shuffle read/write bytes, spill, and peak task
-  * execution memory (queries run sequentially and the listener bus is
-  * drained at both query boundaries, so the window holds exactly the
-  * query's tasks), written to `BENCH_DETAIL.json` next to
+  * attributes its GC time, shuffle read/write bytes, spill, peak task
+  * execution memory and generated classes (queries run sequentially and
+  * the listener bus is drained at both query boundaries, so the window
+  * holds exactly the query's tasks), written to `BENCH_DETAIL.json` next to
   * the compact line — so a wall-time swing on an untouched query is
   * classifiable from the official record alone (GC/IO pressure vs an
   * actual plan regression) without builder-side re-runs. The compact line
@@ -96,13 +96,16 @@ object Bench {
     val totSpill = detail.map(_._3.spillB).sum
 
     // Full per-query diagnostics to a file (no output-window budget):
-    // sec + gc_ms + shuffle read/write + spill + peak execution memory.
+    // sec + gc_ms + shuffle read/write + spill + peak execution memory +
+    // classes compiled in that pass (0 when every class was cached by an
+    // earlier pass).
     def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
     try {
       val rows = detail.map { case (name, sec, d) =>
         s"""{"name":"$name","sec":${math.round(sec * 1000) / 1000.0},"gc_ms":${d.gcMs},""" +
           s""""shuffle_read_mb":${mb(d.shuffleReadB)},"shuffle_write_mb":${mb(d.shuffleWriteB)},""" +
-          s""""spill_mb":${mb(d.spillB)},"peak_mem_mb":${mb(d.peakMemB)}}"""
+          s""""spill_mb":${mb(d.spillB)},"peak_mem_mb":${mb(d.peakMemB)},""" +
+          s""""codegen_classes":${d.codegenClasses}}"""
       }
       val sfName0 = sfDir.split("/").filter(_.nonEmpty).lastOption.getOrElse(sfDir)
       val passTot = passTotals.map(s => math.round(s * 1000) / 1000.0).mkString("[", ",", "]")
@@ -236,10 +239,12 @@ object Bench {
   }
 
   /** One window's task metrics, summed over its stages; `peakMemB` is the
-    * largest peak execution memory of any task.
+    * largest peak execution memory of any task; `codegenClasses` the
+    * classes compiled in the window.
     */
   final case class Totals(
-      gcMs: Long, shuffleReadB: Long, shuffleWriteB: Long, spillB: Long, peakMemB: Long)
+      gcMs: Long, shuffleReadB: Long, shuffleWriteB: Long, spillB: Long, peakMemB: Long,
+      codegenClasses: Long = 0L)
 
   /** Jobs, with their call sites, and per-stage rollups of task metrics
     * (wall, task time, GC, shuffle, spill, peak memory): the level that
@@ -260,10 +265,15 @@ object Bench {
     def jobs: Seq[Job] = synchronized(jobById.values.toSeq)
     def stages: Seq[Stage] = synchronized(stageById.values.toSeq)
 
+    /** Classes Spark's code generator compiled in the window, on any
+      * thread (the JVM-wide count delta); [[logged]] sets it.
+      */
+    @volatile var codegenClasses = 0L
+
     def totals: Totals = {
       val ss = stages
       Totals(ss.map(_.gcMs).sum, ss.map(_.shuffleReadB).sum, ss.map(_.shuffleWriteB).sum,
-        ss.map(_.spillB).sum, ss.map(_.peakMemB).maxOption.getOrElse(0L))
+        ss.map(_.spillB).sum, ss.map(_.peakMemB).maxOption.getOrElse(0L), codegenClasses)
     }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
@@ -298,7 +308,8 @@ object Bench {
   }
 
   /** Runs `body` with a fresh [[JobLog]] registered. The listener bus is
-    * drained on both sides, so the log holds exactly the body's jobs.
+    * drained on both sides, so the log holds exactly the body's jobs, and
+    * the log's `codegenClasses` counts the classes compiled meanwhile.
     */
   def logged[T](spark: SparkSession)(body: => T): (T, JobLog) = {
     val sc = spark.sparkContext
@@ -306,8 +317,10 @@ object Bench {
     SparkInternals.drainListenerBus(sc)
     sc.addSparkListener(log)
     try {
+      val classes0 = SparkInternals.generatedClasses
       val out = body
       SparkInternals.drainListenerBus(sc)
+      log.codegenClasses = SparkInternals.generatedClasses - classes0
       (out, log)
     } finally sc.removeSparkListener(log)
   }

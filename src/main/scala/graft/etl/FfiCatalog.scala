@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
 
 /** The engine's unit of state: a named-table catalog of dynamic-schema
   * DataFrames — the Spark re-expression of the reference's
@@ -8,15 +9,19 @@ import org.apache.spark.sql.DataFrame
   *
   * Immutable: every transform stage returns a new catalog over lazy
   * plans. The extracted tables are local rows on the driver
-  * ([[FfiExtract]]) and need no cache; the derived frames that several
-  * actions re-read (the two EAV long frames and the enriched SampleEvent)
-  * are cached through [[pin]]. Every catalog derived from one export
-  * shares its pins, so one [[release]] at the end of the export drops
-  * them all.
+  * ([[FfiExtract]]), and so is every intermediate that several plans of
+  * one export read (MacroPlot and SampleEvent after their keep-first
+  * windows, the enriched SampleEvent, the EAV method tables): each comes
+  * from one collect ([[local]]). Catalyst folds the projections and
+  * filters above a local table while optimizing (`ConvertToLocalRelation`),
+  * so they start no job and compile no class, and nothing is cached: an
+  * export's catalog holds no Spark state to release.
+  *
+  * Scale note: an export's intermediates are held on the driver like its
+  * extracted rows, so one export must fit the driver heap; the 100 TB path
+  * is many exports, one catalog each.
   */
-final case class FfiCatalog(
-    tables: Map[String, DataFrame],
-    pins: FfiCatalog.Pins = new FfiCatalog.Pins) {
+final case class FfiCatalog(tables: Map[String, DataFrame]) {
   def apply(name: String): DataFrame =
     tables.getOrElse(name, throw new NoSuchElementException(s"$name not in FFI catalog"))
   def get(name: String): Option[DataFrame] = tables.get(name)
@@ -26,12 +31,6 @@ final case class FfiCatalog(
   def removed(names: String*): FfiCatalog =
     copy(tables = tables -- names)
   def names: Seq[String] = tables.keys.toSeq.sorted
-
-  /** Cache `df` until [[release]]. */
-  def pin(df: DataFrame): DataFrame = pins.add(df.cache())
-
-  /** Drop every cache pinned by this catalog or any catalog derived from it. */
-  def release(): Unit = pins.release()
 
   /** S11: dump every catalog table as headered CSV under `dir/<table>/`
     * (`/root/reference/parser/xml.py:758-765`). Distributed write — each
@@ -45,16 +44,6 @@ final case class FfiCatalog(
 
 object FfiCatalog {
 
-  /** The cached frames one export's catalogs share. Release drops the
-    * newest first, so no frame is uncached while a cached frame built on
-    * it remains (Spark would re-plan that dependent's cache).
-    */
-  final class Pins {
-    private var frames = List.empty[DataFrame]
-    def add(df: DataFrame): DataFrame = synchronized { frames ::= df; df }
-    def release(): Unit = synchronized { frames.foreach(_.unpersist()); frames = Nil }
-  }
-
   /** FFI system tables parsed but never loaded
     * (`/root/reference/parser/xml.py:44-46,754-756`).
     */
@@ -64,4 +53,11 @@ object FfiCatalog {
     "Project", "DataGridViewSettings", "MasterSpecies_LastModified", "Settings")
 
   def empty: FfiCatalog = FfiCatalog(Map.empty)
+
+  /** `df` run once and held as a local table of its rows, same schema:
+    * the plans that read it afterwards start from driver rows instead of
+    * re-running `df`.
+    */
+  def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
 }

@@ -1,26 +1,26 @@
 package graft.etl
 
 import graft.etl.FfiExtract.IngestId
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** The EAV long→wide engine: `_attr_to_many` / `_sample_to_many`
   * (`/root/reference/parser/xml.py:197-367`).
   *
   * Shape: assemble one long frame per family via left-join chains (J1/J2)
-  * and pin it in the catalog, so every `<Method>_Attribute` /
-  * `<Method>_Sample` table fanned out from it (filter → pivot) reads it
-  * from memory until the export's catalog is released. The output TABLE
-  * SET is data-dependent (a legal but unusual Spark shape), so one collect
-  * per family brings the method names, each method's field names (the
-  * pivot columns) and its unit systems to the driver; the pivots then run
-  * with explicit values and need no job of their own.
-  *
-  * Pivot semantics: pandas `pivot` RAISES on duplicate (index, column)
-  * pairs; Spark's `first()` would silently pick one, so an explicit
-  * duplicate guard (one aggregate job per family) reproduces the
-  * assertion.
+  * over the export's local tables, then run ONE aggregate per family that
+  * gathers each (method, index) group's (field, value) entries and
+  * collect it. The output TABLE SET is data-dependent (a legal but
+  * unusual Spark shape); the collected groups give every method's fields
+  * (the pivot columns), its unit systems and the pandas-pivot duplicate
+  * guard, and each `<Method>_Attribute` / `<Method>_Sample` table is built
+  * from its method's groups as a local table ([[FfiCatalog.local]]'s
+  * kind). So a family costs one aggregate job, whatever its method count,
+  * and the projections, filters and unit splits above a method table
+  * start no job and compile no class.
   */
 object FfiEav {
 
@@ -112,63 +112,55 @@ object FfiEav {
         col(IngestId))
   }
 
-  /** pandas-pivot's assertion: raises if any (`keys`, `fieldCol`) pair
-    * occurs more than once in `long`.
-    */
-  private def requireUniquePairs(long: DataFrame, keys: Seq[String], fieldCol: String): Unit = {
-    val dups = long
-      .groupBy((keys :+ fieldCol).map(col): _*)
-      .count()
-      .filter(col("count") > 1)
-      .limit(1)
-      .collect()
-    require(
-      dups.isEmpty,
-      s"duplicate (index, $fieldCol) pair in pivot input: ${dups.mkString}")
-  }
-
-  /** The distinct `values` in pivot order: ascending, null first (pivot
-    * keeps a null field as a column named "null").
-    */
-  private def pivotOrder(values: Iterable[String]): Seq[String] =
-    values.map(Option(_)).toSeq.distinct.sorted.map(_.orNull)
-
-  /** Pivot `long` to one column per value in `fields`, cells from
-    * `valueCol`, as ONE aggregate: the shape Spark's analyzer rewrites
-    * `pivot(...).agg(first(...))` into, plus `min(_ingest_id)` per group so
-    * downstream cumcounts keep file order. Columns: `index`, `fields`,
-    * `_ingest_id`.
-    */
-  private def pivotFirst(
-      long: DataFrame,
-      index: Seq[String],
-      fieldCol: String,
-      valueCol: String,
-      fields: Seq[String]): DataFrame = {
-    val aggs = fields.map { f =>
-      first(when(col(fieldCol) <=> lit(f), col(valueCol)), ignoreNulls = true).as(String.valueOf(f))
-    } :+ min(col(IngestId)).as(IngestId)
-    long.groupBy(index.map(col): _*).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** One EAV family's fan-out: per method (sorted), its pivoted table and
-    * its sorted unit systems. `long` holds only rows with a method; one
-    * collect over it yields every method's fields and unit systems, and
-    * the guard is one aggregate over all methods.
+  /** One EAV family's fan-out: per method (sorted), its wide table and its
+    * sorted unit systems.
+    *
+    * One aggregate by (`Method_Name`, `index`) gathers each group's
+    * (field, value) entries (a set when `distinctEntries`, which drops
+    * full-row duplicates as the reference's `drop_duplicates` does) and
+    * its minimum ingest id, so downstream cumcounts keep file order; one
+    * collect brings the groups to the driver. pandas `pivot` raises on a
+    * duplicate (index, column) pair where Spark's `first()` would pick
+    * one, so a group with two entries for one field raises here, before
+    * any table is built. Each method's table is then its groups (a filter)
+    * with every field looked up in the group's entries (the pivot), held
+    * as a local table: columns `index`, the fields in pivot order
+    * (ascending, null first, a null field named "null"), `_ingest_id`.
     */
   private def pivotFamily(
       long: DataFrame,
       index: Seq[String],
       fieldCol: String,
-      valueCol: String): Seq[(String, DataFrame, Seq[String])] = {
-    requireUniquePairs(long, "Method_Name" +: index, fieldCol)
-    val meta = long.select("Method_Name", fieldCol, "Method_UnitSystem").distinct().collect()
-    meta.groupBy(_.getString(0)).toSeq.sortBy(_._1).map { case (method, rows) =>
-      val fields = pivotOrder(rows.map(_.getString(1)))
-      val unitSystems = rows.flatMap(r => Option(r.getString(2))).distinct.sorted.toSeq
-      val wide = pivotFirst(
-        long.filter(col("Method_Name") === method), index, fieldCol, valueCol, fields)
-      (method, wide, unitSystems)
+      valueCol: String,
+      distinctEntries: Boolean): Seq[(String, DataFrame, Seq[String])] = {
+    val n = index.length
+    val entry = struct(col(fieldCol), col(valueCol))
+    val groups = long
+      .filter(col("Method_Name").isNotNull)
+      .groupBy(("Method_Name" +: index).map(col): _*)
+      .agg(
+        (if (distinctEntries) collect_set(entry) else collect_list(entry)).as("_entries"),
+        min(col(IngestId)).as(IngestId))
+      .collect()
+      .map(g => g -> g.getSeq[Row](n + 1).map(e => e.getString(0) -> e.getString(1)))
+    groups.foreach { case (g, entries) =>
+      val fields = entries.map(_._1)
+      val dups = fields.diff(fields.distinct)
+      require(dups.isEmpty, s"duplicate (index, $fieldCol) pair in pivot input: " +
+        (g.toSeq.take(n + 1) :+ dups.head).mkString(","))
+    }
+    groups.groupBy(_._1.getString(0)).toSeq.sortBy(_._1).map { case (method, rows) =>
+      val fields = rows.flatMap(_._2.map(e => Option(e._1))).distinct.sorted.map(_.orNull).toSeq
+      val unitSystems =
+        rows.flatMap(r => Option(r._1.getAs[String]("Method_UnitSystem"))).distinct.sorted.toSeq
+      val schema = StructType(index.map(long.schema(_)) ++
+        fields.map(f => StructField(String.valueOf(f), StringType)) :+
+        StructField(IngestId, LongType))
+      val wide = rows.map { case (g, entries) =>
+        val values = entries.toMap
+        Row.fromSeq(g.toSeq.slice(1, n + 1) ++ fields.map(values.getOrElse(_, null)) :+ g.get(n + 2))
+      }
+      (method, long.sparkSession.createDataFrame(wide.toSeq.asJava, schema), unitSystems)
     }
   }
 
@@ -182,24 +174,22 @@ object FfiEav {
   /** species lookup J8 (`parser/xml.py:264-272`): for every column whose
     * name contains 'Spp', Species = LocalSpecies_Symbol of the row whose
     * GUID equals upper(col). Later Spp columns overwrite (reference
-    * behavior). LocalSpecies broadcasts — the reference does this as an
-    * O(n·m) row loop.
+    * behavior), so the last one decides. LocalSpecies is a local table:
+    * its rows become a literal GUID → symbol map (first row per GUID),
+    * one lookup instead of the reference's O(n·m) row loop.
     */
   def withSpecies(subset: DataFrame, localSpecies: Option[DataFrame]): DataFrame = {
     val sppCols = subset.columns.filter(_.contains("Spp"))
     if (sppCols.isEmpty || localSpecies.isEmpty) subset
     else {
-      val spp = localSpecies.get
-        .select(
-          col("LocalSpecies_GUID").as("_ls_guid"),
-          col("LocalSpecies_Symbol").as("_ls_symbol"))
-        .dropDuplicates("_ls_guid")
-      sppCols.foldLeft(subset) { (df, c) =>
-        df.drop("Species")
-          .join(broadcast(spp), upper(col(c)) === col("_ls_guid"), "left")
-          .withColumn("Species", col("_ls_symbol"))
-          .drop("_ls_guid", "_ls_symbol")
-      }
+      val symbols = localSpecies.get
+        .select("LocalSpecies_GUID", "LocalSpecies_Symbol")
+        .collect()
+        .reverseIterator // toMap keeps the last pair per key: the first row
+        .collect { case r if !r.isNullAt(0) => r.getString(0) -> r.getString(1) }
+        .toMap
+      val lookup = typedLit(symbols)
+      subset.drop("Species").withColumn("Species", lookup(upper(col(sppCols.last))))
     }
   }
 
@@ -249,17 +239,10 @@ object FfiEav {
     } else Seq(s"${baseName}_$suffix" -> subset.drop("Method_UnitSystem"))
 
   /** `_attr_to_many`: one `<Method>_Attribute` table per method. */
-  def attrToMany(cat: FfiCatalog): FfiCatalog = {
-    // full-row dedup of the long frame (reference drop_duplicates),
-    // keeping the earliest ingest id per surviving row for order rules
-    val long = cat.pin(
-      attrLong(cat)
-        .filter(col("Method_Name").isNotNull)
-        .groupBy(
-          ("Method_Name" +: AttrIndex :+ "MethodAtt_FieldName" :+ "AttributeData_Value")
-            .map(col): _*)
-        .agg(min(col(IngestId)).as(IngestId)))
-    pivotFamily(long, AttrIndex, "MethodAtt_FieldName", "AttributeData_Value")
+  def attrToMany(cat: FfiCatalog): FfiCatalog =
+    pivotFamily(
+      attrLong(cat), AttrIndex, "MethodAtt_FieldName", "AttributeData_Value",
+      distinctEntries = true)
       .foldLeft(cat) { case (c, (method, subset, unitSystems)) =>
         val withSpp = withSpecies(subset, c.get("LocalSpecies"))
         val ruled = applyMethodRules(method, withSpp)
@@ -268,14 +251,14 @@ object FfiEav {
         unitSplit(ruled, unitSystems, tableName(method), "Attribute", dropUnitColOnSplit = false)
           .foldLeft(c)((cc, kv) => cc.updated(kv._1, kv._2))
       }
-  }
 
   /** `_sample_to_many`: one `<Method>_Sample` table per method, with a
     * fresh SampleData_Original_GUID per output row.
     */
-  def sampleToMany(cat: FfiCatalog): FfiCatalog = {
-    val long = cat.pin(sampleLong(cat).filter(col("Method_Name").isNotNull))
-    pivotFamily(long, SampleIndex, "SampleAtt_FieldName", "SampleData_Value")
+  def sampleToMany(cat: FfiCatalog): FfiCatalog =
+    pivotFamily(
+      sampleLong(cat), SampleIndex, "SampleAtt_FieldName", "SampleData_Value",
+      distinctEntries = false)
       .foldLeft(cat) { case (c, (method, subset, unitSystems)) =>
         val withGuid = subset
           .withColumn("SampleData_Original_GUID", upper(expr("uuid()")))
@@ -283,5 +266,4 @@ object FfiEav {
         unitSplit(withGuid, unitSystems, tableName(method), "Sample", dropUnitColOnSplit = true)
           .foldLeft(c)((cc, kv) => cc.updated(kv._1, kv._2))
       }
-  }
 }

@@ -14,6 +14,10 @@ import org.apache.spark.sql.functions._
   * (join key, field team, entry team) under unambiguous names — same
   * loaded output, no _x/_y junk. All seven sample sides are broadcast
   * (they are per-event metadata, small by construction).
+  *
+  * The enriched SampleEvent is read three times downstream (loaded
+  * directly and twice through ProjectVisit's VisitID), so its joins run
+  * once here, into a local table ([[FfiCatalog.local]]).
   */
 object FfiEvents {
 
@@ -83,6 +87,6 @@ object FfiEvents {
         "TreeRecorder",
         Personnel.combineTeams(Seq(
           col("TreesEntryTeam"), col("SapEntryTeam"), col("SeedEntryTeam"))))
-    cat.updated("SampleEvent", enriched)
+    cat.updated("SampleEvent", FfiCatalog.local(enriched))
   }
 }

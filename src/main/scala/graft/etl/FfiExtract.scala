@@ -169,8 +169,7 @@ object FfiExtract {
 
   /** Whole-file extraction: every depth-1 tag becomes a catalog table,
     * built from the rows of one [[scan]]. Starts no Spark job and caches
-    * nothing; the catalog's later pins (EAV long frames, enriched
-    * SampleEvent) are released through it.
+    * nothing.
     */
   def extract(spark: SparkSession, path: String): FfiCatalog =
     FfiCatalog(scan(path).map(t => t.name -> table(spark, t)).toMap)

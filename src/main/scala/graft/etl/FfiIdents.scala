@@ -10,6 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference computes both ids with O(n·m) row-loop lookups; here they
   * are broadcast hash joins + native expressions (SURVEY.md J6/J7, F2–F4).
+  * Each stage runs its join and keep-first window once and holds the
+  * result as a driver-local table ([[FfiCatalog.local]]): MacroPlot and
+  * SampleEvent are read by idents, the EAV assembly, the event enrichment
+  * and the load, and each of those starts from the local rows.
   */
 object FfiIdents {
 
@@ -37,7 +41,7 @@ object FfiIdents {
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
-    cat.updated("MacroPlot", deduped)
+    cat.updated("MacroPlot", FfiCatalog.local(deduped))
   }
 
   /** SampleEvent + EventID: PlotID looked up via the plot GUID ('' when the
@@ -70,7 +74,7 @@ object FfiIdents {
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
-    cat.updated("SampleEvent", deduped)
+    cat.updated("SampleEvent", FfiCatalog.local(deduped))
   }
 
   def apply(cat: FfiCatalog): FfiCatalog = withEventId(withPlotId(cat))

@@ -13,15 +13,18 @@ import scala.jdk.CollectionConverters._
   *
   * One export's plan runs each piece once: extraction parses the file
   * once on the driver into local rows, one table per tag (no Spark job,
-  * [[FfiExtract]]); the two EAV long frames and the enriched SampleEvent
-  * are pinned, so the actions (the EAV fan-out's metadata collects and
-  * guards, SURVEY §7.4, and the sinks) read them from memory instead of
-  * re-running their lineage; and the load stages every output table
-  * concurrently before MERGEing them one by one in FK order
-  * ([[MergeJdbc.loadAll]]). [[runFile]] owns the pins and releases them
-  * when the export is done, loaded or not. Many
-  * exports parallelize trivially — at scale you run one `runFile` per
-  * export and let the cluster schedule them.
+  * [[FfiExtract]]); idents and transform run each intermediate that
+  * several plans read (MacroPlot and SampleEvent after keep-first, the
+  * two EAV family aggregates, the enriched SampleEvent) once, into local
+  * tables on the driver ([[FfiCatalog.local]]), so the plans above them
+  * fold while optimizing instead of re-running their lineage; and the
+  * load stages every output table concurrently before MERGEing them one
+  * by one in FK order ([[MergeJdbc.loadAll]]). Nothing is cached, so an
+  * export leaves no Spark state behind however it ends, and calling the
+  * stages one by one (as a tracer does) is the same as [[runFile]].
+  * An export's intermediates are held on the driver like its extracted
+  * rows; many exports parallelize trivially — at scale you run one
+  * `runFile` per export and let the cluster schedule them.
   */
 object FfiPipeline {
 
@@ -59,12 +62,10 @@ object FfiPipeline {
       dialect: MergeJdbc.Dialect,
       props: Map[String, String] = Map.empty): FileResult = {
     val extracted = FfiExtract.extract(spark, xmlFile.toString)
-    try {
-      val frames = outputFrames(FfiTransform(FfiIdents(extracted)), mapping, constraints)
-      val results = MergeJdbc.loadAll(frames, constraints, url, dialect, props = props)
-      val failed = results.filter(_.failed).map(_.table)
-      FileResult(xmlFile, results, Archive.archiveIfClean(xmlFile, failed))
-    } finally extracted.release()
+    val frames = outputFrames(FfiTransform(FfiIdents(extracted)), mapping, constraints)
+    val results = MergeJdbc.loadAll(frames, constraints, url, dialect, props = props)
+    val failed = results.filter(_.failed).map(_.table)
+    FileResult(xmlFile, results, Archive.archiveIfClean(xmlFile, failed))
   }
 
   /** The polling batch: every `*.xml` directly under `dataDir`, in name

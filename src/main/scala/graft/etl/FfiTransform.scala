@@ -5,18 +5,23 @@ import org.apache.spark.sql.functions._
 /** `transform()` orchestration (`/root/reference/parser/xml.py:718-746`):
   * EAV fan-out, ProjectID/AdminUnit enrichment, Transect derivation,
   * event/project processing, staging-table drop.
+  *
+  * Runs eagerly what several later plans read, each once, into local
+  * tables on the driver: the two EAV family aggregates ([[FfiEav]]) and
+  * the enriched SampleEvent ([[FfiEvents]]). What it returns is lazy
+  * plans over those local tables; the load runs each output table's plan
+  * once. Nothing is cached, so the catalog needs no release.
   */
 object FfiTransform {
 
   /** file-level admin unit: first RegistrationUnit_Name
-    * (`parser/xml.py:716`).
+    * (`parser/xml.py:716`). The extracted table is local rows in file
+    * order, so its first row is the first registration unit and reading
+    * it starts no Spark job; an empty table fails, as the reference's
+    * `iloc[0]` does.
     */
   def adminUnit(cat: FfiCatalog): String =
-    cat("RegistrationUnit")
-      .select("RegistrationUnit_Name")
-      .orderBy(FfiExtract.IngestId)
-      .head()
-      .getString(0)
+    cat("RegistrationUnit").select("RegistrationUnit_Name").head().getString(0)
 
   def apply(cat0: FfiCatalog): FfiCatalog = {
     val admin = adminUnit(cat0)
@@ -44,11 +49,7 @@ object FfiTransform {
       case None => cat2
     }
 
-    // loading SampleEvent and ProjectVisit reads the team-enriched
-    // SampleEvent three times (directly and twice through VisitID): pin it
-    // so its seven sample-table joins run once
-    val events = FfiEvents(cat3)
-    val cat4 = FfiProjects(events.updated("SampleEvent", events.pin(events("SampleEvent"))))
+    val cat4 = FfiProjects(FfiEvents(cat3))
 
     // drop EAV staging tables (`parser/xml.py:741-744`)
     cat4.removed("SampleData", "SampleRow", "AttributeRow", "AttributeData")

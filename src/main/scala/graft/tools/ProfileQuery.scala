@@ -4,7 +4,8 @@ import graft.Bench
 
 /** Dev profiler: run named queries in the session Bench times
   * ([[Bench.warmSession]]) and print every Spark job's wall time and call
-  * site, then every stage's task-metric rollup, so a multi-job operator
+  * site, the classes Spark generated for the run, then every stage's
+  * task-metric rollup, so a multi-job operator
   * (lake DML, iterative graph/k-means loops) shows where its seconds go
   * without the UI. Usage:
   *
@@ -48,7 +49,8 @@ object ProfileQuery {
         }
         val js = log.jobs
         val tot = js.map(j => math.max(0L, j.end - j.start)).sum / 1e3
-        println(f"==== ${q.name} rep $rep wall=$wall%.2fs jobs=${js.size} jobTime=$tot%.2fs")
+        println(f"==== ${q.name} rep $rep wall=$wall%.2fs jobs=${js.size} jobTime=$tot%.2fs " +
+          s"classes=${log.codegenClasses}")
         val first = js.headOption.map(_.start).getOrElse(0L)
         js.foreach { j =>
           val d = if (j.end < 0) -1.0 else (j.end - j.start) / 1e3

@@ -21,6 +21,15 @@ class HarnessSpec extends SparkSpec {
     assert(empty.totals === Bench.Totals(0, 0, 0, 0, 0))
   }
 
+  test("a logged window counts the classes its plans compile") {
+    // a long literal is inlined into the generated code, so this plan's
+    // whole-stage class is new to the JVM's codegen cache
+    val (_, log) = Bench.logged(spark)(
+      spark.range(4).selectExpr(s"id + ${System.nanoTime()}L").collect())
+    assert(log.codegenClasses >= 1)
+    assert(log.totals.codegenClasses === log.codegenClasses)
+  }
+
   test("warm-up against a missing scale-factor directory names its failed steps") {
     val missing = Files.createTempDirectory("harness").resolve("sf_missing").toString
     val failed = Bench.warmUp(spark, missing).toMap

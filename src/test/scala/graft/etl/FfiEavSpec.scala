@@ -84,9 +84,8 @@ class FfiEavSpec extends SparkSpec {
   private val cleanAttrs = Seq(("DR1", "MA1", "10"), ("DR1", "MA2", "5"), ("DR2", "MA3", "40"))
   private val cleanSamples = Seq(("SR1", "SA1", "Alice"), ("SR2", "SA2", "Crew1"))
 
-  /** Run `f` on a fresh catalog and release what it pinned. */
-  private def withCatalog[T](cat: FfiCatalog)(f: FfiCatalog => T): T =
-    try f(cat) finally cat.release()
+  /** Run `f` on a fresh catalog. */
+  private def withCatalog[T](cat: FfiCatalog)(f: FfiCatalog => T): T = f(cat)
 
   test("attrToMany guard: one method's duplicate (index, field) pair raises") {
     // Method A carries two different DBH values for one data row; Method B is clean

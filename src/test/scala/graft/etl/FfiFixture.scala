@@ -1,7 +1,88 @@
 package graft.etl
 
-/** Shared golden FFI-export fixture (FIXTURES.md §A). */
+/** Shared golden FFI-export fixture (FIXTURES.md §A), with a mapping of
+  * every loadable table it produces and the Derby schema that mapping
+  * loads into.
+  */
 object FfiFixture {
+
+  /** Every loadable table of the fixture, each target column named after
+    * its source, so the mapped frames cover the catalog's mapped columns.
+    * `Schema_Version` is mapped too, and never loaded ([[FfiCatalog.Excluded]]).
+    */
+  val mapping: Mapping = {
+    def same(cols: String*): Seq[(String, String)] = cols.map(c => c -> c)
+    val method = same("AttributeData_DataRow_GUID", "EventID")
+    Mapping(
+      tableMap = Map(
+        "RegistrationUnit" -> "ADMINUNIT", "MacroPlot" -> "PLOT", "SampleEvent" -> "EVENT",
+        "ProjectUnit" -> "PROJECT", "ProjectVisit" -> "PROJECTVISIT", "Transect" -> "TRANSECT",
+        "Trees_Individuals_Attribute" -> "TREESINDV",
+        "SurfaceFuels_Fine_Attribute" -> "FUELSFINE",
+        "SurfaceFuels_Fine_Metric_Attribute" -> "FUELSFINEMETRIC",
+        "Trees_Individuals_Sample" -> "TREESSAMPLE",
+        "Schema_Version" -> "SCHEMAVERSION"),
+      fieldMap = Map(
+        "ADMINUNIT" -> same("RegistrationUnit_Name", "RegistrationUnit_GUID"),
+        "PLOT" -> same("PlotID", "MacroPlot_Name", "AdminUnit", "MacroPlot_GUID",
+          "MacroPlot_DateIn"),
+        "EVENT" -> same("EventID", "PlotID", "VisitID", "SampleEvent_Date", "FuelsObserver",
+          "FuelsRecorder", "TreeObserver", "TreeRecorder"),
+        "PROJECT" -> same("ProjectID", "ProjectUnit_Name", "AdminUnit"),
+        "PROJECTVISIT" -> same("VisitID", "ProjectID", "VisitYear", "MonitoringStatus_Name",
+          "MonitoringStatus_Base", "MonitoringStatus_Suffix"),
+        "TRANSECT" -> same("EventID", "Transect", "Azimuth", "Slope", "Length"),
+        "TREESINDV" -> (method ++ same("TagNo", "Species", "DBH", "StemNum")),
+        "FUELSFINE" -> (method ++ same("Transect", "Azimuth", "Slope", "Method_UnitSystem")),
+        "FUELSFINEMETRIC" -> (method ++ same("Transect", "Azimuth", "Method_UnitSystem")),
+        "TREESSAMPLE" -> (same("SampleData_SampleRow_GUID", "FieldTeam") :+
+          ("OriginalGUID" -> "SampleData_Original_GUID")),
+        "SCHEMAVERSION" -> same("Schema_Version")))
+  }
+
+  /** (Re)create [[mapping]]'s target tables in the Derby database at
+    * `url`, empty, with their keys (parents before children), and return
+    * the constraints reflected from them.
+    */
+  def createSchema(url: String): graft.sinks.JdbcConstraints = {
+    def cols(names: String*) = names.map(n => s"$n VARCHAR(128)").mkString(", ")
+    def method(t: String, fields: String*) =
+      s"CREATE TABLE $t (AttributeData_DataRow_GUID VARCHAR(128) PRIMARY KEY, " +
+        s"EventID VARCHAR(128) REFERENCES EVENT (EventID), ${cols(fields: _*)})"
+    val ddl = Seq(
+      s"CREATE TABLE ADMINUNIT (RegistrationUnit_Name VARCHAR(128) PRIMARY KEY, " +
+        s"${cols("RegistrationUnit_GUID")})",
+      s"CREATE TABLE PLOT (PlotID VARCHAR(128) PRIMARY KEY, " +
+        s"${cols("MacroPlot_Name", "AdminUnit", "MacroPlot_GUID", "MacroPlot_DateIn")})",
+      s"CREATE TABLE PROJECT (ProjectID VARCHAR(128) PRIMARY KEY, " +
+        s"${cols("ProjectUnit_Name", "AdminUnit")})",
+      s"CREATE TABLE PROJECTVISIT (VisitID VARCHAR(128) PRIMARY KEY, " +
+        "ProjectID VARCHAR(128) REFERENCES PROJECT (ProjectID), " +
+        s"${cols("VisitYear", "MonitoringStatus_Name", "MonitoringStatus_Base",
+          "MonitoringStatus_Suffix")})",
+      s"CREATE TABLE EVENT (EventID VARCHAR(128) PRIMARY KEY, " +
+        "PlotID VARCHAR(128) REFERENCES PLOT (PlotID), " +
+        "VisitID VARCHAR(128) REFERENCES PROJECTVISIT (VisitID), " +
+        s"${cols("SampleEvent_Date", "FuelsObserver", "FuelsRecorder", "TreeObserver",
+          "TreeRecorder")})",
+      s"CREATE TABLE TRANSECT (EventID VARCHAR(128) REFERENCES EVENT (EventID), " +
+        s"Transect VARCHAR(128), ${cols("Azimuth", "Slope", "Length")}, " +
+        "PRIMARY KEY (EventID, Transect))",
+      method("TREESINDV", "TagNo", "Species", "DBH", "StemNum"),
+      method("FUELSFINE", "Transect", "Azimuth", "Slope", "Method_UnitSystem"),
+      method("FUELSFINEMETRIC", "Transect", "Azimuth", "Method_UnitSystem"),
+      s"CREATE TABLE TREESSAMPLE (SampleData_SampleRow_GUID VARCHAR(128) PRIMARY KEY, " +
+        s"${cols("FieldTeam", "OriginalGUID")})")
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      val tables = "UPDATELOG" +: ddl.reverse.map(_.split(" ")(2))
+      for (t <- tables)
+        try st.execute(s"DROP TABLE $t") catch { case _: java.sql.SQLException => () }
+      ddl.foreach(st.execute)
+      graft.sinks.JdbcConstraints.reflect(c)
+    } finally c.close()
+  }
 
   val Ns = "http://ffi.example/v1"
 

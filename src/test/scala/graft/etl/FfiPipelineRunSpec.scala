@@ -55,7 +55,24 @@ class FfiPipelineRunSpec extends SparkSpec {
     assert(FfiPipeline.runDirectory(spark, dataDir, mapping, url, MergeJdbc.Derby).isEmpty)
   }
 
-  test("runDirectory releases every cache it pinned, clean or failing") {
+  test("the pipeline's stages called one by one leave no cache behind") {
+    // the calls runFile makes, made directly as a tracer makes them
+    val sc = spark.sparkContext
+    val url = "jdbc:derby:memory:ffistagesdb;create=true"
+    val cons = FfiFixture.createSchema(url)
+    val xml = Files.createTempDirectory("ffi_stages").resolve("export.xml")
+    Files.writeString(xml, FfiFixture.Xml)
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val entriesBefore = SparkInternals.cachedEntries(spark)
+    val cat = FfiTransform(FfiIdents(FfiExtract.extract(spark, xml.toString)))
+    val frames = FfiPipeline.outputFrames(cat, FfiFixture.mapping, cons)
+    val results = MergeJdbc.loadAll(frames, cons, url, MergeJdbc.Derby)
+    assert(results.nonEmpty && results.forall(!_.failed), results.mkString("; "))
+    assert(sc.getPersistentRDDs.keySet.diff(rddsBefore).isEmpty)
+    assert(SparkInternals.cachedEntries(spark) === entriesBefore)
+  }
+
+  test("runDirectory leaves no cache behind, clean or failing") {
     val sc = spark.sparkContext
     for (width <- Seq(64, 2)) {
       freshSchema(width)

@@ -19,8 +19,13 @@ import org.apache.spark.sql.functions._
   */
 class FfiPipelineSpec extends SparkSpec {
 
-  /** Spark jobs FfiTransform may start on the fixture (measured: 25). */
-  private val JobBudget = 25
+  /** What one export of the fixture may cost from FfiIdents through
+    * `loadAll` into Derby (measured in a cold JVM: 41 jobs, 103-104
+    * classes). Classes are counted JVM-wide and Spark caches them by
+    * code, so a JVM that ran the pipeline before compiles fewer.
+    */
+  private val JobBudget = 41
+  private val ClassBudget = 104
 
   private lazy val transformed: FfiCatalog = {
     val dir = Files.createTempDirectory("ffi_fixture")
@@ -30,29 +35,34 @@ class FfiPipelineSpec extends SparkSpec {
     FfiTransform(FfiIdents(cat))
   }
 
-  test("FfiTransform runs within its Spark job budget") {
-    // every job FfiTransform starts on the fixture; the extracted tables
-    // are local rows, so none of them reads the XML
-    import org.apache.spark.sql.graft.SparkInternals
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  test("one export runs within its Spark job and generated-class budgets") {
+    // extraction is local rows (no job); everything after it is counted,
+    // the load's concurrent staging threads included
     val xml = Files.createTempDirectory("ffi_jobs").resolve("export.xml")
     Files.writeString(xml, FfiFixture.Xml)
-    val cat = FfiIdents(FfiExtract.extract(spark, xml.toString))
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    val cat = FfiExtract.extract(spark, xml.toString)
+    val url = "jdbc:derby:memory:ffibudgetdb;create=true"
+    val cons = FfiFixture.createSchema(url)
+    val (results, log) = graft.Bench.logged(spark) {
+      val frames = FfiPipeline.outputFrames(FfiTransform(FfiIdents(cat)), FfiFixture.mapping, cons)
+      MergeJdbc.loadAll(frames, cons, url, MergeJdbc.Derby)
     }
-    SparkInternals.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      FfiTransform(cat)
-      SparkInternals.drainListenerBus(sc)
-    } finally {
-      sc.removeSparkListener(listener)
-      cat.release()
-    }
-    assert(jobs.get() <= JobBudget, s"FfiTransform ran ${jobs.get()} jobs")
+    assert(results.size === 10 && results.forall(!_.failed), results.mkString("; "))
+    val cost = s"the export ran ${log.jobs.size} jobs and compiled ${log.codegenClasses} classes"
+    assert(log.jobs.size <= JobBudget, cost)
+    assert(log.codegenClasses <= ClassBudget, cost)
+  }
+
+  test("adminUnit reads the first registration unit without a Spark job") {
+    val xml = Files.createTempDirectory("ffi_admin").resolve("export.xml")
+    Files.writeString(xml, FfiFixture.Xml)
+    val cat = FfiExtract.extract(spark, xml.toString)
+    val (admin, log) = graft.Bench.logged(spark)(FfiTransform.adminUnit(cat))
+    assert(admin === "Big Park Unit")
+    assert(log.jobs.isEmpty)
+    // an export without registration units fails, like the reference's iloc[0]
+    val none = cat.updated("RegistrationUnit", cat("RegistrationUnit").limit(0))
+    intercept[NoSuchElementException](FfiTransform.adminUnit(none))
   }
 
   test("PlotID derivation + keep-first dedup") {
