@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.SparkInternals
+import org.json4s.JString
+import org.json4s.jackson.JsonMethods
 
 /** Driver-run benchmark: times every SparkEntry query at the given scale
   * factor and prints ONE JSON line (the driver greps it from process
@@ -33,6 +35,9 @@ import org.apache.spark.sql.graft.SparkInternals
   * actual plan regression) without builder-side re-runs. The compact line
   * carries the suite-wide totals; the per-query rows live in the file
   * (158 queries × 5 metrics cannot fit the driver's ~1900-char window).
+  * A query that throws is a failure, not a timing: its row in the file
+  * carries the first line of its error instead of metrics, it is left
+  * out of every total, and the compact line counts it in `failed`.
   *
   * The session start, warm-up and job listener here are the one harness
   * the dev tools in `graft.tools` call too, so a profile or plan dump sees
@@ -66,24 +71,27 @@ object Bench {
       .flatMap(_.toIntOption).getOrElse(3))
     val runsByQuery = Array.fill(selected.size)(
       scala.collection.mutable.ArrayBuffer.empty[(Double, Totals)])
-    val passTotals = Array.fill(iters)(0.0)
+    // a query that throws in any pass is a failure, not a timing: its
+    // first error line is recorded and none of its passes is timed
+    val failedBy = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var peakMemB = 0L
-    for (pass <- 0 until iters; (q, qi) <- selected.zipWithIndex) {
-      val (sec, log) = logged(spark) {
-        val t0 = System.nanoTime()
-        try { q.fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
+    for (_ <- 0 until iters; (q, qi) <- selected.zipWithIndex) {
+      val (run, log) = logged(spark)(timeQuery(spark, q, sfDir))
       val t = log.totals
       // peak memory is a max, not a sum: report the window's own max only
       // when it raised the running peak, else 0
       val delta = t.copy(peakMemB = if (t.peakMemB > peakMemB) t.peakMemB else 0L)
       peakMemB = math.max(peakMemB, t.peakMemB)
-      runsByQuery(qi) += ((sec, delta))
-      passTotals(pass) += sec
+      run match {
+        case Right(sec) => runsByQuery(qi) += ((sec, delta))
+        case Left(err) => failedBy.getOrElseUpdate(q.name, err)
+      }
     }
+    // a timed query has one run per pass, in pass order
+    val timed = selected.zipWithIndex.filterNot { case (q, _) => failedBy.contains(q.name) }
+    val passTotals = Array.tabulate(iters)(p => timed.map { case (_, qi) => runsByQuery(qi)(p)._1 }.sum)
     val detail = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Totals)]
-    val results = selected.zipWithIndex.map { case (q, qi) =>
+    val results = timed.map { case (q, qi) =>
       val runs = runsByQuery(qi)
       val (sec, delta) = runs.sortBy(_._1).apply((runs.size - 1) / 2)
       detail += ((q.name, sec, delta))
@@ -98,7 +106,8 @@ object Bench {
     // Full per-query diagnostics to a file (no output-window budget):
     // sec + gc_ms + shuffle read/write + spill + peak execution memory +
     // classes compiled in that pass (0 when every class was cached by an
-    // earlier pass).
+    // earlier pass); a failed query's row carries its first error line
+    // instead.
     def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
     try {
       val rows = detail.map { case (name, sec, d) =>
@@ -106,6 +115,9 @@ object Bench {
           s""""shuffle_read_mb":${mb(d.shuffleReadB)},"shuffle_write_mb":${mb(d.shuffleWriteB)},""" +
           s""""spill_mb":${mb(d.spillB)},"peak_mem_mb":${mb(d.peakMemB)},""" +
           s""""codegen_classes":${d.codegenClasses}}"""
+      } ++ failedBy.map { case (name, err) =>
+        val error = JsonMethods.compact(JsonMethods.render(JString(err)))
+        s"""{"name":"$name","failed":true,"error":$error}"""
       }
       val sfName0 = sfDir.split("/").filter(_.nonEmpty).lastOption.getOrElse(sfDir)
       val passTot = passTotals.map(s => math.round(s * 1000) / 1000.0).mkString("[", ",", "]")
@@ -113,7 +125,7 @@ object Bench {
         java.nio.file.Paths.get("BENCH_DETAIL.json"),
         (s"""{"sf":"$sfName0","timing":"median_of_${iters}_passes",""" +
           s""""pass_totals_sec":$passTot,""" +
-          s""""total_sec":${math.round(total * 1000) / 1000.0},""" +
+          s""""total_sec":${math.round(total * 1000) / 1000.0},"failed":${failedBy.size},""" +
           s""""gc_ms":$totGc,"shuffle_read_mb":${mb(totShufR)},""" +
           s""""shuffle_write_mb":${mb(totShufW)},"spill_mb":${mb(totSpill)},""" +
           s""""queries":[${rows.mkString(",")}]}""")
@@ -137,7 +149,7 @@ object Bench {
       // per-query breakdown is in BENCH_DETAIL.json
       val diag = s""","gc_ms":$totGc,"shuffle_mb":${fmt(mb(totShufR + totShufW), 1)}""" +
         s""","spill_mb":${fmt(mb(totSpill), 1)}"""
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","timing":"median_of_${iters}_passes","queries":$qs$omit$diag,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","timing":"median_of_${iters}_passes","queries":$qs$omit,"failed":${failedBy.size}$diag,"sf":"$sfName"}"""
     }
     val Budget = 1900
     val line = Seq(3, 2, 1).map(render(_, results, 0)).find(_.length <= Budget)
@@ -155,6 +167,17 @@ object Bench {
     println(line)
     System.out.flush()
   }
+
+  /** One timed run of `q`: its seconds, or the first line of the error
+    * it threw (a failure has no time).
+    */
+  def timeQuery(spark: SparkSession, q: QueryDef, sfDir: String): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { q.fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(firstLine(e)) }
+  }
+
+  private def firstLine(e: Throwable): String = e.toString.takeWhile(_ != '\n')
 
   /** Query names from a comma-separated list, in list order. */
   def queryNames(csv: String): Seq[String] =
@@ -180,7 +203,7 @@ object Bench {
     import org.apache.spark.sql.functions._
     def step(name: String)(body: => Any): Option[(String, String)] =
       try { body; None }
-      catch { case e: Throwable => Some(name -> e.toString.takeWhile(_ != '\n')) }
+      catch { case e: Throwable => Some(name -> firstLine(e)) }
     spark.range(1 << 20).selectExpr("sum(id)", "count(distinct id % 100)").collect()
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

@@ -205,7 +205,7 @@ object Plans {
       |Per the round-6 verdict's first directive, the full suite ran as the
       |FIRST action of round 7 on the fresh, idle VM (uptime 2:56, load
       |0.03, before any other compilation or Spark work): **103.4 s / 142
-      |queries at sf0.1** (`tools/bench_r7_cold.json`), vs the contended
+      |queries at sf0.1** (`tools/bench_r7_cold.json` at commit c416c32), vs the contended
       |official r6 record of 271.2 s and the r6 settled calibration of
       |107.0 s. The cold number independently reproduces the settled
       |calibration within 4% and confirms the r6 adjudication: the 271.2 s
@@ -268,7 +268,7 @@ object Plans {
       |## Settled end-of-round record (round 7)
       |
       |Full suite after the round's work, same VM, load ~0.2: **109.1 s /
-      |144 queries** (`tools/bench_r7_settled.json`) vs the cold 103.4 s /
+      |144 queries** (`tools/bench_r7_settled.json` at commit c416c32) vs the cold 103.4 s /
       |142 — the ~3 s delta IS the two queries the round added
       |(q_view_join_maintained ~1.8 s, q_decontaminate_exact ~1.0 s), so
       |cold and settled agree within noise on common work. The two runs
@@ -299,7 +299,7 @@ object Plans {
       |
       |One more full run after ALL round commits (14:01, load 0.08):
       |**126.2 s / 154 queries** (84 timed + 70 under the 0.6 s floor,
-      |`tools/bench_r7_final.json`). This is the only record that covers
+      |`tools/bench_r7_final.json` at commit c416c32). This is the only record that covers
       |the round's complete surface — the 10:45 settled run predates the
       |last seven commits (span dedup ×2, dHash, WAV, funnel, retraction
       |views, privacy gate). Decomposition vs the 10:45 record:

@@ -31,15 +31,6 @@ final case class FfiCatalog(tables: Map[String, DataFrame]) {
   def removed(names: String*): FfiCatalog =
     copy(tables = tables -- names)
   def names: Seq[String] = tables.keys.toSeq.sorted
-
-  /** S11: dump every catalog table as headered CSV under `dir/<table>/`
-    * (`/root/reference/parser/xml.py:758-765`). Distributed write — each
-    * table lands as one-or-more part files, not a driver-side dump.
-    */
-  def toCsv(dir: String): Unit =
-    tables.foreach { case (name, df) =>
-      df.write.option("header", "true").mode("overwrite").csv(s"$dir/$name")
-    }
 }
 
 object FfiCatalog {

@@ -16,6 +16,12 @@ import scala.jdk.CollectionConverters._
   * prefixes are stripped. [[extract]] turns each tag's rows into a local
   * DataFrame: no Spark job, no second parse, nothing cached.
   *
+  * A malformed document (a bad entity, a mismatched tag) fails the scan
+  * with the StAX parser's error before any table exists. The file is the
+  * unit that fails: [[FfiPipeline.runDirectory]] stops at it and leaves
+  * it unarchived, where the reference's `ET.parse` fails the same way
+  * (`/root/reference/parser/xml.py:39`).
+  *
   * Scale note: one FFI export is small (MBs) and is held on the driver
   * while its plan runs; the 100 TB path is MANY exports, one [[extract]]
   * per export file. `path` names one file: the scan opens it with a
@@ -88,50 +94,6 @@ object FfiExtract {
       Row.fromSeq(cols.map(r.get(_).orNull) :+ i.toLong)
     }
     applyColumnRules(spark.createDataFrame(rows.asJava, schema))
-  }
-
-  /** One tag through Spark's XML source, malformed-row tolerant:
-    * PERMISSIVE parse with a corrupt-record column, split into (clean,
-    * quarantined). One broken export in a 100 TB backfill lands in the
-    * quarantine frame (the audit artifact to re-extract from) instead of
-    * failing the job — the
-    * reference's whole-DOM `ET.parse` dies on the first bad byte
-    * (`/root/reference/parser/xml.py:39`).
-    */
-  def readTableTolerant(
-      spark: SparkSession,
-      path: String,
-      tag: String,
-      corruptCol: String = "_corrupt_record"): (DataFrame, DataFrame) = {
-    val raw = spark.read
-      .format("xml")
-      .option("rowTag", tag)
-      .option("inferSchema", "false")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .load(path)
-    // the corrupt column only exists if the source saw the option AND the
-    // schema pass surfaced it; guard for the all-clean case
-    val hasCorrupt = raw.columns.contains(corruptCol)
-    val flagged =
-      if (hasCorrupt) raw
-      else raw.withColumn(corruptCol, lit(null).cast(StringType))
-    val clean = flagged.filter(col(corruptCol).isNull).drop(corruptCol)
-    // eager localCheckpoint: (a) quarantine is tiny by assumption, so
-    // materializing costs one extra parse of this file only; (b) Spark
-    // forbids lazy queries whose referenced columns reduce to the corrupt
-    // column alone (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the checkpoint
-    // materializes full rows, making any downstream audit query legal.
-    val quarantined = flagged.filter(col(corruptCol).isNotNull).localCheckpoint()
-    // every column flattened to a string (inference off still leaves
-    // attribute/struct artifacts possible on messy docs)
-    val strings = clean.schema.fields.map {
-      case f if f.dataType == StringType => col(f.name)
-      case f                             => col(f.name).cast(StringType).as(f.name)
-    }
-    val normalized = applyColumnRules(clean.select(strings.toSeq: _*))
-      .withColumn(IngestId, monotonically_increasing_id())
-    (normalized, quarantined)
   }
 
   /** The reference's per-column normalization heuristics

@@ -90,24 +90,4 @@ object FfiPipeline {
       files.map(runFile(spark, _, mapping, constraints, url, dialect, props))
     }
   }
-
-  /** The reference's end-to-end entry (`/root/reference/xml_to_rdb.py:22-34`
-    * reads config.ini, builds the URL, connects, then loops the data dir):
-    * same flow from an INI text — section → [[graft.engine.DbConfig]]
-    * connection → [[MergeJdbc.Dialect.forUrl]] → directory batch.
-    * None when the section is missing or its dialect is unrecognized
-    * (the reference's empty-URL case).
-    */
-  def runFromConfig(
-      spark: SparkSession,
-      iniText: String,
-      section: String,
-      dataDir: Path,
-      mapping: Mapping): Option[Seq[FileResult]] =
-    graft.engine.DbConfig.fromIni(iniText, section).map { c =>
-      import scala.jdk.CollectionConverters._
-      val props = c.props.stringPropertyNames().asScala
-        .map(k => k -> c.props.getProperty(k)).toMap
-      runDirectory(spark, dataDir, mapping, c.url, MergeJdbc.Dialect.forUrl(c.url), props)
-    }
 }

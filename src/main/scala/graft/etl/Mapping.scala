@@ -16,8 +16,6 @@ final case class Mapping(
     tableMap: Map[String, String],           // FFITable -> NewTable
     fieldMap: Map[String, Seq[(String, String)]]) { // NewTable -> (ColumnName, OldColumn)
 
-  def outputTable(ffiTable: String): Option[String] = tableMap.get(ffiTable)
-
   /** P3: load-time projection+rename — keep only mapped columns present in
     * the frame, renamed old→new (`parser/xml.py:605-608,624`).
     */

@@ -149,25 +149,4 @@ object ConnectedComponents {
       .head()
     (row.getLong(0), row.getLong(1))
   }
-
-  /** Driver-side reference union-find (specs only — not a distributed path). */
-  private[graft] def unionFindReference(
-      vertices: Seq[Long],
-      edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent.getOrElse(c, c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    (vertices ++ edges.flatMap(e => Seq(e._1, e._2))).foreach(v => parent.getOrElseUpdate(v, v))
-    edges.foreach { case (a, b) => union(a, b) }
-    parent.keys.map(v => v -> find(v)).toMap
-  }
 }

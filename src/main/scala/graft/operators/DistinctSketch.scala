@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** KMV (k-minimum-values) distinct-count sketch: the mergeable
   * distinct-count state that completes [[ViewMaintenance]] — counts and
-  * sums merge by summing, min/max by min/max, quantiles by
-  * [[QuantileSketch.KllAgg]], and COUNT(DISTINCT) by keeping the k
-  * smallest distinct hash values.
+  * sums merge by summing, min/max by min/max, and COUNT(DISTINCT) by
+  * keeping the k smallest distinct hash values.
   *
   * Properties that matter at 100 TB:
   *  - state is O(k) longs per group no matter how many rows/distincts;
@@ -59,7 +58,7 @@ object DistinctSketch {
     b.size = newSize
   }
 
-  private def mergeInto(a: KmvBuf, b: KmvBuf, k: Int): KmvBuf = {
+  private[graft] def mergeInto(a: KmvBuf, b: KmvBuf, k: Int): KmvBuf = {
     if (b.size == 0) return a
     if (a.size == 0) return b
     val out = new Array[Long](k)
@@ -87,19 +86,6 @@ object DistinctSketch {
       if (u <= 0.0) (k - 1).toLong // all k minima in the first 2^11 hashes
       else math.round((k - 1).toDouble / u)
     }
-
-  /** count(distinct hashed-col): `udaf(new KmvCountAgg())` over
-    * [[hashed]] input. Exact below k, ±O(1/√k) above.
-    */
-  final class KmvCountAgg(k: Int = DefaultK)
-      extends Aggregator[Long, KmvBuf, Long] {
-    override def zero: KmvBuf = emptyBuf(k)
-    override def reduce(b: KmvBuf, v: Long): KmvBuf = { insert(b, v, k); b }
-    override def merge(a: KmvBuf, b: KmvBuf): KmvBuf = mergeInto(a, b, k)
-    override def finish(b: KmvBuf): Long = estimate(b, k)
-    override def bufferEncoder: Encoder[KmvBuf] = Encoders.kryo[KmvBuf]
-    override def outputEncoder: Encoder[Long] = Encoders.scalaLong
-  }
 
   /** The persistable STATE face: emits the sorted hash array so a
     * materialized view stores it next to its other aggregate state.

@@ -133,9 +133,8 @@ object ExactQuantile {
     * finishing simultaneously can never flood the driver with
     * O(pairs × collectAt) rows in one action. Suited to group counts up
     * to the thousands (dashboards, statuses, languages); per-KEY
-    * quantiles at millions of groups want [[QuantileSketch]] — the
-    * exact window-rank face or the mergeable KLL Aggregator (one
-    * partial-aggregating shuffle, bounded rank error).
+    * quantiles at millions of groups want [[QuantileSketch]]'s exact
+    * window-rank selection.
     */
   def quantilesDiscByGroup(
       df: DataFrame,

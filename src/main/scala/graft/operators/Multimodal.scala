@@ -313,12 +313,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** cosine-ready feature norm, reusing the native dot kernel. */
-  def withFeatureNorm(df: DataFrame, featCol: String = "features"): DataFrame =
-    df.withColumn(
-      "feat_norm",
-      sqrt(graft.functions.VectorExprs.dotProduct(col(featCol), col(featCol))))
-
   /** Perceptual difference-hash (dHash) of an image payload: the raster
     * is box-binned to a `gridRows x gridCols` luminance grid and each bit
     * records whether a cell is brighter than its right neighbor —
@@ -493,84 +487,6 @@ object Multimodal {
             parseVideo(r.getAs[Array[Byte]](1)).toSeq.flatMap(_.zipWithIndex.map {
               case (f, i) => Row(r.getLong(0), i, f)
             })
-          case _ => Nil
-        }
-      }
-    }(enc)
-  }
-
-  /** Split a bare concatenated-JPEG stream (MJPEG's essence — what an
-    * .mjpeg dump or a motion-JPEG AVI's video chunks contain back to
-    * back) into its frames by walking REAL JPEG marker structure:
-    * SOI, length-prefixed segments (APPn/DQT/DHT/SOF/SOS/COM), then
-    * entropy-coded data where `FF` is always followed by a stuffed `00`,
-    * an `RSTn`, or a genuine marker — so EOI detection cannot false-
-    * positive inside compressed data, the classic naive-split bug.
-    * Progressive JPEGs (multiple SOS) parse through the same walk.
-    * Trailing garbage and a truncated final frame drop silently.
-    */
-  private[operators] def mjpegFrames(bytes: Array[Byte]): Seq[Array[Byte]] = {
-    if (bytes == null) return Nil
-    val out = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    var pos = 0
-    while (pos < bytes.length) {
-      nextJpeg(bytes, pos) match {
-        case Some((s, e)) =>
-          out += java.util.Arrays.copyOfRange(bytes, s, e)
-          pos = e
-        case None => pos = bytes.length
-      }
-    }
-    out.toSeq
-  }
-
-  /** The next complete JPEG in `b` at or after `start`: (start, end). */
-  private def nextJpeg(b: Array[Byte], start: Int): Option[(Int, Int)] = {
-    val FF = 0xFF.toByte
-    var i = start
-    while (i + 1 < b.length && !(b(i) == FF && (b(i + 1) & 0xFF) == 0xD8)) i += 1
-    if (i + 1 >= b.length) return None
-    val s = i
-    i += 2
-    while (i + 1 < b.length) {
-      if (b(i) != FF) i += 1 // entropy-coded data
-      else (b(i + 1) & 0xFF) match {
-        case 0xD9 => return Some((s, i + 2)) // EOI — frame complete
-        case 0x00 => i += 2 // stuffed byte
-        // fill byte: the SECOND FF may itself prefix a marker (FF FF D9 is
-        // a fill byte then EOI) — advance 1, not 2, or the marker is eaten
-        case 0xFF => i += 1
-        case m if m >= 0xD0 && m <= 0xD7 => i += 2 // RSTn (no length)
-        case 0x01 | 0xD8 => i += 2 // TEM / stray SOI
-        case _ => // length-prefixed segment
-          if (i + 3 >= b.length) return None
-          val len = ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
-          if (len < 2) return None
-          i += 2 + len
-      }
-    }
-    None // truncated frame: no EOI before the buffer ended
-  }
-
-  /** (id, mjpeg stream) → (doc_id, frame_no, dhash): real marker-walk
-    * frame split + real decode + perceptual hash, one mapPartitions
-    * pass — the codec-format twin of [[videoFrameDHashes]]'s indexed
-    * container, for streams with no index at all.
-    */
-  def mjpegFrameDHashes(
-      df: DataFrame,
-      idCol: String = "doc_id",
-      binCol: String = "media",
-      batchSize: Int = 64): DataFrame = {
-    val in = df.select(col(idCol).cast("long"), col(binCol))
-    val enc = org.apache.spark.sql.Encoders.row(videoDHashSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap {
-          case r if !r.isNullAt(1) =>
-            mjpegFrames(r.getAs[Array[Byte]](1)).zipWithIndex.flatMap {
-              case (f, i) => dHash(f).map(hv => Row(r.getLong(0), i, hv))
-            }
           case _ => Nil
         }
       }

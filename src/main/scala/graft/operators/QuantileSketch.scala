@@ -1,187 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Per-KEY quantiles at both cardinality extremes.
-  *
-  * [[quantilesByKeyExact]] — the exact face: one shuffle on the key, a
-  * per-key window sort, rank-ceil(q·n) selection (DuckDB `quantile_disc`
-  * semantics, identical to [[ExactQuantile]]). The right tool when keys
-  * are MANY and per-key row counts modest (the per-user/per-document
-  * case): each key's rows sort inside its shuffle partition, nothing is
-  * global, and hot keys are bounded by per-key cardinality. This is the
-  * oracle-checkable form (`q_quantiles_by_key`).
-  *
-  * [[KllAgg]] — the scale face: a deterministic KLL-style mergeable
-  * quantile sketch as a custom `Aggregator`, for the regime where BOTH
-  * keys and per-key rows are huge (per-key sort buffers would spill) or
-  * where quantiles must come out of one partial-aggregating shuffle
-  * like any built-in agg. Buffers are O(k·log(n/k)) doubles per key
-  * regardless of n; merge is associative, so Spark plans map-side
-  * partial sketches and the shuffle carries sketches, never values —
-  * the property that holds at 10⁸ keys where the bisection driver state
-  * of [[ExactQuantile.quantilesDiscByGroup]] (O(groups×qs×B)) cannot.
-  *
-  * Sketch mechanics (Karnin–Lang–Liberty shape, deterministic variant):
-  * level ℓ holds items of weight 2^ℓ; a full level sorts, keeps every
-  * other element (alternating offset per level — deterministic, errors
-  * cancel across consecutive compactions), and promotes them one level
-  * up at doubled weight. Total weight is conserved exactly, so rank
-  * estimation walks the weighted sorted items to ceil(q·n). Worst-case
-  * rank error is O(log(n/k)·n/k); with the default k=256 the observed
-  * error on 10⁵-row columns is well under 1% of n (spec-pinned at 2%).
-  * Estimates depend on merge order (Spark's partial-agg tree), so the
-  * sketch face is spec-bounded, not hash-compared — the exact face is
-  * the oracle surface.
+/** Per-KEY exact quantiles: one shuffle on the key, a per-key window
+  * sort, rank-ceil(q·n) selection (DuckDB `quantile_disc` semantics,
+  * identical to [[ExactQuantile]]). The right tool when keys are MANY and
+  * per-key row counts modest (the per-user/per-document case): each key's
+  * rows sort inside its shuffle partition, nothing is global, and hot keys
+  * are bounded by per-key cardinality. This is the oracle-checked form
+  * (`q_quantiles_by_key`, `q_robust_zscore`).
   */
 object QuantileSketch {
-
-  val DefaultK = 256
-
-  /** Mergeable sketch state: `levels(ℓ)` holds weight-2^ℓ items,
-    * `parities(ℓ)` the next compaction offset, `count` the exact n.
-    */
-  final case class KllBuf(
-      var levels: Array[Array[Double]],
-      var sizes: Array[Int],
-      var parities: Array[Boolean],
-      var count: Long)
-
-  private[graft] def emptyBuf(k: Int): KllBuf =
-    KllBuf(Array(new Array[Double](k)), Array(0), Array(false), 0L)
-
-  /** Compact every full level bottom-up (weight-conserving: 2m items of
-    * weight w become m items of weight 2w; an odd leftover stays put).
-    */
-  private def compact(b: KllBuf, k: Int): Unit = {
-    var l = 0
-    while (l < b.levels.length) {
-      if (b.sizes(l) >= k) {
-        val n = b.sizes(l)
-        val buf = b.levels(l)
-        java.util.Arrays.sort(buf, 0, n)
-        val m = n / 2
-        val offset = if (b.parities(l)) 1 else 0
-        b.parities(l) = !b.parities(l)
-        // grow the sketch by one level when the top one fills
-        if (l + 1 == b.levels.length) {
-          b.levels = b.levels :+ new Array[Double](k + k / 2 + 2)
-          b.sizes = b.sizes :+ 0
-          b.parities = b.parities :+ false
-        }
-        var up = b.levels(l + 1)
-        if (b.sizes(l + 1) + m > up.length) {
-          up = java.util.Arrays.copyOf(up, math.max(up.length * 2, b.sizes(l + 1) + m))
-          b.levels(l + 1) = up
-        }
-        var i = 0
-        while (i < m) { up(b.sizes(l + 1) + i) = buf(2 * i + offset); i += 1 }
-        b.sizes(l + 1) += m
-        // the odd remainder (if any) keeps its weight at this level
-        if (n % 2 == 1) { buf(0) = buf(n - 1); b.sizes(l) = 1 } else b.sizes(l) = 0
-      }
-      l += 1
-    }
-  }
-
-  private[graft] def insert(b: KllBuf, v: Double, k: Int): Unit = {
-    if (b.sizes(0) >= b.levels(0).length) compact(b, k)
-    b.levels(0)(b.sizes(0)) = v
-    b.sizes(0) += 1
-    b.count += 1
-    if (b.sizes(0) >= k) compact(b, k)
-  }
-
-  private def mergeInto(a: KllBuf, b: KllBuf, k: Int): KllBuf = {
-    if (b.count == 0L) return a
-    if (a.count == 0L) return b
-    val depth = math.max(a.levels.length, b.levels.length)
-    while (a.levels.length < depth) {
-      a.levels = a.levels :+ new Array[Double](k)
-      a.sizes = a.sizes :+ 0
-      a.parities = a.parities :+ false
-    }
-    var l = 0
-    while (l < b.levels.length) {
-      val need = a.sizes(l) + b.sizes(l)
-      if (need > a.levels(l).length)
-        a.levels(l) = java.util.Arrays.copyOf(a.levels(l), math.max(need, a.levels(l).length * 2))
-      System.arraycopy(b.levels(l), 0, a.levels(l), a.sizes(l), b.sizes(l))
-      a.sizes(l) = need
-      l += 1
-    }
-    a.count += b.count
-    compact(a, k)
-    a
-  }
-
-  /** Rank-ceil(q·n) estimate over the weighted sketch items. */
-  def estimate(b: KllBuf, q: Double): Double = {
-    require(b.count > 0L, "empty sketch")
-    val items = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
-    var l = 0
-    while (l < b.levels.length) {
-      var i = 0
-      while (i < b.sizes(l)) { items += ((b.levels(l)(i), 1L << l)); i += 1 }
-      l += 1
-    }
-    val sorted = items.sortBy(_._1)
-    val target = math.ceil(
-      (BigDecimal(q) * BigDecimal(b.count))
-        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble).toLong.max(1L)
-    var acc = 0L
-    var i = 0
-    while (i < sorted.length - 1 && acc + sorted(i)._2 < target) {
-      acc += sorted(i)._2; i += 1
-    }
-    sorted(i)._1
-  }
-
-  /** The sketch as a custom Aggregator: input value column, output the
-    * estimates for `qs` in order. Use via `udaf(new KllAgg(qs))`.
-    */
-  final class KllAgg(qs: Seq[Double], k: Int = DefaultK)
-      extends Aggregator[Double, KllBuf, Seq[Double]] {
-    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0), s"bad qs: $qs")
-    override def zero: KllBuf = emptyBuf(k)
-    override def reduce(b: KllBuf, v: Double): KllBuf = { insert(b, v, k); b }
-    override def merge(a: KllBuf, b: KllBuf): KllBuf = mergeInto(a, b, k)
-    override def finish(b: KllBuf): Seq[Double] = qs.map(estimate(b, _))
-    override def bufferEncoder: Encoder[KllBuf] = Encoders.kryo[KllBuf]
-    override def outputEncoder: Encoder[Seq[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-  }
 
   /** "p25" / "p97_5"-style column name for a quantile. */
   def colName(q: Double): String =
     "p" + BigDecimal(q * 100).bigDecimal.stripTrailingZeros.toPlainString
       .replace(".", "_").replace("-", "m")
 
-  /** One sketch pass per key: groupBy(key).agg(sketch) — a single
-    * partial-aggregating shuffle carrying O(k·log(n/k)) buffers.
-    */
-  def quantilesByKeySketch(
-      df: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      qs: Seq[Double],
-      k: Int = DefaultK): DataFrame = {
-    val sk = udaf(new KllAgg(qs, k))
-    val est = df
-      .filter(col(valueCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sk(col(valueCol).cast("double")).as("est"))
-    qs.zipWithIndex.foldLeft(est) { case (d, (q, i)) =>
-      d.withColumn(colName(q), col("est")(i))
-    }.drop("est")
-  }
-
   /** Exact per-key discrete quantiles via window rank selection: shuffle
     * on the key, sort inside the key, pick the value at rank ceil(q·n).
     * Viable whenever a single key's rows fit a shuffle partition — the
-    * many-keys/modest-rows regime that complements both the sketch and
+    * many-keys/modest-rows regime that complements
     * [[ExactQuantile.quantilesDiscByGroup]].
     */
   def quantilesByKeyExact(

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * + sum-of-squares + count) and deriving the value at read time — the
   * same decomposition Spark itself uses for partial aggregation, applied
   * across BATCHES instead of partitions. Holistic aggregates (exact
-  * median/distinct) don't merge; use the KLL sketch
-  * ([[QuantileSketch]]) or HLL-style state for those.
+  * median/distinct) don't merge; a distinct count keeps the KMV sketch
+  * state of [[DistinctSketch]] instead.
   */
 object ViewMaintenance {
 

@@ -972,11 +972,9 @@ object Analytics {
     // ------------------------------------------------------------------
     // Per-KEY quantiles (operators.QuantileSketch): the many-keys regime
     // ExactQuantile.quantilesDiscByGroup's bisection driver state cannot
-    // serve. The oracle-checked face is the exact window-rank selection
-    // (one shuffle on the key, sort inside the key, rank-ceil(q·n) —
-    // DuckDB quantile_disc semantics); the 10⁸-key/huge-rows path is the
-    // mergeable KLL Aggregator in the same file, spec-bounded (merge-
-    // order-dependent estimates can't hash-compare) — see SCALE.md.
+    // serve: an exact window-rank selection (one shuffle on the key,
+    // sort inside the key, rank-ceil(q·n) — DuckDB quantile_disc
+    // semantics).
     QueryDef(
       "q_quantiles_by_key",
       (s, dir) =>
@@ -1304,9 +1302,7 @@ object Analytics {
     // semantics), so the score is bit-exact across engines before the
     // final 6-decimal round. Cost shape is the honest two-pass robust
     // price: one key shuffle for the median, one for the deviation
-    // median; both stat frames are O(groups) and broadcast back. (At
-    // 10⁸ keys swap the exact faces for KllAgg sketches — same query
-    // shape, one partial-agg shuffle each.)
+    // median; both stat frames are O(groups) and broadcast back.
     QueryDef(
       "q_robust_zscore",
       (s, dir) => {

@@ -413,12 +413,12 @@ object Relational {
       covers = Seq("2.9", "ext-chained-agg")),
 
     // ------------------------------------------------------------------
-    // §2.9 ext: batch sessionization (gaps-and-islands) — the exact batch
-    // analogue of the streaming session_window in graft.streaming
-    // .EventStream. lag marks session starts (gap >= 1h), a running sum
-    // numbers sessions, then one agg per session. All in integer
-    // nanoseconds so both engines agree bit-for-bit. One shuffle on
-    // user_id serves both windows AND the final agg (same key).
+    // §2.9 ext: batch sessionization (gaps-and-islands) — the batch
+    // analogue of a streaming session_window. lag marks session starts
+    // (gap >= 1h), a running sum numbers sessions, then one agg per
+    // session. All in integer nanoseconds so both engines agree
+    // bit-for-bit. One shuffle on user_id serves both windows AND the
+    // final agg (same key).
     QueryDef(
       "q_sessionize",
       (s, dir) => {

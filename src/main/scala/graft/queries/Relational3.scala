@@ -100,8 +100,8 @@ object Relational3 {
     // ------------------------------------------------------------------
     // Event-time interval self-join — the batch face of the stream-stream
     // join: pairs of same-user events within (0, 1 hour]. In streaming
-    // (EventStream.intervalJoin) the two-sided time bound is what lets
-    // Spark expire join state; in batch the bucketed variant joins on
+    // the two-sided time bound is what lets Spark expire join state; in
+    // batch the bucketed variant joins on
     // (user_id, time-bucket) so per-group pair generation is bounded by
     // bucket occupancy, not a user's total event count — the difference
     // between O(k²) and O(k²/buckets) per user at 100 TB.

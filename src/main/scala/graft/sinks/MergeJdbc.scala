@@ -221,20 +221,6 @@ object MergeJdbc {
     }
   }
 
-  /** Stage + merge one DataFrame into `table`; the staging table lives and
-    * dies inside this call.
-    */
-  def mergeTable(
-      df: DataFrame,
-      table: String,
-      pks: Seq[String],
-      url: String,
-      dialect: Dialect,
-      props: Map[String, String] = Map.empty): TableResult = {
-    require(pks.nonEmpty, s"$table has no primary key — MERGE needs a PK guard")
-    merge(Try(stage(df, table, url, dialect, props)), table, pks, url, dialect, props)
-  }
-
   /** UpdateLog audit append (S9, `parser/xml.py:675-697`): one row per
     * loaded table recording who/where/what/when and the row delta.
     */
@@ -302,31 +288,4 @@ object MergeJdbc {
       }
     }
   }
-
-  /** Streaming MERGE sink: each micro-batch lands via [[mergeTable]] —
-    * PK-guarded insert-if-absent (the reference's MERGE semantics: an
-    * existing key is left untouched, never updated). Exactly-once EFFECT
-    * without a transactional sink: a replayed batch (restart between sink
-    * write and checkpoint commit — Structured Streaming's at-least-once
-    * window) matches every PK and inserts nothing. Idempotence is the
-    * standard production answer for JDBC targets; the spec replays a
-    * batch explicitly to pin it, alongside the bare-foreachBatch variant
-    * above it.
-    */
-  def streamInto(
-      stream: DataFrame,
-      table: String,
-      pks: Seq[String],
-      url: String,
-      dialect: Dialect,
-      checkpoint: String,
-      props: Map[String, String] = Map.empty)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val res = mergeTable(batch, table, pks, url, dialect, props = props)
-        res.error.foreach(e => throw new RuntimeException(s"stream merge into $table failed: $e"))
-      }
 }

@@ -38,9 +38,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * written through the library API is immediately queryable by name.
   *
   * Reads resolve the manifest (version pin or current) and delegate the
-  * scan to Spark's stock parquet DSv2 table over exactly the version's
-  * directories ([[org.apache.spark.sql.graft.GraftTableShim]]) — full
-  * pushdown/pruning/vectorization, zero custom scan code. Writes go
+  * scan to Spark's stock parquet DSv2 scan over exactly the version's
+  * directories ([[org.apache.spark.sql.graft.LakePruningScanBuilder]]) —
+  * full pushdown/pruning/vectorization, zero custom scan code. Writes go
   * through the V1 `InsertableRelation` bridge into [[VersionedLake]]
   * commits: INSERT INTO appends (O(delta), schema merged union-by-name),
   * INSERT OVERWRITE publishes a full snapshot, both layout-aligned with

@@ -47,22 +47,7 @@ object Lake {
       clusterBy: Seq[String] = Nil,
       maxRecordsPerFile: Long = 8L * 1000 * 1000,
       zorderBy: Seq[String] = Nil): Unit =
-    write(df, path, parts, clusterBy, maxRecordsPerFile, "overwrite", zorderBy)
-
-  /** Same layout, append mode — the `foreachBatch` body for a streaming
-    * ingest into the lake: each micro-batch adds at most one file per
-    * touched partition directory, so the layout stays compacted without a
-    * separate compaction job (file count grows with batches, not tasks ×
-    * batches; periodic rewrite handles the long tail).
-    */
-  def appendPartitioned(
-      df: DataFrame,
-      path: String,
-      parts: Seq[String],
-      clusterBy: Seq[String] = Nil,
-      maxRecordsPerFile: Long = 8L * 1000 * 1000,
-      zorderBy: Seq[String] = Nil): Unit =
-    write(df, path, parts, clusterBy, maxRecordsPerFile, "append", zorderBy)
+    write(df, path, parts, clusterBy, maxRecordsPerFile, zorderBy)
 
   /** Internal clustering-key column name; never written to the table. */
   private[sources] val ZKey = "_graft_zkey"
@@ -112,7 +97,6 @@ object Lake {
       parts: Seq[String],
       clusterBy: Seq[String],
       maxRecordsPerFile: Long,
-      mode: String,
       zorderBy: Seq[String] = Nil): Unit = {
     require(clusterBy.isEmpty || zorderBy.isEmpty,
       "clusterBy and zorderBy are mutually exclusive")
@@ -124,7 +108,7 @@ object Lake {
       else Nil
     val clustered = if (sortCols.isEmpty) one else one.sortWithinPartitions(sortCols: _*)
     clustered.drop(ZKey).write
-      .mode(mode)
+      .mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(parts: _*)
       .parquet(path)
@@ -185,7 +169,7 @@ object Lake {
     val conf = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(conf)
     spark.conf.set(conf, "dynamic")
-    try write(merged, path, parts, clusterBy, maxRecordsPerFile, "overwrite")
+    try write(merged, path, parts, clusterBy, maxRecordsPerFile)
     finally prev match {
       case Some(v) => spark.conf.set(conf, v)
       case None => spark.conf.unset(conf)

@@ -5600,42 +5600,18 @@ object VersionedLake {
   // ------------------------------------------------------------------
   // Bucket-aligned layout × versioned lake: the exchange-free fact⋈fact
   // story of [[Bucketed]] unified with atomic publishes and time travel.
-  // A bucketed COMMIT writes its data directory through Spark's bucketed
-  // writer (one repartition = the bucket shuffle, paid once at write
-  // time; file names carry bucket ids) and records the spec in the
+  // [[optimizeBucketed]] rewrites a version's snapshot through Spark's
+  // bucketed writer (one repartition = the bucket shuffle, paid once at
+  // write time; file names carry bucket ids) and records the spec in the
   // manifest; [[readBucketed]] registers the directory as an external
   // bucketed catalog table, recovering HashPartitioning(key, n) straight
   // off the immutable files — joins and aggregations on the key plan
-  // with ZERO exchange, per version, forever. Appends land as ordinary
-  // directories (a reader then falls back to a plain scan — correct,
-  // just not exchange-free) until [[optimizeBucketed]] re-buckets the
-  // snapshot; at 100 TB that is the same amortization bargain as
-  // compaction itself, riding the same rewrite.
+  // with ZERO exchange, per version, forever. Commits and appends land
+  // as ordinary directories (a reader then falls back to a plain scan —
+  // correct, just not exchange-free) until the next [[optimizeBucketed]]
+  // re-buckets the snapshot; at 100 TB that is the same amortization
+  // bargain as compaction itself, riding the same rewrite.
   // ------------------------------------------------------------------
-
-  /** Bucketed full-snapshot commit. */
-  def commitBucketed(
-      df: DataFrame,
-      tableDir: String,
-      key: String,
-      buckets: Int,
-      maxRecordsPerFile: Long = 8L * 1000 * 1000,
-      statsCols: Seq[String] = Nil,
-      bloom: Option[BloomConfig] = None): Long = {
-    val d = writeBucketedDataDir(df, tableDir, key, buckets, maxRecordsPerFile)
-    val statsNdv = columnStatsNdv(df, statsCols)
-    val stats = statsNdv.map { case (s, _) => d -> s }.toMap
-    val blooms = bloomJson(df, bloom).map(d -> _).toMap
-    retryOnConflict() {
-      val spark = df.sparkSession
-      val cur = currentVersion(spark, tableDir)
-      publishManifest(spark, tableDir, Seq(d), nullableAll(df.schema),
-        stats, blooms, expectedBase = Some(cur),
-        buckets = Map(d -> ((key, buckets))),
-        txns = txnsAt(spark, tableDir, cur), op = "snapshot",
-        ndv = statsNdv.map { case (_, n) => d -> n }.toMap)
-    }
-  }
 
   /** OPTIMIZE into a bucket-aligned single directory: compaction and the
     * bucket shuffle share one table rewrite. The cadence move for a

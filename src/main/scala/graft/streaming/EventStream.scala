@@ -1,29 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured-Streaming operators over the `events` stream (SURVEY.md
-  * §2.9). The reference's only "streaming" is a poll-directory batch loop;
-  * these are the event-stream extensions a large-scale pipeline needs,
-  * expressed with the engine-native streaming primitives so state,
-  * watermarks and recovery are Spark's problem, not ours:
+/** Event-time operators over the `events` stream (SURVEY.md §2.9). The
+  * reference's only "streaming" is a poll-directory batch loop; these are
+  * the declared queries' event-time plans, written with the engine-native
+  * streaming primitives so state, watermarks and recovery are Spark's:
   *
-  *   - event-time tumbling/sliding window aggregation under a watermark
-  *     (late data beyond the watermark is dropped, state is bounded);
-  *   - streaming deduplication by event id within the watermark horizon
-  *     (`dropDuplicatesWithinWatermark` — state expires, unlike plain
-  *     `dropDuplicates` whose state grows forever);
-  *   - session windows via the native `session_window` aggregation;
-  *   - custom per-key state via `flatMapGroupsWithState` (running
-  *     per-user counters with idle timeout) for semantics the built-in
-  *     operators can't express.
+  *   - [[windowedAgg]]: tumbling event-time window aggregation under a
+  *     watermark (late data beyond the watermark is dropped, state is
+  *     bounded);
+  *   - [[chainedWindowAgg]]: two stateful window aggregations in one
+  *     append-mode query;
+  *   - [[intervalJoinBatch]]: the bucketed batch form of a same-user
+  *     interval self-join.
   *
-  * All transforms are source-agnostic: they accept any DataFrame with the
-  * events schema (streaming or batch — same code path powers the batch
-  * oracle-checked queries), which is exactly how Structured Streaming is
-  * meant to be used: one declarative plan, incrementalized by the engine.
+  * The window aggregations accept any DataFrame with the events schema,
+  * streaming or batch: the oracle-checked queries run the same plan in
+  * batch (`q_stream_window_parity`, `q_stream_chain_parity`), and
+  * EventStreamSpec runs it on a memory stream.
   *
   * Scale notes: windowed aggs shuffle on (window, key) with partial
   * aggregation map-side; state store size is bounded by watermark horizon
@@ -33,11 +29,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * shape declared here.
   */
 object EventStream {
-
-  /** Raw events (`ts_ns` bigint) → event-time frame (`ts` timestamp). */
-  def withEventTime(events: DataFrame): DataFrame =
-    events
-      .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
 
   /** Tumbling event-time window counts + value sums per event type. */
   def windowedAgg(
@@ -80,113 +71,18 @@ object EventStream {
         col("peak_minute"),
         col("n_total"))
 
-  /** Sliding event-time windows: each event lands in windowLen/slide
-    * overlapping windows (state multiplies accordingly — size slide to
-    * what the dashboard actually needs).
-    */
-  def slidingAgg(
-      events: DataFrame,
-      windowLen: String = "1 hour",
-      slide: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-
-  /** Streaming dedup on event_id with bounded state: duplicates arriving
-    * within the watermark horizon are dropped, state for old ids expires.
-    */
-  def dedupWithinWatermark(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Session-window aggregation: events of one user belong to one session
-    * while gaps stay under `gap`; a quiet period >= gap closes the session.
-    */
-  def sessionAgg(
-      events: DataFrame,
-      gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col("user_id"),
-        col("w.start").as("session_start"),
-        col("w.end").as("session_end"),
-        col("n_events"))
-
-  /** Stream-stream interval self-join: pairs of events of the same user
-    * where the right event lands within (0, maxGap] after the left one —
-    * follow-on behavior detection (click→purchase funnels, retry bursts).
-    *
-    * Both sides carry a watermark and the join condition bounds event time
-    * on BOTH ends, which is exactly what Spark needs to size the join
-    * state: a left row can be dropped once the right watermark passes
-    * `l.ts + maxGap`, so state is bounded by (watermark delay + maxGap) ×
-    * arrival rate, regardless of stream length. The same plan runs in
-    * batch (watermark is a no-op there) — that parity is oracle-checked as
-    * `q_interval_join`.
-    */
-  def intervalJoin(
-      left: DataFrame,
-      right: DataFrame,
-      maxGap: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    l.join(
-        r,
-        expr(s"""l.user_id = r.user_id AND
-                 r.ts > l.ts AND r.ts <= l.ts + INTERVAL $maxGap"""))
-      .select(
-        col("l.user_id").as("user_id"),
-        col("l.event_id").as("ev_a"),
-        col("r.event_id").as("ev_b"))
-  }
-
-  /** Stream-stream LEFT OUTER interval join: like [[intervalJoin]] but
-    * left rows with NO follow-on within the gap are emitted too (ev_b
-    * null) — abandoned-funnel detection. Outer emission is what makes the
-    * watermark semantically load-bearing, not just a state bound: a left
-    * row can only be declared unmatched once the RIGHT watermark passes
-    * `l.ts + maxGap`, so unmatched results trail the stream by exactly
-    * (watermark delay + gap) — the minimum any correct engine can promise.
-    * State stays bounded the same way as the inner variant.
-    */
-  def intervalJoinOuter(
-      left: DataFrame,
-      right: DataFrame,
-      maxGap: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    l.join(
-        r,
-        expr(s"""l.user_id = r.user_id AND
-                 r.ts > l.ts AND r.ts <= l.ts + INTERVAL $maxGap"""),
-        "left_outer")
-      .select(
-        col("l.user_id").as("user_id"),
-        col("l.event_id").as("ev_a"),
-        col("r.event_id").as("ev_b"))
-  }
-
-  /** Batch face of [[intervalJoin]], bucketed for scale. A plain equi-join
-    * on user_id materializes ALL same-user pairs before the range filter —
-    * O(k²) per user, the dominant cost once any user has thousands of
-    * events. Bucketing event time by the gap length bounds each join group
-    * to two adjacent buckets: a right row at bucket b can only pair with
-    * left rows in buckets {b-1, b}, so the left side is expanded to its
-    * two candidate buckets (2× map-side, no extra shuffle relative to the
-    * naive plan) and the join key becomes (user_id, bucket). Per-group
-    * work drops from k² to ~(k/buckets)²·2 — this is the batch analogue of
-    * what the streaming state store does with watermark-bounded state.
-    * Identical output to intervalJoin (same oracle: `q_interval_join`).
+  /** Same-user interval self-join in batch, bucketed for scale: pairs
+    * (ev_a, ev_b) where the right event lands within (0, maxGap] after the
+    * left one. A plain equi-join on user_id materializes ALL same-user
+    * pairs before the range filter — O(k²) per user, the dominant cost
+    * once any user has thousands of events. Bucketing event time by the
+    * gap length bounds each join group to two adjacent buckets: a right
+    * row at bucket b can only pair with left rows in buckets {b-1, b}, so
+    * the left side is expanded to its two candidate buckets (2× map-side,
+    * no extra shuffle relative to the naive plan) and the join key becomes
+    * (user_id, bucket). Per-group work drops from k² to ~(k/buckets)²·2.
+    * Oracle: `q_interval_join`; EventStreamSpec compares it with the
+    * naive range join.
     */
   def intervalJoinBatch(
       left: DataFrame,
@@ -212,127 +108,5 @@ object EventStream {
         col("l.user_id").as("user_id"),
         col("l.event_id").as("ev_a"),
         col("r.event_id").as("ev_b"))
-  }
-
-  /** Stream-static enrichment: each streaming event joined to a static
-    * dimension (broadcast per micro-batch; the static side re-plans per
-    * trigger so slowly-changing dims pick up refreshes).
-    */
-  def enrich(
-      events: DataFrame,
-      dim: DataFrame,
-      eventKey: String,
-      dimKey: String): DataFrame =
-    events.join(dim, col(eventKey) === col(dimKey), "left")
-
-  // ---------------------------------------------------------------------
-  // Custom state: running per-user counters with idle-timeout flush.
-  // ---------------------------------------------------------------------
-
-  case class UserEvent(user_id: Long, event_id: String, ts: java.sql.Timestamp, value: Double)
-  case class UserState(nEvents: Long, totalValue: Double, lastTs: Long)
-  case class UserSnapshot(user_id: Long, n_events: Long, total_value: Double, closed: Boolean)
-
-  /** flatMapGroupsWithState: emits an updated per-user snapshot on every
-    * batch that touches the user, and a final `closed` snapshot when the
-    * user goes idle past the processing-time timeout (idleTimeoutMs <= 0
-    * disables timers; run the query in update output mode).
-    */
-  def runningUserStats(
-      events: Dataset[UserEvent],
-      idleTimeoutMs: Long = 60000L): Dataset[UserSnapshot] = {
-    import events.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserState, UserSnapshot](
-        OutputMode.Update(),
-        timeoutConf) {
-        (user: Long, rows: Iterator[UserEvent], state: GroupState[UserState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(UserSnapshot(user, s.nEvents, s.totalValue, closed = true))
-          } else {
-            val prev = state.getOption.getOrElse(UserState(0L, 0.0, 0L))
-            val (n, tot, last) = rows.foldLeft((prev.nEvents, prev.totalValue, prev.lastTs)) {
-              case ((cn, ct, cl), e) => (cn + 1, ct + e.value, math.max(cl, e.ts.getTime))
-            }
-            state.update(UserState(n, tot, last))
-            if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-            Iterator(UserSnapshot(user, n, tot, closed = false))
-          }
-      }
-  }
-
-  // ---------------------------------------------------------------------
-  // Custom state: streaming per-key quantiles over a KLL sketch.
-  // ---------------------------------------------------------------------
-
-  case class KeyQuantiles(user_id: Long, n: Long, quantiles: Seq[Double])
-
-  /** Streaming per-key quantiles: each key's state is one mergeable KLL
-    * sketch ([[graft.operators.QuantileSketch]]) updated in place per
-    * micro-batch — O(k·log(n/k)) state per key FOREVER, no value buffer,
-    * the property that lets a quantile monitor run unbounded on a
-    * 100 TB/day stream where any exact per-key state grows without
-    * limit. Emits an updated (n, quantile estimates) snapshot for every
-    * key each batch touches (update output mode). Below k values the
-    * sketch holds the raw data, so early estimates are EXACT — the
-    * spec's determinism handle. Batch face: groupBy + udaf(KllAgg) over
-    * the same buffers (QuantileSketchSpec pins their agreement).
-    */
-  case class KeyDistinct(user_id: Long, n_distinct: Long)
-
-  /** Streaming per-key DISTINCT count over unbounded input with BOUNDED
-    * state: the KMV sketch ([[graft.operators.DistinctSketch]]) as
-    * mapGroupsWithState state — O(k) longs per key forever, where a
-    * naive dropDuplicates-then-count keeps every identity seen. Exact
-    * below k distinct values per key (the spec's determinism handle),
-    * (k−1)/u_k beyond. Hashing happens in the COLUMN world before
-    * groupByKey (same xxhash64 the batch face uses), so streaming and
-    * batch counts agree bit-for-bit on the same rows.
-    */
-  def streamingDistinct(
-      events: Dataset[UserEvent],
-      k: Int = graft.operators.DistinctSketch.DefaultK): Dataset[KeyDistinct] = {
-    import events.sparkSession.implicits._
-    import graft.operators.DistinctSketch
-    implicit val bufEnc: org.apache.spark.sql.Encoder[DistinctSketch.KmvBuf] =
-      org.apache.spark.sql.Encoders.kryo[DistinctSketch.KmvBuf]
-    events
-      .select(col("user_id"), DistinctSketch.hashed(col("event_id")).as("h"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[DistinctSketch.KmvBuf, KeyDistinct](
-        GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, Long)], state: GroupState[DistinctSketch.KmvBuf]) =>
-          val buf = state.getOption.getOrElse(DistinctSketch.emptyBuf(k))
-          rows.foreach(r => DistinctSketch.insert(buf, r._2, k))
-          state.update(buf)
-          KeyDistinct(user, DistinctSketch.estimate(buf, k))
-      }
-  }
-
-  def streamingQuantiles(
-      events: Dataset[UserEvent],
-      qs: Seq[Double],
-      k: Int = graft.operators.QuantileSketch.DefaultK): Dataset[KeyQuantiles] = {
-    import events.sparkSession.implicits._
-    import graft.operators.QuantileSketch
-    implicit val bufEnc: org.apache.spark.sql.Encoder[QuantileSketch.KllBuf] =
-      org.apache.spark.sql.Encoders.kryo[QuantileSketch.KllBuf]
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[QuantileSketch.KllBuf, KeyQuantiles](
-        GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[UserEvent], state: GroupState[QuantileSketch.KllBuf]) =>
-          val buf = state.getOption.getOrElse(QuantileSketch.emptyBuf(k))
-          rows.foreach(e => QuantileSketch.insert(buf, e.value, k))
-          state.update(buf)
-          KeyQuantiles(user, buf.count, qs.map(QuantileSketch.estimate(buf, _)))
-      }
   }
 }

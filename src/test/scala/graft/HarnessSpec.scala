@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 
 /** The measuring harness Bench and the dev tools share: the job log of
-  * one window and the warm-up's report of the steps it skipped.
+  * one window, one query's timing or failure, and the warm-up's report of
+  * the steps it skipped.
   */
 class HarnessSpec extends SparkSpec {
 
@@ -28,6 +29,17 @@ class HarnessSpec extends SparkSpec {
       spark.range(4).selectExpr(s"id + ${System.nanoTime()}L").collect())
     assert(log.codegenClasses >= 1)
     assert(log.totals.codegenClasses === log.codegenClasses)
+  }
+
+  test("a throwing query body yields a failed entry, not a time") {
+    val thrown = QueryDef("q_throws", (_, _) => throw new IllegalStateException("no plan\nsecond line"))
+    assert(Bench.timeQuery(spark, thrown, sf) === Left("java.lang.IllegalStateException: no plan"))
+    // fails while its job runs, not while its plan is built
+    val failing = QueryDef("q_fails", (s, _) => s.range(3).toDF().where("assert_true(id < 0) IS NULL"))
+    val err = Bench.timeQuery(spark, failing, sf)
+    assert(err.left.exists(e => e.contains("is not true") && !e.contains('\n')), err)
+    val passing = QueryDef("q_passes", (s, _) => s.range(3).toDF())
+    assert(Bench.timeQuery(spark, passing, sf).exists(_ >= 0.0))
   }
 
   test("warm-up against a missing scale-factor directory names its failed steps") {

@@ -125,11 +125,11 @@ class FfiExtractSpec extends SparkSpec {
   }
 
   test("extracting the fixture caches nothing") {
-    import org.apache.spark.sql.graft.SparkInternals
+    import org.apache.spark.sql.graft.CacheEntries
     val path = write(FfiFixture.Xml)
-    val before = SparkInternals.cachedEntries(spark)
+    val before = CacheEntries(spark)
     val cat = FfiExtract.extract(spark, path)
     cat.names.foreach(cat(_).count())
-    assert(SparkInternals.cachedEntries(spark) === before)
+    assert(CacheEntries(spark) === before)
   }
 }

@@ -5,7 +5,7 @@ import java.sql.DriverManager
 
 import graft.SparkSpec
 import graft.sinks.MergeJdbc
-import org.apache.spark.sql.graft.SparkInternals
+import org.apache.spark.sql.graft.CacheEntries
 
 /** E1 driver loop: directory batch → per-file load → archive-on-success,
   * then a second poll sees an empty directory.
@@ -55,6 +55,36 @@ class FfiPipelineRunSpec extends SparkSpec {
     assert(FfiPipeline.runDirectory(spark, dataDir, mapping, url, MergeJdbc.Derby).isEmpty)
   }
 
+  test("a malformed export stops runDirectory unarchived; the export before it stays loaded") {
+    freshSchema(plotNameWidth = 64)
+    val dataDir = Files.createTempDirectory("ffi_malformed")
+    Files.writeString(dataDir.resolve("export1.xml"), FfiFixture.Xml)
+    // a bare `&` is a fatal error for the StAX scan, as for the reference's ET.parse
+    Files.writeString(dataDir.resolve("export2.xml"),
+      """<FFIData>
+        |  <MacroPlot><MacroPlot_GUID>bb</MacroPlot_GUID><MacroPlot_Name>two & broken</MacroPlot_Name></MacroPlot>
+        |</FFIData>""".stripMargin)
+
+    val err = intercept[Exception](
+      FfiPipeline.runDirectory(spark, dataDir, mapping, url, MergeJdbc.Derby))
+    // the StAX parser's own error, as scanning the file alone raises it
+    val parseErr = intercept[Exception](FfiExtract.scan(dataDir.resolve("export2.xml").toString))
+    assert((err.getClass, err.getMessage) === ((parseErr.getClass, parseErr.getMessage)))
+    val processed = dataDir.resolve("processed")
+    assert(Files.exists(dataDir.resolve("export2.xml")))
+    assert(!Files.exists(processed.resolve("export2.xml")))
+    assert(!Files.exists(dataDir.resolve("export1.xml")))
+    assert(Files.exists(processed.resolve("export1.xml")))
+    val c = DriverManager.getConnection(url)
+    try {
+      def count(t: String) = {
+        val rs = c.createStatement().executeQuery(s"SELECT COUNT(*) FROM $t")
+        rs.next(); rs.getLong(1)
+      }
+      assert(count("Plot") === 2L && count("Event") === 2L)
+    } finally c.close()
+  }
+
   test("the pipeline's stages called one by one leave no cache behind") {
     // the calls runFile makes, made directly as a tracer makes them
     val sc = spark.sparkContext
@@ -63,13 +93,13 @@ class FfiPipelineRunSpec extends SparkSpec {
     val xml = Files.createTempDirectory("ffi_stages").resolve("export.xml")
     Files.writeString(xml, FfiFixture.Xml)
     val rddsBefore = sc.getPersistentRDDs.keySet
-    val entriesBefore = SparkInternals.cachedEntries(spark)
+    val entriesBefore = CacheEntries(spark)
     val cat = FfiTransform(FfiIdents(FfiExtract.extract(spark, xml.toString)))
     val frames = FfiPipeline.outputFrames(cat, FfiFixture.mapping, cons)
     val results = MergeJdbc.loadAll(frames, cons, url, MergeJdbc.Derby)
     assert(results.nonEmpty && results.forall(!_.failed), results.mkString("; "))
     assert(sc.getPersistentRDDs.keySet.diff(rddsBefore).isEmpty)
-    assert(SparkInternals.cachedEntries(spark) === entriesBefore)
+    assert(CacheEntries(spark) === entriesBefore)
   }
 
   test("runDirectory leaves no cache behind, clean or failing") {
@@ -79,11 +109,11 @@ class FfiPipelineRunSpec extends SparkSpec {
       val dataDir = Files.createTempDirectory("ffi_release")
       Files.writeString(dataDir.resolve("export1.xml"), FfiFixture.Xml)
       val rddsBefore = sc.getPersistentRDDs.keySet
-      val entriesBefore = SparkInternals.cachedEntries(spark)
+      val entriesBefore = CacheEntries(spark)
       val results = FfiPipeline.runDirectory(spark, dataDir, mapping, url, MergeJdbc.Derby)
       assert(results.head.failedTables.isEmpty === (width == 64), results.head.tables.mkString("; "))
       assert(sc.getPersistentRDDs.keySet.diff(rddsBefore).isEmpty)
-      assert(SparkInternals.cachedEntries(spark) === entriesBefore)
+      assert(CacheEntries(spark) === entriesBefore)
     }
   }
 }

@@ -148,16 +148,6 @@ class FfiPipelineSpec extends SparkSpec {
     assert(s(0).getString(2).matches("[0-9A-F-]{36}"))
   }
 
-  test("CSV sink dumps every catalog table with headers (S11)") {
-    val out = Files.createTempDirectory("ffi_csv")
-    FfiCatalog(Map(
-      "MacroPlot" -> transformed("MacroPlot").select("MacroPlot_GUID", "PlotID")))
-      .toCsv(out.toString)
-    val back = spark.read.option("header", "true").csv(s"$out/MacroPlot")
-    assert(back.columns.toSeq === Seq("MacroPlot_GUID", "PlotID"))
-    assert(back.count() === 2)
-  }
-
   test("archive-on-success moves clean files only (S12)") {
     val dir = Files.createTempDirectory("ffi_archive")
     val f = dir.resolve("export.xml")
@@ -170,16 +160,6 @@ class FfiPipelineSpec extends SparkSpec {
     assert(moved.get.getParent.getFileName.toString === "processed")
   }
 
-  test("runFromConfig refuses missing sections and unknown dialects (S4/F14)") {
-    val dir = Files.createTempDirectory("ffi_cfg")
-    val ini = "[Weird]\ntype = oracle\nserver = x\ndatabase = y\n"
-    val mapping = Mapping(Map.empty, Map.empty)
-    assert(FfiPipeline.runFromConfig(
-      graft.SparkSpec.spark, ini, "NoSuch", dir, mapping).isEmpty)
-    assert(FfiPipeline.runFromConfig(
-      graft.SparkSpec.spark, ini, "Weird", dir, mapping).isEmpty)
-  }
-
   test("Mapping.fromCsv reads whitespace-padded rename maps (S5)") {
     val dir = Files.createTempDirectory("ffi_maps")
     Files.writeString(dir.resolve("TableMap.csv"),
@@ -188,7 +168,7 @@ class FfiPipelineSpec extends SparkSpec {
       "TableName,ColumnName,OldColumn\nPlot, PlotID , PlotID\nPlot,PlotName,MacroPlot_Name\nPlot,OnlyInDb,\n")
     val m = Mapping.fromCsv(
       spark, dir.resolve("TableMap.csv").toString, dir.resolve("FieldMap.csv").toString)
-    assert(m.outputTable("MacroPlot") === Some("Plot"))
+    assert(m.tableMap("MacroPlot") === "Plot")
     val projected = m.project("Plot", transformed("MacroPlot"))
     assert(projected.columns.toSeq === Seq("PlotID", "PlotName"))
   }

@@ -63,11 +63,32 @@ class ConnectedComponentsSpec extends SparkSpec {
     val prop = Prop.forAll(genGraph) { edges =>
       val real = edges.filter(e => e._1 != e._2)
       real.isEmpty || {
-        val expect = ConnectedComponents.unionFindReference(Nil, real)
+        val expect = unionFindReference(Nil, real)
         sparkComponents(real) == expect
       }
     }
     val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
     assert(r.passed, r.status.toString)
+  }
+
+  /** Driver-side union-find: the components the distributed operator must find. */
+  private def unionFindReference(
+      vertices: Seq[Long],
+      edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent.getOrElse(c, c); parent(c) = r; c = n }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    (vertices ++ edges.flatMap(e => Seq(e._1, e._2))).foreach(v => parent.getOrElseUpdate(v, v))
+    edges.foreach { case (a, b) => union(a, b) }
+    parent.keys.map(v => v -> find(v)).toMap
   }
 }

@@ -197,11 +197,4 @@ class MultimodalSpec extends SparkSpec {
     assert(a._4.toSeq === b._4.toSeq,
       "Rec.601 luma histogram must not depend on which codec decoded the pixels")
   }
-
-  test("withFeatureNorm computes the L2 norm of features") {
-    val r = Multimodal.withFeatureNorm(Multimodal.decodeFeatures(media).limit(5))
-      .select(col("features"), col("feat_norm")).head()
-    val manual = math.sqrt(r.getSeq[Double](0).map(x => x * x).sum)
-    assert(math.abs(r.getDouble(1) - manual) < 1e-12)
-  }
 }

@@ -84,41 +84,6 @@ class VideoSpec extends SparkSpec {
       "undecodable frame payloads drop at the hash stage, valid siblings survive")
   }
 
-  private def jpeg(phase: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      16, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 16; x <- 0 until 16) {
-      val v = math.min(255, ((x + phase) % 16) * 16)
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", out)
-    out.toByteArray
-  }
-
-  test("MJPEG: marker-walk split of a bare concatenated-JPEG stream") {
-    val s = spark
-    import s.implicits._
-    val f0 = jpeg(0); val f1 = jpeg(7); val f2 = jpeg(3)
-    // back-to-back JPEGs, then trailing garbage, then a TRUNCATED frame —
-    // the walker must yield exactly the three complete frames
-    val stream = f0 ++ f1 ++ f2 ++ Array[Byte](1, 2, 3) ++ f0.take(f0.length / 2)
-    val got = Multimodal.mjpegFrames(stream)
-    assert(got.length === 3)
-    assert(java.util.Arrays.equals(got(0), f0))
-    assert(java.util.Arrays.equals(got(1), f1))
-    assert(java.util.Arrays.equals(got(2), f2))
-    // EOI bytes inside entropy-coded data cannot split a frame: the split
-    // is structural (stuffing guarantees FF in scan data is never FFD9),
-    // proven by each extracted frame decoding like its standalone original
-    val df = Seq((1L, stream)).toDF("doc_id", "media")
-    val hashed = Multimodal.mjpegFrameDHashes(df).orderBy("frame_no").collect()
-    assert(hashed.length === 3)
-    assert(hashed(0).getLong(2) === Multimodal.dHash(f0).get)
-    assert(hashed(1).getLong(2) === Multimodal.dHash(f1).get)
-    assert(hashed(2).getLong(2) === Multimodal.dHash(f2).get)
-  }
-
   test("per-frame fingerprints feed the pigeonhole near-dup join unchanged") {
     val s = spark
     import s.implicits._

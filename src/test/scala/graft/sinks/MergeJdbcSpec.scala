@@ -71,14 +71,19 @@ class MergeJdbcSpec extends SparkSpec {
     }
     assert(audits.size === 6)
     assert(audits.count(_._2 == 0L) === 3)
-  }
 
-  test("merge tolerates pre-existing rows (partial overlap)") {
-    freshSchema()
-    withConn(_.createStatement().execute("INSERT INTO Region VALUES (100, 'eu')"))
-    val cons = withConn(JdbcConstraints.reflect(_))
-    val res = MergeJdbc.mergeTable(frames("REGION"), "REGION", Seq("R_ID"), url, MergeJdbc.Derby)
-    assert(!res.failed && res.inserted === 0L)
+    // partial overlap: a present key is left as it is (insert-if-absent,
+    // never update), an absent one lands
+    val s = spark
+    import s.implicits._
+    val overlap = Map("REGION" -> Seq((100, "eu-conflicting"), (101, "na")).toDF("r_id", "r_name"))
+    val third = MergeJdbc.loadAll(overlap, cons, url, MergeJdbc.Derby)
+    assert(third.map(r => (r.table, r.failed, r.inserted)) === Seq(("REGION", false, 1L)))
+    val regions = withConn { c =>
+      val rs = c.createStatement().executeQuery("SELECT r_id, r_name FROM Region")
+      Iterator.continually(rs).takeWhile(_.next()).map(r => r.getInt(1) -> r.getString(2)).toSet
+    }
+    assert(regions === Set(100 -> "eu", 101 -> "na"))
   }
 
   test("per-table failure is isolated and reported") {
@@ -145,6 +150,7 @@ class MergeJdbcSpec extends SparkSpec {
     // (at-least-once delivery) land exactly once — PK-guarded idempotence
     // turns foreachBatch into an effectively-exactly-once sink.
     freshSchema()
+    val cons = withConn(JdbcConstraints.reflect(_))
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
@@ -152,8 +158,8 @@ class MergeJdbcSpec extends SparkSpec {
     val q = in.toDF().toDF("r_id", "r_name")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val res = MergeJdbc.mergeTable(batch, "REGION", Seq("R_ID"), url, MergeJdbc.Derby)
-        assert(!res.failed, res.error.toString)
+        val res = MergeJdbc.loadAll(Map("REGION" -> batch), cons, url, MergeJdbc.Derby)
+        assert(res.forall(!_.failed), res.mkString("; "))
         ()
       }
       .outputMode("append").start()
@@ -196,39 +202,5 @@ class MergeJdbcSpec extends SparkSpec {
       rs.next()
       assert(rs.getLong(1) >= 0L)
     } finally c.close()
-  }
-
-  test("streamInto checkpointed sink: new keys insert, existing keys are untouched, replay is a no-op") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    freshSchema()
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val in = MemoryStream[(Int, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_jdbc_ckpt").toString
-    val q = MergeJdbc
-      .streamInto(in.toDF().toDF("r_id", "r_name"), "REGION", Seq("R_ID"), url, MergeJdbc.Derby, ckpt)
-      .start()
-    try {
-      in.addData((100, "eu"), (101, "na"))
-      q.processAllAvailable()
-      // reference MERGE semantics: key 101 exists -> its row is LEFT ALONE
-      // (insert-if-absent, never update); 102 is new -> inserted
-      in.addData((101, "na-conflicting"), (102, "apac"))
-      q.processAllAvailable()
-      def rows: Set[(Int, String)] = withConn { c =>
-        val rs = c.createStatement().executeQuery("SELECT r_id, r_name FROM REGION")
-        val b = Set.newBuilder[(Int, String)]
-        while (rs.next()) b += (rs.getInt(1) -> rs.getString(2))
-        b.result()
-      }
-      assert(rows === Set(100 -> "eu", 101 -> "na", 102 -> "apac"))
-      // simulate the at-least-once replay window: run a delivered batch
-      // again through the batch MERGE — every PK matches, nothing lands
-      val replay = Seq((101, "na"), (102, "apac")).toDF("r_id", "r_name")
-      val res = MergeJdbc.mergeTable(replay, "REGION", Seq("R_ID"), url, MergeJdbc.Derby)
-      assert(!res.failed && res.inserted === 0L, "replay must be a pure no-op")
-      assert(rows === Set(100 -> "eu", 101 -> "na", 102 -> "apac"))
-    } finally q.stop()
   }
 }

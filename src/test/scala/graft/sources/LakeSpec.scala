@@ -63,39 +63,6 @@ class LakeSpec extends SparkSpec {
     assert(mismatches === 0)
   }
 
-  test("streaming foreachBatch appends into the partitioned layout, pruning intact") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("lake_stream").toString
-    val in = MemoryStream[(Long, String, Double)]
-    val q = in.toDF().toDF("event_id", "dt", "value")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Lake.appendPartitioned(batch, dir, parts = Seq("dt"))
-      }
-      .start()
-    try {
-      in.addData((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0))
-      q.processAllAvailable()
-      in.addData((3L, "2024-01-01", 3.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val back = Lake.read(spark, dir)
-    assert(back.count() === 3)
-    // per-partition file count grows with touched batches, not tasks
-    val d1 = new java.io.File(s"$dir/dt=2024-01-01")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(d1 === 2, s"dt=2024-01-01 expected 2 batch files, saw $d1")
-    val one = back.filter(col("dt") === "2024-01-01")
-    one.collect()
-    val scan = one.queryExecution.executedPlan
-      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .head
-    assert(scan.metrics("numFiles").value === 2L)
-  }
-
   test("clustering sorts user_id within each partition file") {
     // row-group stats only help if the file really is sorted; read one
     // partition in file order and check monotonic user_id.

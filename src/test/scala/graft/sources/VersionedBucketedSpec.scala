@@ -17,10 +17,10 @@ class VersionedBucketedSpec extends SparkSpec {
   private lazy val dirs: (String, String) = {
     val li = java.nio.file.Files.createTempDirectory("vlake_bkt_li").toString
     val ord = java.nio.file.Files.createTempDirectory("vlake_bkt_ord").toString
-    VersionedLake.commitBucketed(
-      Session.table(spark, sf, "lineitem"), li, "l_orderkey", 4)
-    VersionedLake.commitBucketed(
-      Session.table(spark, sf, "orders"), ord, "o_orderkey", 4)
+    VersionedLake.commit(Session.table(spark, sf, "lineitem"), li)
+    VersionedLake.optimizeBucketed(spark, li, "l_orderkey", 4)
+    VersionedLake.commit(Session.table(spark, sf, "orders"), ord)
+    VersionedLake.optimizeBucketed(spark, ord, "o_orderkey", 4)
     (li, ord)
   }
 
@@ -52,21 +52,22 @@ class VersionedBucketedSpec extends SparkSpec {
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("vlake_bkt_tt").toString
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "payload")
-    VersionedLake.commitBucketed(base, dir, "k", 4) // v0, bucketed
-    VersionedLake.appendCommit(Seq((4L, "d")).toDF("k", "payload"), dir) // v1, mixed
+    VersionedLake.commit(base, dir) // v0, plain
+    VersionedLake.optimizeBucketed(spark, dir, "k", 4) // v1, bucketed
+    VersionedLake.appendCommit(Seq((4L, "d")).toDF("k", "payload"), dir) // v2, mixed
     // mixed version: correct rows through the fallback, no bucketed claim
-    val v1 = VersionedLake.readBucketed(spark, dir)
-    assert(v1.select("k").as[Long].collect().toSet === Set(1L, 2L, 3L, 4L))
-    // re-bucket via the compaction rewrite -> v2 single bucketed dir
-    VersionedLake.optimizeBucketed(spark, dir, "k", 4)
     val v2 = VersionedLake.readBucketed(spark, dir)
-    val aggPlan = planOf(v2.groupBy("k").agg(count(lit(1)).as("n")))
-    assert(!aggPlan.contains("Exchange"), s"re-bucketed snapshot must not shuffle:\n$aggPlan")
     assert(v2.select("k").as[Long].collect().toSet === Set(1L, 2L, 3L, 4L))
-    // time travel: v0 keeps its exchange-free shape alongside v2
-    val v0 = VersionedLake.readBucketedVersion(spark, dir, 0L)
-    val v0Plan = planOf(v0.groupBy("k").agg(count(lit(1)).as("n")))
-    assert(!v0Plan.contains("Exchange"), s"retained bucketed version must stay exchange-free:\n$v0Plan")
-    assert(v0.select("k").as[Long].collect().toSet === Set(1L, 2L, 3L))
+    // re-bucket via the compaction rewrite -> v3 single bucketed dir
+    VersionedLake.optimizeBucketed(spark, dir, "k", 4)
+    val v3 = VersionedLake.readBucketed(spark, dir)
+    val aggPlan = planOf(v3.groupBy("k").agg(count(lit(1)).as("n")))
+    assert(!aggPlan.contains("Exchange"), s"re-bucketed snapshot must not shuffle:\n$aggPlan")
+    assert(v3.select("k").as[Long].collect().toSet === Set(1L, 2L, 3L, 4L))
+    // time travel: v1 keeps its exchange-free shape alongside v3
+    val v1 = VersionedLake.readBucketedVersion(spark, dir, 1L)
+    val v1Plan = planOf(v1.groupBy("k").agg(count(lit(1)).as("n")))
+    assert(!v1Plan.contains("Exchange"), s"retained bucketed version must stay exchange-free:\n$v1Plan")
+    assert(v1.select("k").as[Long].collect().toSet === Set(1L, 2L, 3L))
   }
 }

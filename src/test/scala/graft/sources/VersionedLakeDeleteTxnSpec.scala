@@ -242,14 +242,14 @@ class VersionedLakeDeleteTxnSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("vlake_opt_bkt").toString
-    VersionedLake.commitBucketed(
-      Seq((1L, "a"), (2L, "b")).toDF("k", "payload"), dir, "k", 4)
+    VersionedLake.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "payload"), dir) // v0
+    VersionedLake.optimizeBucketed(s, dir, "k", 4) // v1, bucketed
     VersionedLake.appendCommit(Seq((3L, "c")).toDF("k", "payload"), dir)
     VersionedLake.appendCommit(Seq((4L, "d")).toDF("k", "payload"), dir)
     // cadence fires with NO explicit layout args: the bucket spec must be
     // recovered from the manifest, not silently dropped
     val v = VersionedLake.optimizeIfNeeded(s, dir, maxDirs = 3)
-    assert(v === Some(3L))
+    assert(v === Some(4L))
     val agg = VersionedLake.readBucketed(s, dir)
       .groupBy("k").agg(count(lit(1)).as("n"))
     val plan = agg.queryExecution.executedPlan.toString

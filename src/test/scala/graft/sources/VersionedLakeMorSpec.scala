@@ -175,7 +175,8 @@ class VersionedLakeMorSpec extends SparkSpec {
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("vlake_mor_bkt").toString
     val df = (1L to 100L).map(i => (i, s"p$i")).toDF("id", "payload")
-    VersionedLake.commitBucketed(df, dir, "id", 4)
+    VersionedLake.commit(df, dir)
+    VersionedLake.optimizeBucketed(s, dir, "id", 4)
     VersionedLake.deleteKeysMor(s, dir, Seq(7L, 13L).toDF("id"), Seq("id"))
     val r = VersionedLake.readBucketed(s, dir)
     assert(!ids(r).contains(7L) && !ids(r).contains(13L) && ids(r).size === 98)

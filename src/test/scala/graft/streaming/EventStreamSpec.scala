@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, udaf}
+import org.apache.spark.sql.functions.{col, expr}
 import java.sql.Timestamp
 
 /** Top-level so Spark can build its deserializer without an outer-scope
@@ -10,8 +11,8 @@ import java.sql.Timestamp
   */
 case class Ev(event_id: String, user_id: Long, event_type: String, ts: Timestamp, value: Double)
 
-/** MemoryStream-driven checks of the streaming operators: tumbling-window
-  * agg, watermark-bounded dedup, session windows, custom state.
+/** MemoryStream-driven checks of the event-time window aggregations,
+  * and the bucketed interval join against the naive range join.
   */
 class EventStreamSpec extends SparkSpec {
 
@@ -61,140 +62,18 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("slidingAgg lands each event in windowLen/slide windows") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val in = MemoryStream[Ev]
-    in.addData(Ev("e1", 1, "click", t(10), 1.0))
-    val q = EventStream.slidingAgg(in.toDF(), "1 hour", "30 minutes", "2 hours")
-      .writeStream.format("memory").queryName("slide_agg").outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val starts = s.table("slide_agg").collect()
-        .map(r => r.getTimestamp(0).getTime / 60000).sorted
-      assert(starts.toSeq === Seq(-30L, 0L)) // [23:30,00:30) and [00:00,01:00)
-    } finally q.stop()
-  }
-
-  test("dedupWithinWatermark drops duplicate event ids across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val in = MemoryStream[Ev]
-    val q = EventStream.dedupWithinWatermark(in.toDF(), "2 hours")
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      in.addData(Ev("a", 1, "click", t(10), 1.0), Ev("a", 1, "click", t(11), 1.0),
-        Ev("b", 1, "click", t(12), 1.0))
-      q.processAllAvailable()
-      in.addData(Ev("a", 1, "click", t(13), 1.0), Ev("c", 2, "view", t(14), 1.0))
-      q.processAllAvailable()
-      val ids = s.table("dedup_out").collect().map(_.getString(0)).sorted
-      assert(ids === Array("a", "b", "c"))
-    } finally q.stop()
-  }
-
-  test("sessionAgg closes sessions after the gap, under the watermark") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val in = MemoryStream[Ev]
-    val q = EventStream.sessionAgg(in.toDF(), "30 minutes", "1 hour")
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      in.addData(
-        Ev("e1", 1, "c", t(0), 1.0), Ev("e2", 1, "c", t(10), 1.0),
-        Ev("e3", 2, "c", t(5), 1.0))
-      q.processAllAvailable()
-      // watermark jumps to 10:00-1h = 09:00 — far past both sessions' ends
-      in.addData(Ev("e4", 1, "c", t(600), 1.0))
-      q.processAllAvailable()
-      val rows = s.table("sess_out")
-        .collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 60000, r.getTimestamp(2).getTime / 60000, r.getLong(3)))
-        .toSet
-      assert(rows === Set((1L, 0L, 40L, 2L), (2L, 5L, 35L, 1L)))
-    } finally q.stop()
-  }
-
-  /** Interval-join fixtures sit a year past the epoch: the initial global
-    * watermark is epoch-0, and the join's unmatchable-late filter drops
-    * input rows within `maxGap` of it (their only possible partners are
-    * already below the watermark) — epoch-adjacent times are pathological,
-    * not a join bug.
-    */
+  /** Interval-join fixture times, a year past the epoch. */
   private def tOff(min: Long): Timestamp = t(min + 366L * 24 * 60)
 
-  test("intervalJoin pairs same-user events within the gap, stream-stream") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val l = MemoryStream[Ev]
-    val r = MemoryStream[Ev]
-    val q = EventStream.intervalJoin(l.toDF(), r.toDF(), "1 hour", "2 hours")
-      .writeStream.format("memory").queryName("ij_out").outputMode("append").start()
-    try {
-      l.addData(Ev("a1", 1, "c", tOff(0), 1.0), Ev("a2", 2, "c", tOff(0), 1.0))
-      r.addData(
-        Ev("b1", 1, "c", tOff(30), 1.0),   // within 1h of a1 -> pair
-        Ev("b2", 1, "c", tOff(90), 1.0),   // beyond 1h of a1 -> no pair
-        Ev("b3", 3, "c", tOff(10), 1.0),   // no left user 3 -> no pair
-        Ev("b4", 2, "c", tOff(0), 1.0))    // equal ts (not strictly after) -> no pair
-      q.processAllAvailable()
-      val pairs = s.table("ij_out").collect()
-        .map(row => (row.getLong(0), row.getString(1), row.getString(2))).toSet
-      assert(pairs === Set((1L, "a1", "b1")))
-    } finally q.stop()
-  }
-
-  test("intervalJoin batch run equals the streaming run on the same rows") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val rows = Seq(
-      Ev("a1", 1, "c", tOff(0), 1.0), Ev("a2", 1, "c", tOff(30), 1.0),
-      Ev("a3", 1, "c", tOff(200), 1.0), Ev("a4", 2, "c", tOff(5), 1.0),
-      Ev("a5", 2, "c", tOff(64), 1.0))
-    val batch = EventStream.intervalJoin(rows.toDF(), rows.toDF()).collect()
-      .map(row => (row.getLong(0), row.getString(1), row.getString(2))).toSet
-    val l = MemoryStream[Ev]; val r = MemoryStream[Ev]
-    val q = EventStream.intervalJoin(l.toDF(), r.toDF())
-      .writeStream.format("memory").queryName("ij_parity").outputMode("append").start()
-    try {
-      l.addData(rows: _*); r.addData(rows: _*)
-      q.processAllAvailable()
-      val streamed = s.table("ij_parity").collect()
-        .map(row => (row.getLong(0), row.getString(1), row.getString(2))).toSet
-      assert(streamed === batch)
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("intervalJoinOuter emits unmatched lefts once the watermark closes them") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val l = MemoryStream[Ev]
-    val r = MemoryStream[Ev]
-    val q = EventStream.intervalJoinOuter(l.toDF(), r.toDF(), "1 hour", "2 hours")
-      .writeStream.format("memory").queryName("ijo_out").outputMode("append").start()
-    try {
-      l.addData(
-        Ev("a1", 1, "c", tOff(0), 1.0),   // gets a partner
-        Ev("a2", 2, "c", tOff(0), 1.0))   // never matched -> null ev_b
-      r.addData(Ev("b1", 1, "c", tOff(30), 1.0))
-      q.processAllAvailable()
-      // advance BOTH watermarks far past a2.ts + gap so the unmatched
-      // left can be finalized (outer results trail by watermark + gap)
-      l.addData(Ev("a9", 9, "c", tOff(48 * 60), 1.0))
-      r.addData(Ev("b9", 9, "c", tOff(48 * 60), 1.0))
-      q.processAllAvailable()
-      val rows = s.table("ijo_out").collect()
-        .map(row => (row.getLong(0), row.getString(1), Option(row.getString(2)))).toSet
-      assert(rows.contains((1L, "a1", Some("b1"))), "matched pair present")
-      assert(rows.contains((2L, "a2", None)), "unmatched left emitted with null")
-    } finally q.stop()
+  /** The naive interval join `intervalJoinBatch` must reproduce: the
+    * same-user equi-join with the (0, maxGap] range as its condition.
+    */
+  private def intervalJoin(left: DataFrame, right: DataFrame): DataFrame = {
+    val l = left.alias("l")
+    val r = right.alias("r")
+    l.join(r, expr("l.user_id = r.user_id AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL 1 hour"))
+      .select(col("l.user_id").as("user_id"), col("l.event_id").as("ev_a"),
+        col("r.event_id").as("ev_b"))
   }
 
   test("intervalJoinBatch equals the naive interval join, incl. boundary pairs") {
@@ -210,157 +89,12 @@ class EventStreamSpec extends SparkSpec {
       Ev("a5", 2, "c", tOff(10), 1.0), Ev("a6", 2, "c", tOff(10), 1.0),  // equal ts
       Ev("a7", 3, "c", tOff(300), 1.0)) ++
       (0 until 40).map(i => Ev(s"d$i", 4, "c", tOff(i * 2L), 1.0))
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+    def key(df: DataFrame) = df.collect()
       .map(row => (row.getLong(0), row.getString(1), row.getString(2))).toSet
-    val naive = key(EventStream.intervalJoin(rows.toDF(), rows.toDF()))
+    val naive = key(intervalJoin(rows.toDF(), rows.toDF()))
     val bucketed = key(EventStream.intervalJoinBatch(rows.toDF(), rows.toDF()))
     assert(bucketed === naive)
     assert(bucketed.contains((1L, "a1", "a2")), "gap boundary is inclusive")
     assert(!bucketed.exists(p => p._2 == "a5" && p._3 == "a6"), "equal ts excluded")
-  }
-
-  test("enrich joins a streaming source to a static dimension") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("dim_user", "tier")
-    val in = MemoryStream[Ev]
-    val q = EventStream.enrich(in.toDF(), dim, "user_id", "dim_user")
-      .select("event_id", "tier")
-      .writeStream.format("memory").queryName("enriched").outputMode("append").start()
-    try {
-      in.addData(Ev("e1", 1, "c", t(0), 1.0), Ev("e2", 3, "c", t(1), 1.0))
-      q.processAllAvailable()
-      val rows = s.table("enriched").collect()
-        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-      assert(rows === Map("e1" -> Some("gold"), "e2" -> None))
-    } finally q.stop()
-  }
-
-  test("runningUserStats keeps per-user state across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val in = MemoryStream[EventStream.UserEvent]
-    val q = EventStream.runningUserStats(in.toDS(), idleTimeoutMs = 0L)
-      .writeStream.format("memory").queryName("user_stats").outputMode("update").start()
-    try {
-      in.addData(EventStream.UserEvent(1, "e1", t(0), 2.0), EventStream.UserEvent(1, "e2", t(1), 3.0))
-      q.processAllAvailable()
-      in.addData(EventStream.UserEvent(1, "e3", t(2), 5.0), EventStream.UserEvent(2, "e4", t(2), 7.0))
-      q.processAllAvailable()
-      val snaps = s.table("user_stats")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-      // batch 1: user 1 at (2, 5.0); batch 2: user 1 at (3, 10.0), user 2 at (1, 7.0)
-      assert(snaps.toSet === Set((1L, 2L, 5.0, false), (1L, 3L, 10.0, false), (2L, 1L, 7.0, false)))
-    } finally q.stop()
-  }
-
-  test("streamingQuantiles: KLL state accumulates across batches, exact below k") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val in = MemoryStream[EventStream.UserEvent]
-    val q = EventStream.streamingQuantiles(in.toDS(), qs = Seq(0.5, 1.0))
-      .writeStream.format("memory").queryName("stream_q").outputMode("update").start()
-    try {
-      // batch 1: user 1 sees 1..5 → median 3 (rank ceil(0.5·5)=3), max 5
-      in.addData((1 to 5).map(i => EventStream.UserEvent(1, s"e$i", t(i), i.toDouble)): _*)
-      q.processAllAvailable()
-      // batch 2: user 1 adds 6..10 (state carries 1..5 → median over 1..10
-      // is rank 5 = 5.0); user 2 starts fresh with {7, 9}
-      in.addData((6 to 10).map(i => EventStream.UserEvent(1, s"e$i", t(i), i.toDouble)) ++
-        Seq(EventStream.UserEvent(2, "a", t(1), 9.0), EventStream.UserEvent(2, "b", t(2), 7.0)): _*)
-      q.processAllAvailable()
-      val snaps = s.table("stream_q")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2))).toSet
-      // below k=256 values the sketch IS the data → estimates are exact
-      assert(snaps === Set(
-        (1L, 5L, Seq(3.0, 5.0)),
-        (1L, 10L, Seq(5.0, 10.0)),
-        (2L, 2L, Seq(7.0, 9.0))))
-    } finally q.stop()
-  }
-
-  test("streamingQuantiles final state agrees with the batch KllAgg over the same rows") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val rnd = new scala.util.Random(41)
-    val batches = Seq.tabulate(3)(b =>
-      Seq.tabulate(60)(i =>
-        EventStream.UserEvent(i % 4, s"e$b-$i", t(i), rnd.nextDouble() * 100)))
-    val in = MemoryStream[EventStream.UserEvent]
-    val q = EventStream.streamingQuantiles(in.toDS(), qs = Seq(0.25, 0.9))
-      .writeStream.format("memory").queryName("stream_q2").outputMode("update").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      // last snapshot per user == batch-face sketch over all rows (each
-      // user has 45 values < k, so both sides are exact and identical)
-      val last = s.table("stream_q2").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
-        .groupBy(_._1).map { case (u, rs) => u -> rs.maxBy(_._2)._3 }
-      val batch = graft.operators.QuantileSketch
-        .quantilesByKeySketch(
-          batches.flatten.toDF().select(col("user_id").as("g"), col("value").as("v")),
-          "g", "v", Seq(0.25, 0.9))
-        .collect().map(r => r.getLong(0) -> Seq(r.getDouble(1), r.getDouble(2))).toMap
-      assert(last === batch)
-    } finally q.stop()
-  }
-
-  test("streamingDistinct: KMV state spans batches, duplicates never re-count") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val in = MemoryStream[EventStream.UserEvent]
-    val q = EventStream.streamingDistinct(in.toDS())
-      .writeStream.format("memory").queryName("stream_d").outputMode("update").start()
-    try {
-      // batch 1: user 1 sees ids a,b,c (c twice) → 3 distinct
-      in.addData(Seq("a", "b", "c", "c").zipWithIndex.map { case (id, i) =>
-        EventStream.UserEvent(1, id, t(i + 1), 1.0)
-      }: _*)
-      q.processAllAvailable()
-      // batch 2: user 1 re-sends a,b and adds d → 4, not 6; user 2 starts
-      in.addData(
-        EventStream.UserEvent(1, "a", t(9), 1.0),
-        EventStream.UserEvent(1, "b", t(9), 1.0),
-        EventStream.UserEvent(1, "d", t(9), 1.0),
-        EventStream.UserEvent(2, "a", t(1), 1.0))
-      q.processAllAvailable()
-      val snaps = s.table("stream_d")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(snaps === Set((1L, 3L), (1L, 4L), (2L, 1L)))
-    } finally q.stop()
-  }
-
-  test("streamingDistinct final counts equal the batch KmvCountAgg on the same rows") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val batches = Seq.tabulate(3)(b =>
-      Seq.tabulate(50)(i =>
-        EventStream.UserEvent(i % 3, s"id-${(b * 31 + i) % 40}", t(i), 1.0)))
-    val in = MemoryStream[EventStream.UserEvent]
-    val q = EventStream.streamingDistinct(in.toDS(), k = 16) // force estimate regime
-      .writeStream.format("memory").queryName("stream_d2").outputMode("update").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      // KMV state only gains hashes, so per-user counts are monotone:
-      // the max snapshot IS the final one (memory-sink row order is not
-      // batch order)
-      val last = s.table("stream_d2").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).map { case (u, rs) => u -> rs.map(_._2).max }
-      val agg = udaf(new graft.operators.DistinctSketch.KmvCountAgg(16))
-      val batch = batches.flatten.toDF()
-        .select(col("user_id"),
-          graft.operators.DistinctSketch.hashed(col("event_id")).as("h"))
-        .groupBy("user_id").agg(agg(col("h")).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(last === batch,
-        "KMV order-independence: streaming accumulation == batch agg, even estimating")
-    } finally q.stop()
   }
 }
