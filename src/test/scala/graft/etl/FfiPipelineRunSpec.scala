@@ -55,7 +55,7 @@ class FfiPipelineRunSpec extends SparkSpec {
     assert(FfiPipeline.runDirectory(spark, dataDir, mapping, url, MergeJdbc.Derby).isEmpty)
   }
 
-  test("a malformed export stops runDirectory unarchived; the export before it stays loaded") {
+  test("a malformed export stops runDirectory unarchived; earlier ones stay") {
     freshSchema(plotNameWidth = 64)
     val dataDir = Files.createTempDirectory("ffi_malformed")
     Files.writeString(dataDir.resolve("export1.xml"), FfiFixture.Xml)

@@ -71,14 +71,19 @@ class MergeJdbcSpec extends SparkSpec {
     }
     assert(audits.size === 6)
     assert(audits.count(_._2 == 0L) === 3)
+  }
 
-    // partial overlap: a present key is left as it is (insert-if-absent,
-    // never update), an absent one lands
+  test("merge tolerates pre-existing rows (partial overlap)") {
+    freshSchema()
+    withConn(_.createStatement().execute("INSERT INTO Region VALUES (100, 'eu')"))
+    val cons = withConn(JdbcConstraints.reflect(_))
+    // a present key is left as it is (insert-if-absent, never update),
+    // an absent one lands
     val s = spark
     import s.implicits._
     val overlap = Map("REGION" -> Seq((100, "eu-conflicting"), (101, "na")).toDF("r_id", "r_name"))
-    val third = MergeJdbc.loadAll(overlap, cons, url, MergeJdbc.Derby)
-    assert(third.map(r => (r.table, r.failed, r.inserted)) === Seq(("REGION", false, 1L)))
+    val res = MergeJdbc.loadAll(overlap, cons, url, MergeJdbc.Derby)
+    assert(res.map(r => (r.table, r.failed, r.inserted)) === Seq(("REGION", false, 1L)))
     val regions = withConn { c =>
       val rs = c.createStatement().executeQuery("SELECT r_id, r_name FROM Region")
       Iterator.continually(rs).takeWhile(_.next()).map(r => r.getInt(1) -> r.getString(2)).toSet
