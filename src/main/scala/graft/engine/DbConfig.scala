@@ -19,6 +19,8 @@ import java.util.Properties
   *     (`jdbc:postgresql://host/db`, `jdbc:sqlserver://host;databaseName=db`)
   *     instead of SQLAlchemy's `dialect+driver://` prefix; the config's
   *     `driver` value passes through as the JDBC `driver` class property.
+  *     One type the reference lacks: `derby` gives `jdbc:derby:<database>`
+  *     (no server), the embedded target the specs and benchmark load.
   *
   * Like the reference, an unrecognized `type` yields no connection
   * (functions.py returns `""`); here that is `None`, not a sentinel
@@ -64,6 +66,7 @@ object DbConfig {
       if (typ.contains("postgresql")) Some(s"jdbc:postgresql://$server/$database")
       else if (typ.contains("sqlserver"))
         Some(s"jdbc:sqlserver://$server;databaseName=$database")
+      else if (typ.contains("derby")) Some(s"jdbc:derby:$database")
       else None
     url.map { u =>
       val p = new Properties()

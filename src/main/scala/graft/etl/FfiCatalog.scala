@@ -1,25 +1,31 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable
+
+import graft.etl.FfiExtract.IngestId
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The engine's unit of state: a named-table catalog of dynamic-schema
   * DataFrames — the Spark re-expression of the reference's
   * `FFIFile._data_map` dict (`/root/reference/parser/xml.py:43,63-80`).
   *
-  * Immutable: every transform stage returns a new catalog over lazy
-  * plans. The extracted tables are local rows on the driver
-  * ([[FfiExtract]]), and so is every intermediate that several plans of
-  * one export read (MacroPlot and SampleEvent after their keep-first
-  * windows, the enriched SampleEvent, the EAV method tables): each comes
-  * from one collect ([[local]]). Catalyst folds the projections and
-  * filters above a local table while optimizing (`ConvertToLocalRelation`),
-  * so they start no job and compile no class, and nothing is cached: an
-  * export's catalog holds no Spark state to release.
+  * Immutable: every transform stage returns a new catalog. Every table of
+  * an export, from extraction ([[FfiExtract]]) to the load, is a local
+  * table: a DataFrame whose optimized plan is a `LocalRelation` of driver
+  * rows. Catalyst folds projections and filters into a local table while
+  * optimizing (`ConvertToLocalRelation`; a filter compiles its predicate);
+  * joins, windows and `distinct` are the driver operators below. So no
+  * plan of an export runs a Spark job, and nothing is cached.
   *
-  * Scale note: an export's intermediates are held on the driver like its
-  * extracted rows, so one export must fit the driver heap; the 100 TB path
-  * is many exports, one catalog each.
+  * Scale note: one export must fit the driver heap; the 100 TB path is
+  * many exports, one catalog each.
   */
 final case class FfiCatalog(tables: Map[String, DataFrame]) {
   def apply(name: String): DataFrame =
@@ -43,12 +49,82 @@ object FfiCatalog {
     "FuelConstants_Veg", "FuelConstants_CWD", "Schema_Version", "Program",
     "Project", "DataGridViewSettings", "MasterSpecies_LastModified", "Settings")
 
-  def empty: FfiCatalog = FfiCatalog(Map.empty)
+  private def relation(df: DataFrame): LocalRelation =
+    Bridge.localRelation(df).getOrElse(throw notLocal(df))
+  private def notLocal(df: DataFrame) =
+    new IllegalArgumentException(s"not a local table: ${df.schema.simpleString}")
+  private def table(like: DataFrame, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    Bridge.ofRows(like.sparkSession, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
-  /** `df` run once and held as a local table of its rows, same schema:
-    * the plans that read it afterwards start from driver rows instead of
-    * re-running `df`.
+  /** A local table's rows: no job, and no deserializer class as `collect()` compiles. */
+  def rows(df: DataFrame): Seq[Row] = Bridge.localRows(df).getOrElse(throw notLocal(df))
+
+  /** `left` left-joined on the driver to each (right, left key, right key)
+    * in turn, as an equi-join: each row once per matching right row (in
+    * right order), or once with nulls when none matches; a null key
+    * matches nothing. Columns: the left's, then each right's, nullable.
     */
-  def local(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
+  def leftJoin(left: DataFrame, rights: (DataFrame, String, String)*): DataFrame =
+    rights.foldLeft(left) { case (lf, (rf, leftKey, rightKey)) =>
+      val (l, r) = (relation(lf), relation(rf))
+      val (ls, rs) = (l.schema, r.schema)
+      val (lk, rk) = (ls.fieldIndex(leftKey), rs.fieldIndex(rightKey))
+      require(ls(lk).dataType == rs(rk).dataType, s"join keys $leftKey, $rightKey differ in type")
+      val byKey = r.data.filterNot(_.isNullAt(rk)).groupBy(_.get(rk, rs(rk).dataType))
+      val noMatch = Seq(Seq.fill(rs.length)(null))
+      val rows = l.data.flatMap { row =>
+        val matches =
+          if (row.isNullAt(lk)) Nil
+          else byKey.getOrElse(row.get(lk, ls(lk).dataType), Nil).map(_.toSeq(rs))
+        val values = row.toSeq(ls)
+        (if (matches.isEmpty) noMatch else matches).map(m => InternalRow.fromSeq(values ++ m))
+      }
+      table(lf, StructType(ls ++ rs.map(_.copy(nullable = true))), rows)
+    }
+
+  /** A local table's rows grouped by `keys` (a null key is a key, as in a
+    * window partition), in order of first appearance, each group sorted
+    * by `order` then ingest id under Spark's interpreted ordering (a bare
+    * column ascends, nulls first), as the analyzer resolves `df.sort`.
+    */
+  private def groups(df: DataFrame, keys: Seq[String], order: Seq[Column])
+      : (StructType, Seq[Seq[InternalRow]]) = {
+    val r = relation(df)
+    val s = r.schema
+    val ordering = Bridge.logicalPlan(df.sort(order :+ col(IngestId): _*)) match {
+      case sort: Sort =>
+        new InterpretedOrdering(sort.order.map(BindReferences.bindReference(_, sort.child.output)))
+    }
+    val key = keys.map(s.fieldIndex)
+    val grouped = mutable.LinkedHashMap.empty[Seq[Any], mutable.ArrayBuffer[InternalRow]]
+    r.data.foreach { row =>
+      grouped.getOrElseUpdate(key.map(i => row.get(i, s(i).dataType)), mutable.ArrayBuffer()) += row
+    }
+    (s, grouped.values.map(_.toSeq.sorted(ordering)).toSeq)
+  }
+
+  /** The first row per `keys` by `order`, then ingest id: the driver's
+    * `row_number() = 1` keep-first.
+    */
+  def keepFirst(df: DataFrame, keys: Seq[String], order: Column*): DataFrame = {
+    val (s, gs) = groups(df, keys, order)
+    table(df, s, gs.map(_.head))
+  }
+
+  /** `df` plus integer column `name`, 1..k per `keys` by `order`, then
+    * ingest id: the driver's `row_number()` over that window.
+    */
+  def rowNumber(df: DataFrame, keys: Seq[String], name: String, order: Column*): DataFrame = {
+    val (s, gs) = groups(df, keys, order)
+    val numbered = gs.flatMap(_.zipWithIndex.map { case (row, i) =>
+      InternalRow.fromSeq(row.toSeq(s) :+ (i + 1))
+    })
+    table(df, s.add(name, IntegerType, nullable = false), numbered)
+  }
+
+  /** A local table's distinct rows (first occurrences, in order). */
+  def distinct(df: DataFrame): DataFrame = {
+    val r = relation(df)
+    table(df, r.schema, r.data.distinctBy(_.toSeq(r.schema)))
+  }
 }

@@ -2,7 +2,6 @@ package graft.etl
 
 import graft.etl.FfiExtract.IngestId
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -11,16 +10,16 @@ import scala.jdk.CollectionConverters._
   * (`/root/reference/parser/xml.py:197-367`).
   *
   * Shape: assemble one long frame per family via left-join chains (J1/J2)
-  * over the export's local tables, then run ONE aggregate per family that
-  * gathers each (method, index) group's (field, value) entries and
-  * collect it. The output TABLE SET is data-dependent (a legal but
-  * unusual Spark shape); the collected groups give every method's fields
-  * (the pivot columns), its unit systems and the pandas-pivot duplicate
-  * guard, and each `<Method>_Attribute` / `<Method>_Sample` table is built
-  * from its method's groups as a local table ([[FfiCatalog.local]]'s
-  * kind). So a family costs one aggregate job, whatever its method count,
-  * and the projections, filters and unit splits above a method table
-  * start no job and compile no class.
+  * of the export's local tables on the driver ([[FfiCatalog.leftJoin]]),
+  * then group the family's long rows by (method, index) on the driver,
+  * gathering each group's (field, value) entries. The output TABLE SET is
+  * data-dependent (a legal but unusual Spark shape); the groups give every
+  * method's fields (the pivot columns), its unit systems and the
+  * pandas-pivot duplicate guard, and each `<Method>_Attribute` /
+  * `<Method>_Sample` table is built from its method's groups as a local
+  * table. The per-method windows are driver operators too
+  * ([[FfiCatalog.rowNumber]], [[FfiCatalog.keepFirst]]), so a family runs
+  * no Spark job, whatever its method count.
   */
 object FfiEav {
 
@@ -45,8 +44,7 @@ object FfiEav {
 
   /** J1: the 6-way attribute assembly (`parser/xml.py:214-232`), projected
     * and renamed to the long EAV schema. Right sides are pruned to their
-    * join/data columns (no ingest-id collisions) and the small dimension
-    * sides broadcast.
+    * join/data columns (no ingest-id collisions).
     */
   def attrLong(cat: FfiCatalog): DataFrame = {
     val attrData = cat("AttributeData").select(
@@ -59,13 +57,13 @@ object FfiEav {
     val sampleData = cat("SampleData").select(
       "SampleData_SampleRow_ID", "SampleData_SampleEvent_GUID")
     val sampleEvent = cat("SampleEvent").select("SampleEvent_GUID", "EventID")
-    cat("AttributeRow")
-      .join(attrData, col("AttributeRow_ID") === col("AttributeData_DataRow_ID"), "left")
-      .join(broadcast(methodAtt), col("AttributeData_MethodAtt_ID") === col("MethodAtt_ID"), "left")
-      .join(broadcast(method), col("MethodAtt_Method_GUID") === col("Method_GUID"), "left")
-      .join(sampleRow, col("AttributeData_SampleRow_ID") === col("SampleRow_ID"), "left")
-      .join(sampleData, col("AttributeData_SampleRow_ID") === col("SampleData_SampleRow_ID"), "left")
-      .join(sampleEvent, col("SampleData_SampleEvent_GUID") === col("SampleEvent_GUID"), "left")
+    FfiCatalog.leftJoin(cat("AttributeRow"),
+      (attrData, "AttributeRow_ID", "AttributeData_DataRow_ID"),
+      (methodAtt, "AttributeData_MethodAtt_ID", "MethodAtt_ID"),
+      (method, "MethodAtt_Method_GUID", "Method_GUID"),
+      (sampleRow, "AttributeData_SampleRow_ID", "SampleRow_ID"),
+      (sampleData, "AttributeData_SampleRow_ID", "SampleData_SampleRow_ID"),
+      (sampleEvent, "SampleData_SampleEvent_GUID", "SampleEvent_GUID"))
       .select(
         col("EventID"),
         col("SampleData_SampleEvent_GUID"),
@@ -94,10 +92,10 @@ object FfiEav {
     val auditCols = Seq(
       "SampleRow_CreatedBy", "SampleRow_CreatedDate",
       "SampleRow_ModifiedBy", "SampleRow_ModifiedDate")
-    backfill(cat("SampleRow"), auditCols)
-      .join(sampleData, col("SampleRow_ID") === col("SampleData_SampleRow_ID"), "left")
-      .join(broadcast(sampleAtt), col("SampleData_SampleAtt_ID") === col("SampleAtt_ID"), "left")
-      .join(broadcast(method), col("SampleAtt_Method_GUID") === col("Method_GUID"), "left")
+    FfiCatalog.leftJoin(backfill(cat("SampleRow"), auditCols),
+      (sampleData, "SampleRow_ID", "SampleData_SampleRow_ID"),
+      (sampleAtt, "SampleData_SampleAtt_ID", "SampleAtt_ID"),
+      (method, "SampleAtt_Method_GUID", "Method_GUID"))
       .select(
         col("SampleRow_Original_GUID").as("SampleData_SampleRow_GUID"),
         col("SampleData_SampleEvent_GUID"),
@@ -115,16 +113,16 @@ object FfiEav {
   /** One EAV family's fan-out: per method (sorted), its wide table and its
     * sorted unit systems.
     *
-    * One aggregate by (`Method_Name`, `index`) gathers each group's
-    * (field, value) entries (a set when `distinctEntries`, which drops
-    * full-row duplicates as the reference's `drop_duplicates` does) and
-    * its minimum ingest id, so downstream cumcounts keep file order; one
-    * collect brings the groups to the driver. pandas `pivot` raises on a
-    * duplicate (index, column) pair where Spark's `first()` would pick
-    * one, so a group with two entries for one field raises here, before
-    * any table is built. Each method's table is then its groups (a filter)
-    * with every field looked up in the group's entries (the pivot), held
-    * as a local table: columns `index`, the fields in pivot order
+    * The long rows (a local table) are grouped on the driver by
+    * (`Method_Name`, `index`), gathering each group's (field, value)
+    * entries (distinct when `distinctEntries`, which drops full-row
+    * duplicates as the reference's `drop_duplicates` does) and its minimum
+    * ingest id, so downstream cumcounts keep file order. pandas `pivot`
+    * raises on a duplicate (index, column) pair where Spark's `first()`
+    * would pick one, so a group with two entries for one field raises
+    * here, before any table is built. Each method's table is then its
+    * groups with every field looked up in the group's entries (the pivot),
+    * held as a local table: columns `index`, the fields in pivot order
     * (ascending, null first, a null field named "null"), `_ingest_id`.
     */
   private def pivotFamily(
@@ -133,34 +131,34 @@ object FfiEav {
       fieldCol: String,
       valueCol: String,
       distinctEntries: Boolean): Seq[(String, DataFrame, Seq[String])] = {
-    val n = index.length
-    val entry = struct(col(fieldCol), col(valueCol))
-    val groups = long
-      .filter(col("Method_Name").isNotNull)
-      .groupBy(("Method_Name" +: index).map(col): _*)
-      .agg(
-        (if (distinctEntries) collect_set(entry) else collect_list(entry)).as("_entries"),
-        min(col(IngestId)).as(IngestId))
-      .collect()
-      .map(g => g -> g.getSeq[Row](n + 1).map(e => e.getString(0) -> e.getString(1)))
-    groups.foreach { case (g, entries) =>
+    val key = ("Method_Name" +: index).map(long.schema.fieldIndex)
+    val Seq(field, value, ingest) = Seq(fieldCol, valueCol, IngestId).map(long.schema.fieldIndex)
+    val groups = FfiCatalog.rows(long)
+      .filterNot(_.isNullAt(key.head))
+      .groupBy(r => key.map(r.get))
+      .toSeq
+      .map { case (k, rows) =>
+        val entries = rows.map(r => r.getString(field) -> r.getString(value))
+        (k, if (distinctEntries) entries.distinct else entries, rows.map(_.getLong(ingest)).min)
+      }
+    groups.foreach { case (k, entries, _) =>
       val fields = entries.map(_._1)
       val dups = fields.diff(fields.distinct)
       require(dups.isEmpty, s"duplicate (index, $fieldCol) pair in pivot input: " +
-        (g.toSeq.take(n + 1) :+ dups.head).mkString(","))
+        (k :+ dups.head).mkString(","))
     }
-    groups.groupBy(_._1.getString(0)).toSeq.sortBy(_._1).map { case (method, rows) =>
-      val fields = rows.flatMap(_._2.map(e => Option(e._1))).distinct.sorted.map(_.orNull).toSeq
-      val unitSystems =
-        rows.flatMap(r => Option(r._1.getAs[String]("Method_UnitSystem"))).distinct.sorted.toSeq
+    val unit = 1 + index.indexOf("Method_UnitSystem")
+    groups.groupBy(_._1.head.toString).toSeq.sortBy(_._1).map { case (method, gs) =>
+      val fields = gs.flatMap(_._2.map(e => Option(e._1))).distinct.sorted.map(_.orNull)
+      val unitSystems = gs.flatMap(g => Option(g._1(unit)).map(_.toString)).distinct.sorted
       val schema = StructType(index.map(long.schema(_)) ++
         fields.map(f => StructField(String.valueOf(f), StringType)) :+
         StructField(IngestId, LongType))
-      val wide = rows.map { case (g, entries) =>
+      val wide = gs.map { case (k, entries, first) =>
         val values = entries.toMap
-        Row.fromSeq(g.toSeq.slice(1, n + 1) ++ fields.map(values.getOrElse(_, null)) :+ g.get(n + 2))
+        Row.fromSeq(k.tail ++ fields.map(values.getOrElse(_, null)) :+ first)
       }
-      (method, long.sparkSession.createDataFrame(wide.toSeq.asJava, schema), unitSystems)
+      (method, long.sparkSession.createDataFrame(wide.asJava, schema), unitSystems)
     }
   }
 
@@ -182,9 +180,8 @@ object FfiEav {
     val sppCols = subset.columns.filter(_.contains("Spp"))
     if (sppCols.isEmpty || localSpecies.isEmpty) subset
     else {
-      val symbols = localSpecies.get
-        .select("LocalSpecies_GUID", "LocalSpecies_Symbol")
-        .collect()
+      val symbols = FfiCatalog.rows(localSpecies.get
+        .select("LocalSpecies_GUID", "LocalSpecies_Symbol"))
         .reverseIterator // toMap keeps the last pair per key: the first row
         .collect { case r if !r.isNullAt(0) => r.getString(0) -> r.getString(1) }
         .toMap
@@ -197,25 +194,24 @@ object FfiEav {
   def applyMethodRules(method: String, subset: DataFrame): DataFrame = method match {
     case "Trees - Individuals" =>
       // StemNum: dense 1..k per (EventID, Species, TagNo) in file order (A7)
-      val w = Window
-        .partitionBy("EventID", "Species", "TagNo")
-        .orderBy(col(IngestId))
-      subset.withColumn("StemNum", row_number().over(w).cast("string"))
+      numbered(subset, Seq("EventID", "Species", "TagNo"), "StemNum")
     case "Plot Info Wit Trees Comments3" =>
       val withTag =
         if (subset.columns.contains("WitTreeTagNo")) subset
-        else {
-          val w = Window.partitionBy("EventID").orderBy(col(IngestId))
-          subset.withColumn("WitTreeTagNo", row_number().over(w).cast("string"))
-        }
+        else numbered(subset, Seq("EventID"), "WitTreeTagNo")
       // ≤1 witness tree per event: smallest WitDBH (string order, as in the
       // reference where every value is str) wins (A4)
-      val w2 = Window
-        .partitionBy("EventID")
-        .orderBy(col("WitDBH").asc_nulls_last, col(IngestId))
-      withTag.withColumn("_rn", row_number().over(w2)).filter(col("_rn") === 1).drop("_rn")
+      FfiCatalog.keepFirst(withTag, Seq("EventID"), col("WitDBH").asc_nulls_last)
     case _ => subset
   }
+
+  /** `subset` with string column `name` (replaced in place when present)
+    * numbering each `keys` group's rows 1..k in file order.
+    */
+  private def numbered(subset: DataFrame, keys: Seq[String], name: String): DataFrame =
+    FfiCatalog.rowNumber(subset, keys, "_rn")
+      .withColumn(name, col("_rn").cast("string"))
+      .drop("_rn")
 
   /** unit-system split V3 (`parser/xml.py:290-302,353-367`): >1 distinct
     * Method_UnitSystem → one table per system with `_<system>` infix for

@@ -12,12 +12,10 @@ import org.apache.spark.sql.functions._
   * purely to dodge pandas merge suffixes, then runs an 8-way left-join
   * keeping every column. Here each right side is pruned to
   * (join key, field team, entry team) under unambiguous names — same
-  * loaded output, no _x/_y junk. All seven sample sides are broadcast
-  * (they are per-event metadata, small by construction).
-  *
-  * The enriched SampleEvent is read three times downstream (loaded
-  * directly and twice through ProjectVisit's VisitID), so its joins run
-  * once here, into a local table ([[FfiCatalog.local]]).
+  * loaded output, no _x/_y junk. The eight joins are driver joins of
+  * local tables ([[FfiCatalog.leftJoin]]) and the team merges fold into
+  * the result while optimizing, so the enriched SampleEvent is a local
+  * table built without a Spark job.
   */
 object FfiEvents {
 
@@ -50,21 +48,16 @@ object FfiEvents {
 
   def apply(cat: FfiCatalog): FfiCatalog = {
     val plots = cat("MacroPlot")
-    val joined = TeamSources.foldLeft(
-      cat("SampleEvent")
-        .join(
-          broadcast(plots.select(
-            col("MacroPlot_GUID").as("_mp_guid"),
-            col("PlotID"),
-            col("MacroPlot_Name"))),
-          col("SampleEvent_Plot_GUID") === col("_mp_guid"), "left")
-        .drop("_mp_guid")) { case (df, (table, prefix, fallback)) =>
+    val plotSide =
+      plots.select(col("MacroPlot_GUID").as("_mp_guid"), col("PlotID"), col("MacroPlot_Name"))
+    val joined = TeamSources.foldLeft(FfiCatalog
+      .leftJoin(cat("SampleEvent"), (plotSide, "SampleEvent_Plot_GUID", "_mp_guid"))
+      .drop("_mp_guid")) { case (df, (table, prefix, fallback)) =>
       cat.get(table) match {
         case Some(side) =>
-          df.join(
-            broadcast(teamSide(side, prefix, fallback)),
-            col("SampleEvent_GUID") === col(s"_${prefix}_guid"), "left")
-            .drop(s"_${prefix}_guid")
+          val guid = s"_${prefix}_guid"
+          FfiCatalog.leftJoin(df, (teamSide(side, prefix, fallback), "SampleEvent_GUID", guid))
+            .drop(guid)
         case None =>
           df.withColumn(s"${prefix}FieldTeam", lit(null).cast("string"))
             .withColumn(s"${prefix}EntryTeam", lit(null).cast("string"))
@@ -87,6 +80,6 @@ object FfiEvents {
         "TreeRecorder",
         Personnel.combineTeams(Seq(
           col("TreesEntryTeam"), col("SapEntryTeam"), col("SeedEntryTeam"))))
-    cat.updated("SampleEvent", FfiCatalog.local(enriched))
+    cat.updated("SampleEvent", enriched)
   }
 }

@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   * DataFrame: no Spark job, no second parse, nothing cached.
   *
   * A malformed document (a bad entity, a mismatched tag) fails the scan
-  * with the StAX parser's error before any table exists. The file is the
+  * with an `XMLStreamException` before any table exists. The file is the
   * unit that fails: [[FfiPipeline.runDirectory]] stops at it and leaves
   * it unarchived, where the reference's `ET.parse` fails the same way
   * (`/root/reference/parser/xml.py:39`).
@@ -53,7 +53,8 @@ object FfiExtract {
   def scan(file: String): Seq[Tag] = {
     import javax.xml.stream.XMLStreamConstants._
     import scala.collection.mutable
-    val f = javax.xml.stream.XMLInputFactory.newInstance()
+    // the JDK's parser, not the classpath's first provider (Hadoop's Woodstox)
+    val f = javax.xml.stream.XMLInputFactory.newDefaultFactory()
     f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
     f.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
     val in = new java.io.FileInputStream(file)

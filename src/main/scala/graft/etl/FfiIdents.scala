@@ -1,19 +1,18 @@
 package graft.etl
 
-import graft.etl.FfiExtract.IngestId
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** PlotID / EventID derivation — `_parse_idents`
   * (`/root/reference/parser/xml.py:126-195`).
   *
   * The reference computes both ids with O(n·m) row-loop lookups; here they
-  * are broadcast hash joins + native expressions (SURVEY.md J6/J7, F2–F4).
-  * Each stage runs its join and keep-first window once and holds the
-  * result as a driver-local table ([[FfiCatalog.local]]): MacroPlot and
-  * SampleEvent are read by idents, the EAV assembly, the event enrichment
-  * and the load, and each of those starts from the local rows.
+  * are hash joins + Catalyst expressions (SURVEY.md J6/J7, F2–F4). The
+  * join and the keep-first are driver operators over local tables
+  * ([[FfiCatalog.leftJoin]], [[FfiCatalog.keepFirst]]) and the id
+  * derivations fold into them while optimizing, so idents runs no Spark
+  * job; MacroPlot and SampleEvent stay local tables for the EAV assembly,
+  * the event enrichment and the load.
   */
 object FfiIdents {
 
@@ -29,19 +28,14 @@ object FfiIdents {
       .select(
         col("RegistrationUnit_GUID").as("_ru_guid"),
         cleanName(col("RegistrationUnit_Name")).as("_ru_clean"))
-    val planted = cat("MacroPlot")
-      .join(broadcast(admin), col("MacroPlot_RegistrationUnit_GUID") === col("_ru_guid"), "left")
+    val planted = FfiCatalog
+      .leftJoin(cat("MacroPlot"), (admin, "MacroPlot_RegistrationUnit_GUID", "_ru_guid"))
       .withColumn(
         "PlotID",
         concat(substring(col("_ru_clean"), 1, 5), cleanName(col("MacroPlot_Name"))))
       .drop("_ru_guid", "_ru_clean")
       .na.drop(Seq("MacroPlot_DateIn"))
-    val w = Window.partitionBy("PlotID").orderBy(col("MacroPlot_DateIn"), col(IngestId))
-    val deduped = planted
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-    cat.updated("MacroPlot", FfiCatalog.local(deduped))
+    cat.updated("MacroPlot", FfiCatalog.keepFirst(planted, Seq("PlotID"), col("MacroPlot_DateIn")))
   }
 
   /** SampleEvent + EventID: PlotID looked up via the plot GUID ('' when the
@@ -58,8 +52,8 @@ object FfiIdents {
       regexp_replace(
         regexp_extract(col("SampleEvent_Date"), "(\\d{4}-\\d{2}-\\d{2})", 1),
         "-", "")
-    val evented = cat("SampleEvent")
-      .join(broadcast(plots), col("SampleEvent_Plot_GUID") === col("_mp_guid"), "left")
+    val evented = FfiCatalog
+      .leftJoin(cat("SampleEvent"), (plots, "SampleEvent_Plot_GUID", "_mp_guid"))
       .withColumn(
         "EventID",
         when(
@@ -69,12 +63,7 @@ object FfiIdents {
       .drop("_mp_guid", "_mp_plot_id")
       .na.drop(Seq("EventID"))
       .filter(col("EventID") =!= "")
-    val w = Window.partitionBy("EventID").orderBy(col(IngestId))
-    val deduped = evented
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-    cat.updated("SampleEvent", FfiCatalog.local(deduped))
+    cat.updated("SampleEvent", FfiCatalog.keepFirst(evented, Seq("EventID")))
   }
 
   def apply(cat: FfiCatalog): FfiCatalog = withEventId(withPlotId(cat))

@@ -11,20 +11,19 @@ import scala.jdk.CollectionConverters._
   * extract → idents → transform → rename mapping → FK-ordered MERGE
   * load, and archive the file iff every table loaded cleanly.
   *
-  * One export's plan runs each piece once: extraction parses the file
-  * once on the driver into local rows, one table per tag (no Spark job,
-  * [[FfiExtract]]); idents and transform run each intermediate that
-  * several plans read (MacroPlot and SampleEvent after keep-first, the
-  * two EAV family aggregates, the enriched SampleEvent) once, into local
-  * tables on the driver ([[FfiCatalog.local]]), so the plans above them
-  * fold while optimizing instead of re-running their lineage; and the
-  * load stages every output table concurrently before MERGEing them one
-  * by one in FK order ([[MergeJdbc.loadAll]]). Nothing is cached, so an
-  * export leaves no Spark state behind however it ends, and calling the
-  * stages one by one (as a tracer does) is the same as [[runFile]].
-  * An export's intermediates are held on the driver like its extracted
-  * rows; many exports parallelize trivially — at scale you run one
-  * `runFile` per export and let the cluster schedule them.
+  * One export runs on the driver, start to end: extraction parses the
+  * file once into local rows, one table per tag ([[FfiExtract]]); idents
+  * and transform join, window, group and derive over those local tables
+  * with driver operators and folded Catalyst expressions ([[FfiCatalog]]);
+  * and the load stages each output table's rows from the driver and
+  * MERGEs them one table at a time in FK order ([[MergeJdbc.loadAll]]).
+  * No plan of the export runs as a Spark job, and
+  * nothing is cached, so an export leaves no Spark state behind however
+  * it ends, and calling the stages one by one (as a tracer does) is the
+  * same as [[runFile]]. An export's intermediates are held on the driver
+  * like its extracted rows; many exports parallelize trivially — at
+  * scale you run one `runFile` per export and let the cluster schedule
+  * them.
   */
 object FfiPipeline {
 

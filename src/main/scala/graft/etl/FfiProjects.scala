@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   * 'Imm' and null becomes ''. Deviation: a null prefix contributes ''
   * (the reference's `str(nan)` would contribute the literal "nan" — a
   * pandas artifact, not intent).
+  *
+  * The four joins are driver joins of local tables
+  * ([[FfiCatalog.leftJoin]]); the VisitID ladder folds into them while
+  * optimizing, so no Spark job runs.
   */
 object FfiProjects {
 
@@ -21,14 +25,11 @@ object FfiProjects {
       .select(col("SampleEvent_GUID").as("_se_guid"), col("SampleEvent_Date"))
     val projects = cat("ProjectUnit")
 
-    val visits = cat("MonitoringStatus")
-      .join(
-        broadcast(bridge),
-        col("MonitoringStatus_GUID") === col("MM_MonitoringStatus_GUID"), "left")
-      .join(broadcast(events), col("MM_SampleEvent_GUID") === col("_se_guid"), "left")
-      .join(
-        broadcast(projects),
-        col("MonitoringStatus_ProjectUnit_GUID") === col("ProjectUnit_GUID"), "left")
+    val visits = FfiCatalog
+      .leftJoin(cat("MonitoringStatus"),
+        (bridge, "MonitoringStatus_GUID", "MM_MonitoringStatus_GUID"),
+        (events, "MM_SampleEvent_GUID", "_se_guid"),
+        (projects, "MonitoringStatus_ProjectUnit_GUID", "ProjectUnit_GUID"))
       .drop("_se_guid")
       .withColumn("VisitYear", date_format(to_timestamp(col("SampleEvent_Date")), "yyyy"))
       .withColumn(
@@ -44,10 +45,9 @@ object FfiProjects {
               substring(col("MonitoringStatus_Suffix"), 1, 3))
             .otherwise(trim(col("MonitoringStatus_Suffix")))))
 
-    val eventWithVisit = cat("SampleEvent")
-      .join(
-        broadcast(visits.select(col("MM_SampleEvent_GUID").as("_v_guid"), col("VisitID"))),
-        col("SampleEvent_GUID") === col("_v_guid"), "left")
+    val visitIds = visits.select(col("MM_SampleEvent_GUID").as("_v_guid"), col("VisitID"))
+    val eventWithVisit = FfiCatalog
+      .leftJoin(cat("SampleEvent"), (visitIds, "SampleEvent_GUID", "_v_guid"))
       .drop("_v_guid")
 
     cat

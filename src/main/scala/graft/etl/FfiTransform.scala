@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
   * EAV fan-out, ProjectID/AdminUnit enrichment, Transect derivation,
   * event/project processing, staging-table drop.
   *
-  * Runs eagerly what several later plans read, each once, into local
-  * tables on the driver: the two EAV family aggregates ([[FfiEav]]) and
-  * the enriched SampleEvent ([[FfiEvents]]). What it returns is lazy
-  * plans over those local tables; the load runs each output table's plan
-  * once. Nothing is cached, so the catalog needs no release.
+  * Every table it returns is a local table on the driver: the joins,
+  * windows, `distinct` and EAV groupings run as driver operators
+  * ([[FfiCatalog]]) and the column derivations fold into them while
+  * optimizing, so the transform runs no Spark job.
+  * Nothing is cached, so the catalog needs no release.
   */
 object FfiTransform {
 
@@ -21,7 +21,7 @@ object FfiTransform {
     * `iloc[0]` does.
     */
   def adminUnit(cat: FfiCatalog): String =
-    cat("RegistrationUnit").select("RegistrationUnit_Name").head().getString(0)
+    FfiCatalog.rows(cat("RegistrationUnit").select("RegistrationUnit_Name")).head.getString(0)
 
   def apply(cat0: FfiCatalog): FfiCatalog = {
     val admin = adminUnit(cat0)
@@ -43,8 +43,7 @@ object FfiTransform {
       case Some(fine) =>
         cat2.updated(
           "Transect",
-          fine.select("EventID", "Transect", "Azimuth", "Slope")
-            .distinct()
+          FfiCatalog.distinct(fine.select("EventID", "Transect", "Azimuth", "Slope"))
             .withColumn("Length", lit(75).cast("string")))
       case None => cat2
     }

@@ -5,29 +5,29 @@ import java.sql.{Connection, DriverManager}
 import scala.util.Try
 import scala.util.control.NonFatal
 
-import graft.sources.VersionedLake
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Bridge
 
 /** S8: the constraint-ordered idempotent JDBC upsert — the reference's
   * `_insert_into_db` (`/root/reference/parser/xml.py:559-707`)
-  * re-engineered for a distributed writer.
+  * re-engineered around bound parameters and a set-based MERGE.
   *
   * The reference renders EVERY ROW into one giant
   * `MERGE INTO t USING (VALUES ...)` SQL string on a single thread —
   * O(rows) string building, quoting-based escaping, one statement per
-  * table. Here the write is two-phase — stage concurrently, MERGE in FK
-  * order:
+  * table. Here each table's write is two-phase, in one transaction, one
+  * table at a time in FK dependency order via [[JdbcConstraints.topoOrder]]
+  * (explicit Kahn, where the reference recursed with an unpopulated
+  * visited list), all on one connection:
   *
-  *   1. '''stage''' — executors stream their partitions into a staging
-  *      table via batched `PreparedStatement`s (parameter binding, no SQL
-  *      literal rendering, one transaction per partition). Staging tables
-  *      carry no constraints, so [[loadAll]] stages every table at once;
-  *   2. '''merge''' — the driver issues ONE set-based
-  *      `MERGE INTO target USING staging ... WHEN NOT MATCHED THEN
-  *      INSERT` (dialect-rendered) per table, commits and drops the
-  *      staging table, one table at a time in FK dependency order via
-  *      [[JdbcConstraints.topoOrder]] (explicit Kahn, where the reference
-  *      recursed with an unpopulated visited list).
+  *   1. '''stage''' — the driver fills a staging table with the frame's rows
+  *      via batched `PreparedStatement`s (parameter binding, no SQL
+  *      literal rendering). A local table's rows are already on the
+  *      driver and are read without a Spark job; any other frame is
+  *      collected, one job;
+  *   2. '''merge''' — ONE set-based `MERGE INTO target USING staging ...
+  *      WHEN NOT MATCHED THEN INSERT` (dialect-rendered), then the
+  *      staging table is dropped.
   *
   * Idempotence comes from the PK guard (insert-only-when-not-matched), so
   * re-loading the same file is a no-op — the reference's core operational
@@ -35,10 +35,11 @@ import org.apache.spark.sql.{DataFrame, Row}
   * back, drop their staging table and are reported, not thrown, matching
   * the reference's `insert_failed` tracking.
   *
-  * At scale: the stage phase is embarrassingly parallel (per-partition
-  * connections, batched inserts, tables side by side); the merge is one
-  * server-side set operation per table, which is exactly what a warehouse
-  * wants — never row-at-a-time MERGE from the driver.
+  * Scale note: staging runs on the driver, so a frame is bounded like the
+  * export it comes from (one FFI export's tables: KB to MB); the 100 TB
+  * path is many exports, one load each. The merge is one server-side set
+  * operation per table, which is exactly what a warehouse wants — never
+  * row-at-a-time MERGE from the driver.
   */
 object MergeJdbc {
 
@@ -51,7 +52,9 @@ object MergeJdbc {
       s"""MERGE INTO $target t USING $staging s ON ($on)
          |WHEN NOT MATCHED THEN INSERT ($insertCols) VALUES ($sourceCols)""".stripMargin
     }
-    def createStagingSql(target: String, staging: String): String
+    /** ANSI CTAS `WITH NO DATA`: an empty, constraint-free copy. */
+    def createStagingSql(target: String, staging: String): String =
+      s"CREATE TABLE $staging AS SELECT * FROM $target WITH NO DATA"
     def dropStagingSql(staging: String): String = s"DROP TABLE $staging"
   }
 
@@ -76,18 +79,12 @@ object MergeJdbc {
   /** Apache Derby (>= 10.11 supports standard MERGE) — the embedded test
     * target; doubles as the ANSI-standard rendering.
     */
-  case object Derby extends Dialect {
-    override def createStagingSql(target: String, staging: String): String =
-      s"CREATE TABLE $staging AS SELECT * FROM $target WITH NO DATA"
-  }
+  case object Derby extends Dialect
 
   /** PostgreSQL (>= 15 has standard MERGE; CTAS WITH NO DATA staging) —
     * the reference's other supported target (`parser/functions.py:18-19`).
     */
-  case object Postgres extends Dialect {
-    override def createStagingSql(target: String, staging: String): String =
-      s"CREATE TABLE $staging AS SELECT * FROM $target WITH NO DATA"
-  }
+  case object Postgres extends Dialect
 
   /** JDBC connect with optional properties (credentials from
     * [[graft.engine.DbConfig]]); an empty map is identical to the
@@ -122,102 +119,55 @@ object MergeJdbc {
     try st.execute(sql) finally st.close()
   }
 
-  /** Run `f` on a fresh connection without auto-commit. */
-  private def withConnection[T](url: String, props: Map[String, String])(f: Connection => T): T = {
-    val conn = connect(url, props)
-    try {
-      conn.setAutoCommit(false)
-      f(conn)
-    } finally {
-      // Derby refuses close() mid-transaction; a trailing read opens one
-      try conn.commit() catch { case _: java.sql.SQLException => () }
-      conn.close()
-    }
-  }
-
   /** Drop `staging` if it exists; best effort, a missing table is fine. */
   private def dropStaging(conn: Connection, dialect: Dialect, staging: String): Unit =
     try { execute(conn, dialect.dropStagingSql(staging)); conn.commit() }
     catch { case _: java.sql.SQLException => conn.rollback() }
 
-  private def stagingName(table: String): String = s"STG_$table"
-
   /** Staged rows per `executeBatch` round trip. */
   private final val BatchSize = 500
 
-  /** Stage step: a fresh staging table for `table` (leftovers of a crashed
-    * run dropped first), filled from `df` by batched inserts, one
-    * connection and one transaction per partition on the executors.
-    * Returns the staged columns. The staging table carries no constraints,
-    * so any number of tables can stage at once, in any order.
+  /** One table in one transaction: count, stage `df`'s rows (a local
+    * table's without a job, any other frame's by one collect) into a fresh
+    * staging table (a crashed run's leftover dropped first) by batched
+    * inserts, MERGE them into `table`, drop the staging table, count. A
+    * failed step rolls back, drops the staging table and reports `table`
+    * failed and unchanged, so no failure leaves a staging table behind.
     */
-  private def stage(
+  private def load(
+      conn: Connection,
       df: DataFrame,
       table: String,
-      url: String,
-      dialect: Dialect,
-      props: Map[String, String]): Seq[String] = {
-    val staging = stagingName(table)
+      pks: Seq[String],
+      dialect: Dialect): TableResult = {
+    val staging = s"STG_$table"
     val cols = df.columns.toSeq
-    withConnection(url, props) { conn =>
+    val count = s"SELECT COUNT(*) FROM $table"
+    val before = Try(scalarLong(conn, count))
+    try {
+      val rowsBefore = before.get
+      val rows = Bridge.localRows(df).getOrElse(df.collect().toSeq)
       dropStaging(conn, dialect, staging)
       execute(conn, dialect.createStagingSql(table, staging))
+      val ps = conn.prepareStatement(
+        s"INSERT INTO $staging (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})")
+      try rows.grouped(BatchSize).foreach { batch =>
+        batch.foreach { r =>
+          cols.indices.foreach(i => ps.setObject(i + 1, r.get(i)))
+          ps.addBatch()
+        }
+        ps.executeBatch()
+      } finally ps.close()
+      execute(conn, dialect.mergeSql(table, staging, cols, pks))
+      execute(conn, dialect.dropStagingSql(staging))
       conn.commit()
-    }
-    val insertSql =
-      s"INSERT INTO $staging (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) {
-        val c = connect(url, props)
-        try {
-          c.setAutoCommit(false)
-          val ps = c.prepareStatement(insertSql)
-          var n = 0
-          rows.foreach { r =>
-            var i = 0
-            while (i < cols.length) { ps.setObject(i + 1, r.get(i)); i += 1 }
-            ps.addBatch()
-            n += 1
-            if (n % BatchSize == 0) ps.executeBatch()
-          }
-          ps.executeBatch()
-          c.commit()
-        } finally c.close()
-      }
-    }
-    cols
-  }
-
-  /** Merge step, on the driver: count, MERGE the staged rows into `table`,
-    * drop the staging table, count. `staged` is the stage step's outcome.
-    * A failed stage, count or MERGE rolls back, drops the staging table
-    * with whatever rows it holds, and reports `table` failed and
-    * unchanged, so no failure leaves a staging table behind.
-    */
-  private def merge(
-      staged: Try[Seq[String]],
-      table: String,
-      pks: Seq[String],
-      url: String,
-      dialect: Dialect,
-      props: Map[String, String]): TableResult = {
-    val staging = stagingName(table)
-    val count = s"SELECT COUNT(*) FROM $table"
-    withConnection(url, props) { conn =>
-      val before = Try(scalarLong(conn, count))
-      try {
-        val rowsBefore = before.get
-        execute(conn, dialect.mergeSql(table, staging, staged.get, pks))
-        execute(conn, dialect.dropStagingSql(staging))
-        conn.commit()
-        TableResult(table, rowsBefore, scalarLong(conn, count), None)
-      } catch {
-        case NonFatal(e) =>
-          conn.rollback()
-          dropStaging(conn, dialect, staging)
-          val n = before.getOrElse(0L)
-          TableResult(table, n, n, Some(e.getMessage))
-      }
+      TableResult(table, rowsBefore, scalarLong(conn, count), None)
+    } catch {
+      case NonFatal(e) =>
+        conn.rollback()
+        dropStaging(conn, dialect, staging)
+        val n = before.getOrElse(0L)
+        TableResult(table, n, n, Some(e.getMessage))
     }
   }
 
@@ -251,15 +201,13 @@ object MergeJdbc {
     } finally ps.close()
   }
 
-  /** Stage concurrently, MERGE in FK order. Every table with a reflected
-    * primary key stages at once (bounded by [[VersionedLake.inParallel]],
-    * each stage's jobs labelled `loadAll: stage <table>`); then the driver
-    * MERGEs them one at a time in [[JdbcConstraints.topoOrder]], so a
-    * referenced table's rows land before its referrers'. A table that
-    * fails at either step is rolled back, its staging table dropped, and
-    * reported in the result (reference `insert_failed` semantics); the
-    * others still load. Tables absent from `constraints` (no PK reflected)
-    * are skipped with an error entry. Results come back in FK order.
+  /** Stage and MERGE one table at a time in [[JdbcConstraints.topoOrder]],
+    * on one connection, so a referenced table's rows land before its
+    * referrers'. A table that fails at either step is rolled back, its
+    * staging table dropped, and reported in the result (reference
+    * `insert_failed` semantics); the others still load. Tables absent
+    * from `constraints` (no PK reflected) are skipped with an error
+    * entry. Results come back in FK order.
     */
   def loadAll(
       tables: Map[String, DataFrame],
@@ -269,23 +217,21 @@ object MergeJdbc {
       user: String = sys.props.getOrElse("user.name", "unknown"),
       host: String = java.net.InetAddress.getLocalHost.getHostName,
       props: Map[String, String] = Map.empty): Seq[TableResult] = {
-    val order = constraints.topoOrder(tables.keys.toSeq)
-    val pks = order.flatMap(t => constraints.primaryKeys.get(t).filter(_.nonEmpty).map(t -> _)).toMap
-    val toStage = order.filter(pks.contains)
-    val staged = toStage.zip(
-      if (toStage.isEmpty) Nil
-      else VersionedLake.inParallel(tables(toStage.head).sparkSession, toStage.map { t =>
-        s"loadAll: stage $t" -> (() => Try(stage(tables(t), t, url, dialect, props)))
-      })).toMap
-    withConnection(url, props) { conn =>
-      order.map { t =>
-        val res = pks.get(t) match {
-          case Some(ks) => merge(staged(t), t, ks, url, dialect, props)
+    val conn = connect(url, props)
+    try {
+      conn.setAutoCommit(false)
+      constraints.topoOrder(tables.keys.toSeq).map { t =>
+        val res = constraints.primaryKeys.get(t).filter(_.nonEmpty) match {
+          case Some(ks) => load(conn, tables(t), t, ks, dialect)
           case None => TableResult(t, 0, 0, Some(s"no primary key reflected for $t"))
         }
         if (!res.failed) appendUpdateLog(conn, res, user, host)
         res
       }
+    } finally {
+      // Derby refuses close() mid-transaction; a trailing read opens one
+      try conn.commit() catch { case _: java.sql.SQLException => () }
+      conn.close()
     }
   }
 }

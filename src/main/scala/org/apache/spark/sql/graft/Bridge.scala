@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Spark 4 made Column a backend-agnostic ColumnNode wrapper; building a
@@ -45,4 +47,25 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `df`'s optimized plan when it is a batch [[LocalRelation]] (a local
+    * table: rows held on the driver), else None. Getting it runs the
+    * optimizer, which folds projections (interpreted) and filters (a
+    * generated predicate) over a local table into one: no job.
+    */
+  def localRelation(df: DataFrame): Option[LocalRelation] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.optimizedPlan match {
+      case r: LocalRelation if !r.isStreaming => Some(r)
+      case _ => None
+    }
+
+  /** A local table's rows as external [[Row]]s, converted without a
+    * generated class (where `collect()` would compile a projection and a
+    * deserializer for every new schema); None when `df` is no local table.
+    */
+  def localRows(df: DataFrame): Option[Seq[Row]] =
+    localRelation(df).map { r =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(r.schema)
+      r.data.map(toRow(_).asInstanceOf[Row])
+    }
 }

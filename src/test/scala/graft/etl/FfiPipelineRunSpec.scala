@@ -65,10 +65,11 @@ class FfiPipelineRunSpec extends SparkSpec {
         |  <MacroPlot><MacroPlot_GUID>bb</MacroPlot_GUID><MacroPlot_Name>two & broken</MacroPlot_Name></MacroPlot>
         |</FFIData>""".stripMargin)
 
-    val err = intercept[Exception](
+    val err = intercept[javax.xml.stream.XMLStreamException](
       FfiPipeline.runDirectory(spark, dataDir, mapping, url, MergeJdbc.Derby))
-    // the StAX parser's own error, as scanning the file alone raises it
-    val parseErr = intercept[Exception](FfiExtract.scan(dataDir.resolve("export2.xml").toString))
+    // the JDK StAX parser's own error, as scanning the file alone raises it
+    val parseErr = intercept[javax.xml.stream.XMLStreamException](
+      FfiExtract.scan(dataDir.resolve("export2.xml").toString))
     assert((err.getClass, err.getMessage) === ((parseErr.getClass, parseErr.getMessage)))
     val processed = dataDir.resolve("processed")
     assert(Files.exists(dataDir.resolve("export2.xml")))

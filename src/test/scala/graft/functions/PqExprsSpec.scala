@@ -13,24 +13,27 @@ import org.apache.spark.sql.functions._
   */
 class PqExprsSpec extends SparkSpec {
 
+  /** Run `body` with the session conf `settings`, then restore them. */
+  private def withConf[A](settings: (String, String)*)(body: => A): A = {
+    val conf = spark.conf
+    val prev = settings.map { case (k, _) => k -> conf.getOption(k) }
+    settings.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, p) => p.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
   /** Run `body` with whole-stage-codegen fallback disabled and the
     * expression factory pinned to CODEGEN_ONLY: any codegen compile
     * failure THROWS instead of silently degrading to interpreted.
     */
-  private def noFallback[A](body: => A): A = {
-    val conf = spark.conf
-    val prevFb = conf.getOption("spark.sql.codegen.fallback")
-    val prevFm = conf.getOption("spark.sql.codegen.factoryMode")
-    conf.set("spark.sql.codegen.fallback", "false")
-    conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try body
-    finally {
-      prevFb.fold(conf.unset("spark.sql.codegen.fallback"))(
-        conf.set("spark.sql.codegen.fallback", _))
-      prevFm.fold(conf.unset("spark.sql.codegen.factoryMode"))(
-        conf.set("spark.sql.codegen.factoryMode", _))
-    }
-  }
+  private def noFallback[A](body: => A): A = withConf(
+    "spark.sql.codegen.fallback" -> "false",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(body)
+
+  /** Run `body` with every codegen path off: the reference result. */
+  private def interpreted[A](body: => A): A = withConf(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
 
   private val centroids = Seq(
     Seq(1.0, 0.0, -1.0, 0.5),
@@ -91,5 +94,34 @@ class PqExprsSpec extends SparkSpec {
         .filter(size(col("codes")) === b.m).count()
     }
     assert(n == 200)
+  }
+
+  /** Each kernel GraftExtensions registers, called from SQL on inputs
+    * derived from `id` (so the optimizer cannot fold them into a
+    * literal), every 11th one null: its generated code must compile and
+    * agree with the kernel's interpreted eval.
+    */
+  private def orNull(e: String) = s"IF(id % 11 = 0, NULL, $e)"
+  private val text = orNull("concat_ws(' ', 'The', cast(id % 3 AS string), 'quick', " +
+    "cast(id % 5 AS string), 'fox jumps over the', cast(id % 7 AS string), 'lazy dog')")
+  private val kernels = Seq(
+    "dot_product" ->
+      s"dot_product(${orNull("array(id * 0.5d, 2.0d, -1.0d)")}, array(3.0d, id * 0.25d, 1.0d))",
+    "bitmap_and_count" ->
+      s"bitmap_and_count(${orNull("array(id, 7L, id * 3)")}, array(id * 5, 5L, -1L))",
+    "word_shingles" -> s"word_shingles($text, 2)",
+    "word_shingles_all" -> s"word_shingles_all($text, 3)",
+    "word_tokens" -> s"word_tokens($text)",
+    "winnow_fingerprints" -> s"winnow_fingerprints($text, 8, 4)",
+    "nfc_normalize" ->
+      s"nfc_normalize(${orNull("concat('e', '\\u0301', cast(id AS string), '\\u212b')")})")
+
+  for ((name, call) <- kernels) {
+    test(s"$name compiles under CODEGEN_ONLY and matches interpreted eval") {
+      def run() = spark.range(40).selectExpr("id", s"$call AS k").orderBy("id").collect().toSeq
+      val got = noFallback(run())
+      assert(got.size === 40 && got.exists(!_.isNullAt(1)))
+      assert(got === interpreted(run()))
+    }
   }
 }
