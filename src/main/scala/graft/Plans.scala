@@ -151,7 +151,7 @@ object Plans {
       |
       |## Lake Z-order clustering — row-group stats serve BOTH predicate columns
       |
-      |`Lake.writePartitioned(..., zorderBy = Seq("x", "y"))` rank-buckets
+      |`VersionedLake.optimize(..., zorderBy = Seq("x", "y"))` rank-buckets
       |each column into 256 quantile buckets (one `percentile_approx`
       |aggregate; rank-based so skew cannot collapse a dimension) and sorts
       |within partitions on the bit-interleaved Z-curve key — bucketing and

@@ -21,9 +21,10 @@ import scala.jdk.CollectionConverters._
   * nothing is cached, so an export leaves no Spark state behind however
   * it ends, and calling the stages one by one (as a tracer does) is the
   * same as [[runFile]]. An export's intermediates are held on the driver
-  * like its extracted rows; many exports parallelize trivially — at
-  * scale you run one `runFile` per export and let the cluster schedule
-  * them.
+  * like its extracted rows. [[runDirectory]] runs the exports one after
+  * another on that driver, in file-name order, so the cluster's
+  * executors take no part in a backlog; its cost is the sum of the
+  * exports' driver time.
   */
 object FfiPipeline {
 

@@ -105,16 +105,6 @@ object ExactQuantile {
       (BigDecimal(q) * BigDecimal(n))
         .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble).toLong.max(1L)
 
-  /** Single-quantile convenience over [[quantilesDiscByGroup]]. */
-  def quantileDiscByGroup(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      q: Double,
-      collectAt: Long = 65536L): Map[String, Double] =
-    quantilesDiscByGroup(df, groupCol, valueCol, Seq(q), collectAt)
-      .map { case ((g, _), v) => g -> v }
-
   /** Per-GROUP exact discrete quantiles, ALL groups and ALL requested
     * quantiles bisected simultaneously: each round is ONE job — rows join
     * the (broadcast) per-(group, q) [lo, hi] state (a row fans out only

@@ -385,29 +385,6 @@ object InvertedIndex {
     }
   }
 
-  /** CONTINUOUS maintenance: tail the corpus's row-level CDC stream and
-    * re-[[sync]] per micro-batch — the index stays fresh behind a live
-    * ingest with no scheduled refresh, the
-    * [[graft.sources.LakeMv.continuousRefresh]] shape. The batch frame
-    * is discarded: sync re-derives the exact window delta under its own
-    * corpus-version watermark, so the body is idempotent and
-    * exactly-once rides the lake watermark, not the checkpoint.
-    */
-  def continuousSync(
-      spark: SparkSession,
-      corpusDir: String,
-      idCol: String,
-      textCol: String,
-      indexDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("graft-lake")
-      .option("path", corpusDir).option("readChanges", "true").load()
-      .writeStream.option("checkpointLocation", checkpointDir)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        sync(spark, corpusDir, idCol, textCol, indexDir): Unit
-      }
-      .start()
-
   /** Pin whatever both members currently publish — the post-maintenance
     * (or post-crash-repair) txn record. Idempotent.
     */

@@ -39,9 +39,7 @@ import org.apache.spark.sql.functions._
   *
   * Query ([[topK]] / [[topKPq]]) reads the pinned assignment snapshot:
   * partition pruning on `cell` + exact cosine re-rank inside the probed
-  * cells. Time travel comes free from the lake — `topKAt` answers "what
-  * would this query have returned before yesterday's append" for
-  * reproducible evals.
+  * cells.
   */
 object IvfIndex {
 
@@ -424,19 +422,6 @@ object IvfIndex {
       k: Int,
       nProbe: Int = 4): DataFrame =
     rank(readMember(spark, indexDir, Asg), spark, indexDir, query, k, nProbe)
-
-  /** [[topK]] against a RETAINED assignment version — reproducible evals
-    * against the corpus as-of an earlier append.
-    */
-  def topKAt(
-      spark: SparkSession,
-      indexDir: String,
-      version: Long,
-      query: Seq[Double],
-      k: Int,
-      nProbe: Int = 4): DataFrame =
-    rank(VersionedLake.readVersion(spark, assignmentsDir(indexDir), version),
-      spark, indexDir, query, k, nProbe)
 
   private def rank(
       assigned: DataFrame,

@@ -462,37 +462,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Output schema of [[videoFramesBatched]]. */
-  val videoFramesSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("frame_no", IntegerType, nullable = false),
-    StructField("frame", BinaryType, nullable = false)))
-
-  /** (id, container) → one row per decoded-addressable frame
-    * (doc_id, frame_no, frame bytes). Pure projection work per row —
-    * at 100 TB this is a scan whose output feeds the image operators;
-    * no shuffle is introduced here.
-    */
-  def videoFramesBatched(
-      df: DataFrame,
-      idCol: String = "doc_id",
-      binCol: String = "media",
-      batchSize: Int = 64): DataFrame = {
-    val in = df.select(col(idCol).cast("long"), col(binCol))
-    val enc = org.apache.spark.sql.Encoders.row(videoFramesSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap {
-          case r if !r.isNullAt(1) =>
-            parseVideo(r.getAs[Array[Byte]](1)).toSeq.flatMap(_.zipWithIndex.map {
-              case (f, i) => Row(r.getLong(0), i, f)
-            })
-          case _ => Nil
-        }
-      }
-    }(enc)
-  }
-
   /** Output schema of [[videoFrameDHashes]]. */
   val videoDHashSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),

@@ -126,48 +126,6 @@ object Pq {
     withCodes.select(keep ++ codeCols: _*)
   }
 
-  /** ADC top-k: per-subspace lookup tables built from the query row's
-    * subvectors (broadcast, evaluated once per executor), approximate
-    * score = Σ_j lut_j[code_j], exact cosine re-rank of the top
-    * k×refine candidates. The compressed scan reads m ints per vector,
-    * not dim doubles.
-    */
-  def adcTopK(
-      encoded: DataFrame,
-      idCol: String,
-      qDf: DataFrame, // single row: qv array<double>, qnorm double
-      k: Int,
-      b: Books,
-      refine: Int = 4): DataFrame = {
-    val luts = (0 until b.m).map { j =>
-      array((0 until b.ksub).map(c => subDist(col("qv"), j, b.books(j)(c), b.dsub)): _*)
-    }
-    val score = (0 until b.m)
-      .map(j => element_at(luts(j), col(s"code$j") + 1))
-      .reduce(_ + _)
-    encoded
-      .crossJoin(broadcast(qDf))
-      .withColumn("adc", round(score, 6))
-      .orderBy(col("adc").asc, col(idCol))
-      .limit(k * refine)
-      .select(
-        col(idCol),
-        round(dot(col("v"), col("qv")) / (col("norm") * col("qnorm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** [[adcTopK]] with the query VECTOR as a driver-side value: the
-    * m×ksub lookup table is computed ONCE on the driver — with the same
-    * ascending-index fold the `dot_product` kernel uses, so every entry
-    * is bit-equal to what the column form computed — and shipped as one
-    * array literal per subspace. The column form inlined m·ksub
-    * dot_product subtrees into the projection, blowing janino's 64 KB
-    * method limit (whole-stage codegen fell back to interpreted for the
-    * compressed scan) AND re-deriving the query-side table per ROW.
-    * Here the scan's row work is m codegen'd element_at's over constant
-    * arrays — the ADC shape the PQ papers actually describe.
-    */
   /** Driver-side ADC lookup tables for `query`: m × ksub entries of
     * ‖w‖² − 2·(sub_j(q)·w), computed with the same ascending-index fold
     * the `dot_product` kernel uses so every entry is bit-equal to what
@@ -189,6 +147,19 @@ object Pq {
     }
   }
 
+  /** ADC top-k: approximate score = Σ_j lut_j[code_j] over the encoded
+    * frame, exact cosine re-rank of the top k×refine candidates; the
+    * compressed scan reads m ints per vector, not dim doubles. The query
+    * VECTOR is a driver-side value: the m×ksub lookup table
+    * ([[adcLut]]) is computed ONCE on the driver and shipped as one
+    * array literal per subspace. A column form that builds the table
+    * from a query column inlines m·ksub dot_product subtrees into the
+    * projection, blowing janino's 64 KB method limit (whole-stage
+    * codegen falls back to interpreted for the compressed scan) AND
+    * re-deriving the query-side table per ROW. Here the scan's row work
+    * is m codegen'd element_at's over constant arrays — the ADC shape
+    * the PQ papers actually describe.
+    */
   def adcTopKLit(
       encoded: DataFrame,
       idCol: String,

@@ -3,24 +3,17 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities for heavy-hitter keys — the manual salting
-  * patterns for when AQE's runtime skew-join split isn't available (e.g.
-  * aggregation skew, or a build side that must stay shuffled).
+/** Skew mitigation for heavy-hitter keys — the manual salting pattern
+  * for aggregation skew, which AQE's runtime skew-join split does not
+  * cover.
   *
-  * Two patterns:
-  *   - [[saltedAgg]]: two-phase aggregation. Phase 1 groups on
-  *     (key, salt) so one hot key spreads over `salts` reducers; phase 2
-  *     merges the per-salt partials. Correct for any algebraic aggregate
-  *     expressed as (partial, merge) pairs — here counts and sums, the
-  *     building blocks the reference's audit/count operators need.
-  *   - [[saltedJoin]]: skewed-side rows get a random salt in [0, salts);
-  *     the compact side replicates `salts`-fold with every salt value, and
-  *     the join key becomes (key, salt). Each hot key's rows land on
-  *     `salts` different reducers instead of one straggler.
-  *
-  * At 100 TB these turn the worst-case reducer from O(hottest key) to
-  * O(hottest key / salts) at the cost of `salts`× replication of the
-  * compact side — the standard trade.
+  * [[saltedAgg]] is a two-phase aggregation. Phase 1 groups on
+  * (key, salt) so one hot key spreads over `salts` reducers; phase 2
+  * merges the per-salt partials. Correct for any algebraic aggregate
+  * expressed as (partial, merge) pairs — here counts and sums, the
+  * building blocks the reference's audit/count operators need. At
+  * 100 TB this turns the worst-case reducer from O(hottest key) to
+  * O(hottest key / salts).
   */
 object Skew {
 
@@ -46,21 +39,5 @@ object Skew {
     phase1
       .groupBy(keys.map(col): _*)
       .agg(sum("_n").as("n"), sum("_s").as("total"))
-  }
-
-  /** Inner equi-join where `skewed` has heavy-hitter join keys: salt the
-    * skewed side, replicate the compact side over all salts, join on
-    * (key, salt).
-    */
-  def saltedJoin(
-      skewed: DataFrame,
-      compact: DataFrame,
-      skewedKey: String,
-      compactKey: String,
-      salts: Int = 16): DataFrame = {
-    val s = skewed.withColumn("_salt", saltCol(salts))
-    val c = compact.withColumn("_salt", explode(array((0 until salts).map(lit): _*)))
-    s.join(c, s(skewedKey) === c(compactKey) && s("_salt") === c("_salt"))
-      .drop("_salt")
   }
 }

@@ -105,17 +105,13 @@ object SpanDedup {
 
   /** Standing gram-owner index `(h, first_id)` of a corpus — the state
     * an incremental span-dedup pipeline persists between ingest batches
-    * (at scale: a lake table bucketed by `h`, upserted per batch via
-    * [[mergeOwnerIndex]]).
+    * (at scale: a lake table bucketed by `h`, upserted per batch with
+    * keep-min on `first_id`).
     */
   def ownerIndex(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     gramRows(docs, idCol, textCol, n)
       .groupBy("h")
       .agg(min(col(idCol)).as("first_id"))
-
-  /** Fold a batch's owner index into the standing one (keep-min). */
-  def mergeOwnerIndex(index: DataFrame, deltaIndex: DataFrame): DataFrame =
-    index.union(deltaIndex).groupBy("h").agg(min("first_id").as("first_id"))
 
   /** INCREMENTAL repeated spans for an ingest batch: only the DELTA is
     * gram-exploded and probed against the standing [[ownerIndex]] —

@@ -95,59 +95,20 @@ object ViewMaintenance {
     merge(Seq(priorState, deltaState), groupKeys, state)
   }
 
-  /** Symmetric delta-join maintenance when BOTH sides take inserts: the
-    * standard decomposition for insert-only inputs,
-    *
-    *   ΔV = agg(Δfact ⋈ dim_new) ∪ agg(fact_old ⋈ Δdim)
-    *
-    * (Δfact ⋈ Δdim folds into the first term by joining the delta
-    * against the POST-insert dim). The honest cost statement: the
-    * second term must consult the base fact — that is information-
-    * theoretically required, since rows matching a newly inserted dim
-    * key were unjoinable (absent from the view) until now. The term is
-    * kept cheap by broadcasting Δdim (a dim delta is tiny by nature):
-    * the fact scan streams through a broadcast-hash semi-probe, no
-    * fact shuffle, and everything surviving partial-aggregates to
-    * O(affected groups). A fact table bucketed/partitioned by the join
-    * key turns that scan into a pruned read at 100 TB.
-    *
-    * Inserts only — in-place dim UPDATES re-attribute history and need
-    * retraction (negative state) or a rebuild; callers with updating
-    * dims should version dim rows (SCD-2) so history keeps its old
-    * attribution and updates become inserts.
-    */
-  /** RETRACTIONS (the z-set pattern): a delta whose rows carry a sign
-    * (+1 insert, −1 delete) maintains sum-merged state through
-    * [[merge]]/[[joinDelta]] with NO new machinery — aggregate the delta
-    * as `sum(sign)` for counts and `sum(sign * x)` for sums, and the
-    * signed partial states cancel against the base. This covers
-    * count/sum/avg-decomposed state exactly; plain min/max state cannot
-    * retract (deleting the current extremum needs the runner-up) — for
-    * those, [[retractTopK]]/[[repairExtremum]] below maintain a bounded
-    * top-k buffer per group that repairs extremum deletions from state
-    * and flags exactly the groups that genuinely need a base recompute.
-    * `q_view_retract_maintained` (sums) and `q_view_extremum_retract`
-    * (max) demonstrate both patterns oracle-checked.
-    */
-  def joinDeltaBoth(
-      priorState: DataFrame,
-      fact: DataFrame,
-      factDelta: DataFrame,
-      dim: DataFrame,
-      dimDelta: DataFrame,
-      joinKeys: Seq[String],
-      groupKeys: Seq[String],
-      aggs: Seq[Column],
-      state: Seq[(String, String)]): DataFrame = {
-    require(aggs.nonEmpty, "joinDeltaBoth needs at least one aggregate")
-    def agg1(df: DataFrame) =
-      df.groupBy(groupKeys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    val factSide = agg1(factDelta.join(dim.unionByName(dimDelta), joinKeys))
-    val dimSide = agg1(fact.join(broadcast(dimDelta), joinKeys))
-    merge(Seq(priorState, factSide, dimSide), groupKeys, state)
-  }
-
   // ------------------------------------------------------------------
+  // RETRACTIONS (the z-set pattern): a delta whose rows carry a sign
+  // (+1 insert, −1 delete) maintains sum-merged state through
+  // [[merge]]/[[joinDelta]] with NO new machinery — aggregate the delta
+  // as `sum(sign)` for counts and `sum(sign * x)` for sums, and the
+  // signed partial states cancel against the base. This covers
+  // count/sum/avg-decomposed state exactly; plain min/max state cannot
+  // retract (deleting the current extremum needs the runner-up) — for
+  // those, [[retractTopK]]/[[repairExtremum]] below maintain a bounded
+  // top-k buffer per group that repairs extremum deletions from state
+  // and flags exactly the groups that genuinely need a base recompute.
+  // `q_view_retract_maintained` (sums) and `q_view_extremum_retract`
+  // (max) demonstrate both patterns oracle-checked.
+  //
   // Retractable extremum: bounded top-k state per group (the Flink
   // retract-max recipe). Plain min/max state cannot survive a delete of
   // the current extremum — the runner-up is gone. Keeping the k largest

@@ -92,7 +92,7 @@ object TextSearchTvf {
       } yield wm == corpusV
       require(fresh.contains(true),
         s"text index ${entry.indexDir} is stale for corpus $corpusKey - " +
-          "sync() it (or run continuousSync) before positional retrieval")
+          "sync() it before positional retrieval")
     }
 
   private def terms(phrase: String): Seq[String] =

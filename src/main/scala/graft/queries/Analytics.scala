@@ -892,7 +892,7 @@ object Analytics {
     // interpolation, so the boundary is an existing data value and the
     // clamp invents no floats: exact equality across engines with zero
     // rounding. The Spark side computes the boundaries with the 100 TB
-    // path — ExactQuantile.quantileDiscByGroup histogram bisection (no
+    // path — ExactQuantile.quantilesDiscByGroup histogram bisection (no
     // per-group sort, no per-group value buffer) — and broadcasts the
     // 3-row bounds frame over the clamp scan; the oracle replays the
     // identical ranks with window arithmetic (viable at oracle scale,

@@ -171,35 +171,51 @@ object MergeJdbc {
     }
   }
 
-  /** UpdateLog audit append (S9, `parser/xml.py:675-697`): one row per
-    * loaded table recording who/where/what/when and the row delta.
+  /** Create the UpdateLog audit table unless it exists, in its own
+    * transaction. A failed CREATE (the table exists) is rolled back:
+    * PostgreSQL aborts a transaction on any failed statement and refuses
+    * every later one (SQLSTATE 25P02) until a rollback.
     */
-  def appendUpdateLog(
-      conn: Connection,
-      result: TableResult,
-      user: String,
-      host: String): Unit = {
-    val st = conn.createStatement()
+  private def ensureUpdateLog(conn: Connection): Unit =
     try {
-      st.execute(
+      execute(conn,
         """CREATE TABLE UpdateLog (
           |  UserName VARCHAR(128), ComputerName VARCHAR(128),
           |  TableName VARCHAR(128), Changes BIGINT,
           |  ChangeType VARCHAR(16), UpdateDate TIMESTAMP)""".stripMargin)
-    } catch { case _: java.sql.SQLException => () } // exists
-    val ps = conn.prepareStatement(
-      "INSERT INTO UpdateLog (UserName, ComputerName, TableName, Changes, ChangeType, UpdateDate) VALUES (?, ?, ?, ?, ?, ?)")
-    try {
-      ps.setString(1, user)
-      ps.setString(2, host)
-      ps.setString(3, result.table)
-      ps.setLong(4, math.abs(result.inserted))
-      ps.setString(5, if (result.inserted >= 0) "INSERT" else "DELETE")
-      ps.setTimestamp(6, new java.sql.Timestamp(System.currentTimeMillis()))
-      ps.execute()
       conn.commit()
-    } finally ps.close()
-  }
+    } catch { case _: java.sql.SQLException => conn.rollback() }
+
+  /** UpdateLog audit append (S9, `parser/xml.py:675-697`): one row per
+    * loaded table recording who/where/what/when and the row delta, in its
+    * own transaction. A failed append is rolled back and returned as the
+    * table's error, so the next table still loads and the export is not
+    * archived.
+    */
+  private def appendUpdateLog(
+      conn: Connection,
+      result: TableResult,
+      user: String,
+      host: String): TableResult =
+    try {
+      val ps = conn.prepareStatement(
+        "INSERT INTO UpdateLog (UserName, ComputerName, TableName, Changes, ChangeType, UpdateDate) VALUES (?, ?, ?, ?, ?, ?)")
+      try {
+        ps.setString(1, user)
+        ps.setString(2, host)
+        ps.setString(3, result.table)
+        ps.setLong(4, math.abs(result.inserted))
+        ps.setString(5, if (result.inserted >= 0) "INSERT" else "DELETE")
+        ps.setTimestamp(6, new java.sql.Timestamp(System.currentTimeMillis()))
+        ps.execute()
+        conn.commit()
+      } finally ps.close()
+      result
+    } catch {
+      case NonFatal(e) =>
+        conn.rollback()
+        result.copy(error = Some(s"UpdateLog append failed: ${e.getMessage}"))
+    }
 
   /** Stage and MERGE one table at a time in [[JdbcConstraints.topoOrder]],
     * on one connection, so a referenced table's rows land before its
@@ -207,7 +223,9 @@ object MergeJdbc {
     * staging table dropped, and reported in the result (reference
     * `insert_failed` semantics); the others still load. Tables absent
     * from `constraints` (no PK reflected) are skipped with an error
-    * entry. Results come back in FK order.
+    * entry. UpdateLog is created at most once, before the first table,
+    * and each loaded table appends its audit row. Results come back in
+    * FK order.
     */
   def loadAll(
       tables: Map[String, DataFrame],
@@ -220,13 +238,13 @@ object MergeJdbc {
     val conn = connect(url, props)
     try {
       conn.setAutoCommit(false)
+      ensureUpdateLog(conn)
       constraints.topoOrder(tables.keys.toSeq).map { t =>
         val res = constraints.primaryKeys.get(t).filter(_.nonEmpty) match {
           case Some(ks) => load(conn, tables(t), t, ks, dialect)
           case None => TableResult(t, 0, 0, Some(s"no primary key reflected for $t"))
         }
-        if (!res.failed) appendUpdateLog(conn, res, user, host)
-        res
+        if (res.failed) res else appendUpdateLog(conn, res, user, host)
       }
     } finally {
       // Derby refuses close() mid-transaction; a trailing read opens one

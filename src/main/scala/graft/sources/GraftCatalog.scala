@@ -172,19 +172,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         val mtimes = fs.listStatus(new Path(s"$dir/manifest"))
           .flatMap(st => st.getPath.getName.stripPrefix("v=").stripSuffix(".txt")
             .toLongOption.map(_ -> st.getModificationTime)).toMap
-        VersionedLake.history(s, dir).map { case (v, nDirs, nCols, txns, bucket) =>
+        VersionedLake.history(s, dir).map { case (v, nDirs, nCols, txns) =>
           (v,
             new java.sql.Timestamp(mtimes.getOrElse(v, 0L)),
             nDirs, nCols,
-            txns.toSeq.sortBy(_._1).map { case (a, b) => s"$a=$b" }.mkString(","),
-            bucket.map(_._1).orNull,
-            bucket.map(_._2).getOrElse(0))
-        }.toDF("version", "committed_at", "data_dirs", "columns", "txns",
-          "bucket_key", "bucket_n")
+            txns.toSeq.sortBy(_._1).map { case (a, b) => s"$a=$b" }.mkString(","))
+        }.toDF("version", "committed_at", "data_dirs", "columns", "txns")
       case "files" =>
         val v = VersionedLake.currentVersion(s, dir).get
         val stats = VersionedLake.dirStats(s, dir, v)
-        val buckets = VersionedLake.dirBuckets(s, dir, v)
         // rows/bytes and the partition spec ride the manifest, so the
         // maintenance questions (skew across directories, which dirs
         // carry which layout after a spec evolution, compaction targets)
@@ -200,9 +196,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
             rows.get(d).map(_._1).getOrElse(-1L),
             rows.get(d).map(_._2).getOrElse(-1L),
             parts.getOrElse(d, Nil).mkString(","),
-            st, buckets.get(d).map(_._1).orNull,
-            buckets.get(d).map(_._2).getOrElse(0))
-        }.toDF("dir", "rows", "bytes", "parts", "stats", "bucket_key", "bucket_n")
+            st)
+        }.toDF("dir", "rows", "bytes", "parts", "stats")
       case "constraints" =>
         (LakeConstraints.constraintsOf(s, dir) ++
           LakeConstraints.uniquesOf(s, dir).map { case (n, cols) =>

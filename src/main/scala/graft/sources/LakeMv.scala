@@ -360,32 +360,6 @@ object LakeMv {
     }
   }
 
-  /** CONTINUOUS REFRESH: tail the corpus's row-level CDC stream and
-    * re-sync the registered view per micro-batch, so the MV stays fresh
-    * behind a LIVE ingest with no scheduled `refresh_mv` — the same
-    * foreachBatch shape the text index's continuous maintenance uses.
-    * The batch frame itself is discarded: [[LakeView.sync]] re-derives
-    * the exact window delta from the manifest/CDC feed under its own
-    * corpus-version watermark, so the body is idempotent and
-    * exactly-once falls out of the watermark, not the checkpoint — a
-    * replayed batch no-ops. Cost per batch is the sync's own O(delta).
-    */
-  def continuousRefresh(
-      spark: SparkSession,
-      corpusDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val dir = norm(corpusDir)
-    val mv = forCorpus(dir).getOrElse(throw new IllegalArgumentException(
-      s"no MV registered for $dir - register/persist one first"))
-    spark.readStream.format("graft-lake")
-      .option("path", dir).option("readChanges", "true").load()
-      .writeStream.option("checkpointLocation", checkpointDir)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        LakeView.syncWith(spark, dir, mv.viewDir, mv.stateOverGuarded(spark)): Unit
-      }
-      .start()
-  }
-
   /** A view serves queries only while it reflects the corpus's CURRENT
     * version — both sides are memoized manifest reads, so the check is
     * metadata-only and safe to run per query plan.

@@ -321,16 +321,6 @@ object LakeReplicate {
       VersionedLake.txnWatermarks(spark, dstDir, v)
         .get(appId.getOrElse(defaultAppId(srcDir))))
 
-  /** Convenience: sync and read the mirror — the query-facing face. */
-  def synced(
-      spark: SparkSession,
-      srcDir: String,
-      dstDir: String,
-      keys: Seq[String]): DataFrame = {
-    sync(spark, srcDir, dstDir, keys)
-    VersionedLake.read(spark, dstDir)
-  }
-
   /** ANTI-ENTROPY AUDIT: compare the mirror against the source AT THE
     * VERSION THE MIRROR CLAIMS TO REFLECT (its applied watermark) — so
     * the check measures replication correctness, never freshness lag

@@ -37,7 +37,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[compact]] bounds read-side merge fan-in: it collapses the
   * accumulated partials into one merged frame as a full-snapshot commit
   * (watermark carried), the same amortization bargain as
-  * [[VersionedLake.optimizeIfNeeded]].
+  * [[VersionedLake.optimize]].
   */
 object LakeView {
 

@@ -21,22 +21,21 @@ import org.apache.spark.sql.functions._
   *   3. '''Snapshot isolation.''' [[upsert]] writes merged data into NEW
   *      directories while the old version's files stay on disk: the plan
   *      streams straight from read to write (no localCheckpoint barrier —
-  *      the workaround [[Lake.upsertPartitioned]] needs because it
+  *      the workaround an in-place partition overwrite needs because it
   *      overwrites what it reads), and in-flight readers of v=N never
   *      observe v=N+1. Retained versions are time travel until [[vacuum]].
   *   4. '''Manifest-level data skipping.''' Commits may record per-data-
   *      directory min/max column stats in the manifest ([[StatsHeader]]);
-  *      [[readBetween]] prunes whole directories against them BEFORE the
-  *      scan is planned — no file listing, no parquet footer reads for
-  *      skipped commits. On a time-keyed ingest (the common shape: each
+  *      [[pruneDirsForFilters]] prunes whole directories against them
+  *      for every catalog scan BEFORE the scan is planned — no file
+  *      listing, no parquet footer reads for skipped commits. On a time-keyed ingest (the common shape: each
   *      micro-batch covers a narrow time range) a point-in-range query
   *      over a year of commits plans against days, not the year; footer-
   *      level row-group pruning then works WITHIN the survivors. Stats
   *      travel with the manifest, so they are exactly as atomic and
   *      versioned as the data they describe. Per-directory BLOOM filters
-  *      ([[BloomHeader]], [[readPoint]]) cover the case min/max can't:
-  *      point lookups on high-cardinality keys whose range spans every
-  *      ingest batch.
+  *      ([[BloomHeader]]) cover the case min/max can't: point lookups
+  *      on high-cardinality keys whose range spans every ingest batch.
   *
   *   5. '''Optimistic concurrency.''' Version numbers are claimed
   *      create-exclusively ([[createExclusive]]): of two committers that
@@ -154,19 +153,6 @@ object VersionedLake {
     * immutable so lines carry forward verbatim.
     */
   private val NdvHeader = "#ndv="
-
-  /** Manifest comment line recording that one data directory is laid out
-    * bucket-aligned: `#bucketspec=<dir>\t{"key":"k","n":8}`. The files in
-    * such a directory were written through Spark's bucketed writer (names
-    * carry the bucket id), so a read that registers the directory as a
-    * bucketed catalog table recovers `outputPartitioning =
-    * HashPartitioning(key, n)` straight off the files — fact⋈fact joins
-    * and groupBy(key) aggregations plan with ZERO exchange, while the
-    * directory stays an ordinary immutable lake data dir (time travel,
-    * vacuum, stats all unchanged). Comment-prefixed like stats/blooms:
-    * pre-bucket readers ignore it.
-    */
-  private val BucketHeader = "#bucketspec="
 
   /** Manifest comment line carrying a writer's transaction watermark:
     * `#txn=<appId>\t<batchId>`. [[appendCommitTxn]] makes `foreachBatch`
@@ -1274,9 +1260,8 @@ object VersionedLake {
 
   /** Per-directory NDV layer a version's manifest carries:
     * dir -> col -> (HLL sketch bytes — None for an all-null directory —
-    * and the exact null count). Lenient parse like bucket specs: a
-    * malformed line degrades to "no column statistics", never a failed
-    * read.
+    * and the exact null count). Lenient parse: a malformed line degrades
+    * to "no column statistics", never a failed read.
     */
   def dirNdv(
       spark: SparkSession,
@@ -1530,19 +1515,6 @@ object VersionedLake {
     }
   }
 
-  /** Whether the version's directories were written under MORE THAN ONE
-    * partition spec (flat counts as a spec) — the partition-evolution
-    * read shape. One memoized manifest parse; manifests predating the
-    * parts header report their dirs as flat, which is only reachable for
-    * single-spec tables (evolution needs post-header commits), so the
-    * detection cannot misclassify an evolved table.
-    */
-  def hasMixedPartitionSpecs(
-      spark: SparkSession,
-      tableDir: String,
-      version: Long): Boolean =
-    livePartSpecs(spark, tableDir, version)._1.sizeIs > 1
-
   /** (distinct partition specs, dir count) over the version's NON-EMPTY
     * directories. Zero-row directories are invisible: they hold no data
     * a per-spec read would have to treat differently — without this,
@@ -1569,10 +1541,9 @@ object VersionedLake {
     * between the table's data root and each dir's k=v chain, with or
     * without `basePath` (verified against 4.1; [[readDirs]] documents
     * the same). All-flat versions (any count) and single-dir partitioned
-    * versions scan stock. Zero-row directories are invisible here, like
-    * [[hasMixedPartitionSpecs]]: they hold nothing a scan needs, and
-    * counting them would route a just-truncated table through the
-    * stats-blind bridge forever.
+    * versions scan stock. Zero-row directories are invisible here: they
+    * hold nothing a scan needs, and counting them would route a
+    * just-truncated table through the stats-blind bridge forever.
     */
   def needsPerDirRead(
       spark: SparkSession,
@@ -1655,42 +1626,10 @@ object VersionedLake {
         "bytes" -> (JInt(bytes): JValue)))))
   }
 
-  /** Per-directory bucket specs a version's manifest carries:
-    * dir -> (bucket key, bucket count).
-    */
-  def dirBuckets(
-      spark: SparkSession,
-      tableDir: String,
-      version: Long): Map[String, (String, Int)] = {
-    import org.json4s.JsonAST._
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(BucketHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(BucketHeader)
-        val tab = rest.indexOf('\t')
-        // a line that fails to parse degrades to "no bucket spec" (the
-        // read falls back to a plain scan) instead of failing every read
-        // of the version
-        if (tab < 0) None
-        else scala.util.Try(org.json4s.jackson.JsonMethods.parse(rest.substring(tab + 1)))
-          .toOption.flatMap {
-            case JObject(fields) =>
-              val m = fields.toMap
-              (m.get("key"), m.get("n")) match {
-                case (Some(JString(k)), Some(JInt(n))) =>
-                  Some(rest.substring(0, tab) -> ((k, n.toInt)))
-                case _ => None
-              }
-            case _ => None
-          }
-      }
-      .toMap
-  }
-
   /** Pending merge-on-read equality deletes a version's manifest carries,
     * in publish order. STRICT parse: a malformed eqdelete line is data
-    * loss if ignored (deleted rows would resurrect), so unlike bucket
-    * specs it fails the read instead of degrading.
+    * loss if ignored (deleted rows would resurrect), so it fails the read
+    * instead of degrading.
     */
   def dirEqDeletes(
       spark: SparkSession,
@@ -1829,7 +1768,6 @@ object VersionedLake {
       stats: Map[String, String] = Map.empty,
       blooms: Map[String, String] = Map.empty,
       expectedBase: Option[Option[Long]] = None,
-      buckets: Map[String, (String, Int)] = Map.empty,
       txns: Map[String, Long] = Map.empty,
       eqdeletes: Seq[EqDelete] = Nil,
       op: String = "commit",
@@ -1889,15 +1827,6 @@ object VersionedLake {
     val priorNdv = cur.map(v => dirNdvRaw(spark, tableDir, v)).getOrElse(Map.empty)
     val ndvLines = dirs.flatMap(d =>
       ndv.get(d).orElse(priorNdv.get(d)).map(j => s"$NdvHeader$d\t$j"))
-    val bucketLines = dirs.flatMap(d => buckets.get(d).map { case (key, n) =>
-      // render through json4s so a key containing quotes/backslashes
-      // escapes properly instead of writing a malformed manifest line
-      import org.json4s.JsonAST._
-      val j = org.json4s.jackson.JsonMethods.compact(
-        org.json4s.jackson.JsonMethods.render(
-          JObject(List("key" -> (JString(key): JValue), "n" -> (JInt(n): JValue)))))
-      s"$BucketHeader$d\t$j"
-    })
     val txnLines = txns.toSeq.sortBy(_._1).map { case (app, b) => s"$TxnHeader$app\t$b" }
     // a delete's scope shrinks to the directories still published; a line
     // whose every target directory is gone (rewritten/compacted away) has
@@ -1937,7 +1866,7 @@ object VersionedLake {
     }).map(j => s"$DeclSpecHeader$j").toSeq
     val body = (SchemaHeader + schema.json) +: (OpHeader + op) +:
       (declLine ++ rowsLines ++ partsLines ++ statsLines ++ bloomLines ++ ndvLines ++
-        bucketLines ++ txnLines ++ eqLines ++ changesLines ++ dirs)
+        txnLines ++ eqLines ++ changesLines ++ dirs)
     // inside a LakeAtomicTxn: register the intended publish and stop — the
     // transaction claims every table's slot, writes the one decision
     // file, and finalizes (see [[LakeAtomicTxn.commitAll]])
@@ -2095,10 +2024,11 @@ object VersionedLake {
 
   /** Await handle for a background refusal probe: `apply()` awaits and
     * rethrows the probe's own exception (the success path, called from
-    * `preWriteGate` before the first side effect); `settle()` awaits and
-    * swallows the outcome — for FAILURE paths, where the command's
-    * `finally` is about to unpersist the frames the probe's Spark job is
-    * still reading and the primary error is already propagating.
+    * `preWriteGate` before the first side effect); `settle()` cancels a
+    * probe still running, then awaits and swallows the outcome — for
+    * FAILURE paths, where the primary error is already propagating, the
+    * probe's verdict no longer matters, and the command's `finally` is
+    * about to unpersist the frames the probe's Spark job reads.
     */
   private[graft] sealed trait Gate[A] extends (() => A) {
     def settle(): Unit
@@ -2117,14 +2047,21 @@ object VersionedLake {
     * complete before the write's own read-only phases — the await handle
     * rides [[upsert]]'s `preWriteGate` so the probe overlaps the key-range
     * aggregation, manifest reads and rewrite-probe planning (guide §2.6)
-    * instead of serializing ahead of them. The job description is set
-    * inside the task ([[phase]]), thread-locally, like [[inParallel]].
+    * instead of serializing ahead of them. The probe's jobs run in their
+    * own job group (description `label`, set thread-locally inside the
+    * task), with `interruptOnCancel`, so `settle()` can cancel them
+    * together with any job the probe has yet to start.
     */
   private[graft] def backgroundGate[A](
       spark: SparkSession, label: String)(f: => A): Gate[A] = {
+    val sc = spark.sparkContext
+    val group = s"$label ${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
     val fut = pool.submit(new java.util.concurrent.Callable[A] {
-      override def call(): A = phase(spark, label)(f)
+      override def call(): A = {
+        sc.setJobGroup(group, label, interruptOnCancel = true)
+        f
+      }
     })
     pool.shutdown()
     new Gate[A] {
@@ -2133,8 +2070,10 @@ object VersionedLake {
         case e: java.util.concurrent.ExecutionException =>
           throw Option(e.getCause).getOrElse(e)
       }
-      override def settle(): Unit =
+      override def settle(): Unit = {
+        if (!fut.isDone) sc.cancelJobGroupAndFutureJobs(group, "statement failed")
         try { fut.get(); () } catch { case _: Throwable => () }
+      }
     }
   }
 
@@ -2277,7 +2216,7 @@ object VersionedLake {
 
   /** METADATA-ONLY WATERMARK COMMIT — record `appId -> batchId` without
     * touching a data directory: everything else (dirs, schema, stats,
-    * blooms, buckets, pending deletes) carries verbatim, and the CDC
+    * blooms, pending deletes) carries verbatim, and the CDC
     * feed classifies the version as zero rows changed. This is the
     * commit an exactly-once consumer needs when its window NETS to no
     * row change (an insert-then-delete span, a compaction-only span) —
@@ -2306,7 +2245,6 @@ object VersionedLake {
             .map { case (d, c) => d -> statsJson(c) },
           blooms = dirBloomsRaw(spark, tableDir, cur),
           expectedBase = Some(Some(cur)),
-          buckets = dirBuckets(spark, tableDir, cur),
           txns = txns + (appId -> batchId),
           eqdeletes = dirEqDeletes(spark, tableDir, cur),
           op = "watermark")
@@ -2375,9 +2313,6 @@ object VersionedLake {
         }
       }.getOrElse(Map.empty)
       val priorBlooms = cur.map(v => dirBloomsRaw(spark, tableDir, v)).getOrElse(Map.empty)
-      // bucket-aligned prior dirs stay bucket-aligned (immutable files) —
-      // the spec rides along so a later single-dir version is recognized
-      val priorBuckets = cur.map(v => dirBuckets(spark, tableDir, v)).getOrElse(Map.empty)
       // pending merge-on-read deletes carry with their pinned scopes: the
       // new batch directory is outside every scope, so an appended
       // re-insert of a deleted key is visible by construction
@@ -2388,7 +2323,7 @@ object VersionedLake {
       val stats = priorStats ++ batchStats.map { case (s, _) => d -> s }.toMap
       val blooms = priorBlooms ++ batchBloom.map(d -> _).toMap
       publishManifest(spark, tableDir, prior :+ d, merged, stats, blooms,
-        expectedBase = Some(cur), buckets = priorBuckets,
+        expectedBase = Some(cur),
         txns = priorTxns ++ txn.toMap, eqdeletes = priorEq, op = "append",
         ndv = batchStats.map { case (_, n) => d -> n }.toMap)
     }
@@ -3162,156 +3097,14 @@ object VersionedLake {
       .drop("_chg_dir")
   }
 
-  /** Range read with manifest-level data skipping: directories whose
-    * committed [min,max] for `column` cannot intersect [lo,hi] are
-    * dropped BEFORE the scan exists — zero file listing, zero footer IO
-    * for them. Directories without stats for the column are kept
-    * (conservative); an all-null directory is skipped because BETWEEN
-    * never matches null. The surviving scan still applies the exact
-    * filter, so results are identical to `read(...).filter(between)` —
-    * the stats only decide what gets PLANNED.
-    *
-    * Comparison semantics: stats are stored as Spark string-casts and
-    * compared numerically for numeric columns, lexicographically
-    * otherwise — correct for strings, ISO dates, and Spark's
-    * fixed-field-width timestamp rendering. `lo`/`hi` must render
-    * (`toString`) in the same form, e.g. `"2024-01-01"` for a date
-    * column. Pruning on other types is not attempted (kept
-    * conservative).
-    */
-  def readBetween(
-      spark: SparkSession,
-      tableDir: String,
-      column: String,
-      lo: Any,
-      hi: Any): DataFrame = {
-    val cur = currentVersion(spark, tableDir)
-      .getOrElse(throw new IllegalStateException(s"no published version in $tableDir"))
-    val dirs = manifest(spark, tableDir, cur)
-    val stats = dirStats(spark, tableDir, cur)
-    val schemaOpt = versionSchema(spark, tableDir, cur)
-    val dt = schemaOpt.flatMap(_.fields.find(_.name == column)).map(_.dataType)
-    val numeric = dt.exists(_.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    val prunable = numeric || dt.exists {
-      case org.apache.spark.sql.types.StringType    => true
-      case org.apache.spark.sql.types.DateType      => true
-      case org.apache.spark.sql.types.TimestampType => true
-      case _                                        => false
-    }
-    val loS = String.valueOf(lo)
-    val hiS = String.valueOf(hi)
-    // None = incomparable (e.g. NaN/Infinity renderings) -> keep the dir
-    def cmp(a: String, b: String): Option[Int] =
-      if (numeric) scala.util.Try(BigDecimal(a).compare(BigDecimal(b))).toOption
-      else Some(utf8Cmp(a, b))
-    val keep = dirs.filter { d =>
-      stats.get(d).flatMap(_.get(column)) match {
-        case Some((Some(mn), Some(mx))) if prunable =>
-          (cmp(mn, hiS), cmp(loS, mx)) match {
-            case (Some(x), Some(y)) => x <= 0 && y <= 0
-            case _                  => true
-          }
-        case Some((None, None)) => false // all-null directory: BETWEEN never matches
-        case _                  => true  // no/partial stats or unprunable type
-      }
-    }
-    val filter = dt match {
-      case Some(t) => col(column).between(lit(lo).cast(t), lit(hi).cast(t))
-      case None    => col(column).between(lit(lo), lit(hi))
-    }
-    if (keep.isEmpty) {
-      val schema = schemaOpt.getOrElse(readVersion(spark, tableDir, cur).schema)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      readDirsWithDeletes(spark, tableDir, cur, keep, schemaOpt).filter(filter)
-    }
-  }
-
-  /** Point lookup with manifest-level Bloom skipping: directories whose
-    * committed Bloom filter for `column` provably lacks `value` are
-    * dropped BEFORE the scan is planned (min/max stats prune too when
-    * present, but on a high-cardinality key uniformly spread across
-    * batches they never fire — the Bloom is what makes "find this doc_id
-    * in a year of commits" read one directory instead of 10^5).
-    * Bloom positives may be false (≈1% at default sizing), so survivors
-    * still apply the exact equality filter: results are identical to
-    * `read(...).filter(col === value)`, the filters only decide what gets
-    * PLANNED. Directories committed without a Bloom for the column are
-    * read conservatively. `value` is cast to the column's committed type
-    * before hashing — writer and probe use the same codegen'd xxhash64,
-    * so they cannot disagree. Equality never matches null, so
-    * `value=null` returns the empty frame.
-    */
-  def readPoint(
-      spark: SparkSession,
-      tableDir: String,
-      column: String,
-      value: Any): DataFrame = {
-    val cur = currentVersion(spark, tableDir)
-      .getOrElse(throw new IllegalStateException(s"no published version in $tableDir"))
-    val dirs = manifest(spark, tableDir, cur)
-    val schemaOpt = versionSchema(spark, tableDir, cur)
-    val schema = schemaOpt.getOrElse(readVersion(spark, tableDir, cur).schema)
-    val dt = schema.fields.find(_.name == column).map(_.dataType)
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    if (value == null) return empty
-    val typedLit = dt.map(t => lit(value).cast(t)).getOrElse(lit(value))
-    val blooms = dirBlooms(spark, tableDir, cur)
-    val stats = dirStats(spark, tableDir, cur)
-    // probe positions once per (bits, k) sizing present in the manifest,
-    // via the same Spark expression that built the filters
-    val posByCfg = blooms.values.flatMap(_.get(column)).map { case (m, k, _) => (m, k) }
-      .toSet.map { cfg: (Int, Int) =>
-        val ps = spark.range(1)
-          .select(bloomPositions(typedLit, cfg._1, cfg._2).as("ps"))
-          .head().getSeq[Long](0)
-        cfg -> ps
-      }.toMap
-    val vS = String.valueOf(value)
-    val numeric = dt.exists(_.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    val prunable = numeric || dt.exists {
-      case org.apache.spark.sql.types.StringType    => true
-      case org.apache.spark.sql.types.DateType      => true
-      case org.apache.spark.sql.types.TimestampType => true
-      case _                                        => false
-    }
-    def cmp(a: String, b: String): Option[Int] =
-      if (numeric) scala.util.Try(BigDecimal(a).compare(BigDecimal(b))).toOption
-      else Some(utf8Cmp(a, b))
-    val keep = dirs.filter { d =>
-      val bloomOk = blooms.get(d).flatMap(_.get(column)) match {
-        case Some((m, k, bytes)) =>
-          posByCfg((m, k)).forall { p =>
-            val i = p.toInt
-            (bytes(i >> 3) & (1 << (i & 7))) != 0
-          }
-        case None => true // committed without a bloom: conservative
-      }
-      val statsOk = stats.get(d).flatMap(_.get(column)) match {
-        case Some((Some(mn), Some(mx))) if prunable =>
-          (cmp(mn, vS), cmp(vS, mx)) match {
-            case (Some(x), Some(y)) => x <= 0 && y <= 0
-            case _                  => true
-          }
-        case Some((None, None)) => false // all-null directory
-        case _                  => true
-      }
-      bloomOk && statsOk
-    }
-    if (keep.isEmpty) empty
-    else readDirsWithDeletes(spark, tableDir, cur, keep, schemaOpt)
-      .filter(col(column) === typedLit)
-  }
-
   /** Keyed UPSERT (MERGE) as minimal copy-on-write — O(directories that
     * hold the incoming keys), never O(table). Three phases per commit:
     *
     *   1. '''Prune''': a data directory whose committed [min,max] on ANY
     *      key column cannot intersect the batch's key range provably
     *      holds no match and is never read (the same manifest-stats layer
-    *      [[readBetween]] uses, applied to the MERGE probe).
+    *      [[pruneDirsForFilters]] reads for catalog scans, applied to the
+    *      MERGE probe).
     *   2. '''Probe''': one semi-join scan of the surviving candidates
     *      attributes matching keys to commit directories
     *      (`input_file_name` captured AT the scan, before the join
@@ -3331,9 +3124,7 @@ object VersionedLake {
     * (/root/reference/parser/xml.py:652). Schema evolution matches
     * [[appendCommit]]: the committed schema is the union-by-name of
     * prior and batch schemas; a batch may omit columns (its rows read
-    * back null there) or add them (survivors read back null). Bucket
-    * specs of rewritten dirs drop (the rewrite is unbucketed);
-    * [[optimizeIfNeeded]] restores them at the next cadence. Txn
+    * back null there) or add them (survivors read back null). Txn
     * watermarks carry. Publishes optimistically (expectedBase-gated
     * read-modify-write; a lost race re-probes against the new snapshot).
     */
@@ -3464,7 +3255,12 @@ object VersionedLake {
       }
       requireNoEqDeletes(spark, tableDir, base, "upsert")
       // last point before side effects: the caller's refusal probes must
-      // have passed before keyedRewrite writes its first replacement dir
+      // have passed before keyedRewrite writes its first replacement dir.
+      // Error precedence: the table-constraint checks at the top (CHECK,
+      // FOREIGN KEY, UNIQUE) and the MoR refusal run first, so a SQL MERGE
+      // that both matches duplicate keys and violates a constraint reports
+      // the constraint (LakeDmlRulesSpec pins it); the gate's own refusals
+      // report in the order the caller awaits them.
       preWriteGate()
       val kr = phase(spark, "upsert: probe+rewrite")(
         keyedRewrite(spark, tableDir, base, keyDf, keys, ranges, maxRecordsPerFile))
@@ -3619,7 +3415,6 @@ object VersionedLake {
         publishManifest(spark, tableDir, newDirs, merged,
           cowStats ++ updStats, cowBlooms ++ updBloom,
           expectedBase = Some(Some(base)),
-          buckets = kr.priorBuckets.filter { case (d, _) => !kr.rewritten.contains(d) },
           txns = priorTxns ++ txn.toMap, op = "upsert",
           changes = changesName, ndv = cowNdv ++ updNdv)
     }
@@ -3730,7 +3525,6 @@ object VersionedLake {
       publishManifest(spark, tableDir, dirs :+ updDir, merged,
         priorStats ++ updStats, dirBloomsRaw(spark, tableDir, cur) ++ updBloom,
         expectedBase = Some(Some(cur)),
-        buckets = dirBuckets(spark, tableDir, cur),
         txns = priorTxns ++ txn.toMap,
         eqdeletes = dirEqDeletes(spark, tableDir, cur) :+ EqDelete(delName, keys, dirs),
         op = "upsert_mor",
@@ -3806,7 +3600,6 @@ object VersionedLake {
       } else
         publishManifest(spark, tableDir, newDirs, kr.priorSchema, stats, blooms,
           expectedBase = Some(Some(base)),
-          buckets = kr.priorBuckets.filter { case (d, _) => !kr.rewritten.contains(d) },
           txns = priorTxns ++ txn.toMap, op = "delete_keys",
           changes = changesName, ndv = rewriteNdv)
     }
@@ -3816,11 +3609,10 @@ object VersionedLake {
   /** Keyed DELETE as MERGE-ON-READ: O(delta) write, zero data rewrite.
     * The key set lands as one parquet delete file under `table/deletes/`
     * and the commit is a manifest republish — same directories, same
-    * stats/blooms/buckets, plus one [[EqDeleteHeader]] line scoping the
+    * stats/blooms, plus one [[EqDeleteHeader]] line scoping the
     * delete to the directories published AT COMMIT TIME. Readers
-    * ([[read]], [[readVersion]], [[readBetween]], [[readPoint]],
-    * [[readBucketed]]) anti-join the keys onto scans of scoped
-    * directories only, so a key re-inserted by a LATER append is
+    * ([[read]], [[readVersion]], the catalog scans) anti-join the keys
+    * onto scans of scoped directories only, so a key re-inserted by a LATER append is
     * visible again — the semantics of SQL `DELETE; INSERT` replayed in
     * commit order. Prior versions time-travel to the pre-delete rows.
     *
@@ -3869,7 +3661,6 @@ object VersionedLake {
       publishManifest(spark, tableDir, dirs, schema,
         stats, dirBloomsRaw(spark, tableDir, cur),
         expectedBase = Some(Some(cur)),
-        buckets = dirBuckets(spark, tableDir, cur),
         txns = priorTxns ++ txn.toMap,
         eqdeletes = dirEqDeletes(spark, tableDir, cur) :+ EqDelete(name, keys, dirs),
         op = "delete_mor")
@@ -3943,8 +3734,6 @@ object VersionedLake {
       } else
         publishManifest(spark, tableDir, newDirs, priorSchema, stats, blooms,
           expectedBase = Some(Some(base)),
-          buckets = dirBuckets(spark, tableDir, base)
-            .filter { case (d, _) => !rewritten.contains(d) },
           txns = txnWatermarks(spark, tableDir, base), op = "materialize",
           ndv = rewriteNdv)
     }
@@ -3991,7 +3780,6 @@ object VersionedLake {
       priorStats: Map[String, Map[String, (Option[String], Option[String])]],
       priorBloomsRaw: Map[String, String],
       priorBlooms: Map[String, Map[String, (Int, Int, Array[Byte])]],
-      priorBuckets: Map[String, (String, Int)],
       rewritten: Map[String, Option[String]]) {
     def survivingDirs: Seq[String] = dirs.flatMap(d => rewritten.getOrElse(d, Some(d)))
   }
@@ -4165,7 +3953,7 @@ object VersionedLake {
       }).toMap
     KeyedRewrite(dirs, schemaOpt, priorSchema, priorStats,
       dirBloomsRaw(spark, tableDir, base), dirBlooms(spark, tableDir, base),
-      dirBuckets(spark, tableDir, base), rewritten)
+      rewritten)
   }
 
   /** Row-level DELETE as copy-on-write on the MINIMAL directory set: one
@@ -4276,7 +4064,6 @@ object VersionedLake {
           dirStats(spark, tableDir, base).map { case (d, c) => d -> statsJson(c) },
           dirBloomsRaw(spark, tableDir, base),
           expectedBase = Some(Some(base)),
-          buckets = dirBuckets(spark, tableDir, base),
           txns = priorTxns ++ txn.toMap,
           eqdeletes = dirEqDeletes(spark, tableDir, base) :+
             EqDelete(delName, PosDeleteKeys, dirs, delCounts),
@@ -4410,7 +4197,6 @@ object VersionedLake {
           dirBloomsRaw(spark, tableDir, base) ++
             bloomJson(transformed, bloomCfg).map(updDir -> _).toMap,
           expectedBase = Some(Some(base)),
-          buckets = dirBuckets(spark, tableDir, base),
           txns = priorTxns ++ txn.toMap,
           eqdeletes = dirEqDeletes(spark, tableDir, base) :+
             EqDelete(delName, PosDeleteKeys, dirs, posDeleteCounts(matched)),
@@ -4534,7 +4320,6 @@ object VersionedLake {
       val priorStats = dirStats(spark, tableDir, base)
       val priorBloomsRaw = dirBloomsRaw(spark, tableDir, base)
       val priorBlooms = dirBlooms(spark, tableDir, base)
-      val priorBuckets = dirBuckets(spark, tableDir, base)
       // which directories hold matching rows? one filtered scan, file →
       // commit-dir attribution; the collect is bounded by the file count
       val affected = readVersion(spark, tableDir, base)
@@ -4647,8 +4432,6 @@ object VersionedLake {
         appendedMeta.flatMap { case (d, st, _) => st.map { case (_, n) => d -> n } }
       val blooms = carriedBlooms ++
         appendedMeta.flatMap { case (d, _, bl) => bl.map(d -> _) }
-      // bucket alignment does not survive an unbucketed rewrite
-      val buckets = priorBuckets.filter { case (d, _) => !rewritten.contains(d) }
       if (newDirs.isEmpty) {
         // the delete emptied the table: publish an empty snapshot (one
         // empty-but-schema'd directory keeps every read path uniform)
@@ -4661,7 +4444,7 @@ object VersionedLake {
           op = op, changes = changesName)
       } else
         publishManifest(spark, tableDir, newDirs, schema, stats, blooms,
-          expectedBase = Some(Some(base)), buckets = buckets,
+          expectedBase = Some(Some(base)),
           txns = txnWatermarks(spark, tableDir, base), op = op,
           changes = changesName, ndv = ndv)
     }
@@ -4706,13 +4489,6 @@ object VersionedLake {
     // under the new name (declaredOrPhysicalParts translates through the
     // aka indirection), and the carrier prop re-declares below. Zero
     // data movement at any scale.
-    // the bucketed read path materializes the schema as CREATE TABLE DDL
-    // over the physical files with NO name indirection — renaming any
-    // column of a bucketed version would silently null it (or break the
-    // CLUSTERED BY clause); re-bucket after the rename instead
-    require(dirBuckets(spark, tableDir, cur).isEmpty,
-      s"$tableDir@v$cur carries a bucket spec; rename after re-bucketing " +
-        "(optimizeBucketed) or on the unbucketed layout")
     val eqd = dirEqDeletes(spark, tableDir, cur)
     require(!eqd.exists(_.keys.exists(_.equalsIgnoreCase(oldName))),
       s"pending merge-on-read deletes are keyed on '$oldName'; run " +
@@ -4780,7 +4556,6 @@ object VersionedLake {
     val out = publishManifest(spark, tableDir, dirs, newSchema, stats,
       dirBloomsRaw(spark, tableDir, cur),
       expectedBase = Some(Some(cur)),
-      buckets = dirBuckets(spark, tableDir, cur),
       txns = txnWatermarks(spark, tableDir, cur),
       eqdeletes = eqd, op = "rename_column", ndv = ndv)
     // keep the DDL carrier current: a renamed partition column must
@@ -4821,9 +4596,7 @@ object VersionedLake {
     * Refused: unknown/dropped/former-name columns, non-atomic partition
     * types (array/map/struct/binary cannot render as `k=v` names), a
     * spec covering EVERY column (a data file needs at least one data
-    * column), and bucketed layouts (the bucketed read materializes ONE
-    * layout as DDL — re-bucket after evolving, the [[renameColumn]]
-    * hazard). Pending MoR deletes are fine: data does not move.
+    * column). Pending MoR deletes are fine: data does not move.
     */
   def setPartitionSpec(
       spark: SparkSession,
@@ -4853,16 +4626,12 @@ object VersionedLake {
     require(resolved.size < vis.fields.length,
       "partition spec cannot cover every column - a data file needs at " +
         "least one non-partition column")
-    require(dirBuckets(spark, tableDir, cur).isEmpty,
-      s"$tableDir@v$cur carries a bucket spec; evolve after re-bucketing " +
-        "(optimizeBucketed) or on the unbucketed layout")
     val names = resolved.map(_.name)
     val out = publishManifest(spark, tableDir,
       manifest(spark, tableDir, cur), schema,
       dirStats(spark, tableDir, cur).map { case (d, c) => d -> statsJson(c) },
       dirBloomsRaw(spark, tableDir, cur),
       expectedBase = Some(Some(cur)),
-      buckets = dirBuckets(spark, tableDir, cur),
       txns = txnWatermarks(spark, tableDir, cur),
       eqdeletes = dirEqDeletes(spark, tableDir, cur),
       op = "set_spec",
@@ -4910,7 +4679,6 @@ object VersionedLake {
       dirStats(spark, tableDir, cur).map { case (d, c) => d -> statsJson(c) },
       dirBloomsRaw(spark, tableDir, cur),
       expectedBase = Some(Some(cur)),
-      buckets = dirBuckets(spark, tableDir, cur),
       txns = txnWatermarks(spark, tableDir, cur),
       eqdeletes = dirEqDeletes(spark, tableDir, cur),
       op = "set_default",
@@ -4924,8 +4692,8 @@ object VersionedLake {
     * files no longer carry the data. The name (and any former names)
     * can never be rebound — files still hold the old values, and
     * name-based resolution would resurrect them. Refused, loudly: the
-    * only remaining column, hive-partition columns, bucket keys,
-    * pending merge-on-read delete keys, and columns a CHECK constraint
+    * only remaining column, hive-partition columns, pending
+    * merge-on-read delete keys, and columns a CHECK constraint
     * mentions (the constraint would be unevaluable on future ingests —
     * drop the constraint first).
     */
@@ -4945,12 +4713,6 @@ object VersionedLake {
     require(!allPartitionColumns(spark, tableDir, cur).exists(_.equalsIgnoreCase(name)),
       s"'$name' is a hive-partition column (in at least one directory's " +
         "spec); dropping it requires a layout rewrite")
-    // same DDL-materialization hazard as renameColumn: the bucketed read
-    // renders the RAW schema over physical files, which a tombstone would
-    // leak into — any bucket spec refuses, not just the key
-    require(dirBuckets(spark, tableDir, cur).isEmpty,
-      s"$tableDir@v$cur carries a bucket spec; drop after re-bucketing " +
-        "(optimizeBucketed) or on the unbucketed layout")
     val eqd = dirEqDeletes(spark, tableDir, cur)
     require(!eqd.exists(_.keys.exists(_.equalsIgnoreCase(name))),
       s"pending merge-on-read deletes are keyed on '$name'; run " +
@@ -4986,7 +4748,6 @@ object VersionedLake {
     publishManifest(spark, tableDir, dirs, newSchema, stats,
       dirBloomsRaw(spark, tableDir, cur),
       expectedBase = Some(Some(cur)),
-      buckets = dirBuckets(spark, tableDir, cur),
       txns = txnWatermarks(spark, tableDir, cur),
       eqdeletes = eqd, op = "drop_column")
   }
@@ -5055,8 +4816,7 @@ object VersionedLake {
     * Hive-partition columns widen metadata-only too (directory-name
     * renders re-parse exactly under every lattice promotion), EXCEPT
     * from FLOAT — a float's shortest render re-parses inexactly as
-    * DOUBLE. Refused, loudly: that float-partition case, bucketed
-    * layouts (bucket hashes change with the type), and pending
+    * DOUBLE. Refused, loudly: that float-partition case and pending
     * merge-on-read delete keys (the delete files carry narrow-typed
     * keys; materialize first).
     */
@@ -5089,9 +4849,6 @@ object VersionedLake {
       s"'$name' is a FLOAT hive-partition column; its directory-name " +
         "renders re-parse inexactly as DOUBLE - widening requires a " +
         "layout rewrite")
-    require(dirBuckets(spark, tableDir, cur).isEmpty,
-      s"$tableDir@v$cur carries a bucket spec; bucket hashes change with " +
-        "the type - widen after re-bucketing or on the unbucketed layout")
     val eqd = dirEqDeletes(spark, tableDir, cur)
     require(!eqd.exists(_.keys.exists(_.equalsIgnoreCase(name))),
       s"pending merge-on-read deletes are keyed on '$name'; run " +
@@ -5125,7 +4882,6 @@ object VersionedLake {
     publishManifest(spark, tableDir, manifest(spark, tableDir, cur), newSchema,
       stats, blooms,
       expectedBase = Some(Some(cur)),
-      buckets = dirBuckets(spark, tableDir, cur),
       txns = txnWatermarks(spark, tableDir, cur),
       eqdeletes = eqd, op = "widen_column")
   }
@@ -5337,7 +5093,6 @@ object VersionedLake {
         stats = stats.toMap,
         blooms = blooms.toMap,
         expectedBase = Some(Some(v)),
-        buckets = dirBuckets(spark, tableDir, v),
         txns = txnsAt(spark, tableDir, Some(v)),
         eqdeletes = dirEqDeletes(spark, tableDir, v),
         op = "analyze",
@@ -5444,16 +5199,11 @@ object VersionedLake {
         dataStatsNdv.map { case (s, _) => d -> s }
       val blooms = kept.flatMap(k => priorBloomsRaw.get(k).map(k -> _)).toMap ++
         bloomJson(data, bloomCfg).map(d -> _)
-      // bucket alignment names specific directories; compacted ones are
-      // gone, kept ones stay aligned
-      val keptSet = kept.toSet
-      val buckets = dirBuckets(spark, tableDir, base)
-        .filter { case (bd, _) => keptSet.contains(bd) }
       // schema verbatim (NOT stripAka): kept directories still carry
       // former column names only the aka indirection can read
       val schema = schemaOpt.getOrElse(nullableAll(data.schema))
       Some(publishManifest(spark, tableDir, kept :+ d, schema, stats, blooms,
-        expectedBase = Some(Some(base)), buckets = buckets,
+        expectedBase = Some(Some(base)),
         txns = txnWatermarks(spark, tableDir, base), op = "optimize",
         ndv = dataStatsNdv.map { case (_, n) => d -> n }.toMap))
     }
@@ -5590,199 +5340,13 @@ object VersionedLake {
     }
   }
 
-  /** The [[optimize]] cadence as a one-liner for ingest loops: compact
-    * only when the manifest has reached `maxDirs` directories, else do
-    * nothing. Dropping this after [[appendCommit]] in a `foreachBatch`
-    * body bounds read-side listing at O(maxDirs) forever while keeping
-    * the amortized write amplification at one extra table rewrite per
-    * `maxDirs` batches. Returns the new version when it compacted.
-    */
-  // ------------------------------------------------------------------
-  // Bucket-aligned layout × versioned lake: the exchange-free fact⋈fact
-  // story of [[Bucketed]] unified with atomic publishes and time travel.
-  // [[optimizeBucketed]] rewrites a version's snapshot through Spark's
-  // bucketed writer (one repartition = the bucket shuffle, paid once at
-  // write time; file names carry bucket ids) and records the spec in the
-  // manifest; [[readBucketed]] registers the directory as an external
-  // bucketed catalog table, recovering HashPartitioning(key, n) straight
-  // off the immutable files — joins and aggregations on the key plan
-  // with ZERO exchange, per version, forever. Commits and appends land
-  // as ordinary directories (a reader then falls back to a plain scan —
-  // correct, just not exchange-free) until the next [[optimizeBucketed]]
-  // re-buckets the snapshot; at 100 TB that is the same amortization
-  // bargain as compaction itself, riding the same rewrite.
-  // ------------------------------------------------------------------
-
-  /** OPTIMIZE into a bucket-aligned single directory: compaction and the
-    * bucket shuffle share one table rewrite. The cadence move for a
-    * bucketed table that has taken plain appends.
-    */
-  def optimizeBucketed(
-      spark: SparkSession,
-      tableDir: String,
-      key: String,
-      buckets: Int,
-      maxRecordsPerFile: Long = 8L * 1000 * 1000,
-      statsCols: Seq[String] = Nil,
-      bloom: Option[BloomConfig] = None): Long =
-    retryOnConflict(maxAttempts = 4) {
-      val cur = currentVersion(spark, tableDir)
-        .getOrElse(throw new IllegalStateException(s"no published version in $tableDir"))
-      val snapshot = readVersion(spark, tableDir, cur)
-      val d = writeBucketedDataDir(snapshot, tableDir, key, buckets, maxRecordsPerFile)
-      val schema = versionSchema(spark, tableDir, cur).getOrElse(nullableAll(snapshot.schema))
-      val statsNdv = columnStatsNdv(snapshot, statsCols)
-      val stats = statsNdv.map { case (s, _) => d -> s }.toMap
-      val blooms = bloomJson(snapshot, bloom).map(d -> _).toMap
-      // full rewrite like optimize: files now carry logical names only —
-      // shed rename/drop indirection (readBucketedVersion renders the
-      // RAW schema as CREATE TABLE DDL, so a surviving tombstone would
-      // resurface the dropped column in bucketed reads, and stale aka
-      // metadata would pin catalog scans on the V1 read-through forever)
-      publishManifest(spark, tableDir, Seq(d), stripAka(schema), stats, blooms,
-        expectedBase = Some(Some(cur)), buckets = Map(d -> ((key, buckets))),
-        txns = txnWatermarks(spark, tableDir, cur), op = "optimize",
-        ndv = statsNdv.map { case (_, n) => d -> n }.toMap)
-    }
-
-  /** Bucketed writes only exist behind `saveAsTable`, so the directory is
-    * written through a throwaway EXTERNAL table (path = the lake data
-    * dir); dropping it keeps the files. `repartition(n, key)` first so
-    * each write task owns exactly one bucket — one file per bucket, the
-    * layout that makes the local in-file sort trustworthy too.
-    */
-  private def writeBucketedDataDir(
-      df: DataFrame,
-      tableDir: String,
-      key: String,
-      buckets: Int,
-      maxRecordsPerFile: Long): String = {
-    val spark = df.sparkSession
-    val name = java.util.UUID.randomUUID().toString
-    val tmpTable = s"graft_vlake_w_${name.replace("-", "_")}"
-    df.repartition(buckets, col(key))
-      .write
-      .format("parquet")
-      .option("path", s"$tableDir/data/$name")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE `$tmpTable`")
-    name
-  }
-
-  /** Read the published snapshot bucket-AWARE: when the version is a
-    * single bucket-aligned directory, the scan is planned through an
-    * external bucketed catalog table so `outputPartitioning` is
-    * HashPartitioning(key, n) — downstream equi-joins/aggs on the key
-    * need no exchange. Any other shape (multi-directory after appends,
-    * no bucket spec) falls back to the ordinary manifest read — same
-    * rows, just shuffled like any scan. Registered tables are keyed by
-    * (table path, version): data dirs are immutable, so the catalog
-    * entry can never go stale.
-    */
-  def readBucketed(spark: SparkSession, tableDir: String): DataFrame =
-    readBucketedVersion(spark, tableDir,
-      currentVersion(spark, tableDir)
-        .getOrElse(throw new IllegalStateException(s"no published version in $tableDir")))
-
-  /** [[readBucketed]] with time travel: every retained bucketed version
-    * keeps the exchange-free plan shape.
-    */
-  def readBucketedVersion(spark: SparkSession, tableDir: String, version: Long): DataFrame = {
-    val dirs = manifest(spark, tableDir, version)
-    val specs = dirBuckets(spark, tableDir, version)
-    dirs match {
-      case Seq(d) if specs.contains(d) =>
-        val (key, n) = specs(d)
-        val schema = versionSchema(spark, tableDir, version)
-          .getOrElse(nullableAll(readVersion(spark, tableDir, version).schema))
-        // md5-derived name: (path, version)-unique with no Int-hashCode
-        // collision risk between distinct table paths in one catalog
-        val tbl = "graft_vlake_" + java.security.MessageDigest.getInstance("MD5")
-          .digest(tableDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .take(8).map("%02x".format(_)).mkString + s"_v$version"
-        if (!spark.catalog.tableExists(tbl))
-          spark.sql(
-            s"""CREATE TABLE `$tbl` (${schema.toDDL})
-               |USING parquet
-               |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $n BUCKETS
-               |LOCATION '$tableDir/data/$d'""".stripMargin)
-        // pending merge-on-read deletes apply as broadcast anti-joins,
-        // which keep the probe side's HashPartitioning — the read stays
-        // exchange-free for downstream joins/aggs on the bucket key.
-        // Position deletes attach the scan's metadata identity first
-        // (the bucket catalog table is a file source, so _metadata
-        // resolves) and drop it after.
-        val es = dirEqDeletes(spark, tableDir, version).filter(_.dirs.contains(d))
-        val needPos = es.exists(isPosDelete)
-        val base =
-          if (needPos) spark.table(tbl).select(col("*") +: posIdentityCols: _*)
-          else spark.table(tbl)
-        val folded = es.foldLeft(base) { (acc, e) =>
-          acc.join(broadcast(spark.read.parquet(s"$tableDir/deletes/${e.dir}")),
-            e.keys, "left_anti")
-        }
-        if (needPos) folded.drop(PosDeleteKeys: _*) else folded
-      case _ => readVersion(spark, tableDir, version)
-    }
-  }
-
-  /** Explicit `statsCols`/`zorderBy`/`bloom` thread straight through to
-    * [[optimize]]; when NOT given, the stats and bloom configuration are
-    * recovered from the current manifest (union of stat'd columns; union
-    * of bloom'd columns at the largest committed sizing), so an ingest
-    * loop that commits with skipping layers KEEPS them across
-    * auto-compactions instead of silently full-scanning afterwards. A
-    * table whose manifest declares a bucket-aligned directory compacts
-    * through [[optimizeBucketed]] at the same spec (unless Z-order was
-    * requested — the two clusterings are exclusive), so auto-compaction
-    * restores exchange-free reads instead of silently de-bucketing.
-    * Z-order is never inferred — the manifest doesn't record it.
-    */
-  def optimizeIfNeeded(
-      spark: SparkSession,
-      tableDir: String,
-      maxDirs: Int = 64,
-      parts: Seq[String] = Nil,
-      maxRecordsPerFile: Long = 8L * 1000 * 1000,
-      statsCols: Seq[String] = Nil,
-      zorderBy: Seq[String] = Nil,
-      bloom: Option[BloomConfig] = None): Option[Long] = {
-    require(maxDirs >= 2, s"maxDirs must be >= 2, got $maxDirs")
-    currentVersion(spark, tableDir)
-      .filter(v => manifest(spark, tableDir, v).size >= maxDirs)
-      .map { v =>
-        val sc =
-          if (statsCols.nonEmpty) statsCols
-          else dirStats(spark, tableDir, v).values.flatMap(_.keys).toSeq.distinct.sorted
-        val bl = bloom.orElse {
-          val committed = dirBlooms(spark, tableDir, v)
-          val cols = committed.values.flatMap(_.keys).toSeq.distinct.sorted
-          if (cols.isEmpty) None
-          else {
-            val (m, k) = committed.values.flatMap(_.values)
-              .map(t => (t._1, t._2)).maxBy(_._1)
-            Some(BloomConfig(cols, m, k))
-          }
-        }
-        dirBuckets(spark, tableDir, v).values.headOption match {
-          case Some((key, n)) if zorderBy.isEmpty && parts.isEmpty =>
-            optimizeBucketed(spark, tableDir, key, n, maxRecordsPerFile, sc, bl)
-          case _ =>
-            optimize(spark, tableDir, parts, maxRecordsPerFile, sc, zorderBy, bl)
-        }
-      }
-  }
-
   /** One row per retained version, newest first: (version, data-dir
-    * count, column count, writer txn watermarks, bucket spec if any) —
+    * count, column count, writer txn watermarks) —
     * the DESCRIBE HISTORY face of the commit log, for operators deciding
     * what to roll back to or vacuum. Metadata-only: reads manifests,
     * never data.
     */
-  def history(spark: SparkSession, tableDir: String): Seq[(Long, Int, Int, Map[String, Long], Option[(String, Int)])] = {
+  def history(spark: SparkSession, tableDir: String): Seq[(Long, Int, Int, Map[String, Long])] = {
     val f = fs(spark, tableDir)
     val manRoot = new org.apache.hadoop.fs.Path(s"$tableDir/manifest")
     if (!f.exists(manRoot)) return Nil
@@ -5794,8 +5358,7 @@ object VersionedLake {
         val dirs = manifest(spark, tableDir, v)
         val cols = versionSchema(spark, tableDir, v).map(_.fields.length).getOrElse(0)
         val txns = txnWatermarks(spark, tableDir, v)
-        val bucket = dirBuckets(spark, tableDir, v).values.headOption
-        (v, dirs.size, cols, txns, bucket)
+        (v, dirs.size, cols, txns)
       }
   }
 
@@ -5819,9 +5382,8 @@ object VersionedLake {
         .getOrElse(nullableAll(readVersion(spark, tableDir, toVersion).schema))
       val stats = dirStats(spark, tableDir, toVersion).map { case (d, c) => d -> statsJson(c) }
       val blooms = dirBloomsRaw(spark, tableDir, toVersion)
-      val buckets = dirBuckets(spark, tableDir, toVersion)
       publishManifest(spark, tableDir, dirs, schema, stats, blooms,
-        expectedBase = Some(Some(cur)), buckets = buckets,
+        expectedBase = Some(Some(cur)),
         txns = txnWatermarks(spark, tableDir, cur),
         eqdeletes = dirEqDeletes(spark, tableDir, toVersion), op = "rollback",
         // dirs reinstated from toVersion may be absent from cur's
@@ -5835,8 +5397,8 @@ object VersionedLake {
     }
 
   /** Manifest-level directory pruning for ARBITRARY pushed filters — the
-    * generalization of [[readBetween]]/[[readPoint]]'s skipping layers
-    * that [[GraftCatalog]]'s SQL scans ride: given the data filters Spark
+    * skipping layer [[GraftCatalog]]'s SQL scans (and the constraint and
+    * procedure probes) ride: given the data filters Spark
     * pushed, drop every directory whose committed min/max stats (and
     * bloom, for equality probes) PROVE it holds no matching row. Strictly
     * conservative: any filter shape, type, or stats gap this cannot
@@ -6023,10 +5585,8 @@ object VersionedLake {
     * snapshot's rows with pending merge-on-read deletes APPLIED (a clone
     * is born clean), the hive partition layout, the declared stat/bloom
     * columns (fresh filters over the clone's own directory), and the
-    * CHECK constraints. Not carried: bucket alignment (the clone is one
-    * plain directory; `optimizeBucketed` restores it on demand) and txn
-    * watermarks (a new table must not suppress a writer's first
-    * batches). O(version bytes) — this IS a copy, priced like one.
+    * CHECK constraints. Not carried: txn watermarks (a new table must
+    * not suppress a writer's first batches). O(version bytes) — this IS a copy, priced like one.
     */
   /** `parentMap` (source dir -> its clone) remaps cross-table FOREIGN
     * KEY pointers into the clone set: a caller cloning a whole namespace

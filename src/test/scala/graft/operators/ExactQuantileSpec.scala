@@ -59,7 +59,8 @@ class ExactQuantileSpec extends SparkSpec {
         (Seq.fill(300)(("c", 7.0)) ++ Seq.fill(200)(("c", rnd.nextDouble())))
     val df = s.sparkContext.parallelize(rows, 7).toDF("g", "v")
     for (q <- Seq(0.05, 0.5, 0.95)) {
-      val got = ExactQuantile.quantileDiscByGroup(df, "g", "v", q, collectAt = 32L)
+      val got = ExactQuantile.quantilesDiscByGroup(df, "g", "v", Seq(q), collectAt = 32L)
+        .map { case ((g, _), v) => g -> v }
       val want = rows.groupBy(_._1).map { case (g, vs) =>
         val sorted = vs.map(_._2).sorted
         val k = math.ceil(q * sorted.size - 1e-9).toLong.max(1L)
@@ -118,7 +119,8 @@ class ExactQuantileSpec extends SparkSpec {
       .groupBy("o_orderstatus")
       .agg(max(when(col("rn") === ceil(round(col("n") * 0.95, 9)), col("o_totalprice"))).as("hi"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val bisected = ExactQuantile.quantileDiscByGroup(o, "o_orderstatus", "o_totalprice", 0.95)
+    val bisected = ExactQuantile.quantilesDiscByGroup(o, "o_orderstatus", "o_totalprice", Seq(0.95))
+      .map { case ((g, _), v) => g -> v }
     assert(bisected === windowBounds,
       "histogram bisection must reproduce the window-rank boundary exactly")
   }

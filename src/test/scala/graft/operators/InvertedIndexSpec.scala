@@ -128,29 +128,6 @@ class InvertedIndexSpec extends SparkSpec {
     assert(indexed(idxDir) === scanBm25(base, Terms))
   }
 
-  test("continuous maintenance: a readChanges stream keeps the index live") {
-    val s = spark
-    val s2 = spark
-    import s2.implicits._
-    val corpusDir = java.nio.file.Files.createTempDirectory("inv_corpus_stream").toString
-    val idxDir = java.nio.file.Files.createTempDirectory("inv_idx_stream").toString
-    val ck = java.nio.file.Files.createTempDirectory("inv_idx_ck").toString
-    VersionedLake.commit(docs.filter(col("doc_id") < 120), corpusDir)
-    // sync is idempotent + corpus-version-watermarked, so the per-batch
-    // body just re-syncs on every CDC batch — exactly-once falls out
-    val q = InvertedIndex.continuousSync(s, corpusDir, "doc_id", "text", idxDir, ck)
-    try {
-      q.processAllAvailable()
-      assert(indexed(idxDir) === scanBm25(docs.filter(col("doc_id") < 120), Terms))
-      VersionedLake.upsert(spark, corpusDir,
-        Seq((3L, "scan join filter scan", "en", "web", 21L))
-          .toDF("doc_id", "text", "lang", "source", "n_chars"),
-        keys = Seq("doc_id"))
-      q.processAllAvailable()
-      assert(indexed(idxDir) === scanBm25(VersionedLake.read(s, corpusDir), Terms))
-    } finally q.stop()
-  }
-
   test("refused window whose only data change is a MoR delete file syncs exactly") {
     val corpusDir = java.nio.file.Files.createTempDirectory("inv_corpus_mor").toString
     val idxDir = java.nio.file.Files.createTempDirectory("inv_idx_mor").toString

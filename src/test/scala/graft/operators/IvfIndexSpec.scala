@@ -55,25 +55,6 @@ class IvfIndexSpec extends SparkSpec {
     assert(viaIndex === fresh)
   }
 
-  test("time travel: the pre-append probe answer is reproducible") {
-    val s = spark
-    val idxDir = java.nio.file.Files.createTempDirectory("ivf_idx_tt").toString
-    val corpus = emb.filter(col("vec_id") =!= 0)
-    IvfIndex.build(corpus.filter(col("vec_id") <= 100), "vec_id", idxDir, k = 4, iters = 2)
-    val query = Similarity.withNorm(emb).filter(col("vec_id") === 0)
-      .select("v").head().getSeq[Double](0).toSeq
-    val before = IvfIndex.topK(s, idxDir, query, k = 5, nProbe = 2)
-      .collect().map(_.getLong(0)).toSeq
-    IvfIndex.append(corpus.filter(col("vec_id") > 100), "vec_id", idxDir)
-    val travel = IvfIndex.topKAt(s, idxDir, version = 0L, query, k = 5, nProbe = 2)
-      .collect().map(_.getLong(0)).toSeq
-    assert(travel === before,
-      "version-0 probe must ignore the appended vectors (reproducible evals)")
-    // and the live probe sees the full corpus
-    val after = IvfIndex.topK(s, idxDir, query, k = 5, nProbe = 2).count()
-    assert(after === 5L)
-  }
-
   test("sync: manifest-diff maintenance from a versioned corpus, exactly-once") {
     val s = spark
     val corpusDir = java.nio.file.Files.createTempDirectory("ivf_corpus").toString

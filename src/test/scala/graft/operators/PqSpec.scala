@@ -91,15 +91,14 @@ class PqSpec extends SparkSpec {
 
   test("ADC top-10 with trained books recalls most of the exact answer") {
     val e = Similarity.withNorm(emb)
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("v").as("qv"), col("norm").as("qnorm"))
-    val query = e.filter(col("vec_id") === 0).select("v").head().getSeq[Double](0)
+    val qRow = e.filter(col("vec_id") === 0).select("v", "norm").head()
+    val query = qRow.getSeq[Double](0)
     val exact = Similarity
       .bruteForceTopK(emb.filter(col("vec_id") =!= 0), "vec_id", query, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val b = Pq.train(emb)
     val enc = Pq.encode(e.filter(col("vec_id") =!= 0), b)
-    val approx = Pq.adcTopK(enc, "vec_id", q, k = 10, b, refine = 8)
+    val approx = Pq.adcTopKLit(enc, "vec_id", query, qRow.getDouble(1), k = 10, b, refine = 8)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val recall = (exact & approx).size / 10.0
     assert(recall >= 0.5, s"recall@10 = $recall (exact=$exact approx=$approx)")

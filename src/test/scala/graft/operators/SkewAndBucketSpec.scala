@@ -20,17 +20,6 @@ class SkewAndBucketSpec extends SparkSpec {
     assert(plain.exceptAll(salted).count() === 0)
   }
 
-  test("saltedJoin == plain join") {
-    val o = spark.read.parquet(s"$sf/orders.parquet").select("o_orderkey", "o_custkey")
-    val c = spark.read.parquet(s"$sf/customer.parquet").select("c_custkey", "c_mktsegment")
-    val salted = Skew.saltedJoin(o, c, "o_custkey", "c_custkey", salts = 4)
-      .select("o_orderkey", "c_mktsegment")
-    val plain = o.join(c, col("o_custkey") === col("c_custkey"))
-      .select("o_orderkey", "c_mktsegment")
-    assert(salted.exceptAll(plain).count() === 0)
-    assert(plain.exceptAll(salted).count() === 0)
-  }
-
   test("bucketed tables join with zero exchanges") {
     val o = spark.read.parquet(s"$sf/orders.parquet").select("o_orderkey", "o_custkey")
     val li = spark.read.parquet(s"$sf/lineitem.parquet")

@@ -90,17 +90,6 @@ class SpanDedupSpec extends SparkSpec {
     assert(inc.count() > 0, "fixture must exercise the delta path")
   }
 
-  test("mergeOwnerIndex folds batch indexes into the full-corpus index") {
-    val docs = graft.engine.Session.table(spark, sf, "documents")
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val full = SpanDedup.ownerIndex(docs, "doc_id", "text", n = 5)
-    val merged = SpanDedup.mergeOwnerIndex(
-      SpanDedup.ownerIndex(docs.filter("doc_id < 250"), "doc_id", "text", n = 5),
-      SpanDedup.ownerIndex(docs.filter("doc_id >= 250"), "doc_id", "text", n = 5))
-    assert(key(merged) === key(full))
-  }
-
   private def md5hex(t: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(t.getBytes("UTF-8"))

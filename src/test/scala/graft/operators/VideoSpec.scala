@@ -34,17 +34,12 @@ class VideoSpec extends SparkSpec {
   }
 
   test("round-trip: pack then extract returns the exact frame bytes") {
-    val s = spark
-    import s.implicits._
     val frames = Seq(png(0), ppm(7), png(3))
     val container = Multimodal.packVideo(frames)
-    val df = Seq((1L, container)).toDF("doc_id", "media")
-    val got = Multimodal.videoFramesBatched(df)
-      .orderBy("frame_no").collect()
+    val got = Multimodal.parseVideo(container).get
     assert(got.length === 3)
-    got.zip(frames).zipWithIndex.foreach { case ((row, want), i) =>
-      assert(row.getInt(1) === i)
-      assert(java.util.Arrays.equals(row.getAs[Array[Byte]]("frame"), want),
+    got.zip(frames).zipWithIndex.foreach { case ((frame, want), i) =>
+      assert(java.util.Arrays.equals(frame, want),
         s"frame $i bytes must round-trip exactly")
     }
   }
@@ -75,9 +70,9 @@ class VideoSpec extends SparkSpec {
       (1L, good), (2L, badMagic), (3L, truncated), (4L, countOverrun),
       (5L, junkFrame), (6L, null.asInstanceOf[Array[Byte]]))
       .toDF("doc_id", "media")
-    val frames = Multimodal.videoFramesBatched(df)
-      .select("doc_id").distinct().as[Long].collect().toSet
-    assert(frames === Set(1L, 5L), "only structurally-valid containers yield frames")
+    val parsed = Seq(1L -> good, 2L -> badMagic, 3L -> truncated, 4L -> countOverrun,
+      5L -> junkFrame).collect { case (id, c) if Multimodal.parseVideo(c).nonEmpty => id }
+    assert(parsed.toSet === Set(1L, 5L), "only structurally-valid containers yield frames")
     val hashes = Multimodal.videoFrameDHashes(df)
       .select("doc_id", "frame_no").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(hashes === Set((1L, 0), (5L, 1)),

@@ -110,6 +110,68 @@ class LakeDmlRulesSpec extends SparkSpec {
       s"expected the unique-match refusal, got: ${e.getMessage}")
   }
 
+  test("MERGE with duplicate matched keys that also violates a CHECK reports the constraint") {
+    root
+    spark.sql("""CREATE TABLE gdml.prec (k BIGINT, n BIGINT)
+                |TBLPROPERTIES ('check.n_pos'='n > 0')""".stripMargin)
+    spark.sql("INSERT INTO gdml.prec VALUES (1, 10)")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW prec_src AS
+                |SELECT * FROM VALUES (1, -1), (1, -2) AS t(k, n)""".stripMargin)
+    val e = intercept[Exception](
+      spark.sql("""MERGE INTO gdml.prec t USING prec_src c ON t.k = c.k
+                  |WHEN MATCHED THEN UPDATE SET *
+                  |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+    assert(e.getMessage.contains("n_pos") && !e.getMessage.contains("multiple rows"),
+      s"table constraints report before the duplicate-key refusal; got: ${e.getMessage}")
+    assert(spark.sql("SELECT n FROM gdml.prec").collect().map(_.getLong(0)).toSeq === Seq(10L))
+  }
+
+  test("a MERGE failing before its gate cancels the still-running duplicate-key probe") {
+    val s = spark
+    root
+    // keyed on k, but UNIQUE on v: the upsert refuses before its gate, on
+    // manifest metadata alone, while the dup probe is still evaluating a
+    // source that takes ~30 s to produce
+    spark.sql("""CREATE TABLE gdml.gatecancel (k BIGINT, v BIGINT)
+                |TBLPROPERTIES ('unique.v_u'='v')""".stripMargin)
+    spark.sql("INSERT INTO gdml.gatecancel VALUES (1, 1)")
+    spark.udf.register("slow_key", (x: Long) => { Thread.sleep(500); x })
+    spark.sql("""CREATE OR REPLACE TEMP VIEW gatecancel_src AS
+                |SELECT slow_key(id) AS k, id + 100 AS v FROM range(0, 60, 1, 1)""".stripMargin)
+    val probeJobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            String.valueOf(p.getProperty("spark.job.description")).startsWith("merge: dup probe")))
+          probeJobs.put(e.jobId, String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[Exception](
+        spark.sql("""MERGE INTO gdml.gatecancel t USING gatecancel_src c ON t.k = c.k
+                    |WHEN MATCHED THEN UPDATE SET *
+                    |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(e.getMessage.contains("v_u"), s"expected the UNIQUE refusal, got: ${e.getMessage}")
+      assert(secs < 20.0, f"the failed MERGE waited $secs%.1f s for a probe it no longer needs")
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      import scala.jdk.CollectionConverters._
+      // a cancelled job's end event reaches the status store asynchronously
+      eventually(timeout(10.seconds)) {
+        org.apache.spark.sql.graft.SparkInternals.drainListenerBus(s.sparkContext)
+        probeJobs.asScala.foreach { case (id, group) =>
+          assert(group.startsWith("merge: dup probe"), s"probe job $id ran outside its gate's group")
+          val tracker = s.sparkContext.statusTracker
+          assert(tracker.getJobIdsForGroup(group).toSeq.flatMap(tracker.getJobInfo(_).toList)
+            .forall(_.status != org.apache.spark.JobExecutionStatus.RUNNING),
+            s"the gate's group $group still has a running job")
+        }
+      }
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
   test("MERGE ... WHEN MATCHED THEN DELETE rides the keyed copy-on-write delete") {
     root
     spark.sql("CREATE TABLE gdml.mdel (k BIGINT, v STRING)")

@@ -269,59 +269,6 @@ class MvRewriteSpec extends SparkSpec {
     } finally LakeMv.clear()
   }
 
-  test("continuous refresh: a live ingest keeps the MV fresh at every batch boundary") {
-    val s = spark
-    import s.implicits._
-    val catRoot = java.nio.file.Files.createTempDirectory("mv_live_cat").toString
-    s.conf.set("spark.sql.catalog.mvlive", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.mvlive.root", catRoot)
-    val corpus = s"$catRoot/sales"
-    val viewDir = java.nio.file.Files.createTempDirectory("mv_live_view").toString
-    val ck = java.nio.file.Files.createTempDirectory("mv_live_ck").toString
-    def batch(from: Int, to: Int) =
-      (from to to).map(i => (i.toLong, s"t${i % 3}", (i % 11).toLong))
-        .toDF("id", "event_type", "qty")
-    VersionedLake.appendCommit(batch(1, 500), corpus)
-    val mv = LakeMv.MvDef(corpus, viewDir, keys = Seq("event_type"),
-      aggs = Map("sum_qty" -> ("sum", "qty"), "cnt" -> ("count", "*")))
-    LakeMv.register(mv)
-    val sql = "SELECT event_type, sum(qty) AS total FROM mvlive.sales GROUP BY 1"
-    def routedAnswer(): Map[String, Long] = {
-      val df = s.sql(sql)
-      val rs = scannedRoots(df)
-      assert(rs.exists(_.startsWith(viewDir)),
-        s"the fresh MV must serve the rewrite, got scans: $rs")
-      assert(!rs.exists(_.startsWith(corpus)), s"no corpus scan expected: $rs")
-      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-    def directAnswer(): Map[String, Long] =
-      VersionedLake.read(s, corpus).groupBy("event_type")
-        .agg(sum("qty")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    try {
-      val q = LakeMv.continuousRefresh(s, corpus, ck)
-      try {
-        q.processAllAvailable()
-        assert(LakeMv.fresh(s, mv), "first batch syncs the view to the corpus head")
-        val wm0 = LakeView.watermark(s, viewDir).get
-        assert(routedAnswer() === directAnswer())
-        // live ingest: two more appends land while the stream runs
-        VersionedLake.appendCommit(batch(501, 900), corpus)
-        q.processAllAvailable()
-        assert(LakeMv.fresh(s, mv), "the MV re-syncs at the batch boundary")
-        assert(LakeView.watermark(s, viewDir).get > wm0, "the watermark advances")
-        assert(routedAnswer() === directAnswer())
-        // a rewrite window (keyed upsert) flows through too
-        VersionedLake.upsert(s, corpus,
-          Seq((5L, "t9", 1000L)).toDF("id", "event_type", "qty"), keys = Seq("id"))
-        q.processAllAvailable()
-        assert(LakeMv.fresh(s, mv))
-        val after = routedAnswer()
-        assert(after === directAnswer())
-        assert(after.contains("t9"), "the upserted group appears in the routed answer")
-      } finally q.stop()
-    } finally LakeMv.clear()
-  }
-
   test("hll state: sketch-estimate distinct routes exactly; approx_count_distinct declines") {
     val s = spark
     import s.implicits._

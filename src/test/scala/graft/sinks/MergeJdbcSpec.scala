@@ -73,6 +73,37 @@ class MergeJdbcSpec extends SparkSpec {
     assert(audits.count(_._2 == 0L) === 3)
   }
 
+  test("loadAll audits every table on a database that aborts the transaction after a failed statement") {
+    freshSchema()
+    val cons = withConn(JdbcConstraints.reflect(_))
+    val strict = AbortingDriver.url(url)
+    // the first load creates UpdateLog; the second finds it already there
+    Seq(5L, 0L).foreach { rows =>
+      val res = MergeJdbc.loadAll(frames, cons, strict, MergeJdbc.Derby)
+      assert(res.forall(!_.failed), res.filter(_.failed).mkString("; "))
+      assert(res.map(_.inserted).sum === rows)
+    }
+    val audits = withConn { c =>
+      val rs = c.createStatement().executeQuery("SELECT TableName FROM UpdateLog")
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+    }
+    assert(audits.sorted === Seq("CUSTOMER", "CUSTOMER", "NATION", "NATION", "REGION", "REGION"))
+    assert(stagingTables() === Nil)
+  }
+
+  test("a failed UpdateLog append is the table's error; the other tables still load") {
+    freshSchema()
+    val cons = withConn(JdbcConstraints.reflect(_))
+    AbortingDriver.refuse = _.startsWith("INSERT INTO UpdateLog")
+    val res =
+      try MergeJdbc.loadAll(frames, cons, AbortingDriver.url(url), MergeJdbc.Derby)
+      finally AbortingDriver.refuse = _ => false
+    assert(res.map(_.table) === cons.topoOrder(frames.keys.toSeq))
+    assert(res.forall(_.error.exists(_.startsWith("UpdateLog append failed"))), res.mkString("; "))
+    assert(res.map(r => r.table -> r.inserted).toMap ===
+      Map("REGION" -> 1L, "NATION" -> 2L, "CUSTOMER" -> 2L))
+  }
+
   test("merge tolerates pre-existing rows (partial overlap)") {
     freshSchema()
     withConn(_.createStatement().execute("INSERT INTO Region VALUES (100, 'eu')"))

@@ -147,7 +147,7 @@ class GraftCatalogSpec extends SparkSpec {
     // partition spec - that would route every post-truncate read through
     // the stats-blind V1 bridge until an OPTIMIZE dropped the dir
     val cur = VersionedLake.currentVersion(spark, s"$root/trunc").get
-    assert(!VersionedLake.hasMixedPartitionSpecs(spark, s"$root/trunc", cur),
+    assert(!VersionedLake.needsPerDirRead(spark, s"$root/trunc", cur),
       "a zero-row dir cannot mix partition specs")
     val q = spark.sql("SELECT id FROM graft.trunc WHERE day = 'd9'")
     assert(q.collect().map(_.getLong(0)).toSeq === Seq(9L))
@@ -365,9 +365,12 @@ class GraftCatalogSpec extends SparkSpec {
     val blooms = VersionedLake.dirBlooms(s, dir, v)
     assert(blooms.size === 3 && blooms.values.forall(_.get("tag").exists(_._1 === 4096)),
       "every directory must carry the 4096-bit tag bloom declared at DDL time")
-    // and the layers actually prune: a point read on tag touches no data
-    // from directories whose bloom rejects it
-    assert(VersionedLake.readPoint(s, dir, "tag", "c").count() === 1)
+    // and the layers actually prune: a point read on tag plans no
+    // directory whose bloom rejects it
+    assert(ManifestPruning.kept(s, dir, org.apache.spark.sql.sources.EqualTo("tag", "c")) ===
+      Seq(VersionedLake.manifest(s, dir, v).last))
+    assert(spark.sql("SELECT id FROM graft.props_t WHERE tag = 'c'")
+      .collect().map(_.getLong(0)).toSeq === Seq(3L))
   }
 
   test("TBLPROPERTIES check.* declare CHECK constraints at CREATE time") {

@@ -4,10 +4,15 @@ import graft.SparkSpec
 import graft.engine.Session
 import org.apache.spark.sql.functions._
 
-/** Partitioned lake layout: compaction (one file per partition dir),
-  * partition pruning at planning time, and row-group clustering.
+/** The lake's partitioned data-directory layout: compaction (one file
+  * per partition dir), partition pruning at planning time, and
+  * row-group clustering (lexicographic and Z-order).
   */
 class LakeSpec extends SparkSpec {
+
+  /** The one data directory of a single-directory version. */
+  private def dataDir(dir: String, version: Long): String =
+    s"$dir/data/${VersionedLake.manifest(spark, dir, version).head}"
 
   private lazy val path = {
     val dir = java.nio.file.Files.createTempDirectory("lake").toString
@@ -15,8 +20,7 @@ class LakeSpec extends SparkSpec {
       .events(spark, sf)
       .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
       .select("event_id", "user_id", "event_type", "value", "dt")
-    Lake.writePartitioned(ev, dir, parts = Seq("dt"), clusterBy = Seq("user_id"))
-    dir
+    dataDir(dir, VersionedLake.commit(ev, dir, parts = Seq("dt"), sortWithin = Seq("user_id")))
   }
 
   test("one compacted parquet file per partition directory") {
@@ -32,10 +36,10 @@ class LakeSpec extends SparkSpec {
   }
 
   test("partition predicate prunes to one directory's files at planning time") {
-    val dts = Lake.read(spark, path).select(col("dt").cast("string")).distinct()
+    val dts = spark.read.parquet(path).select(col("dt").cast("string")).distinct()
       .collect().map(_.getString(0)).sorted
     assert(dts.length > 1, "fixture must span multiple partitions")
-    val one = Lake.read(spark, path).filter(col("dt") === dts.head)
+    val one = spark.read.parquet(path).filter(col("dt") === dts.head)
     one.collect()
     // the scan's numFiles metric counts files actually opened — excluded
     // partitions never are, the property that bounds scan cost by the
@@ -50,7 +54,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("round-trips rows and partition values") {
-    val back = Lake.read(spark, path)
+    val back = spark.read.parquet(path)
     val orig = Session.events(spark, sf)
     assert(back.count() === orig.count())
     // dt values reconstructed from directory names match the derivation
@@ -66,7 +70,7 @@ class LakeSpec extends SparkSpec {
   test("clustering sorts user_id within each partition file") {
     // row-group stats only help if the file really is sorted; read one
     // partition in file order and check monotonic user_id.
-    val dts = Lake.read(spark, path).select(col("dt").cast("string")).distinct()
+    val dts = spark.read.parquet(path).select(col("dt").cast("string")).distinct()
       .collect().map(_.getString(0)).sorted
     val ids = spark.read
       .parquet(s"$path/dt=${dts.head}")
@@ -74,40 +78,6 @@ class LakeSpec extends SparkSpec {
       .collect()
       .map(_.getLong(0))
     assert(ids.sameElements(ids.sorted), "user_id must be sorted within the file")
-  }
-
-  test("copy-on-write upsert rewrites ONLY touched partitions, merges by key") {
-    val s = spark
-    import s.implicits._
-    // fresh table: 2 partitions, 2 rows each
-    val dir = java.nio.file.Files.createTempDirectory("lake_upsert").toString
-    val base = Seq(
-      (1L, "a", "2024-01-01"), (2L, "b", "2024-01-01"),
-      (3L, "c", "2024-01-02"), (4L, "d", "2024-01-02"))
-      .toDF("id", "v", "dt")
-    Lake.writePartitioned(base, dir, parts = Seq("dt"))
-    def fileOf(dt: String): java.io.File =
-      new java.io.File(s"$dir/dt=$dt").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-    val untouchedBefore = fileOf("2024-01-02")
-
-    // update id=1, insert id=5 — both land in the 2024-01-01 partition
-    val updates = Seq((1L, "a2", "2024-01-01"), (5L, "e", "2024-01-01"))
-      .toDF("id", "v", "dt")
-    Lake.upsertPartitioned(spark, dir, updates, parts = Seq("dt"), keys = Seq("id"))
-
-    val rows = Lake.read(spark, dir)
-      .select(col("id"), col("v"), col("dt").cast("string"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    assert(rows === Set(
-      (1L, "a2", "2024-01-01"), (2L, "b", "2024-01-01"), (5L, "e", "2024-01-01"),
-      (3L, "c", "2024-01-02"), (4L, "d", "2024-01-02")))
-
-    val untouchedAfter = fileOf("2024-01-02")
-    assert(untouchedAfter.getName === untouchedBefore.getName &&
-      untouchedAfter.lastModified === untouchedBefore.lastModified,
-      "the 2024-01-02 partition must not be rewritten")
-    assert(fileOf("2024-01-01").getName !== untouchedBefore.getName)
   }
 
   /** Per-row-group (min, max) of an INT column from the REAL parquet
@@ -151,12 +121,13 @@ class LakeSpec extends SparkSpec {
       bands.sum / bands.size
     }
 
-    val lexDir = java.nio.file.Files.createTempDirectory("lake_lex").toString
-    Lake.writePartitioned(df, lexDir, Seq("p"), clusterBy = Seq("x", "y"),
-      maxRecordsPerFile = 500L)
-    val zDir = java.nio.file.Files.createTempDirectory("lake_z").toString
-    Lake.writePartitioned(df, zDir, Seq("p"), zorderBy = Seq("x", "y"),
-      maxRecordsPerFile = 500L)
+    val lexTable = java.nio.file.Files.createTempDirectory("lake_lex").toString
+    val lexDir = dataDir(lexTable, VersionedLake.commit(df, lexTable, Seq("p"),
+      maxRecordsPerFile = 500L, sortWithin = Seq("x", "y")))
+    val zTable = java.nio.file.Files.createTempDirectory("lake_z").toString
+    VersionedLake.commit(df, zTable, Seq("p"))
+    val zDir = dataDir(zTable, VersionedLake.optimize(spark, zTable, Seq("p"),
+      maxRecordsPerFile = 500L, zorderBy = Seq("x", "y")))
 
     val lexY = rowGroupStats(s"$lexDir/p=all", "y")
     val zY = rowGroupStats(s"$zDir/p=all", "y")
@@ -174,8 +145,8 @@ class LakeSpec extends SparkSpec {
     assert(bandAvg(zX) >= 0.40, s"zorder must still prune x bands, got ${bandAvg(zX)}")
 
     // correctness: identical row multiset back from both layouts
-    val a = Lake.read(s, lexDir).select("x", "y", "payload").collect().toSeq.groupBy(identity)
-    val b = Lake.read(s, zDir).select("x", "y", "payload").collect().toSeq.groupBy(identity)
+    val a = s.read.parquet(lexDir).select("x", "y", "payload").collect().toSeq.groupBy(identity)
+    val b = s.read.parquet(zDir).select("x", "y", "payload").collect().toSeq.groupBy(identity)
     assert(a.view.mapValues(_.size).toMap === b.view.mapValues(_.size).toMap)
   }
 

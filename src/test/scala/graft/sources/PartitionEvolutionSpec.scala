@@ -28,7 +28,7 @@ class PartitionEvolutionSpec extends SparkSpec {
     val dirs = VersionedLake.manifest(s, dir, cur)
     assert(specs.get(dirs.last).contains(Seq("day")), "new dir records its spec")
     assert(!specs.contains(dirs.head), "the flat dir records none")
-    assert(VersionedLake.hasMixedPartitionSpecs(s, dir, cur))
+    assert(VersionedLake.needsPerDirRead(s, dir, cur), "flat + hive dirs read per directory")
     assert(VersionedLake.partitionColumns(s, dir, cur) === Seq("day"),
       "the table's current spec is the newest directory's")
     val df = VersionedLake.read(s, dir)

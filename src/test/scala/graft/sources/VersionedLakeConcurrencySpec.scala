@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
 
 /** Optimistic concurrency contract: the version number is claimed
   * create-exclusively at publish, so of two committers based on the same
@@ -243,7 +244,7 @@ class VersionedLakeConcurrencySpec extends SparkSpec {
     assert(ids(VersionedLake.read(s, dir)) === (0L to 99L).toSet)
   }
 
-  test("optimizeIfNeeded keeps manifest stats + bloom skipping layers") {
+  test("optimize keeps manifest stats + bloom skipping layers") {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("vlake_opt_layers").toString
@@ -253,10 +254,10 @@ class VersionedLakeConcurrencySpec extends SparkSpec {
         Seq((i * 10L, s"k$i")).toDF("id", "payload"),
         dir, statsCols = Seq("id"), bloom = bloom)
     }
-    // cadence fires (3 dirs >= maxDirs=3) with NO explicit stats/bloom args:
-    // the helper must recover them from the manifest, not drop them
-    val v = VersionedLake.optimizeIfNeeded(s, dir, maxDirs = 3)
-    assert(v === Some(3L))
+    // compaction with NO explicit stats/bloom args must recover them from
+    // the manifest, not drop them
+    val v = VersionedLake.optimize(s, dir)
+    assert(v === 3L)
     val stats = VersionedLake.dirStats(s, dir, 3L)
     assert(stats.size === 1 && stats.values.head.contains("id"),
       "auto-compaction dropped the manifest min/max stats layer")
@@ -266,9 +267,13 @@ class VersionedLakeConcurrencySpec extends SparkSpec {
       "auto-compaction dropped the manifest bloom layer")
     assert(blooms.values.head("payload")._1 === (1 << 12))
     // and the recovered layers actually skip: a probe outside the id range
-    // plans zero directories (empty frame, no scan)
-    assert(VersionedLake.readBetween(s, dir, "id", 1000, 2000).count() === 0L)
-    assert(ids(VersionedLake.readBetween(s, dir, "id", 0, 10)) === Set(0L, 10L))
-    assert(ids(VersionedLake.readPoint(s, dir, "payload", "k1")) === Set(10L))
+    // or a key no row holds plans zero directories
+    assert(ManifestPruning.kept(s, dir,
+      GreaterThanOrEqual("id", 1000L), LessThanOrEqual("id", 2000L)).isEmpty)
+    assert(ManifestPruning.kept(s, dir, EqualTo("payload", "absent")).isEmpty)
+    assert(ids(ManifestPruning.read(s, dir, col("id").between(0, 10),
+      GreaterThanOrEqual("id", 0L), LessThanOrEqual("id", 10L))) === Set(0L, 10L))
+    assert(ids(ManifestPruning.read(s, dir, col("payload") === "k1",
+      EqualTo("payload", "k1"))) === Set(10L))
   }
 }

@@ -238,26 +238,6 @@ class VersionedLakeDeleteTxnSpec extends SparkSpec {
       s"partition pruning must survive the rewrite:\n$plan")
   }
 
-  test("optimizeIfNeeded preserves a bucketed layout through auto-compaction") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("vlake_opt_bkt").toString
-    VersionedLake.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "payload"), dir) // v0
-    VersionedLake.optimizeBucketed(s, dir, "k", 4) // v1, bucketed
-    VersionedLake.appendCommit(Seq((3L, "c")).toDF("k", "payload"), dir)
-    VersionedLake.appendCommit(Seq((4L, "d")).toDF("k", "payload"), dir)
-    // cadence fires with NO explicit layout args: the bucket spec must be
-    // recovered from the manifest, not silently dropped
-    val v = VersionedLake.optimizeIfNeeded(s, dir, maxDirs = 3)
-    assert(v === Some(4L))
-    val agg = VersionedLake.readBucketed(s, dir)
-      .groupBy("k").agg(count(lit(1)).as("n"))
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"auto-compaction must restore the exchange-free layout:\n$plan")
-    assert(agg.count() === 4L)
-  }
-
   test("appendCommitTxn: a replayed batch no-ops; progress resumes on the next batch") {
     val s = spark
     import s.implicits._

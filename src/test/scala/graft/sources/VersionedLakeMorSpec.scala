@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
 
 /** Merge-on-read equality deletes: O(delta) delete commits whose key
   * sets anti-join at read time, scoped to the directories published at
@@ -38,10 +39,11 @@ class VersionedLakeMorSpec extends SparkSpec {
     // time travel: the pre-delete snapshot still shows the rows
     assert(ids(VersionedLake.readVersion(s, dir, 2)) ===
       Set(1L, 2L, 10L, 11L, 20L, 21L))
-    // skipping-layer reads apply the delete too
-    assert(ids(VersionedLake.readBetween(s, dir, "id", 10L, 21L)) === Set(11L, 21L))
-    assert(ids(VersionedLake.readPoint(s, dir, "id", 10L)) === Set.empty)
-    assert(ids(VersionedLake.readPoint(s, dir, "id", 11L)) === Set(11L))
+    // scans of the manifest pruner's kept directories apply the delete too
+    assert(ids(ManifestPruning.read(s, dir, col("id").between(10L, 21L),
+      GreaterThanOrEqual("id", 10L), LessThanOrEqual("id", 21L))) === Set(11L, 21L))
+    assert(ids(ManifestPruning.read(s, dir, col("id") === 10L, EqualTo("id", 10L))) === Set.empty)
+    assert(ids(ManifestPruning.read(s, dir, col("id") === 11L, EqualTo("id", 11L))) === Set(11L))
   }
 
   test("a key re-inserted AFTER the delete is visible (scope pins at publish)") {
@@ -168,27 +170,6 @@ class VersionedLakeMorSpec extends SparkSpec {
       txn = Some("gdpr" -> 1L))
     assert(v1 === v2, "the replay must not publish a second delete")
     assert(VersionedLake.dirEqDeletes(s, dir, v1).size === 1)
-  }
-
-  test("bucketed read applies MoR deletes and stays exchange-free on the key") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("vlake_mor_bkt").toString
-    val df = (1L to 100L).map(i => (i, s"p$i")).toDF("id", "payload")
-    VersionedLake.commit(df, dir)
-    VersionedLake.optimizeBucketed(s, dir, "id", 4)
-    VersionedLake.deleteKeysMor(s, dir, Seq(7L, 13L).toDF("id"), Seq("id"))
-    val r = VersionedLake.readBucketed(s, dir)
-    assert(!ids(r).contains(7L) && !ids(r).contains(13L) && ids(r).size === 98)
-    // the anti-join is broadcast (a BroadcastExchange ships only the tiny
-    // delete set): grouping on the bucket key still plans with zero
-    // SHUFFLE exchange on the data
-    val agg = r.groupBy("id").agg(count(lit(1)).as("n"))
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
-      s"bucketed MoR read must stay shuffle-free, got:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"the delete must apply as a broadcast anti-join, got:\n$plan")
   }
 
   test("upsertMor: one atomic commit updates + inserts with ZERO data rewrite") {

@@ -136,7 +136,7 @@ class VersionedLakeRenameSpec extends SparkSpec {
       "optimize rewrites files without the column and drops the tombstone")
   }
 
-  test("guards hold under case variance, constraints, and bucketed layouts") {
+  test("guards hold under case variance and constraints; OPTIMIZE sheds tombstones") {
     val s = spark
     import s.implicits._
     // dropped-name rebinding refused case-insensitively (Spark resolves
@@ -157,21 +157,17 @@ class VersionedLakeRenameSpec extends SparkSpec {
     // ...but an unrelated column containing the name as a substring drops fine
     VersionedLake.appendCommit(Seq((2L, 6.0, "z")).toDF("id", "amount", "note"), d2)
     VersionedLake.dropColumn(s, d2, "id"): Unit // "pos" says 'amount > 0' — no 'id' token
-    // bucketed layouts refuse rename/drop (the bucketed read renders raw
-    // DDL with no indirection); re-bucketing after a drop sheds tombstones
-    val d3 = java.nio.file.Files.createTempDirectory("vlake_gbkt").toString
+    // a full rewrite after a drop sheds the tombstone
+    val d3 = java.nio.file.Files.createTempDirectory("vlake_gopt").toString
     VersionedLake.appendCommit(Seq((1L, "a", 1.0), (2L, "b", 2.0))
       .toDF("id", "v", "junk"), d3)
     VersionedLake.dropColumn(s, d3, "junk")
-    VersionedLake.optimizeBucketed(s, d3, "id", 4)
+    VersionedLake.optimize(s, d3)
     val vNow = VersionedLake.currentVersion(s, d3).get
     assert(VersionedLake.versionSchema(s, d3, vNow).get.fieldNames.toSeq ===
       Seq("id", "v"),
-      "optimizeBucketed is a full rewrite: tombstones shed from the manifest")
-    assert(VersionedLake.readBucketed(s, d3).columns.toSeq === Seq("id", "v"),
-      "the bucketed read's DDL never sees the dropped column")
-    val e3 = intercept[Exception](VersionedLake.renameColumn(s, d3, "v", "w"))
-    assert(e3.getMessage.contains("bucket"))
+      "optimize is a full rewrite: tombstones shed from the manifest")
+    assert(VersionedLake.read(s, d3).columns.toSeq === Seq("id", "v"))
   }
 
   test("changeArtifact=false skips the artifact; the feed refuses that window") {

@@ -1,7 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.sources.ManifestPruning.kept
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
 
 /** The log-structured table's contract: atomic manifest+pointer publishes
   * (partial writes invisible), O(delta) append commits, streaming ingest,
@@ -208,21 +210,29 @@ class VersionedLakeSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("optimizeIfNeeded compacts at the cadence and no earlier") {
+  test("a manifest that still carries a #bucketspec= line reads as a plain table") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("vlake_cadence").toString
-    (0 until 3).foreach { i =>
-      VersionedLake.appendCommit(Seq((i.toLong, s"p$i")).toDF("id", "payload"), dir)
-      assert(VersionedLake.optimizeIfNeeded(s, dir, maxDirs = 4).isEmpty,
-        s"must not compact below the cadence (manifest size ${i + 1})")
-    }
-    VersionedLake.appendCommit(Seq((3L, "p3")).toDF("id", "payload"), dir)
-    val v = VersionedLake.optimizeIfNeeded(s, dir, maxDirs = 4)
-    assert(v.nonEmpty, "4 directories must trigger the cadence")
-    assert(VersionedLake.manifest(s, dir, v.get).size === 1)
-    assert(rows(VersionedLake.read(s, dir)) ===
-      (0 to 3).map(i => (i.toLong, s"p$i")).toSet)
+    val dir = java.nio.file.Files.createTempDirectory("vlake_bucketspec").toString
+    VersionedLake.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "payload"), dir,
+      statsCols = Seq("id"))
+    val d = VersionedLake.manifest(s, dir, 0L).head
+    // the header line older writers put before the directory list
+    val man = java.nio.file.Paths.get(dir, "manifest", "v=0.txt")
+    val lines = new String(java.nio.file.Files.readAllBytes(man), "UTF-8").split("\n").toSeq
+    val (headers, dirs) = lines.span(_.startsWith("#"))
+    val legacy = headers ++ Seq(s"#bucketspec=$d\t{" + "\"key\":\"id\",\"n\":4}") ++ dirs
+    java.nio.file.Files.write(man, legacy.mkString("", "\n", "\n").getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, "manifest", ".v=0.txt.crc"))
+
+    assert(VersionedLake.manifest(s, dir, 0L) === Seq(d))
+    assert(rows(VersionedLake.read(s, dir)) === Set((1L, "a"), (2L, "b")))
+    assert(kept(s, dir, EqualTo("id", 2L)) === Seq(d), "the stats layer still reads")
+    VersionedLake.appendCommit(Seq((3L, "c")).toDF("id", "payload"), dir)
+    assert(rows(VersionedLake.read(s, dir)) === Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(!new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "manifest", "v=1.txt")), "UTF-8").contains("#bucketspec="),
+      "a new commit does not carry the line forward")
   }
 
   test("partitioned commits keep directory pruning inside the version") {
@@ -255,26 +265,25 @@ class VersionedLakeSpec extends SparkSpec {
     assert(VersionedLake.dirStats(s, dir, v).keySet === dirs.toSet,
       "append commits must carry prior directories' stats forward verbatim")
 
-    val pruned = VersionedLake.readBetween(s, dir, "id", 120L, 180L)
+    val idRange = Seq(GreaterThanOrEqual("id", 120L), LessThanOrEqual("id", 180L))
+    assert(kept(s, dir, idRange: _*) === Seq(dirs(1)),
+      "only the one intersecting directory may be planned")
+    val pruned = ManifestPruning.read(s, dir, col("id").between(120L, 180L), idRange: _*)
     val expected = VersionedLake.read(s, dir)
       .filter(col("id").between(120L, 180L)).collect().map(_.getLong(0)).sorted
     assert(pruned.collect().map(_.getLong(0)).sorted === expected)
-    val middle = dirs(1)
-    assert(pruned.inputFiles.nonEmpty &&
-      pruned.inputFiles.forall(_.contains(middle)),
-      "only the one intersecting directory may be planned")
 
     // string-typed stats prune lexicographically the same way
-    val strPruned = VersionedLake.readBetween(s, dir, "payload", "w250", "w260")
-    assert(strPruned.inputFiles.forall(_.contains(dirs(2))))
-    assert(strPruned.count() === 11L)
+    val strRange = Seq(GreaterThanOrEqual("payload", "w250"), LessThanOrEqual("payload", "w260"))
+    assert(kept(s, dir, strRange: _*) === Seq(dirs(2)))
+    assert(ManifestPruning.read(s, dir, col("payload").between("w250", "w260"),
+      strRange: _*).count() === 11L)
 
-    // a range outside every directory plans NOTHING and returns empty
-    val none = VersionedLake.readBetween(s, dir, "id", 1000L, 2000L)
-    assert(none.inputFiles.isEmpty && none.count() === 0L)
+    // a range outside every directory plans NOTHING
+    assert(kept(s, dir, GreaterThanOrEqual("id", 1000L), LessThanOrEqual("id", 2000L)).isEmpty)
   }
 
-  test("readBetween keeps stats-less directories and skips all-null ones") {
+  test("the manifest pruner keeps stats-less directories and skips all-null ones") {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("vlake_stats_mixed").toString
@@ -287,13 +296,14 @@ class VersionedLakeSpec extends SparkSpec {
     VersionedLake.appendCommit(
       Seq(Tuple2(null.asInstanceOf[java.lang.Long], "ghost")).toDF("id", "payload"),
       dir, statsCols = Seq("id"))
-    val out = VersionedLake.readBetween(s, dir, "id", 0L, 9L)
+    val range = Seq(GreaterThanOrEqual("id", 0L), LessThanOrEqual("id", 9L))
+    val dirs = VersionedLake.manifest(s, dir, VersionedLake.currentVersion(s, dir).get)
+    assert(kept(s, dir, range: _*) === dirs.take(2),
+      "the stats-less directory stays planned; the all-null one is pruned " +
+        "(a range never matches null)")
+    val out = ManifestPruning.read(s, dir, col("id").between(0L, 9L), range: _*)
     assert(out.collect().map(_.getLong(0)).toSet === (0L to 9L).toSet,
       "stats-less directory still scanned, its out-of-range row filtered exactly")
-    val v = VersionedLake.currentVersion(s, dir).get
-    val dirs = VersionedLake.manifest(s, dir, v)
-    assert(!out.inputFiles.exists(_.contains(dirs(2))),
-      "the all-null directory must be pruned (BETWEEN never matches null)")
   }
 
   test("optimize recomputes stats over the compacted union") {
@@ -310,7 +320,8 @@ class VersionedLakeSpec extends SparkSpec {
     val (mn, mx) = stats.values.head("id")
     assert(mn === Some("0") && mx === Some("104"),
       "compacted directory stats must span the union")
-    assert(VersionedLake.readBetween(s, dir, "id", 2L, 3L)
+    assert(ManifestPruning.read(s, dir, col("id").between(2L, 3L),
+      GreaterThanOrEqual("id", 2L), LessThanOrEqual("id", 3L))
       .collect().map(_.getLong(0)).sorted === Seq(2L, 3L))
   }
 
@@ -367,7 +378,8 @@ class VersionedLakeSpec extends SparkSpec {
     assert(frac >= 0.40, s"zordered compaction must prune y bands, got $frac")
 
     // manifest-stats layer still exact on top of the new layout
-    assert(VersionedLake.readBetween(s, dir, "x", 10, 20).count() ===
+    assert(ManifestPruning.read(s, dir, col("x").between(10, 20),
+      GreaterThanOrEqual("x", 10), LessThanOrEqual("x", 20)).count() ===
       VersionedLake.read(s, dir).filter(col("x").between(10, 20)).count())
   }
 
@@ -395,20 +407,18 @@ class VersionedLakeSpec extends SparkSpec {
       mn.get.toLong <= 121L && 121L <= mx.get.toLong
     }, "fixture must make min/max pruning impossible")
     // ...but the bloom plans exactly the one directory that has the key
-    val hit = VersionedLake.readPoint(s, dir, "id", 121L)
-    assert(hit.inputFiles.nonEmpty && hit.inputFiles.forall(_.contains(dirs(1))),
+    assert(kept(s, dir, EqualTo("id", 121L)) === Seq(dirs(1)),
       s"point lookup must plan only batch(1)'s directory")
+    val hit = ManifestPruning.read(s, dir, col("id") === 121L, EqualTo("id", 121L))
     assert(hit.collect().map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((121L, "p121")))
 
     // string column probes hash the committed type the writer hashed
-    val strHit = VersionedLake.readPoint(s, dir, "payload", "p200")
-    assert(strHit.inputFiles.forall(_.contains(dirs(2))))
-    assert(strHit.count() === 1L)
+    assert(kept(s, dir, EqualTo("payload", "p200")) === Seq(dirs(2)))
+    assert(ManifestPruning.read(s, dir, col("payload") === "p200",
+      EqualTo("payload", "p200")).count() === 1L)
 
-    // an absent key plans NOTHING; null-equality matches nothing
-    val miss = VersionedLake.readPoint(s, dir, "id", 1234L)
-    assert(miss.inputFiles.isEmpty && miss.count() === 0L)
-    assert(VersionedLake.readPoint(s, dir, "id", null).count() === 0L)
+    // an absent key plans NOTHING
+    assert(kept(s, dir, EqualTo("id", 1234L)).isEmpty)
   }
 
   test("bloom-less directories read conservatively; optimize recomputes the bloom") {
@@ -422,9 +432,9 @@ class VersionedLakeSpec extends SparkSpec {
       (0L to 99L).map(i => (i, s"n$i")).toDF("id", "payload"), dir, bloom = bloom)
     val v0 = VersionedLake.currentVersion(s, dir).get
     val dirs0 = VersionedLake.manifest(s, dir, v0)
-    val out = VersionedLake.readPoint(s, dir, "id", 7L)
-    assert(out.inputFiles.exists(_.contains(dirs0.head)),
+    assert(kept(s, dir, EqualTo("id", 7L)).contains(dirs0.head),
       "the bloom-less directory must stay in the plan (conservative)")
+    val out = ManifestPruning.read(s, dir, col("id") === 7L, EqualTo("id", 7L))
     assert(out.collect().map(_.getLong(0)).toSeq === Seq(7L))
 
     // OPTIMIZE merges the directories: the bloom must be recomputed over
@@ -434,8 +444,8 @@ class VersionedLakeSpec extends SparkSpec {
     val dirs1 = VersionedLake.manifest(s, dir, v1)
     assert(dirs1.size === 1)
     assert(VersionedLake.dirBlooms(s, dir, v1).keySet === dirs1.toSet)
-    assert(VersionedLake.readPoint(s, dir, "id", 500L).count() === 1L)
-    assert(VersionedLake.readPoint(s, dir, "id", 7L).count() === 1L)
-    assert(VersionedLake.readPoint(s, dir, "id", 4321L).inputFiles.isEmpty)
+    assert(ManifestPruning.read(s, dir, col("id") === 500L, EqualTo("id", 500L)).count() === 1L)
+    assert(ManifestPruning.read(s, dir, col("id") === 7L, EqualTo("id", 7L)).count() === 1L)
+    assert(kept(s, dir, EqualTo("id", 4321L)).isEmpty)
   }
 }

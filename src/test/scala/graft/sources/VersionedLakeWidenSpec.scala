@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types._
 
 /** Metadata-only type widening: one manifest commit, no file rewrites,
@@ -57,7 +58,10 @@ class VersionedLakeWidenSpec extends SparkSpec {
       (100 until 200).map(i => (i, s"v$i")).toDF("k", "v"), dir, statsCols = Seq("k"))
     VersionedLake.widenColumn(s, dir, "k", LongType)
     // stats carried: the range read still prunes and still answers right
-    val got = VersionedLake.readBetween(s, dir, "k", 150L, 155L)
+    val range = Seq(GreaterThanOrEqual("k", 150L), LessThanOrEqual("k", 155L))
+    val dirs = VersionedLake.manifest(s, dir, VersionedLake.currentVersion(s, dir).get)
+    assert(ManifestPruning.kept(s, dir, range: _*) === Seq(dirs(1)))
+    val got = ManifestPruning.read(s, dir, col("k").between(150L, 155L), range: _*)
       .orderBy("k").collect().map(_.getLong(0))
     assert(got.toSeq === (150L to 155L))
   }

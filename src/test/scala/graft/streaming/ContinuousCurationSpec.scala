@@ -2,9 +2,10 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.MinHash
-import graft.sources.VersionedLake
+import graft.sources.{ManifestPruning, VersionedLake}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
 
 /** The continuous-curation loop end to end: a document stream is
   * near-dup-checked against the STANDING corpus per micro-batch
@@ -15,6 +16,14 @@ import org.apache.spark.sql.functions._
   * VersionedLake.appendCommit).
   */
 class ContinuousCurationSpec extends SparkSpec {
+
+  /** The loop's compaction cadence: [[VersionedLake.optimize]] once the
+    * manifest reaches `maxDirs` directories, else nothing.
+    */
+  private def compactAt(dir: String, maxDirs: Int): Unit =
+    if (VersionedLake.manifest(spark, dir,
+        VersionedLake.currentVersion(spark, dir).get).size >= maxDirs)
+      VersionedLake.optimize(spark, dir): Unit
 
   test("streamed batches dedup against everything already admitted") {
     val s = spark
@@ -95,7 +104,7 @@ class ContinuousCurationSpec extends SparkSpec {
         // sink-side failure-before-ack replay: must be a no-op
         VersionedLake.appendCommitTxn(batch, dir, "loop", epoch,
           statsCols = Seq("id"), bloom = bloom)
-        VersionedLake.optimizeIfNeeded(s, dir, maxDirs = 3): Unit
+        compactAt(dir, maxDirs = 3)
       }
       .start()
     try {
@@ -120,8 +129,9 @@ class ContinuousCurationSpec extends SparkSpec {
     assert(VersionedLake.txnWatermarks(s, dir, cur) === Map("loop" -> 4L),
       "writer progress must survive auto-compaction")
     // the layers still fire after N compactions
-    assert(VersionedLake.readBetween(s, dir, "id", 1000, 2000).count() === 0L)
-    assert(VersionedLake.readPoint(s, dir, "id", 42L).count() === 1L)
+    assert(ManifestPruning.kept(s, dir,
+      GreaterThanOrEqual("id", 1000L), LessThanOrEqual("id", 2000L)).isEmpty)
+    assert(ManifestPruning.read(s, dir, col("id") === 42L, EqualTo("id", 42L)).count() === 1L)
   }
 
   test("ingest loop + persisted view: the view tracks the table through replays and compactions") {
@@ -145,7 +155,7 @@ class ContinuousCurationSpec extends SparkSpec {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
         VersionedLake.appendCommitTxn(batch, dir, "loop", epoch)
         VersionedLake.appendCommitTxn(batch, dir, "loop", epoch) // replay
-        VersionedLake.optimizeIfNeeded(s, dir, maxDirs = 3): Unit
+        compactAt(dir, maxDirs = 3)
         LakeView.sync(s, dir, viewDir, stateOf): Unit
         LakeView.sync(s, dir, viewDir, stateOf): Unit // replay: no-op
       }
