@@ -26,8 +26,9 @@ import org.json4s.jackson.JsonMethods
   * official record alone.
   *
   * Self-diagnosing record: a [[JobLog]] registered around each query
-  * attributes its GC time, shuffle read/write bytes, spill, peak task
-  * execution memory and generated classes (queries run sequentially and
+  * attributes its Spark jobs and stages, GC time, shuffle read/write
+  * bytes, spill, peak task execution memory and generated classes
+  * (queries run sequentially and
   * the listener bus is drained at both query boundaries, so the window
   * holds exactly the query's tasks), written to `BENCH_DETAIL.json` next to
   * the compact line — so a wall-time swing on an untouched query is
@@ -37,7 +38,9 @@ import org.json4s.jackson.JsonMethods
   * (158 queries × 5 metrics cannot fit the driver's ~1900-char window).
   * A query that throws is a failure, not a timing: its row in the file
   * carries the first line of its error instead of metrics, it is left
-  * out of every total, and the compact line counts it in `failed`.
+  * out of every total, and the compact line counts it in `failed`. A
+  * warm-up step that throws is listed in the file's `warmup_failed`,
+  * with the first line of its error.
   *
   * The session start, warm-up and job listener here are the one harness
   * the dev tools in `graft.tools` call too, so a profile or plan dump sees
@@ -47,7 +50,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = warmSession(sfDir)
+    val (spark, warmupFailed) = warmSession(sfDir)
 
     // Dev loop: SPARK_GRAFT_ONLY=q_a,q_b times just those queries.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(queryNames(_).toSet)
@@ -103,32 +106,12 @@ object Bench {
     val totShufW = detail.map(_._3.shuffleWriteB).sum
     val totSpill = detail.map(_._3.spillB).sum
 
-    // Full per-query diagnostics to a file (no output-window budget):
-    // sec + gc_ms + shuffle read/write + spill + peak execution memory +
-    // classes compiled in that pass (0 when every class was cached by an
-    // earlier pass); a failed query's row carries its first error line
-    // instead.
+    // Full per-query diagnostics to a file (no output-window budget)
     def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
     try {
-      val rows = detail.map { case (name, sec, d) =>
-        s"""{"name":"$name","sec":${math.round(sec * 1000) / 1000.0},"gc_ms":${d.gcMs},""" +
-          s""""shuffle_read_mb":${mb(d.shuffleReadB)},"shuffle_write_mb":${mb(d.shuffleWriteB)},""" +
-          s""""spill_mb":${mb(d.spillB)},"peak_mem_mb":${mb(d.peakMemB)},""" +
-          s""""codegen_classes":${d.codegenClasses}}"""
-      } ++ failedBy.map { case (name, err) =>
-        val error = JsonMethods.compact(JsonMethods.render(JString(err)))
-        s"""{"name":"$name","failed":true,"error":$error}"""
-      }
-      val sfName0 = sfDir.split("/").filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-      val passTot = passTotals.map(s => math.round(s * 1000) / 1000.0).mkString("[", ",", "]")
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_DETAIL.json"),
-        (s"""{"sf":"$sfName0","timing":"median_of_${iters}_passes",""" +
-          s""""pass_totals_sec":$passTot,""" +
-          s""""total_sec":${math.round(total * 1000) / 1000.0},"failed":${failedBy.size},""" +
-          s""""gc_ms":$totGc,"shuffle_read_mb":${mb(totShufR)},""" +
-          s""""shuffle_write_mb":${mb(totShufW)},"spill_mb":${mb(totSpill)},""" +
-          s""""queries":[${rows.mkString(",")}]}""")
+        detailJson(sfDir, passTotals.toSeq, detail.toSeq, failedBy.toSeq, warmupFailed)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
 
@@ -166,6 +149,47 @@ object Bench {
     spark.stop()
     println(line)
     System.out.flush()
+  }
+
+  /** The BENCH_DETAIL.json record: per pass, the suite total; per timed
+    * query, its median pass's seconds, Spark jobs and stages, GC, shuffle
+    * read/write, spill, peak execution memory and classes compiled in
+    * that pass (0 when every class was cached by an earlier pass); a
+    * failed query's row carries its first error line instead; and each
+    * failed warm-up step with its first error line.
+    */
+  def detailJson(
+      sfDir: String,
+      passTotals: Seq[Double],
+      detail: Seq[(String, Double, Totals)],
+      failedBy: Seq[(String, String)],
+      warmupFailed: Seq[(String, String)]): String = {
+    def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
+    def str(v: String): String = JsonMethods.compact(JsonMethods.render(JString(v)))
+    val rows = detail.map { case (name, sec, d) =>
+      s"""{"name":"$name","sec":${math.round(sec * 1000) / 1000.0},""" +
+        s""""jobs":${d.jobs},"stages":${d.stages},"gc_ms":${d.gcMs},""" +
+        s""""shuffle_read_mb":${mb(d.shuffleReadB)},"shuffle_write_mb":${mb(d.shuffleWriteB)},""" +
+        s""""spill_mb":${mb(d.spillB)},"peak_mem_mb":${mb(d.peakMemB)},""" +
+        s""""codegen_classes":${d.codegenClasses}}"""
+    } ++ failedBy.map { case (name, err) =>
+      s"""{"name":"$name","failed":true,"error":${str(err)}}"""
+    }
+    val warm = warmupFailed.map { case (step, err) =>
+      s"""{"step":${str(step)},"error":${str(err)}}"""
+    }
+    val sfName = sfDir.split("/").filter(_.nonEmpty).lastOption.getOrElse(sfDir)
+    val passTot = passTotals.map(s => math.round(s * 1000) / 1000.0).mkString("[", ",", "]")
+    val total = detail.map(_._2).sum
+    s"""{"sf":"$sfName","timing":"median_of_${passTotals.size}_passes",""" +
+      s""""pass_totals_sec":$passTot,""" +
+      s""""total_sec":${math.round(total * 1000) / 1000.0},"failed":${failedBy.size},""" +
+      s""""gc_ms":${detail.map(_._3.gcMs).sum},""" +
+      s""""shuffle_read_mb":${mb(detail.map(_._3.shuffleReadB).sum)},""" +
+      s""""shuffle_write_mb":${mb(detail.map(_._3.shuffleWriteB).sum)},""" +
+      s""""spill_mb":${mb(detail.map(_._3.spillB).sum)},""" +
+      s""""warmup_failed":${warm.mkString("[", ",", "]")},""" +
+      s""""queries":[${rows.mkString(",")}]}"""
   }
 
   /** One timed run of `q`: its seconds, or the first line of the error
@@ -251,23 +275,25 @@ object Bench {
   }
 
   /** The session Bench and the dev tools measure: [[session]] after
-    * [[warmUp]], with each failed warm-up step printed to stderr.
+    * [[warmUp]], with its failed steps, each also printed to stderr.
     */
-  def warmSession(sfDir: String): SparkSession = {
+  def warmSession(sfDir: String): (SparkSession, Seq[(String, String)]) = {
     val spark = session()
-    warmUp(spark, sfDir).foreach { case (name, err) =>
+    val failed = warmUp(spark, sfDir)
+    failed.foreach { case (name, err) =>
       System.err.println(s"[warm-up] $name failed: $err")
     }
-    spark
+    (spark, failed)
   }
 
   /** One window's task metrics, summed over its stages; `peakMemB` is the
     * largest peak execution memory of any task; `codegenClasses` the
-    * classes compiled in the window.
+    * classes compiled in the window; `jobs` and `stages` the Spark jobs
+    * and stages it started.
     */
   final case class Totals(
       gcMs: Long, shuffleReadB: Long, shuffleWriteB: Long, spillB: Long, peakMemB: Long,
-      codegenClasses: Long = 0L)
+      codegenClasses: Long = 0L, jobs: Int = 0, stages: Int = 0)
 
   /** Jobs, with their call sites, and per-stage rollups of task metrics
     * (wall, task time, GC, shuffle, spill, peak memory): the level that
@@ -296,7 +322,8 @@ object Bench {
     def totals: Totals = {
       val ss = stages
       Totals(ss.map(_.gcMs).sum, ss.map(_.shuffleReadB).sum, ss.map(_.shuffleWriteB).sum,
-        ss.map(_.spillB).sum, ss.map(_.peakMemB).maxOption.getOrElse(0L), codegenClasses)
+        ss.map(_.spillB).sum, ss.map(_.peakMemB).maxOption.getOrElse(0L), codegenClasses,
+        jobs.size, ss.size)
     }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {

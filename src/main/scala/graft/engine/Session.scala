@@ -52,7 +52,39 @@ object Session {
       // the file outright. With it, `ts` reads as LongType epoch-nanos.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
+  /** The schema `spark.read.parquet(path)` would infer, read on the
+    * driver from the footer of the path's first data file (in path order)
+    * with Spark's own converter under the session's parquet settings
+    * (`nanosAsLong`, binary-as-string, INT96, NTZ inference). Inference
+    * through the reader runs a Spark job per read; this runs none. No
+    * cache: a rewritten file is always read afresh.
+    */
+  def footerSchema(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val it = root.getFileSystem(conf).listFiles(root, true)
+    var first: Option[Path] = None
+    while (it.hasNext) {
+      val st = it.next()
+      val name = st.getPath.getName
+      if (st.isFile && !name.startsWith("_") && !name.startsWith(".") &&
+        first.forall(f => st.getPath.toString < f.toString)) first = Some(st.getPath)
+    }
+    val file = first.getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, file,
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    org.apache.spark.sql.graft.SparkInternals.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+  }
+
   /** Read one of the driver-provided test tables from a scale-factor dir.
+    * The schema comes from the file's footer ([[footerSchema]]), so
+    * building the frame starts no Spark job.
     * Sets the nanos-as-long escape hatch on the live session too, so it
     * works under the driver's own SparkSession (Verify/Bench mains may be
     * launched with a builder we don't control).
@@ -73,7 +105,7 @@ object Session {
       // every ts by the zone offset relative to the DuckDB oracle's naive
       // epoch_us semantics — re-pin it here like nanosAsLong above.
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = readParquet(spark, s"$sfDir/$name.parquet")
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types._
       raw.schema("ts").dataType match {
@@ -85,8 +117,14 @@ object Session {
         case other =>
           throw new IllegalStateException(s"unexpected events.ts type: $other")
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else readParquet(spark, s"$sfDir/$name.parquet")
   }
+
+  /** `spark.read.parquet(path)` with the schema from [[footerSchema]]:
+    * the same frame, and no Spark job to build it.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
 
   /** events with `ts` as a proper TimestampType (micros, truncated from ns)
     * and `ts_ns` preserving full nano precision for ordering.

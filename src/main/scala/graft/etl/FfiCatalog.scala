@@ -5,8 +5,8 @@ import scala.collection.mutable
 import graft.etl.FfiExtract.IngestId
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Sort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Bridge
@@ -19,10 +19,11 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * Immutable: every transform stage returns a new catalog. Every table of
   * an export, from extraction ([[FfiExtract]]) to the load, is a local
   * table: a DataFrame whose optimized plan is a `LocalRelation` of driver
-  * rows. Catalyst folds projections and filters into a local table while
-  * optimizing (`ConvertToLocalRelation`; a filter compiles its predicate);
-  * joins, windows and `distinct` are the driver operators below. So no
-  * plan of an export runs a Spark job, and nothing is cached.
+  * rows. Catalyst folds projections into a local table while optimizing
+  * (`ConvertToLocalRelation`, interpreted); filters, joins, windows and
+  * `distinct` are the driver operators below (Catalyst would compile a
+  * predicate class for each filter it folds). So no plan of an export
+  * runs a Spark job or compiles a class, and nothing is cached.
   *
   * Scale note: one export must fit the driver heap; the 100 TB path is
   * many exports, one catalog each.
@@ -58,6 +59,19 @@ object FfiCatalog {
 
   /** A local table's rows: no job, and no deserializer class as `collect()` compiles. */
   def rows(df: DataFrame): Seq[Row] = Bridge.localRows(df).getOrElse(throw notLocal(df))
+
+  /** A local table's rows where `cond` is true (a null verdict drops the
+    * row, as in `df.filter`), evaluated interpreted on the driver.
+    */
+  def filter(df: DataFrame, cond: Column): DataFrame = {
+    val r = relation(df)
+    val pred = Bridge.logicalPlan(df.filter(cond)) match {
+      case f: Filter =>
+        Predicate.createInterpreted(BindReferences.bindReference(f.condition, f.child.output))
+    }
+    pred.initialize(0)
+    table(df, r.schema, r.data.filter(pred.eval))
+  }
 
   /** `left` left-joined on the driver to each (right, left key, right key)
     * in turn, as an equi-join: each row once per matching right row (in

@@ -227,7 +227,7 @@ object FfiEav {
       dropUnitColOnSplit: Boolean): Seq[(String, DataFrame)] =
     if (unitSystems.length > 1) {
       unitSystems.map { us =>
-        val part = subset.filter(col("Method_UnitSystem") === us)
+        val part = FfiCatalog.filter(subset, col("Method_UnitSystem") === us)
         val named =
           if (us != "English") s"${baseName}_${us}_$suffix" else s"${baseName}_$suffix"
         named -> (if (dropUnitColOnSplit) part.drop("Method_UnitSystem") else part)
@@ -241,8 +241,7 @@ object FfiEav {
       distinctEntries = true)
       .foldLeft(cat) { case (c, (method, subset, unitSystems)) =>
         val withSpp = withSpecies(subset, c.get("LocalSpecies"))
-        val ruled = applyMethodRules(method, withSpp)
-          .na.drop(Seq("EventID"))
+        val ruled = FfiCatalog.filter(applyMethodRules(method, withSpp), col("EventID").isNotNull)
           .drop(IngestId)
         unitSplit(ruled, unitSystems, tableName(method), "Attribute", dropUnitColOnSplit = false)
           .foldLeft(c)((cc, kv) => cc.updated(kv._1, kv._2))

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
   *
   * The reference computes both ids with O(n·m) row-loop lookups; here they
   * are hash joins + Catalyst expressions (SURVEY.md J6/J7, F2–F4). The
-  * join and the keep-first are driver operators over local tables
-  * ([[FfiCatalog.leftJoin]], [[FfiCatalog.keepFirst]]) and the id
-  * derivations fold into them while optimizing, so idents runs no Spark
-  * job; MacroPlot and SampleEvent stay local tables for the EAV assembly,
-  * the event enrichment and the load.
+  * join, the row filters and the keep-first are driver operators over
+  * local tables ([[FfiCatalog.leftJoin]], [[FfiCatalog.filter]],
+  * [[FfiCatalog.keepFirst]]) and the id derivations fold into them while
+  * optimizing, so idents runs no Spark job and compiles no class;
+  * MacroPlot and SampleEvent stay local tables for the EAV assembly, the
+  * event enrichment and the load.
   */
 object FfiIdents {
 
@@ -28,13 +29,14 @@ object FfiIdents {
       .select(
         col("RegistrationUnit_GUID").as("_ru_guid"),
         cleanName(col("RegistrationUnit_Name")).as("_ru_clean"))
-    val planted = FfiCatalog
-      .leftJoin(cat("MacroPlot"), (admin, "MacroPlot_RegistrationUnit_GUID", "_ru_guid"))
-      .withColumn(
-        "PlotID",
-        concat(substring(col("_ru_clean"), 1, 5), cleanName(col("MacroPlot_Name"))))
-      .drop("_ru_guid", "_ru_clean")
-      .na.drop(Seq("MacroPlot_DateIn"))
+    val planted = FfiCatalog.filter(
+      FfiCatalog
+        .leftJoin(cat("MacroPlot"), (admin, "MacroPlot_RegistrationUnit_GUID", "_ru_guid"))
+        .withColumn(
+          "PlotID",
+          concat(substring(col("_ru_clean"), 1, 5), cleanName(col("MacroPlot_Name"))))
+        .drop("_ru_guid", "_ru_clean"),
+      col("MacroPlot_DateIn").isNotNull)
     cat.updated("MacroPlot", FfiCatalog.keepFirst(planted, Seq("PlotID"), col("MacroPlot_DateIn")))
   }
 
@@ -52,17 +54,17 @@ object FfiIdents {
       regexp_replace(
         regexp_extract(col("SampleEvent_Date"), "(\\d{4}-\\d{2}-\\d{2})", 1),
         "-", "")
-    val evented = FfiCatalog
-      .leftJoin(cat("SampleEvent"), (plots, "SampleEvent_Plot_GUID", "_mp_guid"))
-      .withColumn(
-        "EventID",
-        when(
-          coalesce(col("_mp_plot_id"), lit("")) =!= "" && dateDigits =!= "",
-          concat(col("_mp_plot_id"), dateDigits))
-          .otherwise(lit("")))
-      .drop("_mp_guid", "_mp_plot_id")
-      .na.drop(Seq("EventID"))
-      .filter(col("EventID") =!= "")
+    val evented = FfiCatalog.filter(
+      FfiCatalog
+        .leftJoin(cat("SampleEvent"), (plots, "SampleEvent_Plot_GUID", "_mp_guid"))
+        .withColumn(
+          "EventID",
+          when(
+            coalesce(col("_mp_plot_id"), lit("")) =!= "" && dateDigits =!= "",
+            concat(col("_mp_plot_id"), dateDigits))
+            .otherwise(lit("")))
+        .drop("_mp_guid", "_mp_plot_id"),
+      col("EventID").isNotNull && col("EventID") =!= "")
     cat.updated("SampleEvent", FfiCatalog.keepFirst(evented, Seq("EventID")))
   }
 

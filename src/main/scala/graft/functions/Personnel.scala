@@ -37,8 +37,11 @@ object Personnel {
     picked.toSeq.map(_.trim)
   }
 
-  val parseListUdf =
-    udf((v: String) => parseListVal(v))
+  // an untyped UDF converts its argument and result interpreted, where a
+  // typed one compiles an encoder class for each on first use
+  val parseListUdf = udf(new org.apache.spark.sql.api.java.UDF1[String, Seq[String]] {
+    override def call(v: String): Seq[String] = parseListVal(v)
+  }, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))
 
   def parseList(c: Column): Column = parseListUdf(c)
 

@@ -116,6 +116,10 @@ object LakeConstraints {
         }
       }.toSeq
 
+  /** Whether the table declares any constraint a commit probes. */
+  private[sources] def declared(spark: SparkSession, tableDir: String): Boolean =
+    declsOf(spark, tableDir).nonEmpty
+
   /** Declared CHECK constraints, in declaration order. */
   def constraintsOf(spark: SparkSession, tableDir: String): Seq[(String, String)] =
     declsOf(spark, tableDir).collect { case CheckDecl(n, c) => n -> c }

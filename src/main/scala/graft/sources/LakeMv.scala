@@ -168,7 +168,7 @@ object LakeMv {
 
   def drop(corpusDir: String): Unit = registry.remove(norm(corpusDir)): Unit
 
-  def clear(): Unit = { registry.clear(); consulted.clear() }
+  private[graft] def clear(): Unit = { registry.clear(); consulted.clear() }
 
   def isEmpty: Boolean = registry.isEmpty
 

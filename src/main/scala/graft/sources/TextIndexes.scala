@@ -57,7 +57,7 @@ object TextIndexes {
 
   def drop(corpus: String): Unit = registry.remove(norm(corpus)): Unit
 
-  def clear(): Unit = { registry.clear(); consulted.clear() }
+  private[graft] def clear(): Unit = { registry.clear(); consulted.clear() }
 
   def isEmpty: Boolean = registry.isEmpty
 

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.engine.Session
+import graft.engine.Session.readParquet
 import org.apache.spark.sql.functions._
 
 /** Log-structured versioned lake table with ATOMIC publishes — the
@@ -987,16 +989,6 @@ object VersionedLake {
     org.apache.spark.sql.types.StructType(out.toSeq)
   }
 
-  /** One aggregation pass over the batch: per-column min/max (string-cast
-    * by Spark itself so the stored form matches what a reader's literal
-    * would cast to), an HLL distinct-count sketch, and the exact null
-    * count — the `#stats` and `#ndv` lines of one directory from ONE
-    * job. O(delta) like the write it accompanies. The sketch hashes the
-    * STRING form: type-uniform, and every legal widen (int chain,
-    * decimal scale growth, date→timestamp) is injective on values, so a
-    * stored-form sketch keeps estimating the logical distinct count
-    * across schema evolution without a rewrite.
-    */
   /** Per-directory equi-height histogram resolution: numeric stats
     * columns carry `HistBins+1` quantile edges (percentile_approx in the
     * same single stats aggregate — no extra pass), riding the `#ndv`
@@ -1009,21 +1001,12 @@ object VersionedLake {
     */
   val HistBins = 32
 
-  private def columnStatsNdv(
-      df: DataFrame, statsCols: Seq[String]): Option[(String, String)] = {
-    if (statsCols.isEmpty) return None
-    val aggs = statsAggExprs(df, statsCols)
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    Some(renderStatsRow(statsCols, row, 0))
-  }
-
-  /** [[columnStatsNdv]] for MANY directories in ONE aggregation job:
-    * the same agg expressions under `groupBy(tag)`, one result row per
-    * tag value. This is what keeps `analyzeStats` from submitting one
-    * Spark job per directory — the layers are per-directory aggregates,
-    * so a grouped pass over the tagged union emits every directory's
-    * `#stats`/`#ndv` payload from one job (the driver collect is
-    * O(directories in the chunk), manifest-sized by construction).
+  /** The per-directory stats aggregates under `groupBy(tag)`, one result
+    * row per tag value. This is what keeps `analyzeStats` from submitting
+    * one Spark job per directory — the layers are per-directory
+    * aggregates, so a grouped pass over the tagged union emits every
+    * directory's `#stats`/`#ndv` payload from one job (the driver collect
+    * is O(directories in the chunk), manifest-sized by construction).
     */
   private def columnStatsNdvBy(
       df: DataFrame, tag: String, statsCols: Seq[String]): Seq[(String, (String, String))] = {
@@ -1032,6 +1015,14 @@ object VersionedLake {
       .map(row => row.getString(0) -> renderStatsRow(statsCols, row, 1))
   }
 
+  /** One directory's `#stats`/`#ndv` aggregates, 7 per column: min/max
+    * (string-cast by Spark, as a reader's literal casts), an HLL sketch,
+    * the exact null count, histogram edges, a frequent-values sketch and
+    * an exact sum — one-pass mergeable, so they ride the write as observed
+    * metrics ([[writeDataDir]]) or a grouped pass ([[columnStatsNdvBy]]).
+    * The sketch hashes the STRING form: every legal widen is injective on
+    * values, so it keeps estimating across schema evolution.
+    */
   private def statsAggExprs(df: DataFrame, statsCols: Seq[String]): Seq[Column] = {
     val missing = statsCols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"statsCols not in the batch schema: ${missing.mkString(", ")}")
@@ -1344,7 +1335,7 @@ object VersionedLake {
   /** Per-directory EXACT SUMS a version's manifest carries (the `"s"`
     * entries riding the `#ndv` layer): dir -> col -> exact decimal sum
     * of the directory's non-null values (integral and bounded-scale
-    * decimal stats columns only — see columnStatsNdv). Absence means
+    * decimal stats columns only — see statsAggExprs). Absence means
     * refused/legacy/all-null; consumers disambiguate all-null via the
     * layer's exact null counts. Lenient like [[dirHist]].
     */
@@ -1685,11 +1676,22 @@ object VersionedLake {
   private def txnsAt(spark: SparkSession, tableDir: String, cur: Option[Long]): Map[String, Long] =
     cur.map(v => txnWatermarks(spark, tableDir, v)).getOrElse(Map.empty)
 
-  /** Write `df` into one fresh immutable data directory; returns its name.
-    * With `zorderBy`, rows are clustered on the interleaved Z-curve key
+  /** One written data directory: its name, its row count, and its
+    * `#stats`/`#ndv` payload (None without stats columns).
+    */
+  private final case class Written(dir: String, rows: Long, stats: Option[(String, String)]) {
+    def statsBy: Map[String, String] = stats.map { case (s, _) => dir -> s }.toMap
+    def ndvBy: Map[String, String] = stats.map { case (_, n) => dir -> n }.toMap
+  }
+
+  /** Write `df` into one fresh immutable data directory. With `zorderBy`,
+    * rows are clustered on the interleaved Z-curve key
     * ([[Lake.withZorderKey]]): unpartitioned tables range-partition on the
     * key first, so files cover DISJOINT Z-ranges and parquet footer stats
     * prune on every clustered dimension, not just a leading sort column.
+    * The row count and `statsCols` aggregates ([[statsAggExprs]]) are
+    * observed metrics of the written frame, computed by the write job's
+    * result stage (after any shuffle: a re-run map stage counts nothing twice).
     */
   private def writeDataDir(
       df: DataFrame,
@@ -1697,7 +1699,8 @@ object VersionedLake {
       parts: Seq[String],
       maxRecordsPerFile: Long,
       zorderBy: Seq[String] = Nil,
-      sortWithin: Seq[String] = Nil): String = {
+      sortWithin: Seq[String] = Nil,
+      statsCols: Seq[String] = Nil): Written = {
     val name = java.util.UUID.randomUUID().toString
     val keyed = if (zorderBy.isEmpty) df else Lake.withZorderKey(df, zorderBy)
     val shaped =
@@ -1718,30 +1721,38 @@ object VersionedLake {
         // postings contract
         shaped.sortWithinPartitions((parts ++ sortWithin).map(col): _*)
       else shaped
-    val writer0 = sorted.drop(Lake.ZKey)
+    val out = sorted.drop(Lake.ZKey)
+    val observed = org.apache.spark.sql.Observation()
+    val metrics = (count(lit(1)) +: statsAggExprs(out, statsCols)).zipWithIndex
+      .map { case (m, i) => m.as(s"_m$i") }
+    val writer0 = out.observe(observed, metrics.head, metrics.tail: _*)
       .write.mode("error").option("maxRecordsPerFile", maxRecordsPerFile)
     val writer = if (parts.nonEmpty) writer0.partitionBy(parts: _*) else writer0
     writer.parquet(s"$tableDir/data/$name")
-    name
+    // the metrics arrive through the listener bus, within milliseconds
+    val row = scala.concurrent.Await.result(observed.future,
+      scala.concurrent.duration.Duration(5, "min"))
+    Written(name, row.getLong(0),
+      if (statsCols.isEmpty) None else Some(renderStatsRow(statsCols, row, 1)))
   }
 
   /** [[writeDataDir]] for frames that may be EMPTY (a CoW rewrite whose
-    * directory lost every row): write first, then count rows from the
-    * footers the write just produced (driver-side, O(files in the new
-    * directory)); an empty result deletes the directory and reports
-    * None. This replaces the previous `survivors.isEmpty` probe — a
-    * whole extra query execution (plan + job) per rewritten directory
-    * whose only purpose was to decide whether to run the write.
+    * directory lost every row): write, then read the observed row count;
+    * an empty result deletes the directory and reports None. Deciding
+    * after the write costs no extra query execution.
     */
   private def writeDataDirNonEmpty(
       df: DataFrame,
       tableDir: String,
       parts: Seq[String],
-      maxRecordsPerFile: Long): Option[String] = {
-    val name = writeDataDir(df, tableDir, parts, maxRecordsPerFile)
-    if (dirRowMeta(spark = df.sparkSession, tableDir, name).exists(_._1 > 0L)) Some(name)
+      maxRecordsPerFile: Long,
+      sortWithin: Seq[String] = Nil,
+      statsCols: Seq[String] = Nil): Option[Written] = {
+    val w = writeDataDir(df, tableDir, parts, maxRecordsPerFile, sortWithin = sortWithin,
+      statsCols = statsCols)
+    if (w.rows > 0L) Some(w)
     else {
-      val p = new org.apache.hadoop.fs.Path(s"$tableDir/data/$name")
+      val p = new org.apache.hadoop.fs.Path(s"$tableDir/data/${w.dir}")
       scala.util.Try(
         p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
           .delete(p, true)): Unit
@@ -2114,12 +2125,9 @@ object VersionedLake {
     // a snapshot REPLACES the table, so UNIQUE needs only the
     // within-batch check (no base version to probe)
     LakeConstraints.enforceUnique(df.sparkSession, tableDir, df, None, "commit")
-    val d = writeDataDir(df, tableDir, parts, maxRecordsPerFile,
-      sortWithin = sortWithin)
-    val statsNdv = columnStatsNdv(df, statsCols)
-    val stats = statsNdv.map { case (s, _) => d -> s }.toMap
-    val ndv = statsNdv.map { case (_, n) => d -> n }.toMap
-    val blooms = bloomJson(df, bloom).map(d -> _).toMap
+    val w = writeDataDir(df, tableDir, parts, maxRecordsPerFile,
+      sortWithin = sortWithin, statsCols = statsCols)
+    val blooms = bloomJson(df, bloom).map(w.dir -> _).toMap
     // a full snapshot replaces the table regardless of base version, so a
     // lost race only means re-claiming the next number — data is written.
     // Gated on the base anyway so writer txn watermarks carry forward
@@ -2132,9 +2140,9 @@ object VersionedLake {
       txn.foreach { case (app, b) =>
         if (priorTxns.get(app).exists(_ >= b)) return cur.get
       }
-      publishManifest(spark, tableDir, Seq(d), nullableAll(df.schema), stats, blooms,
+      publishManifest(spark, tableDir, Seq(w.dir), nullableAll(df.schema), w.statsBy, blooms,
         expectedBase = Some(cur), txns = priorTxns ++ txn.toMap, op = "snapshot",
-        ndv = ndv)
+        ndv = w.ndvBy)
     }
   }
 
@@ -2154,14 +2162,15 @@ object VersionedLake {
       maxRecordsPerFile: Long = 8L * 1000 * 1000,
       op: String = "replace"): Long = {
     val spark = df.sparkSession
-    val d = writeDataDir(df, tableDir, parts, maxRecordsPerFile)
+    val d = writeDataDir(df, tableDir, parts, maxRecordsPerFile).dir
     publishManifest(spark, tableDir, Seq(d), nullableAll(df.schema),
       expectedBase = Some(Some(base)),
       txns = txnWatermarks(spark, tableDir, base), op = op)
   }
 
   /** O(delta) append commit: writes ONLY the batch; the new manifest is
-    * the prior version's directories plus the batch's. The
+    * the prior version's directories plus the batch's, its stats observed
+    * by the write: without a bloom or constraint, ONE Spark job. The
     * `foreachBatch` body for an atomically-published streaming ingest.
     * A batch may add columns: the committed schema is the union-by-name
     * of the prior version's and the batch's (see [[SchemaHeader]]), so
@@ -2262,29 +2271,25 @@ object VersionedLake {
       txn: Option[(String, Long)],
       sortWithin: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    // the batch feeds the write, the stats aggregation, the bloom build
-    // and any constraint probe: persist the (bounded, delta-sized) batch
-    // once instead of re-running its source plan per consumer
-    val cacheBatch = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    // persisted only when a bloom build or a constraint probe reads the
+    // batch besides the write (which computes its stats)
+    val cacheBatch = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
+      (bloom.isDefined || LakeConstraints.declared(spark, tableDir))
     if (cacheBatch)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     try {
     LakeConstraints.enforce(spark, tableDir, df, "appendCommit")
     LakeConstraints.enforceFk(spark, tableDir, df, "appendCommit")
-    // the expensive work — writing the batch and aggregating its stats —
-    // happens ONCE; the directory is immutable, so losing the publish race
-    // only costs re-reading the prior manifest and retrying the publish.
-    // Write, stats and bloom are independent consumers of the cached
-    // batch with disjoint outputs — overlap them (§2.6).
-    val appendResults = inParallel[Any](spark, Seq(
-      "append: write batch" -> (() =>
+    // the write (with its stats) and bloom happen ONCE; the directory is
+    // immutable, so a lost publish race only re-reads the prior manifest.
+    // Write and bloom have disjoint outputs — overlap them (§2.6).
+    val appendResults = inParallel[Any](spark,
+      ("append: write batch" -> (() =>
         writeDataDir(df, tableDir, parts, maxRecordsPerFile,
-          sortWithin = sortWithin)),
-      "append: batch stats" -> (() => columnStatsNdv(df, statsCols)),
-      "append: batch bloom" -> (() => bloomJson(df, bloom))))
-    val d = appendResults(0).asInstanceOf[String]
-    val batchStats = appendResults(1).asInstanceOf[Option[(String, String)]]
-    val batchBloom = appendResults(2).asInstanceOf[Option[String]]
+          sortWithin = sortWithin, statsCols = statsCols))) +:
+        bloom.toSeq.map(b => "append: batch bloom" -> (() => bloomJson(df, Some(b)))))
+    val w = appendResults.head.asInstanceOf[Written]
+    val batchBloom = appendResults.drop(1).headOption.flatMap(_.asInstanceOf[Option[String]])
     val batchSchema = nullableAll(df.schema)
     retryOnConflict() {
       val cur = currentVersion(spark, tableDir)
@@ -2320,12 +2325,11 @@ object VersionedLake {
       val merged = priorSchema
         .map(p => mergeSchemas(p, batchSchema))
         .getOrElse(batchSchema)
-      val stats = priorStats ++ batchStats.map { case (s, _) => d -> s }.toMap
-      val blooms = priorBlooms ++ batchBloom.map(d -> _).toMap
-      publishManifest(spark, tableDir, prior :+ d, merged, stats, blooms,
+      val blooms = priorBlooms ++ batchBloom.map(w.dir -> _).toMap
+      publishManifest(spark, tableDir, prior :+ w.dir, merged, priorStats ++ w.statsBy, blooms,
         expectedBase = Some(cur),
         txns = priorTxns ++ txn.toMap, eqdeletes = priorEq, op = "append",
-        ndv = batchStats.map { case (_, n) => d -> n }.toMap)
+        ndv = w.ndvBy)
     }
     } finally if (cacheBatch) df.unpersist(blocking = false)
   }
@@ -2414,7 +2418,7 @@ object VersionedLake {
         // (or the caller asked to keep it), drop it unless asked
         val needPos = keepPos || es.exists(isPosDelete)
         val out = es.foldLeft(scan(ds, needPos)) { (acc, e) =>
-          acc.join(broadcast(spark.read.parquet(s"$tableDir/deletes/${e.dir}")),
+          acc.join(broadcast(readParquet(spark, s"$tableDir/deletes/${e.dir}")),
             e.keys, "left_anti")
         }
         if (needPos && !keepPos) out.drop(PosDeleteKeys: _*) else out
@@ -2869,7 +2873,7 @@ object VersionedLake {
     val artFrame =
       if (arts.isEmpty) None
       else if (arts.sizeIs == 1)
-        Some(spark.read.parquet(s"$tableDir/changes/${arts.head.artifact}")
+        Some(readParquet(spark, s"$tableDir/changes/${arts.head.artifact}")
           .withColumn("_commit_version", lit(arts.head.version)))
       else Some(readChangeArtifacts(spark, tableDir, arts))
     val frames = deltas.collect { case f: FrameDelta => f.frame } ++ artFrame
@@ -2974,7 +2978,7 @@ object VersionedLake {
         s"version $v of $tableDir: position delete in a keyed-MoR classification")
       val base = readDirsWithDeletes(spark, tableDir, v - 1, e.dirs,
         versionSchema(spark, tableDir, v - 1))
-      base.join(broadcast(spark.read.parquet(s"$tableDir/deletes/${e.dir}")),
+      base.join(broadcast(readParquet(spark, s"$tableDir/deletes/${e.dir}")),
         e.keys, "left_semi")
     }
     // pre-op manifests classify structurally: a version that only adds
@@ -3062,7 +3066,7 @@ object VersionedLake {
     arts.foreach { a =>
       val s = versionSchema(spark, tableDir, a.version).map(visibleSchema)
         .getOrElse(nullableAll(
-          spark.read.parquet(s"$tableDir/changes/${a.artifact}").schema))
+          Session.footerSchema(spark, s"$tableDir/changes/${a.artifact}")))
       s.fields.foreach { f =>
         if (f.name != "_change_type")
           fields.get(f.name) match {
@@ -3097,37 +3101,6 @@ object VersionedLake {
       .drop("_chg_dir")
   }
 
-  /** Keyed UPSERT (MERGE) as minimal copy-on-write — O(directories that
-    * hold the incoming keys), never O(table). Three phases per commit:
-    *
-    *   1. '''Prune''': a data directory whose committed [min,max] on ANY
-    *      key column cannot intersect the batch's key range provably
-    *      holds no match and is never read (the same manifest-stats layer
-    *      [[pruneDirsForFilters]] reads for catalog scans, applied to the
-    *      MERGE probe).
-    *   2. '''Probe''': one semi-join scan of the surviving candidates
-    *      attributes matching keys to commit directories
-    *      (`input_file_name` captured AT the scan, before the join
-    *      boundary). Only those directories rewrite, with their
-    *      superseded rows anti-joined away — hive layout, stats and
-    *      blooms recomputed exactly as [[deleteWhere]] does; untouched
-    *      directories carry VERBATIM.
-    *   3. '''Append''': the whole batch lands as ONE new directory
-    *      (replacement rows and genuinely-new keys together — the
-    *      anti-join already removed every old copy, so no second probe
-    *      distinguishes them).
-    *
-    * A daily CDC batch against a 100 TB table therefore rewrites the few
-    * directories its keys live in (with time-clustered ingest + key
-    * stats, usually a handful), not the table — the reference's own
-    * MERGE load loop is per-table incremental for the same reason
-    * (/root/reference/parser/xml.py:652). Schema evolution matches
-    * [[appendCommit]]: the committed schema is the union-by-name of
-    * prior and batch schemas; a batch may omit columns (its rows read
-    * back null there) or add them (survivors read back null). Txn
-    * watermarks carry. Publishes optimistically (expectedBase-gated
-    * read-modify-write; a lost race re-probes against the new snapshot).
-    */
   /** Predicate UPDATEs that assign a FOREIGN-KEY column validate the
     * POST-update keys of the matched rows before any rewrite: one
     * filtered projection (only when an FK column is actually assigned),
@@ -3190,6 +3163,37 @@ object VersionedLake {
           "rewrite keys via replaceWhere (delete+insert, one atomic commit)")
     }
 
+  /** Keyed UPSERT (MERGE) as minimal copy-on-write — O(directories that
+    * hold the incoming keys), never O(table). Three phases per commit:
+    *
+    *   1. '''Prune''': a data directory whose committed [min,max] on ANY
+    *      key column cannot intersect the batch's key range provably
+    *      holds no match and is never read (the same manifest-stats layer
+    *      [[pruneDirsForFilters]] reads for catalog scans, applied to the
+    *      MERGE probe).
+    *   2. '''Probe''': one semi-join scan of the surviving candidates
+    *      attributes matching keys to commit directories
+    *      (`input_file_name` captured AT the scan, before the join
+    *      boundary). Only those directories rewrite, with their
+    *      superseded rows anti-joined away — hive layout kept, stats from
+    *      the rewrite's own job, blooms recomputed, as [[deleteWhere]]
+    *      does; untouched directories carry VERBATIM.
+    *   3. '''Append''': the whole batch lands as ONE new directory
+    *      (replacement rows and genuinely-new keys together — the
+    *      anti-join already removed every old copy, so no second probe
+    *      distinguishes them); its write's row count tells a no-op apart.
+    *
+    * A daily CDC batch against a 100 TB table therefore rewrites the few
+    * directories its keys live in (with time-clustered ingest + key
+    * stats, usually a handful), not the table — the reference's own
+    * MERGE load loop is per-table incremental for the same reason
+    * (`parser/xml.py:652`). Schema evolution matches
+    * [[appendCommit]]: the committed schema is the union-by-name of
+    * prior and batch schemas; a batch may omit columns (its rows read
+    * back null there) or add them (survivors read back null). Txn
+    * watermarks carry. Publishes optimistically (expectedBase-gated
+    * read-modify-write; a lost race re-probes against the new snapshot).
+    */
   def upsert(
       spark: SparkSession,
       tableDir: String,
@@ -3264,10 +3268,6 @@ object VersionedLake {
       preWriteGate()
       val kr = phase(spark, "upsert: probe+rewrite")(
         keyedRewrite(spark, tableDir, base, keyDf, keys, ranges, maxRecordsPerFile))
-      // steady-state no-op: nothing to rewrite AND nothing to append —
-      // publishing a version (plus an empty data dir and artifact) for a
-      // no-match empty batch would grow the manifest per idempotent call
-      if (kr.rewritten.isEmpty && updates.isEmpty) return base
       // ON DELETE RESTRICT (parent side): a keyed upsert REMOVES a parent
       // key when the matched pre-images carried it and neither the batch
       // nor the probeKeys-surviving rows re-supply it — a rekey or a
@@ -3347,36 +3347,16 @@ object VersionedLake {
           name
         }
       }
-      // phase 3 — the batch is one new directory, stat'd/bloom'd over the
-      // same columns the manifest already declares (∩ the batch's schema).
-      // The probeKeys delete shape may carry NO batch rows (every row of
-      // the probed keys vanished) — skip the empty append then; the
-      // emptiness check is gated on probeKeys so the classic path never
-      // pays a second batch evaluation
-      val updStatCols = kr.priorStats.values.flatMap(_.keys).toSeq.distinct.sorted
-        .filter(updates.columns.contains)
-      val appendTask: () => (Option[String], Option[(String, (String, String))],
-          Option[(String, String)]) = () =>
-        if (probeKeys.isDefined && updates.isEmpty) (None, None, None)
-        else {
-          val d = writeDataDir(updates, tableDir, parts, maxRecordsPerFile,
-            sortWithin = sortWithin)
-          val st = columnStatsNdv(updates, updStatCols).map(d -> _)
-          val bl = {
-            val cols = kr.priorBlooms.values.flatMap(_.keys).toSeq.distinct.sorted
-              .filter(updates.columns.contains)
-            if (cols.isEmpty) None
-            else {
-              val (m, k) = kr.priorBlooms.values.flatMap(_.values)
-                .map(t => (t._1, t._2)).maxBy(_._1)
-              bloomJson(updates, Some(BloomConfig(cols, m, k))).map(d -> _)
-            }
-          }
-          (Some(d), st, bl)
-        }
-      // the rewritten replacement dirs' stats recomputation only touches
-      // kr.survivingDirs (the appended dir has no prior stats line to
-      // carry or recompute — its layer comes from the append task)
+      // phase 3 — the batch is one new directory carrying the declared
+      // layers; an empty batch (the probeKeys delete shape) appends none
+      val (updStatCols, updBloom) = continuedLayers(spark, tableDir, base, updates.columns.toSeq)
+      val appendTask: () => (Option[Written], Option[(String, String)]) = () =>
+        writeDataDirNonEmpty(updates, tableDir, parts, maxRecordsPerFile,
+            sortWithin = sortWithin, statsCols = updStatCols)
+          .fold[(Option[Written], Option[(String, String)])]((None, None))(w =>
+            (Some(w), bloomJson(updates, updBloom).map(w.dir -> _)))
+      // rewritten dirs' stats came with their writes; only a bloom layer
+      // re-reads one
       val rewriteStatsTask: () => (Map[String, String], Map[String, String],
           Map[String, String]) = () =>
         carryRewriteMeta(spark, tableDir, kr.schemaOpt,
@@ -3391,32 +3371,38 @@ object VersionedLake {
         "upsert: append+stats" -> (() => appendTask()),
         "upsert: rewrite stats" -> (() => rewriteStatsTask())))
       val changesName = results(0).asInstanceOf[Option[String]]
-      val (updDirOpt, updStatsNdv, updBloomOpt) = results(1)
-        .asInstanceOf[(Option[String], Option[(String, (String, String))],
-          Option[(String, String)])]
+      val (appended, updBloomOpt) = results(1)
+        .asInstanceOf[(Option[Written], Option[(String, String)])]
       val (cowStats, cowBlooms, cowNdv) = results(2)
         .asInstanceOf[(Map[String, String], Map[String, String], Map[String, String])]
-      val newDirs = kr.survivingDirs ++ updDirOpt
+      // steady-state no-op: nothing rewritten AND nothing appended —
+      // publishing a version for a no-match empty batch would grow the
+      // manifest per idempotent call; its unreferenced artifact goes
+      if (kr.rewritten.isEmpty && appended.isEmpty) {
+        changesName.foreach(n =>
+          scala.util.Try(fs(spark, tableDir).delete(
+            new org.apache.hadoop.fs.Path(s"$tableDir/changes/$n"), true)))
+        return base
+      }
+      val newDirs = kr.survivingDirs ++ appended.map(_.dir)
       val merged = mergeSchemas(kr.priorSchema, nullableAll(updates.schema))
-      val updStats = updStatsNdv.map { case (d, (s, _)) => d -> s }.toMap
-      val updNdv = updStatsNdv.map { case (d, (_, n)) => d -> n }.toMap
-      val updBloom = updBloomOpt.toMap
       if (newDirs.isEmpty) {
         // the probeKeys delete shape emptied the table: publish a
         // readable empty snapshot (the deleteKeys contract)
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), kr.priorSchema)
           .repartition(1)
-        val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile)
+        val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile).dir
         publishManifest(spark, tableDir, Seq(d), merged,
           expectedBase = Some(Some(base)), txns = priorTxns ++ txn.toMap,
           op = "upsert", changes = changesName)
       } else
         publishManifest(spark, tableDir, newDirs, merged,
-          cowStats ++ updStats, cowBlooms ++ updBloom,
+          cowStats ++ appended.fold(Map.empty[String, String])(_.statsBy),
+          cowBlooms ++ updBloomOpt.toMap,
           expectedBase = Some(Some(base)),
           txns = priorTxns ++ txn.toMap, op = "upsert",
-          changes = changesName, ndv = cowNdv ++ updNdv)
+          changes = changesName, ndv = cowNdv ++ appended.fold(Map.empty[String, String])(_.ndvBy))
     }
     } finally {
       // release the phase-shared caches; early `return base` paths
@@ -3455,9 +3441,9 @@ object VersionedLake {
     require(keys.nonEmpty, "upsertMor needs at least one key column")
     require(keys.forall(updates.columns.contains),
       s"updates missing key columns: ${keys.filterNot(updates.columns.contains).mkString(", ")}")
-    // the batch feeds the typed-key distinct, the delta write, the stats
-    // and bloom aggregations (and any constraint probes): persist the
-    // bounded delta once, released in the finally below
+    // the batch feeds the typed-key distinct, the delta write (which
+    // computes its stats), any bloom aggregation and constraint probes:
+    // persist the bounded delta once, released in the finally below
     val cacheBatch = updates.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (cacheBatch)
       updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -3496,7 +3482,11 @@ object VersionedLake {
     }
     val delName = java.util.UUID.randomUUID().toString
     typedKeys.write.mode("error").parquet(s"$tableDir/deletes/$delName")
-    val updDir = writeDataDir(updates, tableDir, parts, maxRecordsPerFile)
+    // the layers base0 declares continue onto the batch (a racing commit
+    // declaring others changes only which the new directory carries)
+    val (statCols, bloomCfg) = continuedLayers(spark, tableDir, base0, updates.columns.toSeq)
+    val upd = writeDataDir(updates, tableDir, parts, maxRecordsPerFile, statsCols = statCols)
+    val updBloom = bloomJson(updates, bloomCfg).map(upd.dir -> _).toMap
     retryOnConflict() {
       val cur = currentVersion(spark, tableDir).get
       val priorTxns = txnWatermarks(spark, tableDir, cur)
@@ -3507,28 +3497,13 @@ object VersionedLake {
       val priorSchema = versionSchema(spark, tableDir, cur).getOrElse(committed)
       val merged = mergeSchemas(priorSchema, nullableAll(updates.schema))
       val priorStats = dirStats(spark, tableDir, cur).map { case (d, c) => d -> statsJson(c) }
-      val statCols = dirStats(spark, tableDir, cur).values.flatMap(_.keys)
-        .toSeq.distinct.sorted.filter(updates.columns.contains)
-      val updStatsNdv = columnStatsNdv(updates, statCols)
-      val updStats = updStatsNdv.map { case (s, _) => updDir -> s }.toMap
-      val priorBlooms = dirBlooms(spark, tableDir, cur)
-      val updBloom = {
-        val cols = priorBlooms.values.flatMap(_.keys).toSeq.distinct.sorted
-          .filter(updates.columns.contains)
-        if (cols.isEmpty) None
-        else {
-          val (m, k) = priorBlooms.values.flatMap(_.values)
-            .map(t => (t._1, t._2)).maxBy(_._1)
-          bloomJson(updates, Some(BloomConfig(cols, m, k)))
-        }
-      }.map(updDir -> _).toMap
-      publishManifest(spark, tableDir, dirs :+ updDir, merged,
-        priorStats ++ updStats, dirBloomsRaw(spark, tableDir, cur) ++ updBloom,
+      publishManifest(spark, tableDir, dirs :+ upd.dir, merged,
+        priorStats ++ upd.statsBy, dirBloomsRaw(spark, tableDir, cur) ++ updBloom,
         expectedBase = Some(Some(cur)),
         txns = priorTxns ++ txn.toMap,
         eqdeletes = dirEqDeletes(spark, tableDir, cur) :+ EqDelete(delName, keys, dirs),
         op = "upsert_mor",
-        ndv = updStatsNdv.map { case (_, n) => updDir -> n }.toMap)
+        ndv = upd.ndvBy)
     }
     } finally if (cacheBatch) updates.unpersist(blocking = false)
   }
@@ -3593,7 +3568,7 @@ object VersionedLake {
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), kr.priorSchema)
           .repartition(1)
-        val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile)
+        val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile).dir
         publishManifest(spark, tableDir, Seq(d), kr.priorSchema,
           expectedBase = Some(Some(base)), txns = priorTxns ++ txn.toMap,
           op = "delete_keys", changes = changesName)
@@ -3692,7 +3667,7 @@ object VersionedLake {
       val schemaOpt = versionSchema(spark, tableDir, base)
       val priorSchema = schemaOpt
         .getOrElse(nullableAll(readVersion(spark, tableDir, base).schema))
-      def delKeys(e: EqDelete) = spark.read.parquet(s"$tableDir/deletes/${e.dir}")
+      def delKeys(e: EqDelete) = readParquet(spark, s"$tableDir/deletes/${e.dir}")
       // which scoped directories actually hold matching keys? one probe
       // per delete file; the collect is bounded by the file count
       val affected: Set[String] = dels.flatMap { e =>
@@ -3706,7 +3681,8 @@ object VersionedLake {
           .map(_.getString(0))
           .flatMap(f => scoped.find(d => f.contains(s"/$d/")))
       }.toSet
-      val rewritten: Map[String, Option[String]] = affected.map { d =>
+      val priorStats = dirStats(spark, tableDir, base)
+      val rewritten: Map[String, Option[Written]] = affected.map { d =>
         val es = dels.filter(_.dirs.contains(d))
         val needPos = es.exists(isPosDelete)
         val folded = es.foldLeft(
@@ -3715,19 +3691,19 @@ object VersionedLake {
           (acc, e) => acc.join(broadcast(delKeys(e)), e.keys, "left_anti")
         }
         val survivors = if (needPos) folded.drop(PosDeleteKeys: _*) else folded
-        if (survivors.isEmpty) d -> None
-        else d -> Some(writeDataDir(survivors, tableDir,
-          rewriteParts(spark, tableDir, d, schemaOpt), maxRecordsPerFile))
+        d -> writeDataDirNonEmpty(survivors, tableDir,
+          rewriteParts(spark, tableDir, d, schemaOpt), maxRecordsPerFile,
+          statsCols = priorStats.get(d).map(_.keys.toSeq.sorted).getOrElse(Nil))
       }.toMap
-      val newDirs = dirs.flatMap(d => rewritten.getOrElse(d, Some(d)))
+      val newDirs = dirs.flatMap(d => rewritten.get(d).fold(Option(d))(_.map(_.dir)))
       val (stats, blooms, rewriteNdv) = carryRewriteMeta(spark, tableDir, schemaOpt,
-        dirStats(spark, tableDir, base), dirBloomsRaw(spark, tableDir, base),
+        priorStats, dirBloomsRaw(spark, tableDir, base),
         dirBlooms(spark, tableDir, base), newDirs, rewritten)
       if (newDirs.isEmpty) {
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), priorSchema)
           .repartition(1)
-        val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile)
+        val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile).dir
         publishManifest(spark, tableDir, Seq(d), priorSchema,
           expectedBase = Some(Some(base)), txns = txnWatermarks(spark, tableDir, base),
           op = "materialize")
@@ -3780,8 +3756,9 @@ object VersionedLake {
       priorStats: Map[String, Map[String, (Option[String], Option[String])]],
       priorBloomsRaw: Map[String, String],
       priorBlooms: Map[String, Map[String, (Int, Int, Array[Byte])]],
-      rewritten: Map[String, Option[String]]) {
-    def survivingDirs: Seq[String] = dirs.flatMap(d => rewritten.getOrElse(d, Some(d)))
+      rewritten: Map[String, Option[Written]]) {
+    def survivingDirs: Seq[String] =
+      dirs.flatMap(d => rewritten.get(d).fold(Option(d))(_.map(_.dir)))
   }
 
   /** Phase-1 candidate pruning for a keyed copy-on-write, spec-visible:
@@ -3937,18 +3914,19 @@ object VersionedLake {
         .map(_.getString(0))
         .flatMap(f => candidates.find(d => f.contains(s"/$d/")))
         .toSet)
-    // write-then-footer-count: one query execution per directory where
-    // isEmpty-then-write paid two (the footer walk is driver-side and
-    // already paid again at publish time for new dirs). Directory
-    // rewrites are independent of each other — run them concurrently
-    // (§2.6) so one rewrite's driver phase overlaps another's tasks.
-    val rewritten: Map[String, Option[String]] =
+    // write-then-count: one query execution per directory where
+    // isEmpty-then-write paid two, and the rewrite's stats are its
+    // observed metrics. Directory rewrites are independent of each other
+    // — run them concurrently (§2.6) so one rewrite's driver phase
+    // overlaps another's tasks.
+    val rewritten: Map[String, Option[Written]] =
       inParallel(spark, affected.toSeq.map { d =>
         s"keyedRewrite: rewrite $d" -> (() => {
           val survivors = readDirs(spark, tableDir, Seq(s"$tableDir/data/$d"), schemaOpt)
             .join(keyDf, keys, "left_anti")
           d -> writeDataDirNonEmpty(survivors, tableDir,
-            rewriteParts(spark, tableDir, d, schemaOpt), maxRecordsPerFile)
+            rewriteParts(spark, tableDir, d, schemaOpt), maxRecordsPerFile,
+            statsCols = priorStats.get(d).map(_.keys.toSeq.sorted).getOrElse(Nil))
         })
       }).toMap
     KeyedRewrite(dirs, schemaOpt, priorSchema, priorStats,
@@ -4095,8 +4073,9 @@ object VersionedLake {
       changeArtifact: Boolean = true): Long = {
     LakeConstraints.enforce(spark, tableDir, data, "replaceWhere")
     LakeConstraints.enforceFk(spark, tableDir, data, "replaceWhere")
-    // the batch feeds up to four evaluations (stats agg, bloom agg, the
-    // data write, the CDC-artifact union): persist it once — unless the
+    // the batch feeds up to three evaluations (the data write, which
+    // computes its stats, the bloom agg and the CDC-artifact union) plus
+    // any constraint probes: persist it once — unless the
     // caller already did (the dynamic-overwrite command persists for its
     // own tuple probe)
     val cached = data.storageLevel == org.apache.spark.storage.StorageLevel.NONE
@@ -4180,8 +4159,9 @@ object VersionedLake {
           .write.mode("error").parquet(s"$tableDir/deletes/$delName")
         val (statCols, bloomCfg) = continuedLayers(spark, tableDir, base,
           transformed.columns.toSeq)
-        val updDir = writeDataDir(transformed, tableDir,
-          declaredOrPhysicalParts(spark, tableDir, base), maxRecordsPerFile)
+        val upd = writeDataDir(transformed, tableDir,
+          declaredOrPhysicalParts(spark, tableDir, base), maxRecordsPerFile,
+          statsCols = statCols)
         val changesName =
           if (!LakeProps.cdcArtifacts(spark, tableDir)) None
           else Some(writeChangesDir(
@@ -4189,20 +4169,19 @@ object VersionedLake {
               .withColumn("_change_type", lit("update_preimage"))
               .unionByName(transformed.withColumn("_change_type", lit("update_postimage"))),
             tableDir))
-        val updStatsNdv = columnStatsNdv(transformed, statCols)
-        publishManifest(spark, tableDir, dirs :+ updDir,
+        publishManifest(spark, tableDir, dirs :+ upd.dir,
           mergeSchemas(schema, nullableAll(transformed.schema)),
           dirStats(spark, tableDir, base).map { case (d, c) => d -> statsJson(c) } ++
-            updStatsNdv.map { case (s, _) => updDir -> s }.toMap,
+            upd.statsBy,
           dirBloomsRaw(spark, tableDir, base) ++
-            bloomJson(transformed, bloomCfg).map(updDir -> _).toMap,
+            bloomJson(transformed, bloomCfg).map(upd.dir -> _).toMap,
           expectedBase = Some(Some(base)),
           txns = priorTxns ++ txn.toMap,
           eqdeletes = dirEqDeletes(spark, tableDir, base) :+
             EqDelete(delName, PosDeleteKeys, dirs, posDeleteCounts(matched)),
           op = "update_where_mor",
           changes = changesName,
-          ndv = updStatsNdv.map { case (_, n) => updDir -> n }.toMap)
+          ndv = upd.ndvBy)
       } finally matched.unpersist(blocking = false): Unit
     }
   }
@@ -4256,10 +4235,10 @@ object VersionedLake {
 
   /** Stats/bloom carry for a copy-on-write publish: untouched directories
     * keep their manifest lines VERBATIM (immutable data ⟹ immutable
-    * metadata, zero recompute); rewritten directories recompute over the
-    * same column sets (and the same bloom sizing) the old directory
-    * declared, so a row-level op never silently sheds the table's
-    * skipping layers.
+    * metadata, zero recompute); a rewritten directory's `#stats`/`#ndv`
+    * came with its write, over the same column set the old directory
+    * declared, and only a bloom layer (same sizing) re-reads it — so a
+    * row-level op never silently sheds the table's skipping layers.
     */
   private def carryRewriteMeta(
       spark: SparkSession,
@@ -4269,26 +4248,19 @@ object VersionedLake {
       priorBloomsRaw: Map[String, String],
       priorBlooms: Map[String, Map[String, (Int, Int, Array[Byte])]],
       newDirs: Seq[String],
-      rewritten: Map[String, Option[String]])
+      rewritten: Map[String, Option[Written]])
       : (Map[String, String], Map[String, String], Map[String, String]) = {
-    val statsNdv = newDirs.flatMap { nd =>
-      rewritten.collectFirst { case (old, Some(`nd`)) => old } match {
-        case Some(old) =>
-          val cols = priorStats.get(old).map(_.keys.toSeq.sorted).getOrElse(Nil)
-          columnStatsNdv(
-            readDirs(spark, tableDir, Seq(s"$tableDir/data/$nd"), schemaOpt), cols)
-            .map(nd -> _)
-        // untouched dirs: the stats line re-renders here (legacy shape);
-        // their #ndv line carries verbatim via publishManifest's own
-        // prior-version pass, so it is NOT re-emitted from this map
-        case None => priorStats.get(nd).map(c => nd -> ((statsJson(c), "")))
-      }
+    val replaced = rewritten.collect { case (old, Some(w)) => w.dir -> (old -> w) }
+    // untouched dirs: the stats line re-renders here (legacy shape);
+    // their #ndv line carries verbatim via publishManifest's own
+    // prior-version pass, so it is NOT re-emitted from this map
+    val stats = newDirs.flatMap { nd =>
+      replaced.get(nd).fold(priorStats.get(nd).map(c => nd -> statsJson(c)).toMap)(_._2.statsBy)
     }.toMap
-    val stats = statsNdv.map { case (d, (s, _)) => d -> s }
-    val ndv = statsNdv.collect { case (d, (_, n)) if n.nonEmpty => d -> n }
+    val ndv = newDirs.flatMap(nd => replaced.get(nd).toSeq.flatMap(_._2.ndvBy)).toMap
     val blooms = newDirs.flatMap { nd =>
-      rewritten.collectFirst { case (old, Some(`nd`)) => old } match {
-        case Some(old) =>
+      replaced.get(nd) match {
+        case Some((old, _)) =>
           priorBlooms.get(old).filter(_.nonEmpty).flatMap { cfgs =>
             val (m, k) = cfgs.values.map(t => (t._1, t._2)).maxBy(_._1)
             bloomJson(
@@ -4347,18 +4319,19 @@ object VersionedLake {
       // (§2.6). A rewrite keeps the directory's hive-partition layout
       // (derived from its own k=v structure), so partition pruning
       // survives row-level deletes/updates on partitioned tables.
-      // write-then-footer-count replaces the isEmpty-then-write pair:
-      // one query execution per directory instead of two.
-      val rewritten: Map[String, Option[String]] =
+      // write-then-count replaces the isEmpty-then-write pair: one query
+      // execution per directory instead of two, stats observed by it.
+      val rewritten: Map[String, Option[Written]] =
         inParallel(spark, affected.toSeq.map { d =>
           s"$op: rewrite $d" -> (() => {
             val survivors = rewriteDir(
               readDirs(spark, tableDir, Seq(s"$tableDir/data/$d"), schemaOpt))
             d -> writeDataDirNonEmpty(survivors, tableDir,
-              rewriteParts(spark, tableDir, d, schemaOpt), maxRecordsPerFile)
+              rewriteParts(spark, tableDir, d, schemaOpt), maxRecordsPerFile,
+              statsCols = priorStats.get(d).map(_.keys.toSeq.sorted).getOrElse(Nil))
           })
         }).toMap
-      val survivingDirs = dirs.flatMap(d => rewritten.getOrElse(d, Some(d)))
+      val surviving = dirs.flatMap(d => rewritten.get(d).fold(Option(d))(_.map(_.dir)))
       val baseSchema = schemaOpt.getOrElse(nullableAll(readVersion(spark, tableDir, base).schema))
       val schema = appendDf
         .map(df => mergeSchemas(baseSchema, nullableAll(df.schema)))
@@ -4368,7 +4341,7 @@ object VersionedLake {
       // the half-applied state a deleteWhere-then-append pair would
       // expose). Layout and skipping layers continue: the table's hive
       // partitioning and declared stat columns apply to the new dir.
-      val appendTask: () => Option[(String, Option[(String, String)], Option[String])] =
+      val appendTask: () => Option[(Written, Option[String])] =
         () => appendDf.map { df =>
           // UNIQUE: the batch must not collide with rows OUTSIDE the
           // replaced scope (rows matching `predicate` leave in this same
@@ -4381,9 +4354,10 @@ object VersionedLake {
           // declaredOrPhysicalParts, NOT partitionColumns: the first write
           // onto an empty PARTITIONED BY table must follow the DECLARED
           // layout (no self-describing chain exists yet to copy)
-          val d = writeDataDir(df, tableDir,
-            declaredOrPhysicalParts(spark, tableDir, base), maxRecordsPerFile)
-          (d, columnStatsNdv(df, statCols), bloomJson(df, bloomCfg))
+          val w = writeDataDir(df, tableDir,
+            declaredOrPhysicalParts(spark, tableDir, base), maxRecordsPerFile,
+            statsCols = statCols)
+          (w, bloomJson(df, bloomCfg))
         }
       // CDC artifact from the rows this commit's probe already located:
       // the matched pre-images, scoped to the affected directories —
@@ -4408,12 +4382,12 @@ object VersionedLake {
               allowMissingColumns = true))
           Some(writeChangesDir(frame, tableDir))
         }
-      // the rewritten dirs' stats recomputation reads only survivingDirs
-      // (the appended dir's layer comes from the append task)
+      // the carry re-reads only rewritten dirs with a bloom layer (the
+      // appended dir's layers come from the append task)
       val rewriteStatsTask: () => (Map[String, String], Map[String, String],
           Map[String, String]) = () =>
         carryRewriteMeta(spark, tableDir, schemaOpt,
-          priorStats, priorBloomsRaw, priorBlooms, survivingDirs, rewritten)
+          priorStats, priorBloomsRaw, priorBlooms, surviving, rewritten)
       // append, CDC artifact and rewritten-dir stats touch disjoint
       // inputs and outputs — overlap them (§2.6)
       val results = inParallel[Any](spark, Seq(
@@ -4421,24 +4395,21 @@ object VersionedLake {
         s"$op: append batch" -> (() => appendTask()),
         s"$op: rewrite stats" -> (() => rewriteStatsTask())))
       val changesName = results(0).asInstanceOf[Option[String]]
-      val appendedMeta = results(1)
-        .asInstanceOf[Option[(String, Option[(String, String)], Option[String])]]
+      val appended = results(1).asInstanceOf[Option[(Written, Option[String])]]
       val (carriedStats, carriedBlooms, carriedNdv) = results(2)
         .asInstanceOf[(Map[String, String], Map[String, String], Map[String, String])]
-      val newDirs = survivingDirs ++ appendedMeta.map(_._1)
-      val stats = carriedStats ++
-        appendedMeta.flatMap { case (d, st, _) => st.map { case (s, _) => d -> s } }
-      val ndv = carriedNdv ++
-        appendedMeta.flatMap { case (d, st, _) => st.map { case (_, n) => d -> n } }
+      val newDirs = surviving ++ appended.map(_._1.dir)
+      val stats = carriedStats ++ appended.fold(Map.empty[String, String])(_._1.statsBy)
+      val ndv = carriedNdv ++ appended.fold(Map.empty[String, String])(_._1.ndvBy)
       val blooms = carriedBlooms ++
-        appendedMeta.flatMap { case (d, _, bl) => bl.map(d -> _) }
+        appended.flatMap { case (w, bl) => bl.map(w.dir -> _) }
       if (newDirs.isEmpty) {
         // the delete emptied the table: publish an empty snapshot (one
         // empty-but-schema'd directory keeps every read path uniform)
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
           .repartition(1)
-        val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile)
+        val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile).dir
         publishManifest(spark, tableDir, Seq(d), schema,
           expectedBase = Some(Some(base)), txns = txnWatermarks(spark, tableDir, base),
           op = op, changes = changesName)
@@ -5129,7 +5100,6 @@ object VersionedLake {
       // flatten deliberately, declare it: setPartitionSpec(Nil) first.
       val layout =
         if (parts.nonEmpty) parts else declaredOrPhysicalParts(spark, tableDir, cur)
-      val d = writeDataDir(snapshot, tableDir, layout, maxRecordsPerFile, zorderBy)
       val schema = versionSchema(spark, tableDir, cur).getOrElse(nullableAll(snapshot.schema))
       // a compaction merges N directories into one, so per-directory stats
       // and blooms must be recomputed over the union, not carried forward.
@@ -5141,13 +5111,13 @@ object VersionedLake {
         snapshot.columns.toSeq)
       val effStats = if (statsCols.nonEmpty) statsCols else contStats
       val effBloom = bloom.orElse(contBloom)
-      val statsNdv = columnStatsNdv(snapshot, effStats)
-      val stats = statsNdv.map { case (s, _) => d -> s }.toMap
-      val blooms = bloomJson(snapshot, effBloom).map(d -> _).toMap
-      publishManifest(spark, tableDir, Seq(d), stripAka(schema), stats, blooms,
+      val w = writeDataDir(snapshot, tableDir, layout, maxRecordsPerFile, zorderBy,
+        statsCols = effStats)
+      val blooms = bloomJson(snapshot, effBloom).map(w.dir -> _).toMap
+      publishManifest(spark, tableDir, Seq(w.dir), stripAka(schema), w.statsBy, blooms,
         expectedBase = Some(Some(cur)),
         txns = txnWatermarks(spark, tableDir, cur), op = "optimize",
-        ndv = statsNdv.map { case (_, n) => d -> n }.toMap)
+        ndv = w.ndvBy)
     }
 
   /** INCREMENTAL COMPACTION — rewrite ONLY the directories whose
@@ -5190,22 +5160,21 @@ object VersionedLake {
       val (statCols, bloomCfg) = continuedLayers(spark, tableDir, base, data.columns.toSeq)
       // the consolidated dir follows the CURRENT declared layout; small
       // dirs from older partition specs normalize in the same pass
-      val d = writeDataDir(data, tableDir,
-        declaredOrPhysicalParts(spark, tableDir, base), maxRecordsPerFile)
+      val w = writeDataDir(data, tableDir,
+        declaredOrPhysicalParts(spark, tableDir, base), maxRecordsPerFile, statsCols = statCols)
       val priorStats = dirStats(spark, tableDir, base)
       val priorBloomsRaw = dirBloomsRaw(spark, tableDir, base)
-      val dataStatsNdv = columnStatsNdv(data, statCols)
       val stats = kept.flatMap(k => priorStats.get(k).map(k -> statsJson(_))).toMap ++
-        dataStatsNdv.map { case (s, _) => d -> s }
+        w.statsBy
       val blooms = kept.flatMap(k => priorBloomsRaw.get(k).map(k -> _)).toMap ++
-        bloomJson(data, bloomCfg).map(d -> _)
+        bloomJson(data, bloomCfg).map(w.dir -> _)
       // schema verbatim (NOT stripAka): kept directories still carry
       // former column names only the aka indirection can read
       val schema = schemaOpt.getOrElse(nullableAll(data.schema))
-      Some(publishManifest(spark, tableDir, kept :+ d, schema, stats, blooms,
+      Some(publishManifest(spark, tableDir, kept :+ w.dir, schema, stats, blooms,
         expectedBase = Some(Some(base)),
         txns = txnWatermarks(spark, tableDir, base), op = "optimize",
-        ndv = dataStatsNdv.map { case (_, n) => d -> n }.toMap))
+        ndv = w.ndvBy))
     }
 
   /** OPTIMIZE ... CLUSTER BY into MULTIPLE Z-range-disjoint directories:
@@ -5302,11 +5271,13 @@ object VersionedLake {
         snapshot.columns.toSeq)
       val statCols = (zorderBy ++ statsCols ++ contStats).distinct.sorted
       val effBloom = bloom.orElse(contBloom)
-      val statsNdvByDir = newDirs.flatMap { d =>
-        columnStatsNdv(
-          readDirs(spark, tableDir, Seq(s"$tableDir/data/$d"), Some(schema)), statCols)
-          .map(d -> _)
-      }.toMap
+      // one grouped pass over the new directories, tagged by name
+      val statsNdvByDir =
+        if (statCols.isEmpty || newDirs.isEmpty) Map.empty[String, (String, String)]
+        else columnStatsNdvBy(newDirs.map(d =>
+          readDirs(spark, tableDir, Seq(s"$tableDir/data/$d"), Some(schema))
+            .select(statCols.map(col) :+ lit(d).as(AnalyzeDirTag): _*))
+          .reduce(_ unionByName _), AnalyzeDirTag, statCols).toMap
       val stats = statsNdvByDir.map { case (d, (s, _)) => d -> s }
       val zNdv = statsNdvByDir.map { case (d, (_, n)) => d -> n }
       val blooms = newDirs.flatMap { d =>

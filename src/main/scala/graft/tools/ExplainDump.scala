@@ -19,7 +19,7 @@ object ExplainDump {
     val outDir = Paths.get(args(1))
     val suffix = args(2)
     Files.createDirectories(outDir)
-    val spark = Bench.warmSession(sfDir)
+    val (spark, _) = Bench.warmSession(sfDir)
     val byName = graft.SparkEntry.all.map(q => q.name -> q).toMap
     Bench.queryNames(args(3)).foreach { n =>
       byName.get(n) match {

@@ -17,7 +17,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val names = Bench.queryNames(args(1)).toSet
     val reps = if (args.length > 2) args(2).toInt else 1
-    val spark = Bench.warmSession(sfDir)
+    val (spark, _) = Bench.warmSession(sfDir)
 
     // per-query-execution planning phases (analysis/optimization/planning
     // ms from Spark's own QueryPlanningTracker) — the driver-side time the

@@ -661,7 +661,7 @@ object LakePruningScanBuilder {
     // integrals via toString, DATE/TIMESTAMP through the same Catalyst
     // Cast the writer's `cast(col as string)` evaluated (session-TZ
     // timestamps render identically by construction; fractional types
-    // are never sketched — see columnStatsNdv)
+    // are never sketched — see statsAggExprs)
     def render(v: Any): Option[String] = v match {
       case s: String                                                 => Some(s)
       case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |

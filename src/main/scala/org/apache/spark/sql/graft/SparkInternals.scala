@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.types.StructType
 
 /** Access to Spark state that is private to Spark. */
 object SparkInternals {
@@ -14,4 +15,9 @@ object SparkInternals {
     * again).
     */
   def generatedClasses: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** `s` with every field, element and map value nullable: the schema a
+    * file source reports for data written under `s`.
+    */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -51,4 +51,30 @@ class HarnessSpec extends SparkSpec {
       "ensureBucketedFacts", "ensureLakeFixtures", "ensureAnnIndexes", "ensureInvertedIndex")).toSet)
     assert(failed.values.forall(e => e.nonEmpty && !e.contains('\n')))
   }
+
+  test("the detail record lists a failed warm-up step with its first error line") {
+    val missing = Files.createTempDirectory("harness").resolve("sf_missing").toString
+    val failed = Bench.warmUp(spark, missing)
+    assert(failed.nonEmpty)
+    import org.json4s._
+    val json = org.json4s.jackson.JsonMethods.parse(
+      Bench.detailJson(missing, Seq(1.5), Nil, Nil, failed))
+    val listed = (json \ "warmup_failed").children.map(e =>
+      (e \ "step").values.toString -> (e \ "error").values.toString)
+    assert(listed === failed)
+    assert(listed.forall { case (_, err) => err.nonEmpty && !err.contains('\n') })
+    val clean = org.json4s.jackson.JsonMethods.parse(Bench.detailJson(missing, Seq(1.5), Nil, Nil, Nil))
+    assert((clean \ "warmup_failed") === JArray(Nil))
+  }
+
+  test("a detail row carries its median pass's Spark jobs and stages") {
+    val (_, log) = Bench.logged(spark)(spark.range(0, 1000, 1, 4).repartition(3).count())
+    assert(log.totals.jobs === log.jobs.size && log.totals.stages === log.stages.size)
+    import org.json4s._
+    val json = org.json4s.jackson.JsonMethods.parse(
+      Bench.detailJson("sf0.1", Seq(0.5), Seq(("q_x", 0.5, log.totals)), Nil, Nil))
+    val row = (json \ "queries").children.head
+    assert((row \ "jobs") === JInt(log.jobs.size) && (row \ "stages") === JInt(log.stages.size))
+    assert(log.stages.size >= 2)
+  }
 }

@@ -11,9 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * only specs reach belongs in its spec or nowhere, except for the
   * references below, which specs compare the program against.
   *
-  * The scan is by name. Comments and the text of string literals do not
-  * count as callers; code inside `${...}` and `$name` interpolations
-  * does. A mention inside the body of a def that is itself uncalled does
+  * The scan is by name, qualified by the receiver where it has one: a
+  * def of `object O` is reached by its bare name or by `O.name`, not by
+  * `x.name` on another receiver (`Lake.read` is not called by
+  * `spark.read`, but by `L.read` after `import p.{Lake => L}` or
+  * `val L = p.Lake`); a def of a class or trait is reached by its name
+  * on any receiver. Comments and the text of string literals do not count
+  * as callers; code inside `${...}` and `$name` interpolations does. A mention inside the body of a def that is itself uncalled does
   * not count either, so the scan repeats until no more defs are flagged.
   * Private, protected and override defs, local defs and `main` are never
   * flagged.
@@ -32,7 +36,9 @@ class SpecOnlyDefsSpec extends AnyFunSuite {
     "graft/queries/Dedup.scala: packBits" ->
       "vote-sign packing that SimHashAggSpec checks the single-buffer aggregator against",
     "graft/operators/Pq.scala: subDist" ->
-      "expression-tree subspace distance that PqSpec checks the PqEncode kernel against")
+      "expression-tree subspace distance that PqSpec checks the PqEncode kernel against",
+    "graft/operators/Pq.scala: train" ->
+      "driver-side PQ codebook trainer that the PQ and IVF-PQ recall specs build codebooks with")
 
   private val Program = "src/main/scala/"
   private val Roots = Seq(Program -> true, "perfbench/src" -> false)
@@ -131,9 +137,12 @@ class SpecOnlyDefsSpec extends AnyFunSuite {
   private val Headers = Set("class", "object", "trait", "new", "def", "val", "var", "=", "=>", "type")
 
   private def defsOf(file: String, toks: IndexedSeq[String], program: Boolean): Seq[Def] = {
-    // per open brace: (template body?, bracket depth, last header keyword)
-    final class Frame(val template: Boolean) { var depth = 0; var last = "" }
-    var stack = List(new Frame(true))
+    // per open brace: (template body?, owning object, bracket depth, last
+    // header keyword and the name after it)
+    final class Frame(val template: Boolean, val owner: Option[String]) {
+      var depth = 0; var last = ""; var named = ""
+    }
+    var stack = List(new Frame(true, None))
     val out = Seq.newBuilder[Def]
     for (k <- toks.indices) {
       val t = toks(k)
@@ -142,10 +151,13 @@ class SpecOnlyDefsSpec extends AnyFunSuite {
         case "(" | "[" => top.depth += 1
         case ")" | "]" => top.depth -= 1
         case "{" =>
-          stack = new Frame(Set("class", "object", "trait", "new")(top.last)) :: stack
+          stack = new Frame(Set("class", "object", "trait", "new")(top.last),
+            if (top.last == "object") Some(top.named) else None) :: stack
           top.last = ""
         case "}" => if (stack.size > 1) stack = stack.tail
-        case h if top.depth == 0 && Headers(h) => top.last = h
+        case h if top.depth == 0 && Headers(h) =>
+          top.last = h
+          top.named = if (k + 1 < toks.size) toks(k + 1) else ""
         case _ =>
       }
       if (t == "def" && k + 1 < toks.size) {
@@ -168,46 +180,98 @@ class SpecOnlyDefsSpec extends AnyFunSuite {
         val name = toks(k + 1).stripPrefix("`").stripSuffix("`")
         val member = stack.head.template && stack.head.depth == 0
         val hidden = mods.result().exists(Set("private", "protected", "override"))
-        out += Def(file, name, k, e, program && member && name != "main" && !hidden)
+        out += Def(file, name, stack.head.owner.filter(_ => member), k, e,
+          program && member && name != "main" && !hidden)
       }
     }
     out.result()
   }
 
-  /** Public `src/main` defs with no caller outside specs, as
-    * "path under src/main/scala: name".
+  private def tokens(src: String): IndexedSeq[String] =
+    Token.findAllIn(strip(src)).toIndexedSeq
+
+  private def unquote(t: String): String = t.stripPrefix("`").stripSuffix("`")
+
+  /** The receiver of the name at `k`: None when it has none (or is
+    * `this`/`super`), the receiver's name when it is an identifier, and
+    * "" for any other expression.
     */
-  private def uncalled(): Set[String] = {
-    val files = for {
-      (root, program) <- Roots
-      p = Paths.get(root)
-      _ = assert(Files.isDirectory(p), s"run from the repository root: no $root")
-      f <- scalaFiles(p)
-    } yield (f.toString, program,
-      Token.findAllIn(strip(new String(Files.readAllBytes(f), "UTF-8"))).toIndexedSeq)
+  private def receiver(toks: IndexedSeq[String], k: Int): Option[String] =
+    if (k < 2 || toks(k - 1) != ".") None
+    else toks(k - 2) match {
+      case "this" | "super" => None
+      case r if isName(r) || r.head == '`' => Some(unquote(r))
+      case _ => Some("")
+    }
+
+  private def isName(t: String): Boolean = t.head.isLetter || t.head == '_'
+
+  /** Other names for objects in one file: `import p.{X => Y}` and
+    * `val Y = p.X` make Y stand for X.
+    */
+  private def aliases(toks: IndexedSeq[String]): Map[String, String] =
+    toks.indices.flatMap { k =>
+      def at(i: Int): String = toks.lift(i).getOrElse("")
+      // the tokenizer splits `=>` into "=" and ">"
+      if (at(k) == "=" && at(k + 1) == ">" && Set("{", ",")(at(k - 2)) &&
+          Set("}", ",")(at(k + 3)) && k >= 1 && isName(at(k - 1)) && isName(at(k + 2)))
+        Some(at(k + 2) -> at(k - 1))
+      else if (at(k) == "val" && at(k + 2) == "=" && at(k + 3).nonEmpty && isName(at(k + 3))) {
+        var j = k + 3
+        while (at(j + 1) == "." && at(j + 2).nonEmpty && isName(at(j + 2))) j += 2
+        if (at(j).head.isUpper && !Set("(", "[", "{")(at(j + 1))) Some(at(k + 1) -> at(j))
+        else None
+      } else None
+    }.toMap
+
+  /** Public program defs in `files` (path, program?, tokens) with no
+    * caller outside their own name sites and the bodies of other such
+    * defs, as "path: name".
+    */
+  private def uncalled(files: Seq[(String, Boolean, IndexedSeq[String])]): Set[String] = {
     val defs = files.flatMap { case (f, program, toks) => defsOf(f, toks, program) }
     val nameSites = defs.map(d => (d.file, d.at + 1)).toSet
     var flagged = Set.empty[Def]
     var changed = true
     while (changed) {
       val dead = flagged.groupBy(_.file)
-      val live = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+      // name -> the receivers it is called on
+      val live = scala.collection.mutable.Map.empty[String, Set[Option[String]]]
+        .withDefaultValue(Set.empty)
       files.foreach { case (f, _, toks) =>
         val ranges = dead.getOrElse(f, Set.empty)
+        val named = aliases(toks)
         toks.indices.foreach { k =>
-          if (!nameSites((f, k)) && !ranges.exists(d => d.at <= k && k < d.end))
-            live(toks(k).stripPrefix("`").stripSuffix("`")) += 1
+          if (!nameSites((f, k)) && !ranges.exists(d => d.at <= k && k < d.end)) {
+            val n = unquote(toks(k))
+            live(n) = live(n) + receiver(toks, k).map(r => named.getOrElse(r, r))
+          }
         }
       }
-      val next = defs.filter(d => d.candidate && live(d.name) == 0).toSet
+      def called(d: Def): Boolean =
+        live(d.name).exists(r => r.isEmpty || d.owner.forall(o => r.contains(o)))
+      val next = defs.filter(d => d.candidate && !called(d)).toSet
       changed = next != flagged
       flagged = next
     }
-    flagged.map(d => s"${d.file.stripPrefix(Program)}: ${d.name}")
+    flagged.map(d => s"${d.file}: ${d.name}")
+  }
+
+  /** [[uncalled]] over `src/main` and `perfbench/src`, as "path under
+    * src/main/scala: name".
+    */
+  private def uncalledInProgram(): Set[String] = {
+    val files = for {
+      (root, program) <- Roots
+      p = Paths.get(root)
+      _ = assert(Files.isDirectory(p), s"run from the repository root: no $root")
+      f <- scalaFiles(p)
+    } yield (f.toString, program, tokens(new String(Files.readAllBytes(f), "UTF-8")))
+    uncalled(files).map(_.stripPrefix(Program))
   }
 
   test("every public def in src/main is called from the program, or is a listed reference") {
-    val found = uncalled()
+    val found = uncalledInProgram()
     val unlisted = (found -- AllowList.keySet).toSeq.sorted
     assert(unlisted.isEmpty,
       s"public defs only specs call (move them into their spec or delete them):\n  " +
@@ -215,6 +279,21 @@ class SpecOnlyDefsSpec extends AnyFunSuite {
     val stale = (AllowList.keySet -- found).toSeq.sorted
     assert(stale.isEmpty, s"allow-listed defs that now have callers (drop them from the list):\n  " +
       stale.mkString("\n  "))
+  }
+
+  test("an object's def is not reached by a same-named call on another receiver") {
+    val lib = tokens("""object Lake { def read(p: String) = p; def write(p: String) = p;
+      def scan(p: String) = p; def commit(x: Int) = x }
+      class Frame { def read(p: String) = p }""")
+    val app = tokens("""object App { def run(spark: Spark, f: Frame) = {
+      spark.read; f.read("a"); Lake.write("b"); import Lake._; scan("c");
+      new Frame().commit } }""")
+    val aliased = tokens("""import x.{Lake => L}
+      object Other { val K = x.Lake; def go = { L.read("d"); K.commit(1) } }""")
+    assert(uncalled(Seq(("lib", true, lib), ("app", false, app))) ===
+      Set("lib: read", "lib: commit"))
+    assert(uncalled(Seq(("lib", true, lib), ("app", false, app), ("aliased", false, aliased)))
+      .isEmpty)
   }
 
   test("the scan sees through comments and strings but not through interpolations") {
@@ -225,8 +304,10 @@ class SpecOnlyDefsSpec extends AnyFunSuite {
 }
 
 object SpecOnlyDefsSpec {
-  /** A def's name, its token span (`at` is the `def` keyword) and
+  /** A def's name, the object it is a member of (None for a class or
+    * trait member), its token span (`at` is the `def` keyword) and
     * whether it is a public `src/main` member the scan may flag.
     */
-  private final case class Def(file: String, name: String, at: Int, end: Int, candidate: Boolean)
+  private final case class Def(
+      file: String, name: String, owner: Option[String], at: Int, end: Int, candidate: Boolean)
 }

@@ -20,13 +20,15 @@ import org.apache.spark.sql.functions._
 class FfiPipelineSpec extends SparkSpec {
 
   /** What one export of the fixture may cost from FfiIdents through
-    * `loadAll` into Derby (measured in a cold JVM: 0 jobs, 7 classes, the
-    * predicates Catalyst compiles when it folds a filter into a local
-    * table). Classes are counted JVM-wide and Spark caches them by code,
-    * so a JVM that ran the pipeline before compiles fewer.
+    * `loadAll` into Derby (measured in a cold JVM: 0 jobs, 0 classes;
+    * filters over local tables are interpreted driver operators, where
+    * Catalyst compiled a predicate class for each, and the team-list UDF
+    * converts without encoder classes). Classes are counted
+    * JVM-wide and Spark caches them by code, so a JVM that ran the
+    * pipeline before compiles fewer.
     */
   private val JobBudget = 0
-  private val ClassBudget = 7
+  private val ClassBudget = 0
 
   private lazy val transformed: FfiCatalog = {
     val dir = Files.createTempDirectory("ffi_fixture")
