@@ -122,7 +122,8 @@ object VersionedLake {
     * column's Spark string-cast (null for an all-null directory).
     * Comment-prefixed, so [[manifest]] and pre-stats readers skip them;
     * directories without a stats line are read unconditionally
-    * (conservative — absence of evidence never drops data).
+    * (conservative — absence of evidence never drops data). Like every
+    * per-directory layer below, carried by [[publishManifest]].
     */
   private val StatsHeader = "#stats="
 
@@ -151,8 +152,7 @@ object VersionedLake {
     * (O(dirs) metadata work, sketches are a few KB) into one
     * distinct-count estimate the scan reports through DSv2
     * `columnStats()`. Comment-prefixed like stats/bloom: absence just
-    * means no column statistics (conservative), and directories are
-    * immutable so lines carry forward verbatim.
+    * means no column statistics (conservative).
     */
   private val NdvHeader = "#ndv="
 
@@ -161,10 +161,11 @@ object VersionedLake {
     * ingest EXACTLY-ONCE: streaming engines replay a batch after a
     * failure, and without the watermark a retry of a batch whose commit
     * DID land appends its rows twice. The highest committed batchId per
-    * appId rides every manifest (carried forward by appends, upserts,
-    * deletes and compactions — a compaction must not forget writer
-    * progress), so a replayed batch sees `batchId <= watermark` and
-    * no-ops. One line per writer, O(writers) manifest overhead.
+    * appId rides every manifest ([[publishManifest]] carries the base's
+    * watermarks into every commit — a compaction or a rollback must not
+    * forget writer progress), so a replayed batch sees
+    * `batchId <= watermark` and no-ops. One line per writer, O(writers)
+    * manifest overhead.
     */
   private val TxnHeader = "#txn="
 
@@ -251,8 +252,7 @@ object VersionedLake {
     * the parquet footers of the directory's files (the writer already
     * paid for them; reading a footer costs one metadata fetch, no data
     * pages), bytes from the file listing — both gathered ONCE when the
-    * directory first enters a manifest, then carried forward verbatim
-    * (directories are immutable). Two things feed off this at 100 TB:
+    * directory first enters a manifest. Two things feed off this at 100 TB:
     * `SELECT count(*)` (and table-level CBO statistics) answer from the
     * manifest alone — zero file opens on a table with 10^5 directories —
     * and Catalyst's join planning gets an EXACT row count instead of a
@@ -301,11 +301,11 @@ object VersionedLake {
 
   /** Manifest comment line recording one data directory's hive-partition
     * column chain: `#parts=<dir>\t["day","region"]`. Written at the
-    * directory's FIRST manifest (from its self-describing `k=v` layout)
-    * and carried verbatim afterwards — the layer that makes PARTITION
-    * SPEC EVOLUTION first-class: a version may mix directories written
-    * under different specs (or none), readers group per spec, and the
-    * mixed-spec detection costs one memoized manifest parse instead of
+    * directory's FIRST manifest (from its self-describing `k=v` layout).
+    * The layer that makes PARTITION SPEC EVOLUTION first-class: a
+    * version may mix directories written under different specs (or
+    * none), readers group per spec, and the mixed-spec detection costs
+    * one memoized manifest parse instead of
     * an O(dirs) directory walk per plan. Directories without a line are
     * unpartitioned (or predate the header, which can only happen for
     * single-spec tables — evolution requires commits made after it).
@@ -318,11 +318,11 @@ object VersionedLake {
     * it the spec for new writes is whatever the NEWEST data directory
     * happens to render ([[declaredOrPhysicalParts]]' physical fallback),
     * which is self-reinforcing and therefore unchangeable. A
-    * [[setPartitionSpec]] commit writes the line; every later commit
-    * carries it verbatim (like `#rows`), so the declaration is
-    * snapshot-versioned — time travel to a pre-evolution version plans
-    * new hypothetical writes under THAT version's spec, and a rollback
-    * restores the old declaration with the old data. An empty array is
+    * [[setPartitionSpec]] commit writes the line and later commits carry
+    * it, so the declaration is snapshot-versioned — time travel to a
+    * pre-evolution version plans new hypothetical writes under THAT
+    * version's spec, and a rollback restores the old declaration with
+    * the old data. An empty array is
     * a real declaration (evolve to UNPARTITIONED going forward), which
     * the physical fallback could never express. Absence = no declaration
     * ever made = newest-dir physical behavior, byte-compatible with
@@ -881,9 +881,8 @@ object VersionedLake {
       spark: SparkSession,
       tableDir: String,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
-    manifestLines(spark, tableDir, version)
-      .find(_.startsWith(SchemaHeader))
-      .map(l => org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix(SchemaHeader))
+    headerValue(spark, tableDir, version, SchemaHeader).map(j =>
+      org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Memoized manifest reads. A published manifest is write-once
@@ -1195,82 +1194,92 @@ object VersionedLake {
       tableDir: String,
       version: Long): Map[String, Map[String, (Int, Int, Array[Byte])]] = {
     import org.json4s.JsonAST._
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(BloomHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(BloomHeader)
-        val tab = rest.indexOf('\t')
-        if (tab < 0) None
-        else {
-          val cols = org.json4s.jackson.JsonMethods.parse(rest.substring(tab + 1)) match {
-            case JObject(fields) => fields.collect {
-              case (c, JObject(props)) =>
-                val m = props.toMap
-                (m.get("m"), m.get("k"), m.get("b")) match {
-                  case (Some(JInt(bits)), Some(JInt(k)), Some(JString(b64))) =>
-                    Some(c -> ((bits.toInt, k.toInt, java.util.Base64.getDecoder.decode(b64))))
-                  case _ => None
-                }
-            }.flatten.toMap
-            case _ => Map.empty[String, (Int, Int, Array[Byte])]
-          }
-          Some(rest.substring(0, tab) -> cols)
-        }
-      }
-      .toMap
+    dirLayer(spark, tableDir, version, BloomHeader).map { case (d, json) =>
+      d -> (org.json4s.jackson.JsonMethods.parse(json) match {
+        case JObject(fields) => fields.collect {
+          case (c, JObject(props)) =>
+            val m = props.toMap
+            (m.get("m"), m.get("k"), m.get("b")) match {
+              case (Some(JInt(bits)), Some(JInt(k)), Some(JString(b64))) =>
+                Some(c -> ((bits.toInt, k.toInt, java.util.Base64.getDecoder.decode(b64))))
+              case _ => None
+            }
+        }.flatten.toMap
+        case _ => Map.empty[String, (Int, Int, Array[Byte])]
+      })
+    }
   }
 
-  /** Raw bloom JSON per directory, for O(delta) carry-forward (the data
-    * directories are immutable, so their filters are too).
+  /** A layer payload without columns: an empty JSON object, which says
+    * nothing a missing line does not, so [[publishManifest]] writes no
+    * line for it.
     */
-  private def dirBloomsRaw(
-      spark: SparkSession,
-      tableDir: String,
-      version: Long): Map[String, String] =
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(BloomHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(BloomHeader)
-        val tab = rest.indexOf('\t')
-        if (tab < 0) None else Some(rest.substring(0, tab) -> rest.substring(tab + 1))
-      }
-      .toMap
+  private val NoLayer = "{}"
 
-  private def dirNdvRaw(
+  /** One layer of a version's manifest as key -> raw payload: the
+    * `<header><dir>\t<payload>` lines of a per-directory layer (`#stats`,
+    * `#bloom`, `#ndv`, `#rows`, `#parts`), or the `#txn` watermarks keyed
+    * by appId. Lines without a tab are skipped.
+    */
+  private def dirLayer(
       spark: SparkSession,
       tableDir: String,
-      version: Long): Map[String, String] =
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(NdvHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(NdvHeader)
-        val tab = rest.indexOf('\t')
-        if (tab < 0) None else Some(rest.substring(0, tab) -> rest.substring(tab + 1))
+      version: Long,
+      header: String): Map[String, String] =
+    manifestLines(spark, tableDir, version).flatMap(layerEntry(_, header)).toMap
+
+  /** `<header><key>\t<payload>` split into (key, payload); None for a line
+    * of another header or without a tab. The one parser of that shape.
+    */
+  private def layerEntry(line: String, header: String): Option[(String, String)] =
+    if (!line.startsWith(header)) None
+    else {
+      val tab = line.indexOf('\t', header.length)
+      if (tab < 0) None else Some(line.substring(header.length, tab) -> line.substring(tab + 1))
+    }
+
+  /** The payload of a one-line header (`#schema=`, `#op=`, `#declspec=`,
+    * `#changes=`) at `version`, when its manifest has that line.
+    */
+  private def headerValue(
+      spark: SparkSession,
+      tableDir: String,
+      version: Long,
+      header: String): Option[String] =
+    manifestLines(spark, tableDir, version).find(_.startsWith(header))
+      .map(_.substring(header.length))
+
+  /** The `#ndv` layer parsed once for its four readers: dir -> col -> the
+    * entry's fields. Lenient: a malformed line degrades to "no column
+    * statistics" for that directory, never a failed read.
+    */
+  private def ndvEntries(
+      spark: SparkSession,
+      tableDir: String,
+      version: Long): Map[String, Map[String, Map[String, org.json4s.JsonAST.JValue]]] = {
+    import org.json4s.JsonAST._
+    dirLayer(spark, tableDir, version, NdvHeader).flatMap { case (d, json) =>
+      scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.map {
+        case JObject(fields) =>
+          d -> fields.collect { case (c, JObject(entry)) => c -> entry.toMap }.toMap
+        case _ => d -> Map.empty[String, Map[String, JValue]]
       }
-      .toMap
+    }
+  }
 
   /** Per-directory NDV layer a version's manifest carries:
     * dir -> col -> (HLL sketch bytes — None for an all-null directory —
-    * and the exact null count). Lenient parse: a malformed line degrades
-    * to "no column statistics", never a failed read.
+    * and the exact null count). Lenient like [[ndvEntries]].
     */
   def dirNdv(
       spark: SparkSession,
       tableDir: String,
       version: Long): Map[String, Map[String, (Option[Array[Byte]], Long)]] = {
     import org.json4s.JsonAST._
-    dirNdvRaw(spark, tableDir, version).flatMap { case (d, json) =>
-      scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.map {
-        case JObject(fields) =>
-          d -> fields.collect { case (c, JObject(entry)) =>
-            val m = entry.toMap
-            val h = m.get("h").collect { case JString(b) =>
-              java.util.Base64.getDecoder.decode(b)
-            }
-            val n = m.get("n").collect { case JInt(v) => v.toLong }.getOrElse(0L)
-            c -> (h, n)
-          }.toMap
-        case _ => d -> Map.empty[String, (Option[Array[Byte]], Long)]
+    ndvEntries(spark, tableDir, version).map { case (d, cols) =>
+      d -> cols.map { case (c, m) =>
+        val h = m.get("h").collect { case JString(b) => java.util.Base64.getDecoder.decode(b) }
+        c -> ((h, m.get("n").collect { case JInt(v) => v.toLong }.getOrElse(0L)))
       }
     }
   }
@@ -1278,38 +1287,30 @@ object VersionedLake {
   /** Per-directory equi-height histogram EDGES a version's manifest
     * carries (the `"e"` arrays riding the `#ndv` layer): dir -> col ->
     * ascending quantile edges ([[HistBins]]+1 doubles, numeric columns
-    * only). Lenient like [[dirNdv]]: absence or malformation degrades to
-    * "no histogram", never a failed read.
+    * only). Absence or malformation degrades to "no histogram".
     */
   def dirHist(
       spark: SparkSession,
       tableDir: String,
       version: Long): Map[String, Map[String, Array[Double]]] = {
     import org.json4s.JsonAST._
-    dirNdvRaw(spark, tableDir, version).flatMap { case (d, json) =>
-      scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.map {
-        case JObject(fields) =>
-          d -> fields.collect { case (c, JObject(entry)) =>
-            entry.toMap.get("e").collect { case JArray(vs) =>
-              c -> vs.collect { case JDouble(e) => e }.toArray
-            }
-          }.flatten
-            // a written edge set is always exactly HistBins+1 doubles; a
-            // shorter array means elements were dropped or re-typed, and
-            // consuming the remnant would feed a mass-distorted histogram
-            // to CBO — degrade to "no histogram", the conservatism rule
-            .filter(_._2.length == HistBins + 1)
-            .toMap
-        case _ => d -> Map.empty[String, Array[Double]]
+    ndvEntries(spark, tableDir, version).map { case (d, cols) =>
+      d -> cols.flatMap { case (c, m) =>
+        m.get("e").collect { case JArray(vs) => c -> vs.collect { case JDouble(e) => e }.toArray }
       }
+        // a written edge set is always exactly HistBins+1 doubles; a
+        // shorter array means elements were dropped or re-typed, and
+        // consuming the remnant would feed a mass-distorted histogram
+        // to CBO — degrade to "no histogram", the conservatism rule
+        .filter(_._2.length == HistBins + 1)
     }
   }
 
   /** Per-directory FREQUENT-VALUES sketches a version's manifest carries
     * (the `"f"` entries riding the `#ndv` layer): dir -> col -> serialized
-    * frequent-items sketch (non-numeric stats columns only). Lenient like
-    * [[dirHist]]: absence or malformation degrades to "no sketch" — the
-    * consumer ([[org.apache.spark.sql.graft.LakePruningScanBuilder]]'s
+    * frequent-items sketch (non-numeric stats columns only). Absence or
+    * malformation degrades to "no sketch" — the consumer
+    * ([[org.apache.spark.sql.graft.LakePruningScanBuilder]]'s
     * equality-selectivity refinement) then stands down to the plain
     * row-sum estimate, never a distorted one.
     */
@@ -1318,16 +1319,11 @@ object VersionedLake {
       tableDir: String,
       version: Long): Map[String, Map[String, Array[Byte]]] = {
     import org.json4s.JsonAST._
-    dirNdvRaw(spark, tableDir, version).flatMap { case (d, json) =>
-      scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.map {
-        case JObject(fields) =>
-          d -> fields.collect { case (c, JObject(entry)) =>
-            entry.toMap.get("f").collect { case JString(b64) =>
-              scala.util.Try(
-                c -> java.util.Base64.getDecoder.decode(b64)).toOption
-            }.flatten
-          }.flatten.toMap
-        case _ => d -> Map.empty[String, Array[Byte]]
+    ndvEntries(spark, tableDir, version).map { case (d, cols) =>
+      d -> cols.flatMap { case (c, m) =>
+        m.get("f").collect { case JString(b64) =>
+          scala.util.Try(c -> java.util.Base64.getDecoder.decode(b64)).toOption
+        }.flatten
       }
     }
   }
@@ -1337,22 +1333,18 @@ object VersionedLake {
     * of the directory's non-null values (integral and bounded-scale
     * decimal stats columns only — see statsAggExprs). Absence means
     * refused/legacy/all-null; consumers disambiguate all-null via the
-    * layer's exact null counts. Lenient like [[dirHist]].
+    * layer's exact null counts.
     */
   def dirSums(
       spark: SparkSession,
       tableDir: String,
       version: Long): Map[String, Map[String, java.math.BigDecimal]] = {
     import org.json4s.JsonAST._
-    dirNdvRaw(spark, tableDir, version).flatMap { case (d, json) =>
-      scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.map {
-        case JObject(fields) =>
-          d -> fields.collect { case (c, JObject(entry)) =>
-            entry.toMap.get("s").collect { case JString(s) =>
-              scala.util.Try(c -> new java.math.BigDecimal(s)).toOption
-            }.flatten
-          }.flatten.toMap
-        case _ => d -> Map.empty[String, java.math.BigDecimal]
+    ndvEntries(spark, tableDir, version).map { case (d, cols) =>
+      d -> cols.flatMap { case (c, m) =>
+        m.get("s").collect { case JString(s) =>
+          scala.util.Try(c -> new java.math.BigDecimal(s)).toOption
+        }.flatten
       }
     }
   }
@@ -1380,28 +1372,19 @@ object VersionedLake {
       tableDir: String,
       version: Long): Map[String, Map[String, (Option[String], Option[String])]] = {
     import org.json4s.JsonAST._
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(StatsHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(StatsHeader)
-        val tab = rest.indexOf('\t')
-        if (tab < 0) None
-        else {
-          val cols = org.json4s.jackson.JsonMethods.parse(rest.substring(tab + 1)) match {
-            case JObject(fields) => fields.collect {
-              case (c, JArray(List(mn, mx))) =>
-                def s(j: JValue): Option[String] = j match {
-                  case JString(x) => Some(x)
-                  case _          => None
-                }
-                c -> (s(mn), s(mx))
-            }.toMap
-            case _ => Map.empty[String, (Option[String], Option[String])]
-          }
-          Some(rest.substring(0, tab) -> cols)
-        }
-      }
-      .toMap
+    dirLayer(spark, tableDir, version, StatsHeader).map { case (d, json) =>
+      d -> (org.json4s.jackson.JsonMethods.parse(json) match {
+        case JObject(fields) => fields.collect {
+          case (c, JArray(List(mn, mx))) =>
+            def s(j: JValue): Option[String] = j match {
+              case JString(x) => Some(x)
+              case _          => None
+            }
+            c -> (s(mn), s(mx))
+        }.toMap
+        case _ => Map.empty[String, (Option[String], Option[String])]
+      })
+    }
   }
 
   /** Per-directory EXACT (row count, data bytes) a version's manifest
@@ -1414,54 +1397,18 @@ object VersionedLake {
       tableDir: String,
       version: Long): Map[String, (Long, Long)] = {
     import org.json4s.JsonAST._
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(RowsHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(RowsHeader)
-        val tab = rest.indexOf('\t')
-        if (tab < 0) None
-        else scala.util.Try(org.json4s.jackson.JsonMethods.parse(rest.substring(tab + 1)))
-          .toOption.flatMap {
-            case JObject(fields) =>
-              val m = fields.toMap
-              (m.get("n"), m.get("bytes")) match {
-                case (Some(JInt(n)), Some(JInt(b))) =>
-                  Some(rest.substring(0, tab) -> ((n.toLong, b.toLong)))
-                case _ => None
-              }
-            case _ => None
+    dirLayer(spark, tableDir, version, RowsHeader).flatMap { case (d, json) =>
+      scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.flatMap {
+        case JObject(fields) =>
+          val m = fields.toMap
+          (m.get("n"), m.get("bytes")) match {
+            case (Some(JInt(n)), Some(JInt(b))) => Some(d -> ((n.toLong, b.toLong)))
+            case _                              => None
           }
+        case _ => None
       }
-      .toMap
+    }
   }
-
-  /** Raw rows JSON per directory for O(delta) carry-forward. */
-  private def dirRowsRaw(
-      spark: SparkSession,
-      tableDir: String,
-      version: Long): Map[String, String] =
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(RowsHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(RowsHeader)
-        val tab = rest.indexOf('\t')
-        if (tab < 0) None else Some(rest.substring(0, tab) -> rest.substring(tab + 1))
-      }
-      .toMap
-
-  /** Raw partition-spec JSON per directory, for O(delta) carry-forward. */
-  private def dirPartsRaw(
-      spark: SparkSession,
-      tableDir: String,
-      version: Long): Map[String, String] =
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(PartsHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(PartsHeader)
-        val tab = rest.indexOf('\t')
-        if (tab < 0) None else Some(rest.substring(0, tab) -> rest.substring(tab + 1))
-      }
-      .toMap
 
   /** Per-directory hive-partition column chains a version's manifest
     * carries: dir -> columns in layout order. Directories without a line
@@ -1470,23 +1417,10 @@ object VersionedLake {
   def dirParts(
       spark: SparkSession,
       tableDir: String,
-      version: Long): Map[String, Seq[String]] = {
-    import org.json4s.JsonAST._
-    dirPartsRaw(spark, tableDir, version).flatMap { case (d, json) =>
-      scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.collect {
-        case JArray(vs) => d -> vs.collect { case JString(c) => c }
-      }
+      version: Long): Map[String, Seq[String]] =
+    dirLayer(spark, tableDir, version, PartsHeader).flatMap { case (d, json) =>
+      stringArray(json).map(d -> _)
     }
-  }
-
-  /** Raw `#declspec` JSON at `version`, for O(1) verbatim carry. */
-  private def declaredSpecRaw(
-      spark: SparkSession,
-      tableDir: String,
-      version: Long): Option[String] =
-    manifestLines(spark, tableDir, version)
-      .find(_.startsWith(DeclSpecHeader))
-      .map(_.stripPrefix(DeclSpecHeader))
 
   /** The version's DECLARED partition spec, when one was ever set
     * ([[setPartitionSpec]]): the hive layout new batches must follow,
@@ -1497,12 +1431,41 @@ object VersionedLake {
   def declaredSpec(
       spark: SparkSession,
       tableDir: String,
-      version: Long): Option[Seq[String]] = {
+      version: Long): Option[Seq[String]] =
+    headerValue(spark, tableDir, version, DeclSpecHeader).flatMap(stringArray)
+
+  /** A JSON array's string elements; None when `json` is not an array. */
+  private def stringArray(json: String): Option[Seq[String]] = {
     import org.json4s.JsonAST._
-    declaredSpecRaw(spark, tableDir, version).flatMap { json =>
-      scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.collect {
-        case JArray(vs) => vs.collect { case JString(c) => c }
-      }
+    scala.util.Try(org.json4s.jackson.JsonMethods.parse(json)).toOption.collect {
+      case JArray(vs) => vs.collect { case JString(c) => c }
+    }
+  }
+
+  private def stringArrayJson(cols: Seq[String]): String = {
+    import org.json4s.JsonAST._
+    org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(
+      JArray(cols.map(JString(_): JValue).toList)))
+  }
+
+  /** `header`'s layer at `version` with each payload's column keys mapped
+    * by `rename` — None drops the entry, and a payload left without one
+    * becomes [[NoLayer]]: the re-keyed layers of the metadata-only DDL.
+    * A payload that is not a JSON object stays as is.
+    */
+  private def rekeyLayer(
+      spark: SparkSession,
+      tableDir: String,
+      version: Long,
+      header: String)(rename: String => Option[String]): Map[String, String] = {
+    import org.json4s.JsonAST._
+    dirLayer(spark, tableDir, version, header).map { case (d, json) =>
+      d -> (org.json4s.jackson.JsonMethods.parse(json) match {
+        case JObject(fields) =>
+          org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(
+            JObject(fields.flatMap { case (c, v) => rename(c).map(_ -> v) })))
+        case _ => json
+      })
     }
   }
 
@@ -1549,9 +1512,7 @@ object VersionedLake {
     * one (manifests predating the op header yield None).
     */
   def commitOp(spark: SparkSession, tableDir: String, version: Long): Option[String] =
-    manifestLines(spark, tableDir, version)
-      .find(_.startsWith(OpHeader))
-      .map(_.stripPrefix(OpHeader).trim)
+    headerValue(spark, tableDir, version, OpHeader).map(_.trim)
 
   /** The version's row-level change artifact (see [[ChangesHeader]]),
     * when its commit published one.
@@ -1560,10 +1521,7 @@ object VersionedLake {
       spark: SparkSession,
       tableDir: String,
       version: Long): Option[String] =
-    manifestLines(spark, tableDir, version)
-      .find(_.startsWith(ChangesHeader))
-      .map(_.stripPrefix(ChangesHeader).trim)
-      .filter(_.nonEmpty)
+    headerValue(spark, tableDir, version, ChangesHeader).map(_.trim).filter(_.nonEmpty)
 
   /** Write one commit's change artifact: `(data columns...,
     * _change_type)` parquet under `changes/`. Written BEFORE the
@@ -1630,10 +1588,11 @@ object VersionedLake {
     manifestLines(spark, tableDir, version)
       .filter(_.startsWith(EqDeleteHeader))
       .map { line =>
-        val rest = line.stripPrefix(EqDeleteHeader)
-        val tab = rest.indexOf('\t')
-        require(tab > 0, s"malformed eqdelete manifest line in $tableDir v=$version: $line")
-        org.json4s.jackson.JsonMethods.parse(rest.substring(tab + 1)) match {
+        def malformed = s"malformed eqdelete manifest line in $tableDir v=$version: $line"
+        val entry = layerEntry(line, EqDeleteHeader).filter(_._1.nonEmpty)
+        require(entry.isDefined, malformed)
+        val (dir, json) = entry.get
+        org.json4s.jackson.JsonMethods.parse(json) match {
           case JObject(fields) =>
             val m = fields.toMap
             (m.get("keys"), m.get("dirs")) match {
@@ -1644,14 +1603,12 @@ object VersionedLake {
                   }.toMap
                   case _ => Map.empty[String, Long]
                 }
-                EqDelete(rest.substring(0, tab),
+                EqDelete(dir,
                   ks.collect { case JString(s) => s },
                   ds.collect { case JString(s) => s }, cnt)
-              case _ =>
-                sys.error(s"malformed eqdelete manifest line in $tableDir v=$version: $line")
+              case _ => sys.error(malformed)
             }
-          case _ =>
-            sys.error(s"malformed eqdelete manifest line in $tableDir v=$version: $line")
+          case _ => sys.error(malformed)
         }
       }
   }
@@ -1663,18 +1620,19 @@ object VersionedLake {
       spark: SparkSession,
       tableDir: String,
       version: Long): Map[String, Long] =
-    manifestLines(spark, tableDir, version)
-      .filter(_.startsWith(TxnHeader))
-      .flatMap { line =>
-        val rest = line.stripPrefix(TxnHeader)
-        val tab = rest.indexOf('\t')
-        if (tab < 0) None
-        else rest.substring(tab + 1).toLongOption.map(rest.substring(0, tab) -> _)
-      }
-      .toMap
+    dirLayer(spark, tableDir, version, TxnHeader).flatMap { case (app, b) =>
+      b.toLongOption.map(app -> _)
+    }
 
-  private def txnsAt(spark: SparkSession, tableDir: String, cur: Option[Long]): Map[String, Long] =
-    cur.map(v => txnWatermarks(spark, tableDir, v)).getOrElse(Map.empty)
+  /** The exactly-once gate of every `txn`-taking commit: whether the
+    * writer's batch is at or below its watermark in `version`.
+    */
+  private def alreadyCommitted(
+      spark: SparkSession,
+      tableDir: String,
+      version: Long,
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (app, b) => txnWatermarks(spark, tableDir, version).get(app).exists(_ >= b) }
 
   /** One written data directory: its name, its row count, and its
     * `#stats`/`#ndv` payload (None without stats columns).
@@ -1692,6 +1650,9 @@ object VersionedLake {
     * The row count and `statsCols` aggregates ([[statsAggExprs]]) are
     * observed metrics of the written frame, computed by the write job's
     * result stage (after any shuffle: a re-run map stage counts nothing twice).
+    * A listener that this write registers and removes reads them; Spark's
+    * `Observation` would leave its own listener on the session for good,
+    * and that one logs an error trace for every later failed statement.
     */
   private def writeDataDir(
       df: DataFrame,
@@ -1722,16 +1683,33 @@ object VersionedLake {
         shaped.sortWithinPartitions((parts ++ sortWithin).map(col): _*)
       else shaped
     val out = sorted.drop(Lake.ZKey)
-    val observed = org.apache.spark.sql.Observation()
+    val metricsName = s"graft_write_$name"
     val metrics = (count(lit(1)) +: statsAggExprs(out, statsCols)).zipWithIndex
       .map { case (m, i) => m.as(s"_m$i") }
-    val writer0 = out.observe(observed, metrics.head, metrics.tail: _*)
+    val writer0 = out.observe(metricsName, metrics.head, metrics.tail: _*)
       .write.mode("error").option("maxRecordsPerFile", maxRecordsPerFile)
     val writer = if (parts.nonEmpty) writer0.partitionBy(parts: _*) else writer0
-    writer.parquet(s"$tableDir/data/$name")
-    // the metrics arrive through the listener bus, within milliseconds
-    val row = scala.concurrent.Await.result(observed.future,
-      scala.concurrent.duration.Duration(5, "min"))
+    val observed = scala.concurrent.Promise[org.apache.spark.sql.Row]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        qe.observedMetrics.get(metricsName).foreach(observed.trySuccess)
+      override def onFailure(
+          funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val listeners = df.sparkSession.listenerManager
+    listeners.register(listener)
+    val row =
+      try {
+        writer.parquet(s"$tableDir/data/$name")
+        // the metrics arrive through the listener bus, within milliseconds
+        scala.concurrent.Await.result(observed.future,
+          scala.concurrent.duration.Duration(5, "min"))
+      } finally listeners.unregister(listener)
     Written(name, row.getLong(0),
       if (statsCols.isEmpty) None else Some(renderStatsRow(statsCols, row, 1)))
   }
@@ -1770,6 +1748,26 @@ object VersionedLake {
     * the read-modify-write committers ([[upsert]], [[optimize]]) need
     * that, or a retry would clobber the concurrent commit it conflicted
     * with.
+    *
+    * THE CARRY RULE — this is the only code that carries a manifest
+    * forward. Data directories are immutable, so their metadata is too:
+    * for every directory that both the base (the current version) and
+    * `dirs` list, each per-directory layer line (`#stats`, `#bloom`,
+    * `#ndv`, `#rows`, `#parts`) is copied verbatim from the base. The
+    * base's `#declspec` and `#txn` watermarks carry as well. Callers
+    * pass only what they change:
+    *   - `stats`/`blooms`/`ndv`: payloads of new directories, or a
+    *     replacement for a kept directory's line (the re-keyed or
+    *     recomputed layers of [[renameColumn]], [[dropColumn]],
+    *     [[widenColumn]], [[analyzeStats]], [[rollback]]). A replacement
+    *     that is an empty object, [[NoLayer]], writes no line.
+    *   - `txn`: the caller's own `(appId, batchId)` watermark.
+    *   - `declSpec`: `Some(Some(cols))` declares a spec, `Some(None)`
+    *     drops the declaration (a rollback to a never-declared version).
+    * A directory new to the manifest gets its `#rows` line from its
+    * footers and its `#parts` line from its `k=v` layout, so every
+    * commit pays for its own delta only. Pending deletes (`eqdeletes`)
+    * are NOT carried: each caller restates the ones it keeps.
     */
   private[graft] def publishManifest(
       spark: SparkSession,
@@ -1779,7 +1777,7 @@ object VersionedLake {
       stats: Map[String, String] = Map.empty,
       blooms: Map[String, String] = Map.empty,
       expectedBase: Option[Option[Long]] = None,
-      txns: Map[String, Long] = Map.empty,
+      txn: Option[(String, Long)] = None,
       eqdeletes: Seq[EqDelete] = Nil,
       op: String = "commit",
       changes: Option[String] = None,
@@ -1793,52 +1791,29 @@ object VersionedLake {
             s"${exp.getOrElse(-1L)}; re-read and re-base")
     }
     val next = cur.getOrElse(-1L) + 1
-    // exact per-directory row/byte counts: carried verbatim for any dir
-    // the current version already accounts (immutable data ⟹ immutable
-    // counts), gathered from footers + listing for dirs entering a
-    // manifest for the first time — every commit path gets the layer
-    // for O(its own delta), with zero call-site involvement
-    val priorRows = cur.map(v => dirRowsRaw(spark, tableDir, v)).getOrElse(Map.empty)
-    val rowsLines = dirs.flatMap { d =>
-      priorRows.get(d)
-        .orElse(dirRowMeta(spark, tableDir, d).map { case (n, b) => rowsJson(n, b) })
-        .map(j => s"$RowsHeader$d\t$j")
+    // one layer's lines: the caller's payload, else the base's line
+    // verbatim, else (rows, parts) what a new directory's files say
+    def layerLines(header: String, given: Map[String, String])(
+        fresh: String => Option[String]): Seq[String] = {
+      val carried = cur.map(v => dirLayer(spark, tableDir, v, header)).getOrElse(Map.empty)
+      dirs.flatMap { d =>
+        given.get(d).orElse(carried.get(d)).orElse(fresh(d))
+          .filter(_ != NoLayer).map(j => s"$header$d\t$j")
+      }
     }
-    // partition-spec lines: carried verbatim for known dirs (immutable
-    // layout), walked off the self-describing k=v structure for dirs
-    // entering a manifest for the first time — O(delta) like the row
-    // layer, zero call-site involvement. Only partitioned dirs write a
-    // line; absence = flat.
-    val priorParts = cur.map(v => dirPartsRaw(spark, tableDir, v)).getOrElse(Map.empty)
-    val partsLines = dirs.flatMap { d =>
-      priorParts.get(d)
-        .orElse {
-          // a walk failure MUST fail the commit: swallowing it would
-          // permanently record a partitioned directory as flat (absence
-          // = flat), mis-steering every later mixed-spec read of this
-          // version — the transient FS error is the recoverable one
-          val chain = partitionColsOf(spark, tableDir, d)
-          if (chain.isEmpty) None
-          else {
-            import org.json4s.JsonAST._
-            Some(org.json4s.jackson.JsonMethods.compact(
-              org.json4s.jackson.JsonMethods.render(
-                JArray(chain.map(JString(_): JValue).toList))))
-          }
-        }
-        .map(j => s"$PartsHeader$d\t$j")
-    }
-    val statsLines = dirs.flatMap(d => stats.get(d).map(j => s"$StatsHeader$d\t$j"))
-    val bloomLines = dirs.flatMap(d => blooms.get(d).map(j => s"$BloomHeader$d\t$j"))
-    // NDV lines: caller-supplied for new directories, carried VERBATIM
-    // from the current version for any directory it already accounts
-    // (immutable data ⟹ immutable sketches) — so the layer survives
-    // every commit path that reuses directories with zero call-site
-    // involvement, exactly like the `#rows` layer
-    val priorNdv = cur.map(v => dirNdvRaw(spark, tableDir, v)).getOrElse(Map.empty)
-    val ndvLines = dirs.flatMap(d =>
-      ndv.get(d).orElse(priorNdv.get(d)).map(j => s"$NdvHeader$d\t$j"))
-    val txnLines = txns.toSeq.sortBy(_._1).map { case (app, b) => s"$TxnHeader$app\t$b" }
+    val rowsLines = layerLines(RowsHeader, Map.empty)(d =>
+      dirRowMeta(spark, tableDir, d).map { case (n, b) => rowsJson(n, b) })
+    // only partitioned dirs write a line; absence = flat. A walk failure
+    // MUST fail the commit: swallowing it would permanently record a
+    // partitioned directory as flat, mis-steering every later mixed-spec
+    // read of this version — the transient FS error is the recoverable one
+    val partsLines = layerLines(PartsHeader, Map.empty)(d =>
+      Some(partitionColsOf(spark, tableDir, d)).filter(_.nonEmpty).map(stringArrayJson))
+    val statsLines = layerLines(StatsHeader, stats)(_ => None)
+    val bloomLines = layerLines(BloomHeader, blooms)(_ => None)
+    val ndvLines = layerLines(NdvHeader, ndv)(_ => None)
+    val txnLines = (cur.map(v => txnWatermarks(spark, tableDir, v)).getOrElse(Map.empty) ++ txn)
+      .toSeq.sortBy(_._1).map { case (app, b) => s"$TxnHeader$app\t$b" }
     // a delete's scope shrinks to the directories still published; a line
     // whose every target directory is gone (rewritten/compacted away) has
     // nothing left to apply to and drops
@@ -1862,19 +1837,10 @@ object VersionedLake {
         s"$EqDeleteHeader${e.dir}\t$j"
       }
     val changesLines = changes.map(c => s"$ChangesHeader$c").toSeq
-    // declared-spec line: outer None = carry VERBATIM from the current
-    // version (every ordinary commit path — a declaration survives until
-    // re-declared, zero call-site involvement, the `#rows` discipline);
-    // Some(Some(cols)) = declare (setPartitionSpec); Some(None) = no line
-    // (rollback restoring a never-declared version)
-    val declLine = (declSpec match {
-      case Some(explicit) => explicit.map { cols =>
-        import org.json4s.JsonAST._
-        org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(
-          JArray(cols.map(JString(_): JValue).toList)))
-      }
-      case None => cur.flatMap(v => declaredSpecRaw(spark, tableDir, v))
-    }).map(j => s"$DeclSpecHeader$j").toSeq
+    val declLine = declSpec
+      .fold(cur.flatMap(v => headerValue(spark, tableDir, v, DeclSpecHeader)))(
+        _.map(stringArrayJson))
+      .map(j => s"$DeclSpecHeader$j").toSeq
     val body = (SchemaHeader + schema.json) +: (OpHeader + op) +:
       (declLine ++ rowsLines ++ partsLines ++ statsLines ++ bloomLines ++ ndvLines ++
         txnLines ++ eqLines ++ changesLines ++ dirs)
@@ -2136,13 +2102,9 @@ object VersionedLake {
     retryOnConflict() {
       val spark = df.sparkSession
       val cur = currentVersion(spark, tableDir)
-      val priorTxns = txnsAt(spark, tableDir, cur)
-      txn.foreach { case (app, b) =>
-        if (priorTxns.get(app).exists(_ >= b)) return cur.get
-      }
+      if (cur.exists(alreadyCommitted(spark, tableDir, _, txn))) return cur.get
       publishManifest(spark, tableDir, Seq(w.dir), nullableAll(df.schema), w.statsBy, blooms,
-        expectedBase = Some(cur), txns = priorTxns ++ txn.toMap, op = "snapshot",
-        ndv = w.ndvBy)
+        expectedBase = Some(cur), txn = txn, op = "snapshot", ndv = w.ndvBy)
     }
   }
 
@@ -2164,8 +2126,7 @@ object VersionedLake {
     val spark = df.sparkSession
     val d = writeDataDir(df, tableDir, parts, maxRecordsPerFile).dir
     publishManifest(spark, tableDir, Seq(d), nullableAll(df.schema),
-      expectedBase = Some(Some(base)),
-      txns = txnWatermarks(spark, tableDir, base), op = op)
+      expectedBase = Some(Some(base)), op = op)
   }
 
   /** O(delta) append commit: writes ONLY the batch; the new manifest is
@@ -2217,7 +2178,7 @@ object VersionedLake {
     val spark = df.sparkSession
     // fast path: already committed (cheap check before the batch write)
     currentVersion(spark, tableDir).foreach { v =>
-      if (txnWatermarks(spark, tableDir, v).get(appId).exists(_ >= batchId)) return v
+      if (alreadyCommitted(spark, tableDir, v, Some(appId -> batchId))) return v
     }
     appendCommitInternal(df, tableDir, parts, maxRecordsPerFile, statsCols, bloom,
       Some(appId -> batchId), sortWithin)
@@ -2244,19 +2205,14 @@ object VersionedLake {
     retryOnConflict(maxAttempts = 8) {
       val cur = currentVersion(spark, tableDir).getOrElse(
         throw new IllegalStateException(s"no published version in $tableDir"))
-      val txns = txnWatermarks(spark, tableDir, cur)
-      if (txns.get(appId).exists(_ >= batchId)) cur
+      val txn = Some(appId -> batchId)
+      if (alreadyCommitted(spark, tableDir, cur, txn)) cur
       else {
         val schema = versionSchema(spark, tableDir, cur)
           .getOrElse(readVersion(spark, tableDir, cur).schema)
         publishManifest(spark, tableDir, manifest(spark, tableDir, cur), schema,
-          stats = dirStats(spark, tableDir, cur)
-            .map { case (d, c) => d -> statsJson(c) },
-          blooms = dirBloomsRaw(spark, tableDir, cur),
-          expectedBase = Some(Some(cur)),
-          txns = txns + (appId -> batchId),
-          eqdeletes = dirEqDeletes(spark, tableDir, cur),
-          op = "watermark")
+          expectedBase = Some(Some(cur)), txn = txn,
+          eqdeletes = dirEqDeletes(spark, tableDir, cur), op = "watermark")
       }
     }
   }
@@ -2295,10 +2251,7 @@ object VersionedLake {
       val cur = currentVersion(spark, tableDir)
       // exactly-once gate INSIDE the critical section: a concurrent replay
       // of the same (appId, batchId) that won the race moved the watermark
-      val priorTxns = txnsAt(spark, tableDir, cur)
-      txn.foreach { case (app, b) =>
-        if (priorTxns.get(app).exists(_ >= b)) return cur.get
-      }
+      if (cur.exists(alreadyCommitted(spark, tableDir, _, txn))) return cur.get
       // UNIQUE constraints probe INSIDE the critical section: losing the
       // publish race re-enters here with the winner's version, so two
       // racing inserts of the same key serialize through the manifest
@@ -2309,15 +2262,6 @@ object VersionedLake {
         versionSchema(spark, tableDir, v)
           .getOrElse(nullableAll(readVersion(spark, tableDir, v).schema))
       }
-      // prior directories keep their stats and blooms verbatim (their data
-      // is immutable); only the new batch is aggregated — the commit stays
-      // O(delta)
-      val priorStats = cur.map { v =>
-        dirStats(spark, tableDir, v).map { case (dir, cols) =>
-          dir -> statsJson(cols)
-        }
-      }.getOrElse(Map.empty)
-      val priorBlooms = cur.map(v => dirBloomsRaw(spark, tableDir, v)).getOrElse(Map.empty)
       // pending merge-on-read deletes carry with their pinned scopes: the
       // new batch directory is outside every scope, so an appended
       // re-insert of a deleted key is visible by construction
@@ -2325,23 +2269,13 @@ object VersionedLake {
       val merged = priorSchema
         .map(p => mergeSchemas(p, batchSchema))
         .getOrElse(batchSchema)
-      val blooms = priorBlooms ++ batchBloom.map(w.dir -> _).toMap
-      publishManifest(spark, tableDir, prior :+ w.dir, merged, priorStats ++ w.statsBy, blooms,
-        expectedBase = Some(cur),
-        txns = priorTxns ++ txn.toMap, eqdeletes = priorEq, op = "append",
-        ndv = w.ndvBy)
+      // only the new batch brings layers; the prior directories' carry
+      // (publishManifest) keeps the commit O(delta)
+      publishManifest(spark, tableDir, prior :+ w.dir, merged, w.statsBy,
+        batchBloom.map(w.dir -> _).toMap, expectedBase = Some(cur),
+        txn = txn, eqdeletes = priorEq, op = "append", ndv = w.ndvBy)
     }
     } finally if (cacheBatch) df.unpersist(blocking = false)
-  }
-
-  /** Re-encode parsed stats for carry-forward into the next manifest. */
-  private def statsJson(cols: Map[String, (Option[String], Option[String])]): String = {
-    import org.json4s.JsonAST._
-    val obj = JObject(cols.toList.sortBy(_._1).map { case (c, (mn, mx)) =>
-      def v(o: Option[String]): JValue = o.map(JString(_): JValue).getOrElse(JNull)
-      c -> (JArray(List(v(mn), v(mx))): JValue)
-    })
-    org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(obj))
   }
 
   /** DEEP nullability normalization: parquet round-trips lose NOT NULL,
@@ -3249,14 +3183,11 @@ object VersionedLake {
       val base = currentVersion(spark, tableDir)
         .getOrElse(throw new IllegalStateException(s"no published version in $tableDir"))
       // exactly-once gate (see appendCommitTxn): a replayed maintenance
-      // batch whose commit landed must not merge its rows twice
-      val priorTxns = txnWatermarks(spark, tableDir, base)
-      txn.foreach { case (app, b) =>
-        // the replay no-op still awaits the gate: a refused statement
-        // (duplicate matched keys) must fail even when its write would
-        // have been an exactly-once no-op
-        if (priorTxns.get(app).exists(_ >= b)) { preWriteGate(); return base }
-      }
+      // batch whose commit landed must not merge its rows twice. The
+      // replay no-op still awaits the gate: a refused statement
+      // (duplicate matched keys) must fail even when its write would
+      // have been an exactly-once no-op
+      if (alreadyCommitted(spark, tableDir, base, txn)) { preWriteGate(); return base }
       requireNoEqDeletes(spark, tableDir, base, "upsert")
       // last point before side effects: the caller's refusal probes must
       // have passed before keyedRewrite writes its first replacement dir.
@@ -3357,11 +3288,8 @@ object VersionedLake {
             (Some(w), bloomJson(updates, updBloom).map(w.dir -> _)))
       // rewritten dirs' stats came with their writes; only a bloom layer
       // re-reads one
-      val rewriteStatsTask: () => (Map[String, String], Map[String, String],
-          Map[String, String]) = () =>
-        carryRewriteMeta(spark, tableDir, kr.schemaOpt,
-          kr.priorStats, kr.priorBloomsRaw, kr.priorBlooms,
-          kr.survivingDirs, kr.rewritten)
+      val rewriteStatsTask: () => RewriteLayers = () =>
+        rewriteLayers(spark, tableDir, kr.schemaOpt, kr.priorBlooms, kr.rewritten)
       // the three post-rewrite phases touch disjoint inputs (immutable
       // committed dirs, the cached batch) and disjoint outputs (changes
       // dir, data dir, driver-side maps) — run them concurrently (§2.6)
@@ -3373,8 +3301,7 @@ object VersionedLake {
       val changesName = results(0).asInstanceOf[Option[String]]
       val (appended, updBloomOpt) = results(1)
         .asInstanceOf[(Option[Written], Option[(String, String)])]
-      val (cowStats, cowBlooms, cowNdv) = results(2)
-        .asInstanceOf[(Map[String, String], Map[String, String], Map[String, String])]
+      val cow = results(2).asInstanceOf[RewriteLayers]
       // steady-state no-op: nothing rewritten AND nothing appended —
       // publishing a version for a no-match empty batch would grow the
       // manifest per idempotent call; its unreferenced artifact goes
@@ -3394,15 +3321,14 @@ object VersionedLake {
           .repartition(1)
         val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile).dir
         publishManifest(spark, tableDir, Seq(d), merged,
-          expectedBase = Some(Some(base)), txns = priorTxns ++ txn.toMap,
+          expectedBase = Some(Some(base)), txn = txn,
           op = "upsert", changes = changesName)
       } else
         publishManifest(spark, tableDir, newDirs, merged,
-          cowStats ++ appended.fold(Map.empty[String, String])(_.statsBy),
-          cowBlooms ++ updBloomOpt.toMap,
-          expectedBase = Some(Some(base)),
-          txns = priorTxns ++ txn.toMap, op = "upsert",
-          changes = changesName, ndv = cowNdv ++ appended.fold(Map.empty[String, String])(_.ndvBy))
+          cow.stats ++ appended.fold(Map.empty[String, String])(_.statsBy),
+          cow.blooms ++ updBloomOpt.toMap,
+          expectedBase = Some(Some(base)), txn = txn, op = "upsert",
+          changes = changesName, ndv = cow.ndv ++ appended.fold(Map.empty[String, String])(_.ndvBy))
     }
     } finally {
       // release the phase-shared caches; early `return base` paths
@@ -3459,9 +3385,7 @@ object VersionedLake {
     keys.foreach(k => require(committed.fieldNames.contains(k),
       s"upsert key '$k' is not a committed column of $tableDir"))
     // fast path for replays BEFORE paying the delta writes
-    txn.foreach { case (app, b) =>
-      if (txnWatermarks(spark, tableDir, base0).get(app).exists(_ >= b)) return base0
-    }
+    if (alreadyCommitted(spark, tableDir, base0, txn)) return base0
     // both delta artifacts written once; a lost publish race re-reads
     // the manifest, never re-writes data
     val typedKeys = updates.select(keys.map { k =>
@@ -3489,18 +3413,12 @@ object VersionedLake {
     val updBloom = bloomJson(updates, bloomCfg).map(upd.dir -> _).toMap
     retryOnConflict() {
       val cur = currentVersion(spark, tableDir).get
-      val priorTxns = txnWatermarks(spark, tableDir, cur)
-      txn.foreach { case (app, b) =>
-        if (priorTxns.get(app).exists(_ >= b)) return cur
-      }
+      if (alreadyCommitted(spark, tableDir, cur, txn)) return cur
       val dirs = manifest(spark, tableDir, cur)
       val priorSchema = versionSchema(spark, tableDir, cur).getOrElse(committed)
       val merged = mergeSchemas(priorSchema, nullableAll(updates.schema))
-      val priorStats = dirStats(spark, tableDir, cur).map { case (d, c) => d -> statsJson(c) }
-      publishManifest(spark, tableDir, dirs :+ upd.dir, merged,
-        priorStats ++ upd.statsBy, dirBloomsRaw(spark, tableDir, cur) ++ updBloom,
-        expectedBase = Some(Some(cur)),
-        txns = priorTxns ++ txn.toMap,
+      publishManifest(spark, tableDir, dirs :+ upd.dir, merged, upd.statsBy, updBloom,
+        expectedBase = Some(Some(cur)), txn = txn,
         eqdeletes = dirEqDeletes(spark, tableDir, cur) :+ EqDelete(delName, keys, dirs),
         op = "upsert_mor",
         ndv = upd.ndvBy)
@@ -3538,10 +3456,7 @@ object VersionedLake {
     retryOnConflict(maxAttempts = 8) {
       val base = currentVersion(spark, tableDir)
         .getOrElse(throw new IllegalStateException(s"no published version in $tableDir"))
-      val priorTxns = txnWatermarks(spark, tableDir, base)
-      txn.foreach { case (app, b) =>
-        if (priorTxns.get(app).exists(_ >= b)) return base
-      }
+      if (alreadyCommitted(spark, tableDir, base, txn)) return base
       requireNoEqDeletes(spark, tableDir, base, "deleteKeys")
       val kr = keyedRewrite(spark, tableDir, base, keyDf, keys, ranges, maxRecordsPerFile)
       val newDirs = kr.survivingDirs
@@ -3562,21 +3477,20 @@ object VersionedLake {
             .withColumn("_change_type", lit("delete"))
         writeChangesDir(frame, tableDir)
       }
-      val (stats, blooms, rewriteNdv) = carryRewriteMeta(spark, tableDir, kr.schemaOpt,
-        kr.priorStats, kr.priorBloomsRaw, kr.priorBlooms, newDirs, kr.rewritten)
       if (newDirs.isEmpty) {
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), kr.priorSchema)
           .repartition(1)
         val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile).dir
         publishManifest(spark, tableDir, Seq(d), kr.priorSchema,
-          expectedBase = Some(Some(base)), txns = priorTxns ++ txn.toMap,
+          expectedBase = Some(Some(base)), txn = txn,
           op = "delete_keys", changes = changesName)
-      } else
-        publishManifest(spark, tableDir, newDirs, kr.priorSchema, stats, blooms,
-          expectedBase = Some(Some(base)),
-          txns = priorTxns ++ txn.toMap, op = "delete_keys",
-          changes = changesName, ndv = rewriteNdv)
+      } else {
+        val cow = rewriteLayers(spark, tableDir, kr.schemaOpt, kr.priorBlooms, kr.rewritten)
+        publishManifest(spark, tableDir, newDirs, kr.priorSchema, cow.stats, cow.blooms,
+          expectedBase = Some(Some(base)), txn = txn, op = "delete_keys",
+          changes = changesName, ndv = cow.ndv)
+      }
     }
     } finally keyDf.unpersist(blocking = false)
   }
@@ -3626,17 +3540,11 @@ object VersionedLake {
     typed.write.mode("error").parquet(s"$tableDir/deletes/$name")
     retryOnConflict() {
       val cur = currentVersion(spark, tableDir).get
-      val priorTxns = txnWatermarks(spark, tableDir, cur)
-      txn.foreach { case (app, b) =>
-        if (priorTxns.get(app).exists(_ >= b)) return cur
-      }
+      if (alreadyCommitted(spark, tableDir, cur, txn)) return cur
       val dirs = manifest(spark, tableDir, cur)
       val schema = versionSchema(spark, tableDir, cur).getOrElse(committed)
-      val stats = dirStats(spark, tableDir, cur).map { case (d, c) => d -> statsJson(c) }
       publishManifest(spark, tableDir, dirs, schema,
-        stats, dirBloomsRaw(spark, tableDir, cur),
-        expectedBase = Some(Some(cur)),
-        txns = priorTxns ++ txn.toMap,
+        expectedBase = Some(Some(cur)), txn = txn,
         eqdeletes = dirEqDeletes(spark, tableDir, cur) :+ EqDelete(name, keys, dirs),
         op = "delete_mor")
     }
@@ -3696,22 +3604,19 @@ object VersionedLake {
           statsCols = priorStats.get(d).map(_.keys.toSeq.sorted).getOrElse(Nil))
       }.toMap
       val newDirs = dirs.flatMap(d => rewritten.get(d).fold(Option(d))(_.map(_.dir)))
-      val (stats, blooms, rewriteNdv) = carryRewriteMeta(spark, tableDir, schemaOpt,
-        priorStats, dirBloomsRaw(spark, tableDir, base),
-        dirBlooms(spark, tableDir, base), newDirs, rewritten)
       if (newDirs.isEmpty) {
         val empty = spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), priorSchema)
           .repartition(1)
         val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile).dir
         publishManifest(spark, tableDir, Seq(d), priorSchema,
-          expectedBase = Some(Some(base)), txns = txnWatermarks(spark, tableDir, base),
-          op = "materialize")
-      } else
-        publishManifest(spark, tableDir, newDirs, priorSchema, stats, blooms,
-          expectedBase = Some(Some(base)),
-          txns = txnWatermarks(spark, tableDir, base), op = "materialize",
-          ndv = rewriteNdv)
+          expectedBase = Some(Some(base)), op = "materialize")
+      } else {
+        val cow = rewriteLayers(spark, tableDir, schemaOpt, dirBlooms(spark, tableDir, base),
+          rewritten)
+        publishManifest(spark, tableDir, newDirs, priorSchema, cow.stats, cow.blooms,
+          expectedBase = Some(Some(base)), op = "materialize", ndv = cow.ndv)
+      }
     }
 
   /** Keyed/predicate rewrites re-distribute rows across directories,
@@ -3753,8 +3658,6 @@ object VersionedLake {
       dirs: Seq[String],
       schemaOpt: Option[org.apache.spark.sql.types.StructType],
       priorSchema: org.apache.spark.sql.types.StructType,
-      priorStats: Map[String, Map[String, (Option[String], Option[String])]],
-      priorBloomsRaw: Map[String, String],
       priorBlooms: Map[String, Map[String, (Int, Int, Array[Byte])]],
       rewritten: Map[String, Option[Written]]) {
     def survivingDirs: Seq[String] =
@@ -3929,9 +3832,7 @@ object VersionedLake {
             statsCols = priorStats.get(d).map(_.keys.toSeq.sorted).getOrElse(Nil))
         })
       }).toMap
-    KeyedRewrite(dirs, schemaOpt, priorSchema, priorStats,
-      dirBloomsRaw(spark, tableDir, base), dirBlooms(spark, tableDir, base),
-      rewritten)
+    KeyedRewrite(dirs, schemaOpt, priorSchema, dirBlooms(spark, tableDir, base), rewritten)
   }
 
   /** Row-level DELETE as copy-on-write on the MINIMAL directory set: one
@@ -3997,10 +3898,7 @@ object VersionedLake {
     retryOnConflict() {
       val base = currentVersion(spark, tableDir)
         .getOrElse(throw new IllegalStateException(s"no published version in $tableDir"))
-      val priorTxns = txnWatermarks(spark, tableDir, base)
-      txn.foreach { case (app, b) =>
-        if (priorTxns.get(app).exists(_ >= b)) return base
-      }
+      if (alreadyCommitted(spark, tableDir, base, txn)) return base
       val dirs = manifest(spark, tableDir, base)
       val schemaOpt = versionSchema(spark, tableDir, base)
       val schema = schemaOpt
@@ -4039,10 +3937,7 @@ object VersionedLake {
             matched.drop(PosDeleteKeys: _*).withColumn("_change_type", lit("delete")),
             tableDir))
         publishManifest(spark, tableDir, dirs, schema,
-          dirStats(spark, tableDir, base).map { case (d, c) => d -> statsJson(c) },
-          dirBloomsRaw(spark, tableDir, base),
-          expectedBase = Some(Some(base)),
-          txns = priorTxns ++ txn.toMap,
+          expectedBase = Some(Some(base)), txn = txn,
           eqdeletes = dirEqDeletes(spark, tableDir, base) :+
             EqDelete(delName, PosDeleteKeys, dirs, delCounts),
           op = "delete_where_mor",
@@ -4122,10 +4017,7 @@ object VersionedLake {
     retryOnConflict() {
       val base = currentVersion(spark, tableDir)
         .getOrElse(throw new IllegalStateException(s"no published version in $tableDir"))
-      val priorTxns = txnWatermarks(spark, tableDir, base)
-      txn.foreach { case (app, b) =>
-        if (priorTxns.get(app).exists(_ >= b)) return base
-      }
+      if (alreadyCommitted(spark, tableDir, base, txn)) return base
       val dirs = manifest(spark, tableDir, base)
       val schemaOpt = versionSchema(spark, tableDir, base)
       val schema = schemaOpt
@@ -4170,13 +4062,9 @@ object VersionedLake {
               .unionByName(transformed.withColumn("_change_type", lit("update_postimage"))),
             tableDir))
         publishManifest(spark, tableDir, dirs :+ upd.dir,
-          mergeSchemas(schema, nullableAll(transformed.schema)),
-          dirStats(spark, tableDir, base).map { case (d, c) => d -> statsJson(c) } ++
-            upd.statsBy,
-          dirBloomsRaw(spark, tableDir, base) ++
-            bloomJson(transformed, bloomCfg).map(upd.dir -> _).toMap,
-          expectedBase = Some(Some(base)),
-          txns = priorTxns ++ txn.toMap,
+          mergeSchemas(schema, nullableAll(transformed.schema)), upd.statsBy,
+          bloomJson(transformed, bloomCfg).map(upd.dir -> _).toMap,
+          expectedBase = Some(Some(base)), txn = txn,
           eqdeletes = dirEqDeletes(spark, tableDir, base) :+
             EqDelete(delName, PosDeleteKeys, dirs, posDeleteCounts(matched)),
           op = "update_where_mor",
@@ -4233,44 +4121,35 @@ object VersionedLake {
       changeArtifact = changeArtifact)
   }
 
-  /** Stats/bloom carry for a copy-on-write publish: untouched directories
-    * keep their manifest lines VERBATIM (immutable data ⟹ immutable
-    * metadata, zero recompute); a rewritten directory's `#stats`/`#ndv`
-    * came with its write, over the same column set the old directory
-    * declared, and only a bloom layer (same sizing) re-reads it — so a
-    * row-level op never silently sheds the table's skipping layers.
+  /** The layers of a copy-on-write commit's REWRITTEN directories (the
+    * untouched ones carry through [[publishManifest]]): `#stats`/`#ndv`
+    * came with each rewrite's write, over the column set the old
+    * directory declared, and only a bloom layer (same sizing) re-reads
+    * the new directory — so a row-level op never silently sheds the
+    * table's skipping layers.
     */
-  private def carryRewriteMeta(
+  private final case class RewriteLayers(
+      stats: Map[String, String],
+      blooms: Map[String, String],
+      ndv: Map[String, String])
+
+  private def rewriteLayers(
       spark: SparkSession,
       tableDir: String,
       schemaOpt: Option[org.apache.spark.sql.types.StructType],
-      priorStats: Map[String, Map[String, (Option[String], Option[String])]],
-      priorBloomsRaw: Map[String, String],
       priorBlooms: Map[String, Map[String, (Int, Int, Array[Byte])]],
-      newDirs: Seq[String],
-      rewritten: Map[String, Option[Written]])
-      : (Map[String, String], Map[String, String], Map[String, String]) = {
-    val replaced = rewritten.collect { case (old, Some(w)) => w.dir -> (old -> w) }
-    // untouched dirs: the stats line re-renders here (legacy shape);
-    // their #ndv line carries verbatim via publishManifest's own
-    // prior-version pass, so it is NOT re-emitted from this map
-    val stats = newDirs.flatMap { nd =>
-      replaced.get(nd).fold(priorStats.get(nd).map(c => nd -> statsJson(c)).toMap)(_._2.statsBy)
-    }.toMap
-    val ndv = newDirs.flatMap(nd => replaced.get(nd).toSeq.flatMap(_._2.ndvBy)).toMap
-    val blooms = newDirs.flatMap { nd =>
-      replaced.get(nd) match {
-        case Some((old, _)) =>
-          priorBlooms.get(old).filter(_.nonEmpty).flatMap { cfgs =>
-            val (m, k) = cfgs.values.map(t => (t._1, t._2)).maxBy(_._1)
-            bloomJson(
-              readDirs(spark, tableDir, Seq(s"$tableDir/data/$nd"), schemaOpt),
-              Some(BloomConfig(cfgs.keys.toSeq.sorted, m, k)))
-          }.map(nd -> _)
-        case None => priorBloomsRaw.get(nd).map(nd -> _)
-      }
-    }.toMap
-    (stats, blooms, ndv)
+      rewritten: Map[String, Option[Written]]): RewriteLayers = {
+    val replaced = rewritten.toSeq.collect { case (old, Some(w)) => old -> w }
+    val blooms = replaced.flatMap { case (old, w) =>
+      priorBlooms.get(old).filter(_.nonEmpty).flatMap { cfgs =>
+        val (m, k) = cfgs.values.map(t => (t._1, t._2)).maxBy(_._1)
+        bloomJson(
+          readDirs(spark, tableDir, Seq(s"$tableDir/data/${w.dir}"), schemaOpt),
+          Some(BloomConfig(cfgs.keys.toSeq.sorted, m, k)))
+      }.map(w.dir -> _)
+    }
+    RewriteLayers(replaced.flatMap(_._2.statsBy).toMap, blooms.toMap,
+      replaced.flatMap(_._2.ndvBy).toMap)
   }
 
   private def copyOnWrite(
@@ -4290,8 +4169,6 @@ object VersionedLake {
       val dirs = manifest(spark, tableDir, base)
       val schemaOpt = versionSchema(spark, tableDir, base)
       val priorStats = dirStats(spark, tableDir, base)
-      val priorBloomsRaw = dirBloomsRaw(spark, tableDir, base)
-      val priorBlooms = dirBlooms(spark, tableDir, base)
       // which directories hold matching rows? one filtered scan, file →
       // commit-dir attribution; the collect is bounded by the file count
       val affected = readVersion(spark, tableDir, base)
@@ -4382,12 +4259,10 @@ object VersionedLake {
               allowMissingColumns = true))
           Some(writeChangesDir(frame, tableDir))
         }
-      // the carry re-reads only rewritten dirs with a bloom layer (the
-      // appended dir's layers come from the append task)
-      val rewriteStatsTask: () => (Map[String, String], Map[String, String],
-          Map[String, String]) = () =>
-        carryRewriteMeta(spark, tableDir, schemaOpt,
-          priorStats, priorBloomsRaw, priorBlooms, surviving, rewritten)
+      // only rewritten dirs with a bloom layer are re-read (the appended
+      // dir's layers come from the append task)
+      val rewriteStatsTask: () => RewriteLayers = () =>
+        rewriteLayers(spark, tableDir, schemaOpt, dirBlooms(spark, tableDir, base), rewritten)
       // append, CDC artifact and rewritten-dir stats touch disjoint
       // inputs and outputs — overlap them (§2.6)
       val results = inParallel[Any](spark, Seq(
@@ -4396,12 +4271,11 @@ object VersionedLake {
         s"$op: rewrite stats" -> (() => rewriteStatsTask())))
       val changesName = results(0).asInstanceOf[Option[String]]
       val appended = results(1).asInstanceOf[Option[(Written, Option[String])]]
-      val (carriedStats, carriedBlooms, carriedNdv) = results(2)
-        .asInstanceOf[(Map[String, String], Map[String, String], Map[String, String])]
+      val cow = results(2).asInstanceOf[RewriteLayers]
       val newDirs = surviving ++ appended.map(_._1.dir)
-      val stats = carriedStats ++ appended.fold(Map.empty[String, String])(_._1.statsBy)
-      val ndv = carriedNdv ++ appended.fold(Map.empty[String, String])(_._1.ndvBy)
-      val blooms = carriedBlooms ++
+      val stats = cow.stats ++ appended.fold(Map.empty[String, String])(_._1.statsBy)
+      val ndv = cow.ndv ++ appended.fold(Map.empty[String, String])(_._1.ndvBy)
+      val blooms = cow.blooms ++
         appended.flatMap { case (w, bl) => bl.map(w.dir -> _) }
       if (newDirs.isEmpty) {
         // the delete emptied the table: publish an empty snapshot (one
@@ -4411,13 +4285,10 @@ object VersionedLake {
           .repartition(1)
         val d = writeDataDir(empty, tableDir, Nil, maxRecordsPerFile).dir
         publishManifest(spark, tableDir, Seq(d), schema,
-          expectedBase = Some(Some(base)), txns = txnWatermarks(spark, tableDir, base),
-          op = op, changes = changesName)
+          expectedBase = Some(Some(base)), op = op, changes = changesName)
       } else
         publishManifest(spark, tableDir, newDirs, schema, stats, blooms,
-          expectedBase = Some(Some(base)),
-          txns = txnWatermarks(spark, tableDir, base), op = op,
-          changes = changesName, ndv = ndv)
+          expectedBase = Some(Some(base)), op = op, changes = changesName, ndv = ndv)
     }
 
   /** METADATA-ONLY RENAME COLUMN — the Iceberg field-id bargain without
@@ -4504,31 +4375,14 @@ object VersionedLake {
         StructField(newName, f.dataType, f.nullable, md)
       } else f
     })
-    val dirs = manifest(spark, tableDir, cur)
-    val stats = dirStats(spark, tableDir, cur).map { case (d, cols) =>
-      d -> statsJson(cols.map { case (c, v) =>
-        (if (c.equalsIgnoreCase(oldName)) newName else c) -> v
-      })
-    }
-    // the NDV layer is keyed by column name like stats: re-key the
+    // stats and the NDV layer are keyed by column name: re-key the
     // renamed column's entries (sketches are value-based — a rename
-    // changes no values, so the sketch itself carries verbatim)
-    val ndv = dirNdvRaw(spark, tableDir, cur).map { case (d, json) =>
-      import org.json4s.JsonAST._
-      d -> (org.json4s.jackson.JsonMethods.parse(json) match {
-        case JObject(fields) =>
-          org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(
-            JObject(fields.map { case (c, v) =>
-              (if (c.equalsIgnoreCase(oldName)) newName else c) -> v
-            })))
-        case _ => json
-      })
-    }
-    val out = publishManifest(spark, tableDir, dirs, newSchema, stats,
-      dirBloomsRaw(spark, tableDir, cur),
-      expectedBase = Some(Some(cur)),
-      txns = txnWatermarks(spark, tableDir, cur),
-      eqdeletes = eqd, op = "rename_column", ndv = ndv)
+    // changes no values, so the entry itself carries verbatim)
+    def renamed(header: String) = rekeyLayer(spark, tableDir, cur, header)(c =>
+      Some(if (c.equalsIgnoreCase(oldName)) newName else c))
+    val out = publishManifest(spark, tableDir, manifest(spark, tableDir, cur), newSchema,
+      renamed(StatsHeader), expectedBase = Some(Some(cur)),
+      eqdeletes = eqd, op = "rename_column", ndv = renamed(NdvHeader))
     // keep the DDL carrier current: a renamed partition column must
     // steer NEW directories under its new name (the physical fallback
     // translates through the aka indirection, but the prop is what an
@@ -4600,13 +4454,9 @@ object VersionedLake {
     val names = resolved.map(_.name)
     val out = publishManifest(spark, tableDir,
       manifest(spark, tableDir, cur), schema,
-      dirStats(spark, tableDir, cur).map { case (d, c) => d -> statsJson(c) },
-      dirBloomsRaw(spark, tableDir, cur),
       expectedBase = Some(Some(cur)),
-      txns = txnWatermarks(spark, tableDir, cur),
       eqdeletes = dirEqDeletes(spark, tableDir, cur),
       op = "set_spec",
-      ndv = dirNdvRaw(spark, tableDir, cur),
       declSpec = Some(Some(names)))
     // keep the DDL carrier prop coherent (it only steers tables with no
     // published manifest, but clones/replicas copy props — a stale value
@@ -4647,13 +4497,9 @@ object VersionedLake {
     })
     publishManifest(spark, tableDir,
       manifest(spark, tableDir, cur), newSchema,
-      dirStats(spark, tableDir, cur).map { case (d, c) => d -> statsJson(c) },
-      dirBloomsRaw(spark, tableDir, cur),
       expectedBase = Some(Some(cur)),
-      txns = txnWatermarks(spark, tableDir, cur),
       eqdeletes = dirEqDeletes(spark, tableDir, cur),
-      op = "set_default",
-      ndv = dirNdvRaw(spark, tableDir, cur))
+      op = "set_default")
   }
 
   /** METADATA-ONLY DROP COLUMN — the other half of the field-id bargain
@@ -4711,16 +4557,9 @@ object VersionedLake {
           .putBoolean(DroppedKey, true).build())
       else f
     })
-    val dirs = manifest(spark, tableDir, cur)
-    val stats = dirStats(spark, tableDir, cur).flatMap { case (d, cols) =>
-      val kept = cols.filterNot { case (c, _) => c.equalsIgnoreCase(name) }
-      if (kept.isEmpty) None else Some(d -> statsJson(kept))
-    }
-    publishManifest(spark, tableDir, dirs, newSchema, stats,
-      dirBloomsRaw(spark, tableDir, cur),
-      expectedBase = Some(Some(cur)),
-      txns = txnWatermarks(spark, tableDir, cur),
-      eqdeletes = eqd, op = "drop_column")
+    publishManifest(spark, tableDir, manifest(spark, tableDir, cur), newSchema,
+      rekeyLayer(spark, tableDir, cur, StatsHeader)(Some(_).filterNot(_.equalsIgnoreCase(name))),
+      expectedBase = Some(Some(cur)), eqdeletes = eqd, op = "drop_column")
   }
 
   /** The metadata-only widening lattice: exactly the promotions this
@@ -4829,32 +4668,16 @@ object VersionedLake {
         StructField(f.name, to, f.nullable, f.metadata)
       else f
     })
-    val dropStats = field.dataType == org.apache.spark.sql.types.FloatType
+    // the widened column's entries drop: its bloom always, its stats
+    // from FLOAT only (see above)
+    def withoutCol(header: String) =
+      rekeyLayer(spark, tableDir, cur, header)(Some(_).filterNot(_.equalsIgnoreCase(name)))
     val stats =
-      if (!dropStats) dirStats(spark, tableDir, cur)
-        .map { case (d, cols) => d -> statsJson(cols) }
-      else dirStats(spark, tableDir, cur).flatMap { case (d, cols) =>
-        val kept = cols.filterNot { case (c, _) => c.equalsIgnoreCase(name) }
-        if (kept.isEmpty) None else Some(d -> statsJson(kept))
-      }
-    // bloom carry minus the widened column: parse, drop, re-render (a
-    // line left with no columns drops entirely)
-    val blooms = dirBloomsRaw(spark, tableDir, cur).flatMap { case (d, json) =>
-      import org.json4s.JsonAST._
-      org.json4s.jackson.JsonMethods.parse(json) match {
-        case JObject(fields) =>
-          val kept = fields.filterNot { case (c, _) => c.equalsIgnoreCase(name) }
-          if (kept.isEmpty) None
-          else Some(d -> org.json4s.jackson.JsonMethods.compact(
-            org.json4s.jackson.JsonMethods.render(JObject(kept))))
-        case _ => Some(d -> json)
-      }
-    }
+      if (field.dataType == org.apache.spark.sql.types.FloatType) withoutCol(StatsHeader)
+      else Map.empty[String, String]
     publishManifest(spark, tableDir, manifest(spark, tableDir, cur), newSchema,
-      stats, blooms,
-      expectedBase = Some(Some(cur)),
-      txns = txnWatermarks(spark, tableDir, cur),
-      eqdeletes = eqd, op = "widen_column")
+      stats, withoutCol(BloomHeader),
+      expectedBase = Some(Some(cur)), eqdeletes = eqd, op = "widen_column")
   }
 
   /** OPTIMIZE: rewrite the published version's N data directories into
@@ -4953,17 +4776,15 @@ object VersionedLake {
           org.json4s.jackson.JsonMethods.render(JObject(fs)))
       // analyzed columns REPLACE their prior entries; everything else
       // carries verbatim (immutable data, immutable statistics)
-      def overlay(prior: Option[String], fresh: String): String = {
-        val freshFs = parseObj(fresh)
-        val keys = freshFs.map(_._1).toSet
-        renderObj(prior.map(parseObj).getOrElse(Nil)
-          .filterNot(f => keys(f._1)) ++ freshFs)
+      def overlay(header: String, fresh: Seq[(String, String)]): Map[String, String] = {
+        val prior = dirLayer(spark, tableDir, v, header)
+        fresh.map { case (d, json) =>
+          val freshFs = parseObj(json)
+          val keys = freshFs.map(_._1).toSet
+          d -> renderObj(prior.get(d).map(parseObj).getOrElse(Nil)
+            .filterNot(f => keys(f._1)) ++ freshFs)
+        }.toMap
       }
-      val priorStatsRaw: Map[String, String] =
-        dirStats(spark, tableDir, v).map { case (d, cs) => d -> statsJson(cs) }
-      val priorNdv = dirNdvRaw(spark, tableDir, v)
-      val stats = scala.collection.mutable.Map[String, String]() ++ priorStatsRaw
-      val ndv = scala.collection.mutable.Map[String, String]() ++ priorNdv
       // ONE grouped aggregation job per CHUNK of directories, chunks
       // submitted with bounded concurrency — never one Spark job per
       // directory. The layers are per-directory aggregates, so tagging
@@ -4999,7 +4820,6 @@ object VersionedLake {
       // reuse any existing bloom entry's (bits, k) so new filters stay
       // probe-compatible with old ones; a bloom-less table gets the
       // defaults.
-      val priorBloomsRaw = dirBloomsRaw(spark, tableDir, v)
       val bloomDirs =
         if (bloomCols.isEmpty) Nil
         else if (!onlyMissing) live0
@@ -5019,55 +4839,30 @@ object VersionedLake {
             BloomConfig(bloomCols, m, k)
           })
         }
-      val chunks = live.grouped(AnalyzeChunkDirs).toSeq
-      val results: Seq[(String, (String, String))] =
-        if (chunks.isEmpty) Nil
-        else {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(AnalyzeJobConcurrency, chunks.size))
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try Await.result(
-            Future.sequence(chunks.map(chunk => Future {
-              val tagged = chunk.map { d =>
-                readDirsWithDeletes(spark, tableDir, v, Seq(d), Some(visible))
-                  .select(cols0.map(col) :+ lit(d).as(AnalyzeDirTag): _*)
-              }
-              columnStatsNdvBy(tagged.reduce(_.unionByName(_)), AnalyzeDirTag, cols0)
-            })), Duration.Inf).flatten
-          finally pool.shutdown()
-        }
-      results.foreach { case (d, (sj, nj)) =>
-        stats(d) = overlay(priorStatsRaw.get(d), sj)
-        ndv(d) = overlay(priorNdv.get(d), nj)
-      }
-      val blooms = scala.collection.mutable.Map[String, String]() ++ priorBloomsRaw
-      if (bloomDirs.nonEmpty) {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(AnalyzeJobConcurrency, bloomDirs.size))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val updates =
-          try Await.result(
-            Future.sequence(bloomDirs.map(d => Future {
-              val df = readDirsWithDeletes(spark, tableDir, v, Seq(d), Some(visible))
-              d -> bloomJson(df, bloomCfg)
-            })), Duration.Inf)
-          finally pool.shutdown()
-        updates.foreach { case (d, bj) =>
-          bj.foreach(j => blooms(d) = overlay(priorBloomsRaw.get(d), j))
-        }
-      }
+      // inParallel waits for every chunk and bloom job before the first
+      // failure rethrows, so a failed analyze leaves no job running
+      val results = inParallel(spark,
+        live.grouped(AnalyzeChunkDirs).toSeq.zipWithIndex.map { case (chunk, i) =>
+          s"analyze: stats chunk $i" -> (() => {
+            val tagged = chunk.map { d =>
+              readDirsWithDeletes(spark, tableDir, v, Seq(d), Some(visible))
+                .select(cols0.map(col) :+ lit(d).as(AnalyzeDirTag): _*)
+            }
+            columnStatsNdvBy(tagged.reduce(_.unionByName(_)), AnalyzeDirTag, cols0)
+          })
+        }, maxConcurrent = AnalyzeJobConcurrency).flatten
+      val blooms = inParallel(spark, bloomDirs.map { d =>
+        s"analyze: bloom $d" -> (() =>
+          bloomJson(readDirsWithDeletes(spark, tableDir, v, Seq(d), Some(visible)), bloomCfg)
+            .map(d -> _))
+      }, maxConcurrent = AnalyzeJobConcurrency).flatten
       publishManifest(spark, tableDir, dirs, schema0,
-        stats = stats.toMap,
-        blooms = blooms.toMap,
+        stats = overlay(StatsHeader, results.map { case (d, (sj, _)) => d -> sj }),
+        blooms = overlay(BloomHeader, blooms),
         expectedBase = Some(Some(v)),
-        txns = txnsAt(spark, tableDir, Some(v)),
         eqdeletes = dirEqDeletes(spark, tableDir, v),
         op = "analyze",
-        ndv = ndv.toMap)
+        ndv = overlay(NdvHeader, results.map { case (d, (_, nj)) => d -> nj }))
     }
   }
 
@@ -5115,9 +4910,7 @@ object VersionedLake {
         statsCols = effStats)
       val blooms = bloomJson(snapshot, effBloom).map(w.dir -> _).toMap
       publishManifest(spark, tableDir, Seq(w.dir), stripAka(schema), w.statsBy, blooms,
-        expectedBase = Some(Some(cur)),
-        txns = txnWatermarks(spark, tableDir, cur), op = "optimize",
-        ndv = w.ndvBy)
+        expectedBase = Some(Some(cur)), op = "optimize", ndv = w.ndvBy)
     }
 
   /** INCREMENTAL COMPACTION — rewrite ONLY the directories whose
@@ -5162,19 +4955,12 @@ object VersionedLake {
       // dirs from older partition specs normalize in the same pass
       val w = writeDataDir(data, tableDir,
         declaredOrPhysicalParts(spark, tableDir, base), maxRecordsPerFile, statsCols = statCols)
-      val priorStats = dirStats(spark, tableDir, base)
-      val priorBloomsRaw = dirBloomsRaw(spark, tableDir, base)
-      val stats = kept.flatMap(k => priorStats.get(k).map(k -> statsJson(_))).toMap ++
-        w.statsBy
-      val blooms = kept.flatMap(k => priorBloomsRaw.get(k).map(k -> _)).toMap ++
-        bloomJson(data, bloomCfg).map(w.dir -> _)
       // schema verbatim (NOT stripAka): kept directories still carry
       // former column names only the aka indirection can read
       val schema = schemaOpt.getOrElse(nullableAll(data.schema))
-      Some(publishManifest(spark, tableDir, kept :+ w.dir, schema, stats, blooms,
-        expectedBase = Some(Some(base)),
-        txns = txnWatermarks(spark, tableDir, base), op = "optimize",
-        ndv = w.ndvBy))
+      Some(publishManifest(spark, tableDir, kept :+ w.dir, schema, w.statsBy,
+        bloomJson(data, bloomCfg).map(w.dir -> _).toMap,
+        expectedBase = Some(Some(base)), op = "optimize", ndv = w.ndvBy))
     }
 
   /** OPTIMIZE ... CLUSTER BY into MULTIPLE Z-range-disjoint directories:
@@ -5297,9 +5083,7 @@ object VersionedLake {
       // listing is authoritative, the pointer a hint — and deleting the
       // dirs then would corrupt the current version; vacuum backstops.
       try publishManifest(spark, tableDir, newDirs, stripAka(schema), stats, blooms,
-        expectedBase = Some(Some(cur)),
-        txns = txnWatermarks(spark, tableDir, cur), op = "optimize",
-        ndv = zNdv)
+        expectedBase = Some(Some(cur)), op = "optimize", ndv = zNdv)
       catch {
         case e: CommitConflictException =>
           newDirs.foreach { d =>
@@ -5351,16 +5135,18 @@ object VersionedLake {
       val dirs = manifest(spark, tableDir, toVersion)
       val schema = versionSchema(spark, tableDir, toVersion)
         .getOrElse(nullableAll(readVersion(spark, tableDir, toVersion).schema))
-      val stats = dirStats(spark, tableDir, toVersion).map { case (d, c) => d -> statsJson(c) }
-      val blooms = dirBloomsRaw(spark, tableDir, toVersion)
-      publishManifest(spark, tableDir, dirs, schema, stats, blooms,
+      // the target's own lines replace whatever the current version
+      // carries for the same directories (a later rename re-keyed them,
+      // an analyze added some); a line the target lacks must not survive
+      def restored(header: String) = {
+        val target = dirLayer(spark, tableDir, toVersion, header)
+        dirs.map(d => d -> target.getOrElse(d, NoLayer)).toMap
+      }
+      publishManifest(spark, tableDir, dirs, schema,
+        restored(StatsHeader), restored(BloomHeader),
         expectedBase = Some(Some(cur)),
-        txns = txnWatermarks(spark, tableDir, cur),
         eqdeletes = dirEqDeletes(spark, tableDir, toVersion), op = "rollback",
-        // dirs reinstated from toVersion may be absent from cur's
-        // manifest, so the auto-carry cannot see their #ndv lines —
-        // carry them from the version being restored, like stats/blooms
-        ndv = dirNdvRaw(spark, tableDir, toVersion),
+        ndv = restored(NdvHeader),
         // the partition-spec declaration is snapshot-versioned state:
         // a rollback restores the TARGET's declaration (or its absence),
         // so an accidental setPartitionSpec undoes like any other commit

@@ -263,4 +263,31 @@ class AnalyzeStatsSpec extends SparkSpec {
       assert(combined.get.agg(sum("cnt")).head().getLong(0) === 100L)
     } finally LakeMv.clear()
   }
+
+  test("a directory that cannot be read fails analyze with its own error; no job outlives it") {
+    val s = spark
+    import s.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_anl_fail").toString + "/t"
+    (0 until 4).foreach { i =>
+      VersionedLake.appendCommit((i * 100L until i * 100L + 100).toDF("k"), t)
+    }
+    val v = VersionedLake.currentVersion(spark, t).get
+    val broken = VersionedLake.manifest(spark, t, v).head
+    // the directory's data files stop being parquet (checksums dropped,
+    // so the read fails on the footer, not on a checksum)
+    dataFiles(t).filter(_.contains(s"/data/$broken/")).foreach { f =>
+      val p = java.nio.file.Paths.get(f)
+      if (f.endsWith(".crc")) java.nio.file.Files.delete(p)
+      else if (f.endsWith(".parquet")) java.nio.file.Files.write(p, "not parquet".getBytes)
+    }
+    // the bloom backfill runs one job per directory, several at a time
+    val e = intercept[Exception](VersionedLake.analyzeStats(spark, t, Nil, bloomCols = Seq("k")))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).toSeq
+    assert(messages.exists(_.contains(broken)), messages.mkString("\n"))
+    org.apache.spark.sql.graft.SparkInternals.drainListenerBus(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "every analyze job finished before the error surfaced")
+    assert(VersionedLake.currentVersion(spark, t) === Some(v), "a failed analyze publishes nothing")
+  }
 }

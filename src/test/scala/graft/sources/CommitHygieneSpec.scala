@@ -157,4 +157,44 @@ class CommitHygieneSpec extends SparkSpec {
           org.apache.spark.sql.types.StringType))
     }
   }
+
+  /** ERROR events logged by `loggerName` while `body` runs. */
+  private def errorsLogged(loggerName: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "errors-logged", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.ERROR)
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager.getLogger(loggerName).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+  }
+
+  test("a lake write leaves no listener behind that logs later refused statements") {
+    val s = spark
+    import s.implicits._
+    val root = tmp("no_listener")
+    spark.conf.set("spark.sql.catalog.gnl", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gnl.root", root)
+    VersionedLake.appendCommit(Seq((1L, "a")).toDF("id", "v"), s"$root/t",
+      statsCols = Seq("id"))
+    val errors = errorsLogged("org.apache.spark.sql.util.ExecutionListenerBus") {
+      intercept[Exception] {
+        spark.sql("CALL gnl.system.atomic('INSERT INTO gnl.atm_no_such VALUES (1)', 't')")
+          .collect()
+      }
+      org.apache.spark.sql.graft.SparkInternals.drainListenerBus(spark.sparkContext)
+    }
+    assert(errors.isEmpty, errors.mkString("\n"))
+  }
 }
