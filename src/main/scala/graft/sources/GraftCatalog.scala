@@ -282,18 +282,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
           if (perDir.isEmpty) Set.empty[String]
           else perDir.map(_.keySet).reduce(_ intersect _)
         val schema0 = VersionedLake.versionSchema(s, dir, v)
-        // stored-domain merge, like the pruner: numeric columns compare
-        // as numbers ("9" < "10"), everything else lexicographically
-        def pick(c: String, vals: Seq[String], takeMin: Boolean): String = {
-          val numeric = schema0.exists(_.fields.exists(f => f.name == c &&
-            f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]))
-          vals.reduce { (a, b) =>
-            val cmp =
-              if (numeric) scala.util.Try(BigDecimal(a).compare(BigDecimal(b)))
-                .getOrElse(a.compareTo(b))
-              else a.compareTo(b)
-            if ((cmp <= 0) == takeMin) a else b
-          }
+        val hist = VersionedLake.dirHist(s, dir, v)
+        // the stored string of the directory holding the extreme by
+        // decoded value, like every pruner ("9" < "10" numerically);
+        // null when a bound does not decode or every value is null
+        def pick(c: String, takeMin: Boolean): String = {
+          val dt = schema0.flatMap(_.fields.find(_.name == c)).map(_.dataType)
+            .getOrElse(org.apache.spark.sql.types.NullType)
+          val ds = live.filter(d => stats.get(d).exists(_.contains(c)))
+          LakeMetaAgg.mergedBound(dt, c, ds, stats, hist, takeMin).flatten
+            .flatMap { case (d, _) => if (takeMin) stats(d)(c)._1 else stats(d)(c)._2 }.orNull
         }
         // histogram coverage: ask the SCAN's own merge whether a
         // histogram would actually be served — running the same code is
@@ -301,7 +299,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         // diagnoses (all-null dirs are skipped there, point columns and
         // truncated edge sets return None; a hand-copied predicate here
         // already disagreed once)
-        val hist = VersionedLake.dirHist(s, dir, v)
         val served = org.apache.spark.sql.graft.LakePruningScanBuilder
           .columnStatsFor(VersionedLake.manifest(s, dir, v), rowsMeta, ndv,
             stats, schema0.getOrElse(new org.apache.spark.sql.types.StructType()),
@@ -348,13 +345,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         }
         covered.toSeq.sorted.map { c =>
           val entries = perDir.map(_(c))
-          val mins = live.flatMap(d => stats.get(d).flatMap(_.get(c)).flatMap(_._1))
-          val maxs = live.flatMap(d => stats.get(d).flatMap(_.get(c)).flatMap(_._2))
           (c,
             VersionedLake.ndvEstimate(entries.map(_._1)),
             entries.map(_._2).sum,
-            if (mins.isEmpty) null else pick(c, mins, takeMin = true),
-            if (maxs.isEmpty) null else pick(c, maxs, takeMin = false),
+            pick(c, takeMin = true),
+            pick(c, takeMin = false),
             histBins(c),
             topValues(c),
             sumOf(c))

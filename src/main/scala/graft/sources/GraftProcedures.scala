@@ -629,57 +629,31 @@ object GraftProcedures {
           if (!kept.forall(rowMeta.contains))
             throw new IllegalStateException(
               s"$dir@v$v has directories without exact row counts - no estimate")
-          val raw = kept.map(rowMeta(_)._1).sum
-          val schema0 = VersionedLake.versionSchema(spark, dir, v)
-            .getOrElse(new org.apache.spark.sql.types.StructType())
-          val visible = VersionedLake.visibleSchema(schema0)
+          val visible = VersionedLake.visibleSchema(VersionedLake.versionSchema(spark, dir, v)
+            .getOrElse(new org.apache.spark.sql.types.StructType()))
           val ndv = VersionedLake.dirNdv(spark, dir, v)
-          val stats = VersionedLake.dirStats(spark, dir, v)
           val hists = VersionedLake.dirHist(spark, dir, v)
-          // the scan's own uniform-column claims: when EVERY conjunct is
-          // decided exactly at directory granularity, the estimate IS the
-          // satisfying directories' row sum — exact, like the plan (the
-          // exact path is checked FIRST, mirroring the plan's own decision
-          // order: a filter claimable on this table answers exactly even
-          // when the histogram CDF could also price it)
           val B = org.apache.spark.sql.graft.LakePruningScanBuilder
-          def decidableOn(f: org.apache.spark.sql.sources.Filter, d: String) =
-            B.exactlyDecidable(f, Seq(d), rowMeta, ndv, stats, visible, hists)
-          if (filters.nonEmpty && filters.forall(f =>
-              B.exactlyDecidable(f, kept, rowMeta, ndv, stats, visible, hists)))
-            kept.filter(d => filters.forall(f =>
-              B.dirSatisfies(f, d, rowMeta, ndv, stats, visible, hists)))
-              .map(rowMeta(_)._1).sum
-          else if (filters.nonEmpty && filters.forall { f =>
-              val n = kept.count(d => decidableOn(f, d))
-              n == kept.size || n * 2 > kept.size
-            }) {
-            // HYBRID estimate, mirroring the plan's hybrid claims: dirs
-            // where every conjunct is proven count EXACTLY (satisfiers'
-            // row sum), the residual prices off the selectivity layers
-            // scoped to just those dirs
-            val proven = kept.filter(d => filters.forall(decidableOn(_, d)))
-            val residual = kept.filterNot(proven.toSet)
-            val exactPart = proven.filter(d => filters.forall(f =>
-              B.dirSatisfies(f, d, rowMeta, ndv, stats, visible, hists)))
-              .map(rowMeta(_)._1).sum
-            val residualPart =
-              if (residual.isEmpty) 0L
-              else {
-                val rRows = residual.map(rowMeta(_)._1).sum
-                val (refined, _) = B.refineForFilters(filters, residual, rowMeta,
-                  ndv, VersionedLake.dirFreq(spark, dir, v), visible, rRows,
-                  math.max(1L, residual.map(rowMeta(_)._2).sum), hists)
-                refined
-              }
-            exactPart + residualPart
-          } else {
-            val (refined, _) = B.refineForFilters(filters, kept, rowMeta, ndv,
-              VersionedLake.dirFreq(spark, dir, v), visible, raw,
-              math.max(1L, kept.map(rowMeta(_)._2).sum),
-              hists)
-            refined
-          }
+          // the scan's own claim gate: the plan reads the pruned dirs that
+          // the claims keep; when it claims EVERY conjunct, the satisfying
+          // directories count exactly (checked first, like the plan: a
+          // claimable filter answers exactly even when the histogram CDF
+          // could also price it) and only the residual prices off the
+          // selectivity layers
+          val gate = B.claim(filters, VersionedLake.manifest(spark, dir, v), rowMeta, ndv,
+            VersionedLake.dirStats(spark, dir, v), visible, hists, hybridCapable = true)
+          val planKept =
+            if (gate.claimed.isEmpty) kept
+            else kept.filter((gate.satisfying ++ gate.residual).toSet)
+          def refine(ds: Seq[String]): Long =
+            if (ds.isEmpty) 0L
+            else B.refineForFilters(filters, ds, rowMeta, ndv,
+              VersionedLake.dirFreq(spark, dir, v), visible, ds.map(rowMeta(_)._1).sum,
+              math.max(1L, ds.map(rowMeta(_)._2).sum), hists)._1
+          if (filters.nonEmpty && gate.claimed.size == filters.size)
+            gate.satisfying.map(rowMeta(_)._1).sum +
+              refine(planKept.filter(gate.residual.toSet))
+          else refine(planKept)
         }
       case "explain_scan" =>
         procRows(name, "dry-run the manifest pruning for a predicate: per directory, " +
@@ -710,39 +684,24 @@ object GraftProcedures {
             if (leftover.isEmpty) null
             else org.apache.spark.unsafe.types.UTF8String.fromString(
               leftover.map(_.sql).mkString(" AND "))
-          // mirror the scan builder's own claim gate (exact on every live
-          // dir, or the hybrid majority rule): per directory, "exact-keep"
-          // = every claimed conjunct proven AND satisfied, "exact-skip" =
-          // proven, some conjunct fails (the dir never reads),
-          // "residual" = undecidable (the hybrid path would scan it);
-          // null = no conjunct claims on this table at all
-          val ndv = VersionedLake.dirNdv(spark, dir, v)
-          val stats = VersionedLake.dirStats(spark, dir, v)
-          val hists = VersionedLake.dirHist(spark, dir, v)
-          val visible = VersionedLake.visibleSchema(
-            VersionedLake.versionSchema(spark, dir, v).getOrElse(
-              new org.apache.spark.sql.types.StructType()))
+          // the scan builder's own claim gate: per directory,
+          // "exact-keep" = every claimed conjunct proven AND satisfied,
+          // "exact-skip" = proven, some conjunct fails (the dir never
+          // reads), "residual" = undecidable (the hybrid path would scan
+          // it); null = no conjunct claims on this table at all
           val allDirs = VersionedLake.manifest(spark, dir, v)
-          val live = allDirs.filter(d => rowMeta.get(d).forall(_._1 > 0))
-          val B = org.apache.spark.sql.graft.LakePruningScanBuilder
-          val claimedConj = filters.filter { f =>
-            val n = live.count(d =>
-              B.exactlyDecidable(f, Seq(d), rowMeta, ndv, stats, visible, hists))
-            n == live.size || (n > 0 && n * 2 > live.size)
-          }
+          val gate = org.apache.spark.sql.graft.LakePruningScanBuilder.claim(filters, allDirs,
+            rowMeta, VersionedLake.dirNdv(spark, dir, v), VersionedLake.dirStats(spark, dir, v),
+            VersionedLake.visibleSchema(VersionedLake.versionSchema(spark, dir, v).getOrElse(
+              new org.apache.spark.sql.types.StructType())),
+            VersionedLake.dirHist(spark, dir, v), hybridCapable = true)
+          val (residual, satisfying) = (gate.residual.toSet, gate.satisfying.toSet)
           def claimOf(d: String): Any =
-            if (claimedConj.isEmpty) null
-            else {
-              val proven = claimedConj.forall(f =>
-                B.exactlyDecidable(f, Seq(d), rowMeta, ndv, stats, visible, hists))
-              val label =
-                if (!proven) "residual"
-                else if (claimedConj.forall(f =>
-                  B.dirSatisfies(f, d, rowMeta, ndv, stats, visible, hists)))
-                  "exact-keep"
-                else "exact-skip"
-              org.apache.spark.unsafe.types.UTF8String.fromString(label)
-            }
+            if (gate.claimed.isEmpty) null
+            else org.apache.spark.unsafe.types.UTF8String.fromString(
+              if (residual(d)) "residual"
+              else if (satisfying(d)) "exact-keep"
+              else "exact-skip")
           val rows = allDirs.map { d =>
             new GenericInternalRow(Array[Any](
               org.apache.spark.unsafe.types.UTF8String.fromString(d),

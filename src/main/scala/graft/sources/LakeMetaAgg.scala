@@ -28,10 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * — a non-uniform grouping column, a filter the caller didn't decide
   * exactly (the scan builder refuses before asking), a directory
   * missing its rows/stats line, an aggregate that isn't
-  * count(*)/min/max, or a column type whose stats string-cast is not a
-  * faithful round-trip (timestamps render session-TZ-dependently) —
-  * returns None and the scan proceeds as a normal file read. A refusal
-  * can only cost speed, never correctness.
+  * count(*)/min/max, or a bound that does not decode ([[bounds]]: a
+  * timestamp without its histogram edges, a type with no exact
+  * round-trip) — returns None and the scan proceeds as a normal file
+  * read. A refusal can only cost speed, never correctness.
   */
 object LakeMetaAgg {
 
@@ -67,6 +67,7 @@ object LakeMetaAgg {
     lazy val stats = VersionedLake.dirStats(spark, tableDir, version)
     lazy val ndv = VersionedLake.dirNdv(spark, tableDir, version)
     lazy val sums = VersionedLake.dirSums(spark, tableDir, version)
+    lazy val hists = VersionedLake.dirHist(spark, tableDir, version)
 
     // exact SUM from the "s" layer: every live directory must carry the
     // column's sum entry OR be provably all-null in it (the exact null
@@ -187,8 +188,8 @@ object LakeMetaAgg {
             Some((StructField("count(*)", LongType, nullable = false),
               java.lang.Long.valueOf(ds.map(rowCounts(_)._1).sum): Any))
           else None
-        case m: Min => extremum(m.column, isMin = true, ds, stats, schema)
-        case m: Max => extremum(m.column, isMin = false, ds, stats, schema)
+        case m: Min => extremum(m.column, isMin = true, ds, stats, hists, schema)
+        case m: Max => extremum(m.column, isMin = false, ds, stats, hists, schema)
         case s: Sum if !s.isDistinct => sumOver(s.column, ds)
         case c: Count if !c.isDistinct => countCol(c.column, ds)
         case a: Avg if !a.isDistinct => avgOver(a.column, ds)
@@ -217,7 +218,6 @@ object LakeMetaAgg {
       // its proven value IS its group key (all-null dirs group under
       // SQL's one null group); zero-row dirs contribute nothing
       if (!dirs.forall(rowCounts.contains)) return None
-      lazy val hists = VersionedLake.dirHist(spark, tableDir, version)
       val live = dirs.filter(d => rowCounts(d)._1 > 0)
       val keyed: Seq[(List[Any], String)] = live.map { d =>
         val key = groupCols.map { case (c, dt) =>
@@ -477,98 +477,121 @@ object LakeMetaAgg {
   private def eq0(x: Any, y: Any): Boolean =
     if (x == null) y == null else y != null && x.equals(y)
 
+  /** One directory column's `#stats` bounds, decoded. This is the only
+    * reader of the stored strings. `Some(None)` = every row null,
+    * `Some(Some((min, max)))` = the bounds as Catalyst-internal values
+    * (boxed primitives, UTF8String, Decimal, epoch-day Int, epoch-micros
+    * Long) that [[compare]] orders as Spark orders the column, `None` =
+    * not decodable, so the caller keeps the directory or declines.
+    *
+    * The stored bounds are Spark's string casts, which round-trip for
+    * the numeric, string, date and decimal types ([[parse]]). A TIMESTAMP
+    * render depends on the session time zone at commit, so its bounds
+    * come from the `#ndv` histogram `edges` (read for TIMESTAMP only):
+    * the quantile summary keeps the exact min and max as the first and
+    * last edge, in epoch micros, which a double holds exactly up to 2^53
+    * (years 1685-2255). A missing edge set, a NaN edge or a value past
+    * 2^53 does not decode.
+    */
+  def bounds(
+      dt: DataType,
+      stored: (Option[String], Option[String]),
+      edges: => Option[Array[Double]]): Option[Option[(Any, Any)]] = stored match {
+    case (None, None) => Some(None)
+    case (Some(a), Some(b)) =>
+      val decoded = dt match {
+        case TimestampType =>
+          edges.filter(_.nonEmpty).flatMap(es => micros(es.head).zip(micros(es.last)))
+        case _ => parse(dt, a).zip(parse(dt, b))
+      }
+      decoded.map(Some(_))
+    case _ => None
+  }
+
+  /** Largest Long magnitude a Double holds exactly. */
+  private val MaxExactDoubleLong: Long = 1L << 53
+
+  private def micros(edge: Double): Option[Any] =
+    if (math.abs(edge) <= MaxExactDoubleLong.toDouble && edge == edge.toLong.toDouble)
+      Some(java.lang.Long.valueOf(edge.toLong))
+    else None
+
+  /** Spark's order of two decoded values of one column: boxed compareTo
+    * puts NaN greatest as Spark does, UTF8String compares UTF-8 bytes,
+    * and -0.0 is already folded into 0.0 by [[parse]] and [[literal]].
+    */
+  def compare(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
+
   /** The directory-uniform value of a column, from its manifest lines:
     * `Some(None)` = every row null, `Some(Some(v))` = every row holds
-    * `v` (parsed into the comparable internal domain), `None` = not
-    * uniform / not provable. The shared proof behind the scan builder's
-    * exact filter claims and grouped metadata aggregates.
+    * `v` (no nulls and decoded min == max), `None` = not uniform / not
+    * provable. The shared proof behind the scan builder's exact filter
+    * claims and grouped metadata aggregates.
     */
-  /** Largest Long magnitude a Double holds exactly — the domain where a
-    * histogram edge (stored as double) is a faithful epoch-micros value.
-    */
-  val MaxExactDoubleLong: Long = 1L << 53
-
   def uniformValue(
       dt: DataType,
       rows: Long,
       nulls: Long,
-      bounds: (Option[String], Option[String]),
-      edges: Option[Array[Double]] = None): Option[Option[Any]] =
-    (nulls, bounds._1, bounds._2) match {
-      case (n, None, None) if n == rows => Some(None)
-      case (0L, Some(a), Some(b)) if a == b =>
-        dt match {
-          case TimestampType =>
-            // session-TZ renders don't round-trip, so the VALUE comes
-            // from the histogram edges riding the #ndv layer on the
-            // CANONICAL epoch-micros domain: quantile summaries keep the
-            // exact min and max at the first/last edge, so head == last
-            // proves min == max (uniformity) and IS the value. The
-            // double domain is exact for |micros| <= 2^53 (roughly years
-            // 1685–2255); outside it — or on a dir analyzed before the
-            // histogram layer existed — the claim declines.
-            edges match {
-              case Some(es) if es.nonEmpty && es.head == es.last &&
-                  math.abs(es.head) <= MaxExactDoubleLong.toDouble &&
-                  es.head == es.head.toLong.toDouble =>
-                Some(Some(java.lang.Long.valueOf(es.head.toLong)))
-              case _ => None
-            }
-          case _ => parse(dt, a).map(v => Some(v))
-        }
-      case _ => None
+      stored: (Option[String], Option[String]),
+      edges: => Option[Array[Double]]): Option[Option[Any]] =
+    if (nulls == rows && stored == ((None, None))) Some(None)
+    else if (nulls != 0L) None
+    else bounds(dt, stored, edges) match {
+      case Some(Some((mn, mx))) if compare(mn, mx) == 0 => Some(Some(mn))
+      case _                                            => None
     }
+
+  /** The min (`takeMin`) or max of column `c`'s decoded bounds over
+    * `dirs`: `None` when a directory has no stats entry for the column
+    * (it may hold the extreme; schema-evolution dirs written before the
+    * column existed omit it) or its bounds do not decode, `Some(None)`
+    * when every directory is all-null, else the directory holding the
+    * extreme with its value.
+    */
+  def mergedBound(
+      dt: DataType,
+      c: String,
+      dirs: Seq[String],
+      stats: Map[String, Map[String, (Option[String], Option[String])]],
+      hists: => Map[String, Map[String, Array[Double]]],
+      takeMin: Boolean): Option[Option[(String, Any)]] = {
+    val decoded = dirs.map(d => stats.get(d).flatMap(_.get(c))
+      .flatMap(bounds(dt, _, hists.get(d).flatMap(_.get(c)))).map(d -> _))
+    if (decoded.exists(_.isEmpty)) None
+    else Some(decoded.flatten.collect { case (d, Some((mn, mx))) =>
+      (d, if (takeMin) mn else mx)
+    }.reduceOption((a, b) => if ((compare(a._2, b._2) <= 0) == takeMin) a else b))
+  }
 
   private def extremum(
       colExpr: org.apache.spark.sql.connector.expressions.Expression,
       isMin: Boolean,
       dirs: Seq[String],
       stats: Map[String, Map[String, (Option[String], Option[String])]],
+      hists: => Map[String, Map[String, Array[Double]]],
       schema: StructType): Option[(StructField, Any)] = {
     val name = colExpr match {
       case r: NamedReference if r.fieldNames.length == 1 => r.fieldNames.head
       case _ => return None
     }
     val field = schema.fields.find(_.name == name).getOrElse(return None)
-    // every directory must carry a stats entry for the column — a dir
-    // without one may hold the true extremum (this also covers
-    // schema-evolution dirs written before the column existed: they
-    // hold only nulls, but their stats line omits the column, so the
-    // conservative refusal is the correct, simple answer)
-    val perDir = dirs.map(d => stats.get(d).flatMap(_.get(name)))
-    if (perDir.exists(_.isEmpty)) return None
-    val bounds = perDir.flatten.flatMap(b => if (isMin) b._1 else b._2)
     // all-null directories contribute nothing; min/max of no values = null
-    val parsed = bounds.map(parse(field.dataType, _))
-    if (parsed.exists(_.isEmpty)) return None
-    val vs = parsed.flatten
-    val best =
-      if (vs.isEmpty) null
-      else vs.reduce { (a, b) =>
-        val c = a.asInstanceOf[Comparable[Any]].compareTo(b)
-        if ((c <= 0) == isMin) a else b
-      }
-    Some((StructField(s"${if (isMin) "min" else "max"}($name)",
-      field.dataType, nullable = true), best))
+    mergedBound(field.dataType, name, dirs, stats, hists, isMin).map(best =>
+      (StructField(s"${if (isMin) "min" else "max"}($name)", field.dataType, nullable = true),
+        best.map(_._2).orNull))
   }
 
-  /** Stats strings are Spark's own string-casts; parse back only the
-    * types where that round-trip is exact AND the natural Comparable
-    * order matches Spark's column order (UTF8String's binary compare IS
-    * Spark's string order; Double/Float boxed compareTo puts NaN
-    * greatest, matching Spark's sort order). Timestamps are refused:
-    * their rendering depends on the session timezone at commit time.
-    * Public: the scan builder's uniform-column filter decisions parse
-    * the same stored renders under the same round-trip contract.
+  /** A stored bound (Spark's string cast) back in the column's domain,
+    * for the types where that round-trip is exact. -0.0 folds into 0.0:
+    * boxed compareTo splits the two while Spark's comparisons (and its
+    * UnsafeRow writer) treat them equal, so an unfolded -0.0 would fail
+    * a `c = 0.0` claim.
     */
-  def parse(dt: DataType, s: String): Option[Any] = dt match {
+  private def parse(dt: DataType, s: String): Option[Any] = dt match {
     case LongType    => s.toLongOption
     case IntegerType => s.toIntOption
     case ShortType   => s.toShortOption
     case ByteType    => s.toByteOption
-    // -0.0 normalizes to 0.0: boxed compareTo distinguishes the two while
-    // Spark's own comparisons (and its UnsafeRow writer) treat them equal,
-    // so an unnormalized -0.0 render would wrongly fail a `c = 0.0` claim
     case DoubleType  => s.toDoubleOption.map(d => if (d == 0.0d) 0.0d else d)
     case FloatType   => s.toFloatOption.map(f => if (f == 0.0f) 0.0f else f)
     case StringType  => Some(UTF8String.fromString(s))
@@ -576,6 +599,42 @@ object LakeMetaAgg {
       scala.util.Try(java.time.LocalDate.parse(s).toEpochDay.toInt).toOption
     case d: DecimalType =>
       scala.util.Try(Decimal(new java.math.BigDecimal(s), d.precision, d.scale)).toOption
+    case _ => None
+  }
+
+  /** A filter literal or batch key (the external JVM value) in the
+    * domain [[bounds]] decodes column type `dt` to, or None when it has
+    * no exact value there. An integral value converts to any integral
+    * column it fits, to a decimal column, and to a double column within
+    * 2^53; a float converts to a double column. Decimals keep their own
+    * scale (no rounding to the column's), which [[compare]] respects.
+    */
+  def literal(dt: DataType, v: Any): Option[Any] = (dt, v) match {
+    case (_, n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+        _: java.lang.Byte)) =>
+      val x = n.asInstanceOf[Number].longValue()
+      dt match {
+        case LongType                 => Some(x)
+        case IntegerType              => Option.when(x.isValidInt)(x.toInt)
+        case ShortType                => Option.when(x.isValidShort)(x.toShort)
+        case ByteType                 => Option.when(x.isValidByte)(x.toByte)
+        case _: DecimalType           => Some(Decimal(x))
+        case DoubleType if math.abs(x) <= MaxExactDoubleLong => Some(x.toDouble)
+        case _                        => None
+      }
+    case (DoubleType, n @ (_: java.lang.Double | _: java.lang.Float)) =>
+      val d = n.asInstanceOf[Number].doubleValue(); Some(if (d == 0.0d) 0.0d else d)
+    case (FloatType, n: java.lang.Float) =>
+      val f = n.floatValue(); Some(if (f == 0.0f) 0.0f else f)
+    case (StringType, s: String) => Some(UTF8String.fromString(s))
+    case (DateType, d: java.sql.Date)       => Some(d.toLocalDate.toEpochDay.toInt)
+    case (DateType, d: java.time.LocalDate) => Some(d.toEpochDay.toInt)
+    case (TimestampType, t: java.sql.Timestamp) =>
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t))
+    case (TimestampType, i: java.time.Instant) =>
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i))
+    case (_: DecimalType, b: java.math.BigDecimal)  => scala.util.Try(Decimal(b)).toOption
+    case (_: DecimalType, b: scala.math.BigDecimal) => scala.util.Try(Decimal(b)).toOption
     case _ => None
   }
 }

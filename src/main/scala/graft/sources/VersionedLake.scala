@@ -119,8 +119,12 @@ object VersionedLake {
 
   /** Manifest comment line carrying one data directory's column stats:
     * `#stats=<dir>\t{"col":["min","max"],...}` with min/max as the
-    * column's Spark string-cast (null for an all-null directory).
-    * Comment-prefixed, so [[manifest]] and pre-stats readers skip them;
+    * column's Spark string-cast (null for an all-null directory). Only
+    * [[LakeMetaAgg.bounds]] decodes them, into typed values every pruner
+    * and merger compares; a TIMESTAMP's bounds come from its `#ndv`
+    * histogram edges instead, since its render depends on the session
+    * time zone at commit. Comment-prefixed, so [[manifest]] and
+    * pre-stats readers skip them;
     * directories without a stats line are read unconditionally
     * (conservative — absence of evidence never drops data). Like every
     * per-directory layer below, carried by [[publishManifest]].
@@ -429,27 +433,6 @@ object VersionedLake {
     require(bits >= 8 && (bits & (bits - 1)) == 0,
       s"bloom bits must be a power of two >= 8: $bits")
     require(k >= 1 && k <= 16, s"bloom k out of range: $k")
-  }
-
-  /** Lexicographic compare in UTF-8 BYTE order — the order Spark's own
-    * min/max use for strings (binary comparison of UTF8String). Java's
-    * `String.compareTo` compares UTF-16 code units, which disagrees for
-    * supplementary-plane characters (a surrogate pair's first unit 0xD800+
-    * sorts below 0xE000-block BMP chars that UTF-8 orders above it) — with
-    * that order a directory that actually contains the probed value could
-    * be pruned, silently dropping rows.
-    */
-  private def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
   }
 
   private def fs(spark: SparkSession, dir: String) =
@@ -1365,7 +1348,8 @@ object VersionedLake {
   }
 
   /** Per-directory stats a version's manifest carries:
-    * dir -> col -> (min, max) as Spark string-casts, None = all-null.
+    * dir -> col -> (min, max) as stored (Spark string-casts), None =
+    * all-null. Compare them only through [[LakeMetaAgg.bounds]].
     */
   def dirStats(
       spark: SparkSession,
@@ -3634,17 +3618,14 @@ object VersionedLake {
       s"$tableDir v=$version has pending merge-on-read deletes; run " +
         s"materializeDeletes() (or optimize()) before $op")
 
-  /** The batch's per-key-column [min,max], string-cast exactly like
-    * manifest stats — ONE O(delta) aggregation, reused across retries.
+  /** The batch's per-key-column (min, max) as external values (None =
+    * every key null) — ONE O(delta) aggregation, reused across retries.
     */
-  private def keyRanges(
-      keyDf: DataFrame,
-      keys: Seq[String]): Map[String, (Option[String], Option[String])] = {
-    val aggs = keys.flatMap(c => Seq(min(col(c)).cast("string"), max(col(c)).cast("string")))
+  private def keyRanges(keyDf: DataFrame, keys: Seq[String]): Map[String, Option[(Any, Any)]] = {
+    val aggs = keys.flatMap(c => Seq(min(col(c)), max(col(c))))
     val row = keyDf.agg(aggs.head, aggs.tail: _*).head()
     keys.zipWithIndex.map { case (c, i) =>
-      def v(j: Int) = if (row.isNullAt(j)) None else Some(row.getString(j))
-      c -> ((v(2 * i), v(2 * i + 1)))
+      c -> Option.when(!row.isNullAt(2 * i))((row.get(2 * i), row.get(2 * i + 1)))
     }.toMap
   }
 
@@ -3692,40 +3673,30 @@ object VersionedLake {
       base: Long,
       keyDf: DataFrame,
       keys: Seq[String],
-      ranges: Map[String, (Option[String], Option[String])],
+      ranges: Map[String, Option[(Any, Any)]],
       dirs: Seq[String],
       priorSchema: org.apache.spark.sql.types.StructType): Seq[String] = {
     val priorStats = dirStats(spark, tableDir, base)
-    // stats layer
-    val numericKey = keys.map { c =>
-      c -> priorSchema.fields.find(_.name == c).map(_.dataType)
-        .exists(_.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    }.toMap
-    val prunableKey = keys.map { c =>
-      val dt = priorSchema.fields.find(_.name == c).map(_.dataType)
-      c -> (numericKey(c) || dt.exists {
-        case org.apache.spark.sql.types.StringType    => true
-        case org.apache.spark.sql.types.DateType      => true
-        case org.apache.spark.sql.types.TimestampType => true
-        case _                                        => false
+    lazy val hists = dirHist(spark, tableDir, base)
+    // the batch's key range in each key column's decoded domain
+    val typedRanges = keys.map { c =>
+      val dt = priorSchema.fields.find(_.name == c)
+        .fold[org.apache.spark.sql.types.DataType](org.apache.spark.sql.types.NullType)(_.dataType)
+      (c, dt, ranges(c).map { case (mn, mx) =>
+        LakeMetaAgg.literal(dt, mn).zip(LakeMetaAgg.literal(dt, mx))
       })
-    }.toMap
-    def cmp(c: String, a: String, b: String): Option[Int] =
-      if (numericKey(c)) scala.util.Try(BigDecimal(a).compare(BigDecimal(b))).toOption
-      else Some(utf8Cmp(a, b))
+    }
+    // stats layer: key equality never matches null, so an all-null
+    // directory column or an all-null batch key column matches nothing
     val statsKept = dirs.filter { d =>
-      keys.forall { c =>
-        (priorStats.get(d).flatMap(_.get(c)), ranges(c)) match {
-          case (Some((Some(dMn), Some(dMx))), (Some(uMn), Some(uMx))) if prunableKey(c) =>
-            (cmp(c, dMn, uMx), cmp(c, uMn, dMx)) match {
-              case (Some(x), Some(y)) => x <= 0 && y <= 0
-              case _                  => true
-            }
-          // key equality never matches null: an all-null dir column or
-          // an all-null batch key column can produce no match
-          case (Some((None, None)), _) => false
-          case (_, (None, None))       => false
-          case _                       => true
+      typedRanges.forall { case (c, dt, batch) =>
+        val dirRange = priorStats.get(d).flatMap(_.get(c))
+          .flatMap(LakeMetaAgg.bounds(dt, _, hists.get(d).flatMap(_.get(c))))
+        (dirRange, batch) match {
+          case (Some(None), _) | (_, None) => false
+          case (Some(Some((dMn, dMx))), Some(Some((uMn, uMx)))) =>
+            LakeMetaAgg.compare(dMn, uMx) <= 0 && LakeMetaAgg.compare(uMn, dMx) <= 0
+          case _ => true
         }
       }
     }
@@ -3792,7 +3763,7 @@ object VersionedLake {
       base: Long,
       keyDf: DataFrame,
       keys: Seq[String],
-      ranges: Map[String, (Option[String], Option[String])],
+      ranges: Map[String, Option[(Any, Any)]],
       maxRecordsPerFile: Long): KeyedRewrite = {
     val dirs = manifest(spark, tableDir, base)
     val schemaOpt = versionSchema(spark, tableDir, base)
@@ -5160,11 +5131,13 @@ object VersionedLake {
     * bloom, for equality probes) PROVE it holds no matching row. Strictly
     * conservative: any filter shape, type, or stats gap this cannot
     * reason about keeps the directory — wrong answers are impossible,
-    * only missed pruning. Range reasoning is limited to numeric and
-    * string columns (the two types whose Spark string-cast stats compare
-    * reliably; date/timestamp string forms are renderer-dependent, so
-    * they only participate in the all-null check). All bloom probes for
-    * the query run as ONE driver-side mini-job. At 100 TB this is the
+    * only missed pruning. Bounds and literals compare as typed values
+    * ([[LakeMetaAgg.bounds]], [[LakeMetaAgg.literal]]), so ranges prune
+    * on every type the decoder reads: numeric, decimal, string (UTF-8
+    * byte order), date and timestamp (epoch micros from the histogram
+    * edges); a bound that does not decode, or a literal with no exact
+    * value in the column's type, keeps the directory. All bloom probes
+    * for the query run as ONE driver-side mini-job. At 100 TB this is the
     * layer that turns a point SELECT into a handful-of-directories scan
     * BEFORE any parquet footer is opened.
     */
@@ -5180,14 +5153,10 @@ object VersionedLake {
     val stats = dirStats(spark, tableDir, version)
     val blooms = dirBlooms(spark, tableDir, version)
     if (stats.isEmpty && blooms.isEmpty) return dirs
+    lazy val hists = dirHist(spark, tableDir, version)
     val schemaOpt = versionSchema(spark, tableDir, version)
     def dtOf(c: String): Option[DataType] =
       schemaOpt.flatMap(_.fields.find(_.name.equalsIgnoreCase(c))).map(_.dataType)
-    def numeric(c: String) = dtOf(c).exists(_.isInstanceOf[NumericType])
-    def comparable(c: String) = numeric(c) || dtOf(c).contains(StringType)
-    def cmp(c: String, a: String, b: String): Option[Int] =
-      if (numeric(c)) scala.util.Try(BigDecimal(a).compare(BigDecimal(b))).toOption
-      else Some(utf8Cmp(a, b))
 
     // every (column, value, m, k) bloom probe the filters need, computed
     // in ONE job; equality probes on columns without a committed type or
@@ -5233,26 +5202,27 @@ object VersionedLake {
         case None => true
       }
 
-    def range(d: String, c: String): Option[(Option[String], Option[String])] =
-      stats.get(d).flatMap(_.get(c))
+    // the column's decoded bounds in a directory: Some(None) = all null
+    // (decided for any type, hence NullType for a column the schema
+    // lacks), None = no entry or not decodable
+    def range(d: String, c: String): Option[Option[(Any, Any)]] =
+      stats.get(d).flatMap(_.get(c)).flatMap(
+        LakeMetaAgg.bounds(dtOf(c).getOrElse(NullType), _, hists.get(d).flatMap(_.get(c))))
+    def literal(c: String, v: Any): Option[Any] = dtOf(c).flatMap(LakeMetaAgg.literal(_, v))
+    def cmp(a: Any, b: Any): Int = LakeMetaAgg.compare(a, b)
 
     // LARGE IN sets (a runtime dynamic-pruning key set can carry
     // thousands of keys): the naive per-dir `vs.exists(inRangeEq)` costs
     // O(dirs × values) driver time — sort each big set ONCE and
     // binary-search every directory's [min,max] instead,
-    // O(dirs × log values). Values that fail numeric parsing fall back
-    // to the exact per-value path.
-    val bigIns = new java.util.IdentityHashMap[Filter, Array[String]]()
+    // O(dirs × log values). A set with a value that has no exact typed
+    // form takes the per-value path, which keeps on such a value.
+    val bigIns = new java.util.IdentityHashMap[Filter, Array[Any]]()
     def collectBigIns(f: Filter): Unit = f match {
-      case in @ In(c, vs) if vs != null && vs.length > 64 && comparable(c) =>
-        val strs = vs.filter(_ != null).map(String.valueOf)
-        if (numeric(c)) {
-          // parse ONCE per value (not per comparison) — and the parse of
-          // every element is what makes the downstream "all sorted
-          // values compare" invariant explicit, not a sort-impl detail
-          scala.util.Try(strs.map(s => (BigDecimal(s), s)).sortBy(_._1).map(_._2))
-            .foreach(bigIns.put(in, _)): Unit
-        } else bigIns.put(in, strs.sorted(Ordering.fromLessThan[String](utf8Cmp(_, _) < 0))): Unit
+      case in @ In(c, vs) if vs != null && vs.length > 64 =>
+        val typed = vs.filter(_ != null).map(literal(c, _))
+        if (typed.forall(_.isDefined))
+          bigIns.put(in, typed.flatten.sortWith(cmp(_, _) < 0)): Unit
       case And(l, r) => collectBigIns(l); collectBigIns(r)
       case Or(l, r)  => collectBigIns(l); collectBigIns(r)
       case _         =>
@@ -5260,18 +5230,26 @@ object VersionedLake {
     filters.foreach(collectBigIns)
     // does any sorted value land inside [mn, mx]? (first value >= mn,
     // then check it's <= mx)
-    def anyInRange(sorted: Array[String], c: String, mn: String, mx: String): Boolean = {
+    def anyInRange(sorted: Array[Any], mn: Any, mx: Any): Boolean = {
       var lo = 0
       var hi = sorted.length
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (cmp(c, sorted(mid), mn).forall(_ < 0)) lo = mid + 1 else hi = mid
+        if (cmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
       }
-      lo < sorted.length && cmp(c, sorted(lo), mx).forall(_ <= 0)
+      lo < sorted.length && cmp(sorted(lo), mx) <= 0
     }
 
-    def allNull(d: String, c: String): Boolean =
-      range(d, c).contains((None, None))
+    // can the directory hold a non-null value v with ok(min, max, v)?
+    // An all-null directory cannot; an unknown bound or literal may.
+    def bound(d: String, c: String, v: Any)(ok: (Any, Any, Any) => Boolean): Boolean =
+      range(d, c) match {
+        case Some(Some((mn, mx))) => literal(c, v).forall(ok(mn, mx, _))
+        case Some(None)           => false
+        case None                 => true
+      }
+    def inRangeEq(d: String, c: String, v: Any): Boolean =
+      bound(d, c, v)((mn, mx, x) => cmp(mn, x) <= 0 && cmp(x, mx) <= 0)
 
     // can the directory contain a row SATISFYING f? (conservative true)
     def may(d: String, f: Filter): Boolean = f match {
@@ -5281,52 +5259,21 @@ object VersionedLake {
         inRangeEq(d, c, v) && bloomMay(d, c, v)
       case EqualNullSafe(c, null) => true // nulls aren't tracked beyond all-null
       case EqualNullSafe(c, v)    => inRangeEq(d, c, v) && bloomMay(d, c, v)
-      case in @ In(c, vs) if vs != null && bigIns.containsKey(in) =>
+      case in @ In(c, _) if bigIns.containsKey(in) =>
         range(d, c) match {
-          case Some((Some(mn), Some(mx))) if comparable(c) =>
-            val sorted = bigIns.get(in)
-            // a bound the values can't compare against (a numeric column
-            // whose stat string is "-Infinity"/"NaN") must KEEP the dir,
-            // like inRangeEq's None case — an unordered binary search
-            // would over-prune and drop rows. All sorted values parse
-            // (sortBy(BigDecimal) succeeded), so probing one suffices.
-            if (sorted.isEmpty) false
-            else if (cmp(c, sorted(0), mn).isEmpty || cmp(c, sorted(0), mx).isEmpty) true
-            else anyInRange(sorted, c, mn, mx)
-          case Some((None, None)) => false // all-null dir: no non-null match
-          case _                  => true
+          case Some(Some((mn, mx))) => anyInRange(bigIns.get(in), mn, mx)
+          case Some(None)           => false // all-null dir: no non-null match
+          case None                 => true
         }
       case In(c, vs) if vs != null =>
         vs.exists(v => v != null && inRangeEq(d, c, v) && bloomMay(d, c, v))
-      case GreaterThan(c, v) if v != null =>
-        boundOk(d, c, mx => cmp(c, mx, String.valueOf(v)).forall(_ > 0), upper = true)
-      case GreaterThanOrEqual(c, v) if v != null =>
-        boundOk(d, c, mx => cmp(c, mx, String.valueOf(v)).forall(_ >= 0), upper = true)
-      case LessThan(c, v) if v != null =>
-        boundOk(d, c, mn => cmp(c, mn, String.valueOf(v)).forall(_ < 0), upper = false)
-      case LessThanOrEqual(c, v) if v != null =>
-        boundOk(d, c, mn => cmp(c, mn, String.valueOf(v)).forall(_ <= 0), upper = false)
-      case IsNotNull(c) => !allNull(d, c)
+      case GreaterThan(c, v) if v != null        => bound(d, c, v)((_, mx, x) => cmp(mx, x) > 0)
+      case GreaterThanOrEqual(c, v) if v != null => bound(d, c, v)((_, mx, x) => cmp(mx, x) >= 0)
+      case LessThan(c, v) if v != null           => bound(d, c, v)((mn, _, x) => cmp(mn, x) < 0)
+      case LessThanOrEqual(c, v) if v != null    => bound(d, c, v)((mn, _, x) => cmp(mn, x) <= 0)
+      case IsNotNull(c) => !range(d, c).contains(None)
       case _            => true
     }
-
-    def inRangeEq(d: String, c: String, v: Any): Boolean = range(d, c) match {
-      case Some((Some(mn), Some(mx))) if comparable(c) =>
-        val vS = String.valueOf(v)
-        (cmp(c, mn, vS), cmp(c, vS, mx)) match {
-          case (Some(x), Some(y)) => x <= 0 && y <= 0
-          case _                  => true
-        }
-      case Some((None, None)) => false // all-null: no non-null value matches
-      case _                  => true
-    }
-
-    def boundOk(d: String, c: String, ok: String => Boolean, upper: Boolean): Boolean =
-      range(d, c) match {
-        case Some((Some(mn), Some(mx))) if comparable(c) => ok(if (upper) mx else mn)
-        case Some((None, None))                          => false
-        case _                                           => true
-      }
 
     dirs.filter(d => filters.forall(f => may(d, f)))
   }

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import java.util.OptionalLong
 
+import graft.sources.LakeMetaAgg
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -155,9 +156,9 @@ final class LakePruningScanBuilder(
     * forbids by construction: FILTERED metadata-only aggregates
     * (`SELECT count(*) WHERE dt = '…'` answers from `#rows` lines of the
     * satisfying directories — zero file opens on a 100 TB table) and
-    * LIMIT-prefix pruning under a filter. The claim is decided by THIS
-    * builder's own evaluation over the stored renders, never the
-    * pruner's may-overlap semantics; anything undecidable stays
+    * LIMIT-prefix pruning under a filter. The claim is decided by the
+    * gate [[LakePruningScanBuilder.claim]] over the decoded stats, never
+    * the pruner's may-overlap semantics; anything undecidable stays
     * post-scan and costs nothing.
     *
     * HYBRID claims: when the proof covers a MAJORITY of live dirs but
@@ -180,46 +181,25 @@ final class LakePruningScanBuilder(
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     pushed = filters
-    val allDirs = pruner(Nil)
-    val B = LakePruningScanBuilder
-    // a conjunct is claimable when its shape/type/values are decidable
-    // and the uniform proof holds on at least one live directory; dirs
-    // where any claim's proof fails become the hybrid RESIDUAL (scanned
+    val translated = filters.map(e =>
+      e -> DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true))
+    // dirs where a claim's proof fails become the hybrid RESIDUAL (scanned
     // exactly — see build()), available only when the read-through and
     // hybrid-answer callbacks exist to keep the claim sound
-    val hybridCapable = hybridReadThrough.isDefined
-    val (claim, post) = filters.partition { e =>
-      DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true)
-        .exists { f =>
-          // every exactlyDecidable shape (Eq/EqNullSafe/In/ranges/
-          // IsNull/IsNotNull) is also row-evaluable by the read-through
-          // bridge, so per-dir decidability gates the hybrid claim — but
-          // only when the proof covers a MAJORITY of live dirs: that is
-          // the compaction/legacy shape the hybrid exists for (most dirs
-          // daily-uniform, one merged), while a table where one tiny
-          // single-row dir happens to be uniform gains nothing and would
-          // pay the bridge's loss of SPJ/runtime-pruning/exact stats on
-          // its plain filtered reads
-          val decidableOn = allDirs.count(d => B.exactlyDecidable(
-            f, Seq(d), rowMeta, ndvMeta, statsMeta, schema, histMeta))
-          decidableOn == allDirs.size ||
-            (hybridCapable && decidableOn * 2 > allDirs.size)
-        }
-    }
-    postScan = post
+    val gate = LakePruningScanBuilder.claim(translated.flatMap(_._2), pruner(Nil),
+      rowMeta, ndvMeta, statsMeta, schema, histMeta,
+      hybridCapable = hybridReadThrough.isDefined)
+    val (claim, post) = translated.partition(_._2.exists(gate.claimed.contains))
+    postScan = post.map(_._1)
     if (claim.nonEmpty) {
-      claimed = claim.flatMap(e =>
-        DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true))
-      val proven = allDirs.filter(d => claimed.forall(f => B.exactlyDecidable(
-        f, Seq(d), rowMeta, ndvMeta, statsMeta, schema, histMeta)))
-      hybridResidual = allDirs.filterNot(proven.toSet)
-      provenSatisfying = proven.filter(d => claimed.forall(f =>
-        B.dirSatisfies(f, d, rowMeta, ndvMeta, statsMeta, schema, histMeta)))
+      claimed = gate.claimed
+      hybridResidual = gate.residual
+      provenSatisfying = gate.satisfying
       // the dirs that may hold matching rows: proven satisfiers exactly,
       // residual dirs conservatively (their rows re-filter downstream)
       exactKept = Some((provenSatisfying ++ hybridResidual).toSet)
     }
-    post
+    postScan
   }
 
   override def pushedFilters(): Array[Predicate] = Array.empty
@@ -391,9 +371,8 @@ object LakePruningScanBuilder {
   // `#ndv` nulls == 0 and `#stats` min == max (one non-null value), or
   // nulls == rows (all null). Conjuncts on such columns are decided
   // exactly by directory selection — the proof behind claiming them as
-  // handled (filtered metadata aggregates, limit-under-filter). The
-  // value domain reuses LakeMetaAgg.parse's round-trip contract, so
-  // timestamps (session-TZ renders) are excluded the same way.
+  // handled (filtered metadata aggregates, limit-under-filter). Values
+  // and literals are decoded by LakeMetaAgg.uniformValue / literal.
   // ------------------------------------------------------------------
 
   private sealed trait Uniform
@@ -427,42 +406,6 @@ object LakePruningScanBuilder {
     case _                        => None
   }
 
-  /** The filter's JVM literal in the same comparable domain
-    * [[graft.sources.LakeMetaAgg.parse]] yields for stored renders.
-    */
-  private def toInternal(dt: org.apache.spark.sql.types.DataType, v: Any): Option[Any] = {
-    import org.apache.spark.sql.types._
-    (dt, v) match {
-      case (LongType, n: java.lang.Long)       => Some(n.longValue())
-      case (IntegerType, n: java.lang.Integer) => Some(n.intValue())
-      case (ShortType, n: java.lang.Short)     => Some(n.shortValue())
-      case (ByteType, n: java.lang.Byte)       => Some(n.byteValue())
-      // -0.0 → 0.0 on both sides of the claim (LakeMetaAgg.parse does the
-      // same for stored renders): boxed compareTo splits the two where
-      // Spark's comparisons don't, and a claimed conjunct is dropped from
-      // the post-scan filter, so a mismatch would silently return zero rows
-      case (DoubleType, n: java.lang.Double)   =>
-        val d = n.doubleValue(); Some(if (d == 0.0d) 0.0d else d)
-      case (FloatType, n: java.lang.Float)     =>
-        val f = n.floatValue(); Some(if (f == 0.0f) 0.0f else f)
-      case (StringType, s: String) =>
-        Some(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-      case (DateType, d: java.sql.Date)        => Some(d.toLocalDate.toEpochDay.toInt)
-      case (DateType, d: java.time.LocalDate)  => Some(d.toEpochDay.toInt)
-      // timestamps compare on CANONICAL epoch micros — the uniform value
-      // comes from the histogram-edge domain, never a session-TZ render
-      case (TimestampType, t: java.sql.Timestamp) =>
-        Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t))
-      case (TimestampType, i: java.time.Instant) =>
-        Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i))
-      case (d: DecimalType, b: java.math.BigDecimal) =>
-        scala.util.Try(org.apache.spark.sql.types.Decimal(b, d.precision, d.scale)).toOption
-      case (d: DecimalType, b: scala.math.BigDecimal) =>
-        scala.util.Try(org.apache.spark.sql.types.Decimal(b, d.precision, d.scale)).toOption
-      case _ => None
-    }
-  }
-
   private def uniformOf(
       d: String,
       c: String,
@@ -477,11 +420,51 @@ object LakePruningScanBuilder {
       else for {
         nulls <- ndvMeta.get(d).flatMap(_.get(c)).map(_._2)
         bounds <- statsMeta.get(d).flatMap(_.get(c))
-        u <- graft.sources.LakeMetaAgg.uniformValue(dt, rows, nulls, bounds,
+        u <- LakeMetaAgg.uniformValue(dt, rows, nulls, bounds,
           histMeta.get(d).flatMap(_.get(c)))
           .map(_.fold(AllNull: Uniform)(Single.apply))
       } yield u
     }
+
+  /** The uniform-column claim gate: which conjuncts the scan claims, and
+    * how it splits `dirs` (the table's directories) under the claims. A
+    * conjunct is claimed when [[exactlyDecidable]] holds on every live
+    * directory, or, when `hybridCapable`, on a majority of them: that is
+    * the compaction/legacy shape the hybrid exists for (most dirs
+    * daily-uniform, one merged), while a table where one tiny single-row
+    * dir happens to be uniform gains nothing and would pay the bridge's
+    * loss of SPJ/runtime-pruning/exact stats on its plain filtered
+    * reads. Zero-row directories are decidable and do not count.
+    * `satisfying` = proven dirs satisfying every claim (their rows are
+    * exactly the claimed rows), `residual` = dirs where some claim is
+    * not proven. The scan builder and the `estimate_rows` /
+    * `explain_scan` procedures all call this, so the procedures report
+    * what the plan does.
+    */
+  def claim(
+      filters: Seq[Filter],
+      dirs: Seq[String],
+      rowMeta: Map[String, (Long, Long)],
+      ndvMeta: Map[String, Map[String, (Option[Array[Byte]], Long)]],
+      statsMeta: Map[String, Map[String, (Option[String], Option[String])]],
+      schema: StructType,
+      histMeta: Map[String, Map[String, Array[Double]]],
+      hybridCapable: Boolean): Claim = {
+    def decidable(f: Filter, d: String) =
+      exactlyDecidable(f, Seq(d), rowMeta, ndvMeta, statsMeta, schema, histMeta)
+    val live = dirs.filter(d => rowMeta.get(d).forall(_._1 > 0))
+    val claimed = filters.filter { f =>
+      val n = live.count(decidable(f, _))
+      n == live.size || (hybridCapable && n * 2 > live.size)
+    }
+    val proven = dirs.filter(d => claimed.forall(decidable(_, d)))
+    Claim(claimed,
+      proven.filter(d => claimed.forall(
+        dirSatisfies(_, d, rowMeta, ndvMeta, statsMeta, schema, histMeta))),
+      dirs.filterNot(proven.toSet))
+  }
+
+  final case class Claim(claimed: Seq[Filter], satisfying: Seq[String], residual: Seq[String])
 
   /** Can directory selection decide `f` exactly over EVERY given dir? */
   def exactlyDecidable(
@@ -501,11 +484,11 @@ object LakePruningScanBuilder {
             val valuesOk = f match {
               case EqualNullSafe(_, null) => true // <=> NULL: pure nullness
               case _: In => // null elements never match; the rest must convert
-                vs.filter(_ != null).forall(v => toInternal(dt, v).isDefined)
+                vs.filter(_ != null).forall(v => LakeMetaAgg.literal(dt, v).isDefined)
               // a negation with a null literal anywhere three-values to
               // row-dropping in subtle ways — decline rather than model it
-              case _: Not => vs.forall(v => v != null && toInternal(dt, v).isDefined)
-              case _ => vs.forall(v => v != null && toInternal(dt, v).isDefined)
+              case _: Not => vs.forall(v => v != null && LakeMetaAgg.literal(dt, v).isDefined)
+              case _ => vs.forall(v => v != null && LakeMetaAgg.literal(dt, v).isDefined)
             }
             valuesOk && dirs.forall(d =>
               uniformOf(d, c, dt, rowMeta, ndvMeta, statsMeta, histMeta).isDefined)
@@ -540,7 +523,7 @@ object LakePruningScanBuilder {
         }
       case Some(Single(u)) =>
         def cmp(v: Any): Option[Int] =
-          toInternal(dt, v).map(i => u.asInstanceOf[Comparable[Any]].compareTo(i))
+          LakeMetaAgg.literal(dt, v).map(LakeMetaAgg.compare(u, _))
         def u8: org.apache.spark.unsafe.types.UTF8String =
           u.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
         def lit8(v: String): org.apache.spark.unsafe.types.UTF8String =
@@ -847,10 +830,10 @@ object LakePruningScanBuilder {
   /** COLUMN-LEVEL CBO STATISTICS from the manifest's `#ndv` + `#stats`
     * layers: the kept directories' per-column HLL sketches union
     * driver-side into one distinct-count estimate, null counts sum
-    * exactly, and min/max merge from the stats lines as TYPED Catalyst
-    * values (numeric and date columns — what FilterEstimation's range
-    * selectivity consumes; conversion failures or unparseable renders
-    * just omit the bound). A column is reported ONLY when every
+    * exactly, and min/max merge as TYPED Catalyst values
+    * ([[graft.sources.LakeMetaAgg.mergedBound]]; numeric and date
+    * columns — what FilterEstimation's range selectivity consumes; an
+    * undecodable or non-finite bound is omitted). A column is reported ONLY when every
     * row-bearing kept directory carries its sketch — a partial union
     * would understate NDV and mis-steer join ordering the same way a
     * partial row sum would mis-broadcast (the conservatism rule
@@ -881,38 +864,17 @@ object LakePruningScanBuilder {
     if (!kept.forall(rowMeta.contains)) return out
     val live = kept.filter(d => rowMeta(d)._1 > 0)
     if (live.isEmpty) return out
-    // stored-string render → the Catalyst-internal value CBO expects
-    def toCatalyst(s: String, dt: DataType): Option[Object] =
-      scala.util.Try[Object](dt match {
-        case ByteType      => java.lang.Byte.valueOf(s)
-        case ShortType     => java.lang.Short.valueOf(s)
-        case IntegerType   => java.lang.Integer.valueOf(s)
-        case LongType      => java.lang.Long.valueOf(s)
-        case FloatType     => java.lang.Float.valueOf(s)
-        case DoubleType    => java.lang.Double.valueOf(s)
-        case d: DecimalType =>
-          org.apache.spark.sql.types.Decimal(BigDecimal(s), d.precision, d.scale)
-        case DateType =>
-          java.lang.Integer.valueOf(java.time.LocalDate.parse(s).toEpochDay.toInt)
-        case _ => null
-      }).toOption.filter(_ != null)
+    // the merged decoded bound, for the types FilterEstimation's range
+    // selectivity consumes; a non-finite double bound is not reported
     def mergeBound(c: String, takeMin: Boolean): Option[Object] = {
       val dt = dataSchema.fields.find(_.name == c).map(_.dataType).getOrElse(return None)
-      val numeric = dt.isInstanceOf[NumericType]
-      if (!numeric && dt != DateType) return None
-      val perDir = live.map(d => statsMeta.get(d).flatMap(_.get(c)))
-      if (perDir.exists(_.isEmpty)) return None // a dir with NO entry blocks
-      // all-null dirs ((None, None)) bound nothing; rows there are null
-      val bounds = perDir.flatten.flatMap(p => if (takeMin) p._1 else p._2)
-      if (bounds.isEmpty) return None
-      val best = bounds.reduce { (a, b) =>
-        val cmp =
-          if (numeric) scala.util.Try(BigDecimal(a).compare(BigDecimal(b)))
-            .getOrElse(return None)
-          else a.compareTo(b) // DATE: ISO renders compare lexicographically
-        if ((cmp <= 0) == takeMin) a else b
-      }
-      toCatalyst(best, dt)
+      if (!dt.isInstanceOf[NumericType] && dt != DateType) return None
+      LakeMetaAgg.mergedBound(dt, c, live, statsMeta, histMeta, takeMin).flatten.map(_._2)
+        .filter {
+          case d: java.lang.Double => !d.isNaN && !d.isInfinite
+          case f: java.lang.Float  => !f.isNaN && !f.isInfinite
+          case _                   => true
+        }.map(_.asInstanceOf[Object])
     }
     // EQUI-HEIGHT HISTOGRAM from the per-directory edge sets (the `"e"`
     // arrays riding the #ndv layer): each directory's edges describe an

@@ -343,6 +343,40 @@ class GraftProceduresSpec extends SparkSpec {
       s"claim decisions must mirror the plan: $claims")
   }
 
+  test("explain_scan and estimate_rows claim what the scan claims when zero-row dirs survive pruning") {
+    root
+    val s = spark
+    import s.implicits._
+    // live dirs: one uniform (day = 10) and two mixed; three zero-row
+    // dirs, which `day != 10` does not prune. Over the live dirs the
+    // uniform proof covers 1 of 3, so the scan claims nothing; counting
+    // the zero-row dirs among the pruner's survivors would make it 4 of 6
+    val dir = s"$root/xgate"
+    VersionedLake.appendCommit((1 to 30).map(i => (i.toLong, 10L)).toDF("k", "day"), dir,
+      statsCols = Seq("day"))
+    (1 to 2).foreach { _ =>
+      VersionedLake.appendCommit((1 to 10).map(i => (i.toLong, 20L + 10 * (i % 2))).toDF("k", "day"),
+        dir, statsCols = Seq("day"))
+    }
+    (1 to 3).foreach(_ => VersionedLake.appendCommit(
+      Seq.empty[(Long, Long)].toDF("k", "day"), dir, statsCols = Seq("day")))
+    val v = VersionedLake.currentVersion(spark, dir).get
+    assert(VersionedLake.dirRowCounts(spark, dir, v).values.map(_._1).toSeq.sorted ===
+      Seq(0L, 0L, 0L, 10L, 10L, 30L))
+    val q = spark.sql("SELECT count(*) FROM gproc.xgate WHERE day != 10")
+    assert(q.head().getLong(0) === 20L)
+    assert(!q.queryExecution.executedPlan.toString.contains("MetaAgg"),
+      s"the scan claims no conjunct, so the count is a real scan:\n${q.queryExecution.executedPlan}")
+    val claims = spark.sql("CALL gproc.system.explain_scan('xgate', 'day != 10')")
+      .collect().map(r => (r.getBoolean(3), r.getString(5)))
+    assert(claims.length === 6 && claims.forall(_ === ((true, null))),
+      s"every dir is kept and none is claimed, as in the plan: ${claims.toSeq}")
+    // the plan reads the three live dirs and filters per row; no layer
+    // prices `!=`, so the scan reports their 50 rows
+    assert(spark.sql("CALL gproc.system.estimate_rows('xgate', 'day != 10')")
+      .head().getLong(0) === 50L)
+  }
+
   test("CALL system.set_partition_spec + replicate: the declaration propagates to mirrors") {
     root
     spark.sql("CREATE TABLE gproc.evsrc (k BIGINT, band BIGINT, cell BIGINT) " +
